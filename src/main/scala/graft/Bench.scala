@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throughput benchmark (driver contract): one JSON line with per-query
   * wall time over the headline set at SPARK_GRAFT_SF_DIR.
   *
@@ -86,39 +84,8 @@ object Bench {
         n => pats.exists(n.contains)
       } else _ => true
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = EngineConf.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      // shuffle parallelism must scale with DATA, not cores: at sf100
-      // (600M lineitem) 32 partitions means ~19M rows each and the
-      // sort/join spill path dominates (join_inner 94 s -> 45 s,
-      // agg_minmax_nunique 173 s -> 89 s at 256 partitions, same
-      // machine). Default stays = cpus for the driver's small-sf
-      // runs; scaled runs pass the env override, exactly as a
-      // cluster job would size it
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      // the driver's testdata ships one parquet file per table; 32 MiB
-      // splits keep single-file scans parallel on local[32] (a real
-      // cluster reads many files and would use the 128 MiB default)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // shuffle files are only deleted when a GC collects their
-      // ShuffleDependency; a 100g heap under scaled runs may not GC
-      // for the whole bench, so spills accumulate unboundedly — the
-      // round-8 sf100 disk-full event (43 GB of blockmgr files in
-      // 10 min at p256) was exactly this. The driver-side periodic GC
-      // is the ContextCleaner's own knob (default 30 min — far too
-      // lazy for one shared disk); rep() also triggers an untimed
-      // explicit GC after each sample so each rep's shuffle files are
-      // reclaimed before the next begins
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      math.min(32, Runtime.getRuntime.availableProcessors()).toString).toInt
+    val spark = EngineConf.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     def exec(name: String): Unit =
@@ -162,15 +129,6 @@ object Bench {
       spark.sparkContext.setLocalProperty("graft.bench.query", query)
       spark.sparkContext.setLocalProperty("graft.bench.rep", rp.toString)
     }
-    // minimal JSON string escaper (shared shape with Verify's q()):
-    // backslash FIRST, then quote, then control chars — a backslash in
-    // a stage name must not emit an invalid line (round-12 ADVICE)
-    def jesc(s: String): String = s.flatMap {
-      case '\\' => "\\\\"
-      case '"'  => "\\\""
-      case c if c < ' ' => " "
-      case c    => c.toString
-    }
     sys.env.get("SPARK_GRAFT_STAGE_LOG").foreach { p =>
       val w = new java.io.PrintWriter(new java.io.FileWriter(p, true))
       val tags = new java.util.concurrent.ConcurrentHashMap[Int, (String, Int)]()
@@ -187,8 +145,8 @@ object Bench {
           val (q, rp) = Option(tags.remove(si.stageId)).getOrElse(("", -1))
           val dur = for { s <- si.submissionTime; c <- si.completionTime } yield c - s
           w.synchronized {
-            w.println(s"""{"query":"${jesc(q)}","rep":$rp,"stage":${si.stageId},""" +
-              s""""name":"${jesc(si.name.takeWhile(_ != '\n'))}",""" +
+            w.println(s"""{"query":${Json.str(q)},"rep":$rp,"stage":${si.stageId},""" +
+              s""""name":${Json.str(si.name.takeWhile(_ != '\n'))},""" +
               s""""tasks":${si.numTasks},"ms":${dur.getOrElse(-1L)}}""")
             w.flush()
           }
@@ -228,7 +186,7 @@ object Bench {
       // under ANSI mode; xor keeps the same codegen'd hash+agg work
       // 8B rows ≈ 1.7 s on this box — long enough that scheduler jitter
       // doesn't dominate the probe, short enough to stay negligible
-      spark.range(0L, 8000000000L, 1L, cpus.toInt)
+      spark.range(0L, 8000000000L, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS s")
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
@@ -297,7 +255,8 @@ object Bench {
       val gcSec = (gcMillis() - gc0) / 1e3
       val gb = if (rb0 < 0) -1.0 else (diskReadBytes() - rb0) / 1e9
       // untimed: release this rep's shuffle deps so the ContextCleaner
-      // can delete their files (see the periodicGC comment above)
+      // can delete their files (see the cleaner GC note on
+      // EngineConf.localSession)
       System.gc()
       (dt, ok, la, gb, gcSec)
     }

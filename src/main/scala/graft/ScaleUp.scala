@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress data generator: replicate the driver's sf0.1 tables by
@@ -39,14 +39,7 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val r = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineConf.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val keyCols: Map[String, Seq[String]] = Map(
@@ -64,8 +57,8 @@ object ScaleUp {
     )
 
     keyCols.foreach { case (table, keys) =>
-      // events.ts is parquet TIMESTAMP(NANOS): read as long (session
-      // config above) and rewrite as micros TimestampType, same
+      // events.ts is parquet TIMESTAMP(NANOS): read as long (the
+      // session factory's nanosAsLong) and rewrite as micros TimestampType, same
       // conversion Tables applies at query time — the sf1 copy is then
       // natively readable by Spark and DuckDB alike
       val base = Tables(spark, src, table)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-throughput benchmark (VERDICT r9 next-#8): drives the
   * stream_* queries over a scaled events/documents copy in REAL
   * micro-batches and reports rows/sec plus the state-store footprint —
@@ -41,19 +39,10 @@ object StreamBench {
     graft.streaming.StreamQueries.maxFilesDefault = Some("4")
     val maxFiles = graft.streaming.StreamQueries.maxFilesOpt.get
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = EngineConf.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // keep every micro-batch's progress so inputRows sums exactly
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      math.min(32, Runtime.getRuntime.availableProcessors()).toString).toInt
+    // keep every micro-batch's progress so inputRows sums exactly
+    val spark = EngineConf.localSession(cpus,
+      "spark.sql.streaming.numRecentProgressUpdates" -> "10000")
     spark.sparkContext.setLogLevel("ERROR")
 
     val per = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -17,21 +17,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Loads a table, normalizing timestamp columns to TimestampType.
-    *
-    * The driver's testdata has shipped two physical encodings across
-    * rounds: TIMESTAMP(NANOS) (unreadable natively by Spark 4 —
-    * sessions set `spark.sql.legacy.parquet.nanosAsLong=true` and the
-    * long nanos are converted here) and TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false), which Spark 4 infers as TIMESTAMP_NTZ by
-    * default. All sessions run with UTC and all oracle comparisons are
-    * against DuckDB's naive reading of the same bytes, so NTZ→UTC
-    * TimestampType is a pure relabeling (identical micros value) — it
-    * keeps `unix_micros`/window-range arithmetic working unchanged.
-    * Sessions also set `spark.sql.parquet.inferTimestampNTZ.enabled=
-    * false` so direct `spark.read.parquet` calls outside this loader
-    * see the same schema; the cast here is the belt to that suspender.
-    */
   /** Row count of a parquet table from file-footer metadata only —
     * a driver-side listing + footer reads, NO cluster job and no data
     * pages touched. For sizing sketches (e.g. the Bloom capacity in
@@ -60,11 +45,23 @@ object Tables {
     total
   }
 
+  /** Loads a table, normalizing timestamp columns to TimestampType.
+    *
+    * The driver's testdata has shipped two physical encodings across
+    * rounds: TIMESTAMP(NANOS) (unreadable natively by Spark 4 — the
+    * session factory [[EngineConf.localSession]] sets
+    * `spark.sql.legacy.parquet.nanosAsLong=true` and the long nanos
+    * are converted here) and TIMESTAMP(MICROS, isAdjustedToUTC=false),
+    * which Spark 4 infers as TIMESTAMP_NTZ by default. The factory's
+    * sessions run with UTC and all oracle comparisons are against
+    * DuckDB's naive reading of the same bytes, so NTZ→UTC
+    * TimestampType is a pure relabeling (identical micros value) — it
+    * keeps `unix_micros`/window-range arithmetic working unchanged.
+    * The factory also sets `spark.sql.parquet.inferTimestampNTZ.enabled=
+    * false` so direct `spark.read.parquet` calls outside this loader
+    * see the same schema; the cast here is the belt to that suspender.
+    */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // central session hook: make the graft custom expressions available
-    // to every query (idempotent map-put, no measurable overhead)
-    graft.functions.VectorExprs.register(spark)
-    graft.functions.BloomExprs.register(spark)
     val df = spark.read.parquet(s"$dir/$name.parquet")
     val df2 =
       if (name == "events" && df.schema("ts").dataType == LongType)

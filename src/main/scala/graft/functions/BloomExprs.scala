@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -32,19 +31,11 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object BloomExprs {
 
-  /** idempotent session registration: `graft_bloom_contains(bytes, key)`
-    * — first arg must be a foldable binary literal (the serialized
-    * filter), second the long key column. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => BloomMightContain(exprs(1), bytesArg(exprs, 0)), "scala_udf")
-  }
-
-  /** foldable-binary argument guard (same contract as the intArg guard
-    * in GraftExtensions): the serialized filter is a plan-time
-    * parameter, and a non-literal argument must fail with a named
-    * error, not an opaque eval/ClassCast deep in planning. */
+  /** foldable-binary argument guard for `graft_bloom_contains(bytes,
+    * key)` (same contract as the intArg guard in GraftExtensions): the
+    * serialized filter is a plan-time parameter, and a non-literal
+    * argument must fail with a named error, not an opaque
+    * eval/ClassCast deep in planning. */
   private[graft] def bytesArg(es: Seq[Expression], i: Int): Array[Byte] = {
     require(i < es.length && es(i).foldable,
       s"graft_bloom_contains: argument ${i + 1} must be a literal binary " +

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** String-accessor expressions Spark lacks natively.
+/* String-accessor expressions Spark lacks natively.
   *
   * pandas `Series.str.normalize` (core/strings/accessor.py:3236 →
   * unicodedata.normalize) has no Spark SQL builtin; this is the
@@ -14,24 +13,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Catalyst expression, so it stays inside whole-stage codegen rather
   * than dropping to a UDF. DuckDB's nfc_normalize is the oracle peer.
   */
-object StringExprs {
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => NfcNormalize(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_token_count",
-      exprs => TokenCount(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_canon",
-      exprs => CanonText(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_marker_scores",
-      exprs => MarkerScores(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_audio_energies",
-      exprs => AudioFrameEnergies(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_sampled_fp",
-      exprs => SampledFp(exprs.head), "scala_udf")
-  }
-}
 
 /** Single-pass stride-16 sample-fingerprint kernel shared by
   * interpreted eval and the generated code of [[SampledFp]].

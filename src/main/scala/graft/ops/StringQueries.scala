@@ -198,7 +198,6 @@ object StringQueries extends QueryModule {
 
     "str_zfill_wrap_norm" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       val tags = split(concat_ws("|", $"lang", $"source"), "\\|")
       Tables(s, d, "documents")
         .withColumn("numstr",

@@ -62,7 +62,6 @@ object CurationQueries extends QueryModule {
   def queries: Map[String, Q] = Map(
     "pipe_curation" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       // 1+2: quality gate + language-ID, all in the scan stage.
       // Round-14: the gate's five marker/word-count values come from
       // ONE codegen'd byte scan (functions/StringExprs.MarkerScores)

@@ -49,7 +49,6 @@ object DedupQueries extends QueryModule {
     * an empty shingle set yields NULL bands in both forms (array_min
     * of an empty transform vs the kernel's explicit NULL). */
   private def signatures(df: DataFrame): DataFrame = {
-    graft.functions.MinHashExprs.register(df.sparkSession)
     df.select(col("doc_id"), expr("graft_shingle_hash64(text)").as("hs"))
       .select(col("doc_id") +: size(col("hs")).as("n_shingles") +:
         expr("graft_minhash_bands(hs)").as("__b") +: Nil: _*)
@@ -135,7 +134,6 @@ object DedupQueries extends QueryModule {
     // and graft_simhash24 folds all 24 bit counters in a single loop
     // (SimHashKernelSpec pins bit-exactness against the HOF chain).
     // Measured: dedup_simhash 6.0 s → sub-second at sf0.1.
-    graft.functions.MinHashExprs.register(docs.sparkSession)
     def sigOf(d: DataFrame, id: Column) = d
       .select(id.as("__id"), expr("graft_shingle_hash64(text)").as("hs"))
       .select(col("__id"), expr("graft_simhash24(hs)").as("simhash"))
@@ -251,7 +249,6 @@ object DedupQueries extends QueryModule {
                                         docs: DataFrame,
                                         knownDistinct: Boolean = false): (DataFrame, DataFrame, Boolean) = {
     import s.implicits._
-    graft.functions.MinHashExprs.register(s)
     val cap = s.conf.get("graft.lsh.hotBandCap", "5000").toLong
     val policy = s.conf.get("graft.lsh.hotBandPolicy", "error")
 
@@ -460,7 +457,6 @@ object DedupQueries extends QueryModule {
     // merges that plain exact dedup cannot.
     "dedup_normalized" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       val norm = call_function("graft_canon", $"text")
       Tables(s, d, "documents")
         .select($"doc_id", $"text", norm.as("norm"))

@@ -51,7 +51,6 @@ object TextQueries extends QueryModule {
     // order), compared against the labeled lang
     "txt_langid" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       // round-14: the four marker counts come from ONE codegen'd byte
       // scan (MarkerScores) instead of four interpreted split+fold
       // HOF passes — same values (MarkerScanSpec pins equivalence)
@@ -71,7 +70,6 @@ object TextQueries extends QueryModule {
     // composite score (deterministic double arithmetic)
     "txt_quality" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       // round-14: word count and the stopword count (the four DISJOINT
       // marker lists, so the union count is the sum of the per-list
       // counts) from one codegen'd byte scan instead of interpreted
@@ -104,7 +102,6 @@ object TextQueries extends QueryModule {
     // without any decimal-sum machinery.
     "txt_quality_lr" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       // round-14: n_words + en-marker count via the MarkerScores kernel
       val ms = call_function("graft_marker_scores", $"text")
       val nWords = ms.getField("n_words").cast("double")
@@ -143,7 +140,6 @@ object TextQueries extends QueryModule {
     // bit-for-bit.
     "txt_lr_train" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       val ms = call_function("graft_marker_scores", $"text")
       val nw = ms.getField("n_words").cast("double")
       val nc = length($"text").cast("double")
@@ -181,7 +177,6 @@ object TextQueries extends QueryModule {
     // distinct-token ratio
     "txt_tokens" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       Tables(s, d, "documents")
         .select($"doc_id",
           size(words).as("ws_tokens"),
@@ -203,7 +198,6 @@ object TextQueries extends QueryModule {
     // via the codegen'd TokenScan kernel.
     "txt_fertility" -> { (s, d) =>
       import s.implicits._
-      graft.functions.StringExprs.register(s)
       Tables(s, d, "documents")
         .select($"lang", $"n_chars",
           expr("graft_token_count(text)").as("re_tokens"),

@@ -395,10 +395,6 @@ object AsofJoinNative {
       allowExactMatches: Boolean = true): DataFrame = {
     require(Set("backward", "forward", "nearest")(direction),
       s"as-of join: unknown direction '$direction'")
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(AsofStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsofStrategy
-
     val lPlan = GraftSqlBridge.analyzed(left)
     val rAnalyzed = GraftSqlBridge.analyzed(right)
     // fresh exprIds on the right side so self-joins stay unambiguous

@@ -77,10 +77,8 @@ object StreamQueries extends QueryModule {
     * pins an explicit count (scaled StreamBench runs).
     * Values are unaffected: state is hash-partitioned by key and the
     * partition count only changes WHERE a key's store lives. */
-  @volatile var statePartitionsDefault: Option[Int] = None // in-JVM probe/bench hook; env wins
   private def statePartitions: Option[Int] =
     sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.trim.toInt)
-      .orElse(statePartitionsDefault)
       .orElse {
         val bytes = lastInputBytes
         if (bytes <= 0L) None
@@ -366,7 +364,6 @@ object StreamQueries extends QueryModule {
         .filter($"value" > 250.0).select($"user_id").distinct()
       val bytes = graft.functions.BloomExprs.buildBytes(
         denied, "user_id", denied.count())
-      graft.functions.BloomExprs.register(s)
       val ev = eventsStream(s, d)
       val probe = call_function("graft_bloom_contains",
         lit(bytes), $"user_id")

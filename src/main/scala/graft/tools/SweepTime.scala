@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-14 full-surface timing sweep: one warm noop execution of
   * EVERY declared query at the given scale factor, sorted report —
   * finds hot non-headline operators the bench never times (the
@@ -14,17 +12,8 @@ object SweepTime {
     val filter: String => Boolean =
       if (args.length > 1) { n => args(1).split(",").exists(n.contains) }
       else _ => true
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors()).toString
-    val spark = graft.EngineConf.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineConf.localSession(
+      math.min(32, Runtime.getRuntime.availableProcessors()))
     spark.sparkContext.setLogLevel("ERROR")
     // warmup
     try graft.SparkEntry.queries("q1_groupby_agg")(spark, sfDir)

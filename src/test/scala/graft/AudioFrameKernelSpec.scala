@@ -40,7 +40,6 @@ class AudioFrameKernelSpec extends SparkSpec {
     val corpus = Tables(spark, sf(), "documents").select($"doc_id", $"text")
     for (d <- Seq(edge, corpus)) {
       val hof = hofRows(d)
-      graft.functions.StringExprs.register(spark)
       // the query builder's exact kernel shape, on this in-memory frame
       val ker = d.filter(length($"text") >= 32)
         .select($"doc_id", posexplode(expr("graft_audio_energies(text)")))

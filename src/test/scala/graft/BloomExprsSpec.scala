@@ -11,7 +11,6 @@ class BloomExprsSpec extends SparkSpec {
 
   test("no false negatives: every inserted key probes true") {
     import spark.implicits._
-    BloomExprs.register(spark)
     val keys = Tables(spark, sf(), "orders")
       .filter($"o_totalprice" > 300000).select($"o_orderkey")
     val bytes = BloomExprs.buildBytes(keys, "o_orderkey", keys.count())
@@ -23,7 +22,6 @@ class BloomExprsSpec extends SparkSpec {
 
   test("false-positive rate stays near the build fpp") {
     import spark.implicits._
-    BloomExprs.register(spark)
     val keys = Tables(spark, sf(), "orders")
       .filter($"o_totalprice" > 300000).select($"o_orderkey")
     val bytes = BloomExprs.buildBytes(keys, "o_orderkey", keys.count(), fpp = 0.01)
@@ -38,7 +36,6 @@ class BloomExprsSpec extends SparkSpec {
 
   test("NULL key probes NULL, matching IN-subquery semantics") {
     import spark.implicits._
-    BloomExprs.register(spark)
     val bytes = BloomExprs.buildBytes(
       Seq(1L, 2L).toDF("k"), "k", 2L)
     val r = Seq(Some(1L), None).toDF("k")

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * calls anywhere) the graft functions and the native as-of strategy —
   * this is the `spark.sql.extensions=graft.GraftExtensions` cluster
   * path. Builds its own session (sharing the JVM's SparkContext) by
-  * clearing the active/default session around getOrCreate. */
+  * clearing the active/default session around getOrCreate. That
+  * context already carries the `spark.sql.extensions` conf, so the
+  * session gets graft twice and must install it once. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   private def withExtendedSession[A](f: SparkSession => A): A = {
@@ -28,6 +30,27 @@ class GraftExtensionsSpec extends AnyFunSuite {
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)
+    }
+  }
+
+  test("every graft_* function resolves in a fresh session") {
+    val names = Seq(
+      "graft_dot", "graft_l2sq", "graft_lsh_bucket", "graft_rand_project",
+      "graft_bloom_contains",
+      "graft_poly_hash", "graft_shingle_hash64", "graft_minhash_bands",
+      "graft_simhash24",
+      "graft_nfc", "graft_token_count", "graft_canon", "graft_marker_scores",
+      "graft_audio_energies", "graft_sampled_fp")
+    withExtendedSession { s =>
+      val missing = names.filterNot(s.catalog.functionExists)
+      assert(missing.isEmpty, s"not installed by GraftExtensions: $missing")
+      // and they evaluate, not just resolve
+      val r = s.sql("SELECT graft_simhash24(graft_shingle_hash64('a b c d')) AS sh, " +
+        "graft_marker_scores('the cat') AS ms, " +
+        "size(graft_audio_energies(repeat('x', 48))) AS ae, " +
+        "graft_sampled_fp('abc') AS fp").collect()(0)
+      assert(!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(3))
+      assert(r.getInt(2) > 0)
     }
   }
 
@@ -52,12 +75,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       import s.implicits._
       val left = Seq((1L, 10L), (1L, 20L)).toDF("k", "ts")
       val right = Seq((1L, 5L, 1.5), (1L, 15L, 2.5)).toDF("k", "rts", "v")
-      // strategy comes from the extensions, not the helper's lazy
-      // experimental-strategies injection — but backward() also
-      // injects; assert the session ALREADY has it before any call
+      // the strategy comes from the extensions alone: the session has
+      // it, exactly once, before any as-of call
       val installed = s.sessionState.planner.strategies
-        .exists(_.getClass.getName.contains("AsofStrategy"))
-      assert(installed, "AsofStrategy missing from planner strategies")
+        .count(_.getClass.getName.contains("AsofStrategy"))
+      assert(installed == 1, s"AsofStrategy installed $installed times")
       val df = graft.plans.AsofJoinNative.backward(s, left, right,
         by = Seq("k"), leftTs = "ts", rightTs = "rts", valueCols = Seq("v"))
       val got = df.orderBy("ts").collect().map(_.getDouble(2)).toSeq

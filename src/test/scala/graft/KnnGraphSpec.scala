@@ -32,7 +32,6 @@ class KnnGraphSpec extends SparkSpec {
     import spark.implicits._
     val NumTables = 4
     val BitsPerTable = 6
-    graft.functions.VectorExprs.register(spark)
     def bucket(t: Int) =
       call_function("graft_lsh_bucket", $"embedding",
         lit(t * BitsPerTable), lit(BitsPerTable))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExprs
 
 /** Quality + contract gates for the Johnson–Lindenstrauss projection
   * family (sim_random_projection / sim_rp_topk).
@@ -26,7 +25,6 @@ class RandProjectSpec extends SparkSpec {
 
   test("RandProject kernel equals the per-dim HOF fold bit-for-bit") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val df = Tables(spark, sf(), "embeddings").limit(200)
       .select($"vec_id", $"embedding")
     // HOF reference for output dim j: left fold over 1-based dims,
@@ -50,7 +48,6 @@ class RandProjectSpec extends SparkSpec {
 
   test("JL distortion: projected distances concentrate around originals") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val e = Tables(spark, sf(), "embeddings")
       .select($"vec_id", $"embedding",
         call_function("graft_rand_project", $"embedding", lit(RpDim)).as("rp"))
@@ -78,7 +75,6 @@ class RandProjectSpec extends SparkSpec {
 
   test("projected cosine correlates with exact cosine across pairs") {
     import spark.implicits._
-    VectorExprs.register(spark)
     // The testdata embeddings are ISOTROPIC noise (best cosine among
     // 500 candidates ~0.33): the hardest case for any sketch. A
     // 16-dim projection cannot rank top-3 directly here (estimate
@@ -130,7 +126,6 @@ class RandProjectSpec extends SparkSpec {
 
   test("RandProject null contract: null array or element -> NULL") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val df = Seq(
       (1L, Some(Seq[Option[Double]](Some(1.0), Some(2.0)))),
       (2L, None),

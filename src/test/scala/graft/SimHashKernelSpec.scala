@@ -32,7 +32,6 @@ class SimHashKernelSpec extends SparkSpec {
 
   test("kernel simhash == HOF simhash on the corpus and edge strings") {
     import spark.implicits._
-    graft.functions.MinHashExprs.register(spark)
     val edge = Seq("", "a", "a b", "a b c", "a b c d", "the the the the",
       "one two three four five six seven", "x  y  z w", null)
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")

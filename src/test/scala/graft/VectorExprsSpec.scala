@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExprs
 
 /** DotProduct (codegen'd) must be bit-identical to the HOF
   * aggregate(zip_with(...)) formulation it replaced — same widening,
@@ -10,7 +9,6 @@ class VectorExprsSpec extends SparkSpec {
 
   test("graft_dot equals the HOF fold bit-for-bit on float arrays") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val df = Tables(spark, sf(), "embeddings").limit(200)
       .select($"vec_id", $"embedding".as("a"),
         reverse($"embedding").as("b"))
@@ -26,7 +24,6 @@ class VectorExprsSpec extends SparkSpec {
 
   test("graft_l2sq equals the HOF fold bit-for-bit on float arrays") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val df = Tables(spark, sf(), "embeddings").limit(200)
       .select($"embedding".as("a"), reverse($"embedding").as("b"))
     val hof = aggregate(
@@ -43,7 +40,6 @@ class VectorExprsSpec extends SparkSpec {
 
   test("graft_dot handles double arrays and null inputs") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val df = Seq(
       (Some(Seq(1.0, 2.0, 3.0)), Some(Seq(4.0, 5.0, 6.0))),
       (None, Some(Seq(1.0, 1.0, 1.0))))
@@ -55,7 +51,6 @@ class VectorExprsSpec extends SparkSpec {
 
   test("kernels mirror the HOF null contract: length mismatch and null elements -> NULL") {
     import spark.implicits._
-    VectorExprs.register(spark)
     // length mismatch: zip_with null-pads -> fold poisoned -> NULL
     val mismatch = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0)))
       .toDF("a", "b")
@@ -73,7 +68,6 @@ class VectorExprsSpec extends SparkSpec {
 
   test("dot/l2sq stay nullable on NON-nullable inputs (no Janino fallback, no bogus non-null schema)") {
     import spark.implicits._
-    VectorExprs.register(spark)
     // array(lit...) children are non-nullable — before the nullable
     // override this path generated `false = true;` and fell back to
     // the interpreted evaluator with a schema promising non-null
@@ -88,7 +82,6 @@ class VectorExprsSpec extends SparkSpec {
 
   test("graft_lsh_bucket maps a NULL embedding to bucket 0, matching the HOF form") {
     import spark.implicits._
-    VectorExprs.register(spark)
     val df = Seq(
       (1L, Some(Seq(1.0f, -2.0f, 0.5f, 3.0f))),
       (2L, None: Option[Seq[Float]]))
