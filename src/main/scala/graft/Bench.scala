@@ -48,17 +48,18 @@ object Bench {
     // semantics, zero Exchange / zero Sort over the on-disk run
     // (sources/BucketedLayout). Rep 1 pays the one-time layout write;
     // min-of-reps reports the steady-state read path, which is what a
-    // layout is for. The 19-query total comparable with pre-r9 records
+    // layout is for. The 18-query total comparable with pre-r9 records
     // = this total minus the win_rank_*/win_bkt_*/agg_bkt_*/
     // join_bkt_inner entries (EIGHT since round 10, matching
-    // bench/README.md — join_bkt_inner is also post-r9).
+    // bench/README.md — join_bkt_inner is also post-r9); from those
+    // records drop join_asof_backward, which left the headline once it
+    // ran the same plan as join_asof_native.
     "win_bkt_rolling_sum",
     "win_bkt_ewm_mean",
     "win_bkt_rank",
     "rs_pivot",            // groupBy().pivot()
     "set_dropdup_first",   // dedup keep=first window
     "ts_resample_day",     // time bucketing
-    "join_asof_backward",  // union+window as-of join
     "join_asof_native",    // native merge-walk as-of operator
     "dedup_minhash_pairs", // shingle->minhash->LSH->verify
     "sim_cosine_topk",     // brute-force ANN baseline

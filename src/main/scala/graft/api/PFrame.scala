@@ -266,7 +266,12 @@ final case class PFrame(df: DataFrame, index: Seq[String] = Nil) {
 
   def groupby(keys: String*): PGroupBy = PGroupBy(df, keys)
 
-  /** pd.merge_asof(direction=backward|forward|nearest) */
+  /** pd.merge_asof(direction=backward|forward|nearest) through the
+    * native merge-walk (`plans/AsofJoinNative`). `on` must be a
+    * timestamp, timestamp_ntz or long column of the same type on both
+    * sides, and each `by` key must have the same type on both sides.
+    * Null merge keys raise, as in pandas. With no `by` keys the call
+    * routes to the range-bucketed `AsofJoinNative.global`. */
   def mergeAsof(
       right: PFrame,
       by: Seq[String],
@@ -275,26 +280,11 @@ final case class PFrame(df: DataFrame, index: Seq[String] = Nil) {
       direction: String = "backward",
       toleranceMicros: Option[Long] = None,
       allowExactMatches: Boolean = true): PFrame = {
-    val out = direction match {
-      case "backward" if by.isEmpty =>
-        // keyless as-of: the keyed rewrite would collapse to one
-        // window partition — route to the range-partitioned merge-walk
-        graft.operators.AsofJoin.globalBackward(df, right.df, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "backward" =>
-        graft.operators.AsofJoin.backward(df, right.df, by, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "forward" if by.isEmpty =>
-        graft.operators.AsofJoin.globalForward(df, right.df, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "forward" =>
-        graft.operators.AsofJoin.forward(df, right.df, by, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case "nearest" =>
-        graft.operators.AsofJoin.nearest(df, right.df, by, on, on, valueCols,
-          toleranceMicros, allowExactMatches)
-      case other => throw new IllegalArgumentException(s"direction: $other")
-    }
+    val out =
+      if (by.isEmpty) graft.plans.AsofJoinNative.global(df, right.df, on, on, valueCols,
+        direction, toleranceMicros, allowExactMatches)
+      else graft.plans.AsofJoinNative.join(df, right.df, by, on, on, valueCols,
+        direction, toleranceMicros, allowExactMatches)
     copy(df = out)
   }
 

@@ -1,439 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-/** Distributed as-of join (pandas `merge_asof`, reference
-  * `core/reshape/merge.py:644` `_AsOfMerge` and the Cython pointer-walk
-  * kernels at `_libs/join.pyx:725-900` —
-  * asof_join_{backward,forward,nearest}_on_X_by_Y).
-  *
-  * Spark has no built-in as-of join, and the reference's algorithm
-  * (sorted two-pointer walk with a per-`by` last-seen table) is a
-  * single-node design. The Spark-first rewrite is UNION + running
-  * window fills over a window partitioned by the `by` keys:
-  *
-  *   - both sides are tagged and unioned on a common schema; right
-  *     rows appear with side=0 (before left rows at equal timestamps,
-  *     feeding the backward fill) and/or side=2 (after, feeding the
-  *     forward fill) — this side ordering is exactly pandas
-  *     `allow_exact_matches=True`;
-  *   - one shuffle co-partitions by the `by` keys (the same exchange a
-  *     sort-merge join needs); the in-partition sort orders by
-  *     (ts, side);
-  *   - `last(matchRow, ignoreNulls)` over (-inf, 0] carries the latest
-  *     right ROW backward; `first(matchRow, ignoreNulls)` over
-  *     [0, +inf) carries the earliest following right ROW forward —
-  *     single pass, no per-row probes, no driver state. The fill
-  *     carries ONE struct of (ts, all value columns), not each value
-  *     column independently: pandas merge_asof returns the matched
-  *     row as-is, so a NULL value inside the matched row must
-  *     propagate (not fall back to an older row), and all value
-  *     columns must come from the same matched row;
-  *   - `nearest` computes both fills and picks the closer match
-  *     (backward wins ties, matching the reference kernel).
-  *
-  * At 100 TB this scales with the `by`-key cardinality exactly like a
-  * shuffled join; AQE can split skewed keys. A global as-of (empty
-  * `by`) would degenerate to a single-partition window here — use
-  * `globalBackward` (range-partitioned merge-walk with boundary
-  * carry) for that case instead.
+/** Former entry point of the as-of join, kept only because
+  * perfbench's `operators.asof` layer call still names it: forwards to
+  * the native merge-walk, `graft.plans.AsofJoinNative.join`. New code
+  * calls that directly.
   */
 object AsofJoin {
-
-  /** Backward as-of join: latest right row with rts <= lts (rts < lts
-    * when allowExactMatches=false, pandas merge.py:644). */
   def backward(left: DataFrame, right: DataFrame, by: Seq[String],
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None,
-      allowExactMatches: Boolean = true): DataFrame =
-    asof(left, right, by, leftTs, rightTs, valueCols, "backward",
-      toleranceMicros, allowExactMatches)
-
-  /** Forward as-of join: earliest right row with rts >= lts (strict >
-    * when allowExactMatches=false). */
-  def forward(left: DataFrame, right: DataFrame, by: Seq[String],
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None,
-      allowExactMatches: Boolean = true): DataFrame =
-    asof(left, right, by, leftTs, rightTs, valueCols, "forward",
-      toleranceMicros, allowExactMatches)
-
-  /** Nearest as-of join: right row minimizing |rts - lts|; backward
-    * wins ties. */
-  def nearest(left: DataFrame, right: DataFrame, by: Seq[String],
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None,
-      allowExactMatches: Boolean = true): DataFrame =
-    asof(left, right, by, leftTs, rightTs, valueCols, "nearest",
-      toleranceMicros, allowExactMatches)
-
-  /** Global (empty-`by`) backward as-of join WITHOUT the
-    * single-partition degeneration the keyed rewrite has when `by` is
-    * empty (SCALE.md item; VERDICT r1).
-    *
-    * Shape: tag + union both sides exactly like the keyed rewrite,
-    * range-partition the union on (ts, tiebreak) — ONE shuffle, same
-    * as a global sort — then two passes over the SAME shuffled RDD
-    * (the second job skips the exchange stage, so data moves once):
-    *
-    *   pass 1: per partition, the final right row (timestamp+values);
-    *           collected to the driver — numPartitions tiny rows, the
-    *           same bounded footprint as broadcasting range bounds;
-    *   pass 2: prefix-scan those into a carry-in per partition, then
-    *           each partition walks its sorted rows with the carry as
-    *           initial state — the classic distributed sorted
-    *           merge-walk with boundary handoff.
-    *
-    * Scales as a global sort of |L|+|R| rows (range exchange keeps
-    * per-partition memory O(rows/partition)); no partition ever holds
-    * the whole series. The walk leaves Tungsten (Row-level
-    * mapPartitions) — acceptable for the final stitch; the heavy
-    * lifting (scan, filter, exchange, in-partition sort) stays
-    * columnar/codegen. `allow_exact_matches` reuses the tiebreak-side
-    * trick; `tolerance` nulls stale matches. Forward/nearest follow by
-    * mirroring the sort order; pandas raises on null keys, so the walk
-    * fails fast on a null timestamp.
-    */
-  def globalBackward(left: DataFrame, right: DataFrame,
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None,
-      allowExactMatches: Boolean = true): DataFrame =
-    globalAsof(left, right, leftTs, rightTs, valueCols, toleranceMicros,
-      allowExactMatches, sign = 1L)
-
-  /** Global forward as-of: earliest right row with rts >= lts. The
-    * same walk on NEGATED epoch micros — order reverses, the carry
-    * becomes "latest right at or after", and the tolerance distance
-    * (-lts) - (-rts) = rts - lts is exactly the forward gap. */
-  def globalForward(left: DataFrame, right: DataFrame,
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None,
-      allowExactMatches: Boolean = true): DataFrame =
-    globalAsof(left, right, leftTs, rightTs, valueCols, toleranceMicros,
-      allowExactMatches, sign = -1L)
-
-  /** Global nearest as-of: right row minimizing |rts - lts|, backward
-    * winning ties — the keyless mirror of `nearest`.
-    *
-    * Same single range exchange as `globalBackward`; the difference is
-    * the boundary handoff needs BOTH directions. Pass 1 returns four
-    * tiny values per partition: the last right row (backward carry, as
-    * before) plus the first right row AND the first right row at a
-    * strictly later timestamp (the pair a strict-forward probe needs
-    * when the immediate next right shares the probe's timestamp under
-    * allow_exact_matches=false). The driver prefix-scans the backward
-    * carries and suffix-scans the forward pairs — O(numPartitions)
-    * state, same footprint as range bounds. Pass 2 buffers one
-    * partition (the memory the in-partition sort already paid),
-    * reverse-walks it to attach each left row's forward candidate,
-    * then forward-walks for the backward candidate and picks the
-    * closer, backward on ties (join.pyx:900 asof_join_nearest). */
-  def globalNearest(left: DataFrame, right: DataFrame,
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long] = None,
-      allowExactMatches: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.StructType
-    import scala.collection.mutable.ArrayBuffer
-
-    val spark = left.sparkSession
-    val leftCols = left.columns.toSeq
-    val nL = leftCols.size
-    val nV = valueCols.size
-    // allow_exact_matches=True: equal-ts right rows sort BEFORE left
-    // rows, so the backward walk sees them (distance 0, backward wins
-    // the tie anyway). =False: they sort AFTER, so the backward carry
-    // is strictly earlier; the forward probe then skips the equal-ts
-    // block via the strict pair.
-    val ordRight = if (allowExactMatches) 0 else 2
-
-    val lTag = left.select(
-      Seq(unix_micros(col(leftTs)).as("__ts"), lit(1).as("__side"),
-        lit(1).as("__ord")) ++
-        leftCols.map(col) ++
-        valueCols.map(c =>
-          lit(null).cast(right.schema(c).dataType).as(s"__v_$c")): _*)
-    val rTag = right.select(
-      Seq(unix_micros(col(rightTs)).as("__ts"), lit(0).as("__side"),
-        lit(ordRight).as("__ord")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        valueCols.map(c => col(c).as(s"__v_$c")): _*)
-
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val u = lTag.unionByName(rTag)
-      .repartitionByRange(n, col("__ts"), col("__ord"))
-      .sortWithinPartitions(col("__ts"), col("__ord"))
-    val rdd = u.rdd // shared lineage: pass 2 reuses pass 1's shuffle files
-
-    def rightRowOf(r: Row): (Long, Seq[Any]) = {
-      require(!r.isNullAt(0), "as-of join: null 'on' timestamp — merge keys must be non-null")
-      (r.getLong(0), (0 until nV).map(i => r.get(3 + nL + i)))
-    }
-
-    // pass 1: (lastRight, firstRight, firstRightStrictlyLater)
-    val ends: Map[Int, (Option[(Long, Seq[Any])], Option[(Long, Seq[Any])], Option[(Long, Seq[Any])])] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        var last: Option[(Long, Seq[Any])] = None
-        var first: Option[(Long, Seq[Any])] = None
-        var firstLater: Option[(Long, Seq[Any])] = None
-        it.foreach { r =>
-          if (r.getInt(1) == 0) {
-            val rr = rightRowOf(r)
-            last = Some(rr)
-            if (first.isEmpty) first = Some(rr)
-            else if (firstLater.isEmpty && rr._1 > first.get._1) firstLater = Some(rr)
-          }
-        }
-        Iterator((pid, (last, first, firstLater)))
-      }.collect().toMap
-
-    val nParts = rdd.getNumPartitions
-    val carryBack: Map[Int, Option[(Long, Seq[Any])]] = {
-      var acc: Option[(Long, Seq[Any])] = None
-      (0 until nParts).map { p =>
-        val in = p -> acc
-        ends.get(p).flatMap(_._1).foreach(x => acc = Some(x))
-        in
-      }.toMap
-    }
-    // suffix scan: (next right, next right at a strictly later ts than
-    // that) entering each partition from the right
-    val carryFwd: Map[Int, (Option[(Long, Seq[Any])], Option[(Long, Seq[Any])])] = {
-      var nxt: Option[(Long, Seq[Any])] = None
-      var nxtStrict: Option[(Long, Seq[Any])] = None
-      ((nParts - 1) to 0 by -1).map { p =>
-        val in = p -> ((nxt, nxtStrict))
-        ends.get(p).foreach { case (_, f1, f2) =>
-          f1.foreach { f =>
-            nxtStrict = f2.orElse(
-              if (nxt.exists(_._1 > f._1)) nxt else nxtStrict)
-            nxt = Some(f)
-          }
-        }
-        in
-      }.toMap
-    }
-
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      val rows = it.toArray
-      // reverse walk: forward candidate per row position
-      val fwdCand = new Array[(Option[(Long, Seq[Any])], Option[(Long, Seq[Any])])](rows.length)
-      var (nxt, nxtStrict) = carryFwd.getOrElse(pid, (None, None))
-      var i = rows.length - 1
-      while (i >= 0) {
-        val r = rows(i)
-        if (r.getInt(1) == 0) {
-          val rr = rightRowOf(r)
-          if (nxt.isEmpty || nxt.get._1 != rr._1) nxtStrict = nxt
-          nxt = Some(rr)
-        } else fwdCand(i) = (nxt, nxtStrict)
-        i -= 1
-      }
-      // forward walk: backward candidate + pick
-      var cur: Option[(Long, Seq[Any])] = carryBack.getOrElse(pid, None)
-      val outRows = new ArrayBuffer[Row](rows.length)
-      var j = 0
-      while (j < rows.length) {
-        val r = rows(j)
-        if (r.getInt(1) == 0) cur = Some(rightRowOf(r))
-        else {
-          require(!r.isNullAt(0), "as-of join: null 'on' timestamp — merge keys must be non-null")
-          val lts = r.getLong(0)
-          val back = cur.filter { case (mts, _) =>
-            toleranceMicros.forall(tol => lts - mts <= tol)
-          }
-          val (fn, fs) = fwdCand(j)
-          val fwdRaw =
-            if (allowExactMatches) fn
-            else if (fn.exists(_._1 == lts)) fs
-            else fn
-          val fwd = fwdRaw.filter { case (mts, _) =>
-            toleranceMicros.forall(tol => mts - lts <= tol)
-          }
-          val vals = (back, fwd) match {
-            case (Some((b, bv)), Some((f, fv))) =>
-              if (lts - b <= f - lts) bv else fv
-            case (Some((_, bv)), None) => bv
-            case (None, Some((_, fv))) => fv
-            case _ => Seq.fill[Any](nV)(null)
-          }
-          outRows += Row.fromSeq((0 until nL).map(i2 => r.get(3 + i2)) ++ vals)
-        }
-        j += 1
-      }
-      outRows.iterator
-    }
-    val schema = StructType(left.schema.fields ++
-      valueCols.map(c => right.schema(c).copy(nullable = true)))
-    spark.createDataFrame(out, schema)
-  }
-
-  private def globalAsof(left: DataFrame, right: DataFrame,
-      leftTs: String, rightTs: String, valueCols: Seq[String],
-      toleranceMicros: Option[Long],
-      allowExactMatches: Boolean,
-      sign: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.StructType
-
-    val spark = left.sparkSession
-    val leftCols = left.columns.toSeq
-    val nL = leftCols.size
-    val nV = valueCols.size
-    val ordRight = if (allowExactMatches) 0 else 2
-
-    val lTag = left.select(
-      Seq((unix_micros(col(leftTs)) * sign).as("__ts"), lit(1).as("__side"),
-        lit(1).as("__ord")) ++
-        leftCols.map(col) ++
-        valueCols.map(c =>
-          lit(null).cast(right.schema(c).dataType).as(s"__v_$c")): _*)
-    val rTag = right.select(
-      Seq((unix_micros(col(rightTs)) * sign).as("__ts"), lit(0).as("__side"),
-        lit(ordRight).as("__ord")) ++
-        leftCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        valueCols.map(c => col(c).as(s"__v_$c")): _*)
-
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val u = lTag.unionByName(rTag)
-      .repartitionByRange(n, col("__ts"), col("__ord"))
-      .sortWithinPartitions(col("__ts"), col("__ord"))
-    val rdd = u.rdd // shared lineage: pass 2 reuses pass 1's shuffle files
-
-    def rightRowOf(r: Row): (Long, Seq[Any]) = {
-      require(!r.isNullAt(0), "as-of join: null 'on' timestamp — merge keys must be non-null")
-      (r.getLong(0), (0 until nV).map(i => r.get(3 + nL + i)))
-    }
-
-    val lasts: Map[Int, Option[(Long, Seq[Any])]] =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        var last: Option[(Long, Seq[Any])] = None
-        it.foreach { r => if (r.getInt(1) == 0) last = Some(rightRowOf(r)) }
-        Iterator((pid, last))
-      }.collect().toMap
-
-    val carry: Map[Int, Option[(Long, Seq[Any])]] = {
-      var acc: Option[(Long, Seq[Any])] = None
-      (0 until rdd.getNumPartitions).map { p =>
-        val in = p -> acc
-        lasts.getOrElse(p, None).foreach(x => acc = Some(x))
-        in
-      }.toMap
-    }
-
-    val out = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: Option[(Long, Seq[Any])] = carry.getOrElse(pid, None)
-      it.flatMap { r =>
-        if (r.getInt(1) == 0) {
-          cur = Some(rightRowOf(r))
-          Iterator.empty
-        } else {
-          require(!r.isNullAt(0), "as-of join: null 'on' timestamp — merge keys must be non-null")
-          val matched = cur.filter { case (mts, _) =>
-            toleranceMicros.forall(tol => r.getLong(0) - mts <= tol)
-          }
-          val vals = matched.map(_._2).getOrElse(Seq.fill[Any](nV)(null))
-          Iterator(Row.fromSeq((0 until nL).map(i => r.get(3 + i)) ++ vals))
-        }
-      }
-    }
-    val schema = StructType(left.schema.fields ++
-      valueCols.map(c => right.schema(c).copy(nullable = true)))
-    spark.createDataFrame(out, schema)
-  }
-
-  private def asof(
-      left: DataFrame,
-      right: DataFrame,
-      by: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      valueCols: Seq[String],
-      direction: String,
-      toleranceMicros: Option[Long],
-      allowExactMatches: Boolean = true): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val leftOther = leftCols.filterNot(by.contains)
-    val needBack = direction == "backward" || direction == "nearest"
-    val needFwd = direction == "forward" || direction == "nearest"
-
-    // __side is the ROLE (0 = right feeding backward fill, 1 = left,
-    // 2 = right feeding forward fill); __ord is the tiebreak position
-    // at equal timestamps. allow_exact_matches=True sorts candidate
-    // right rows onto the included side of each fill's frame (backward
-    // before left, forward after); =False mirrors them so an equal-ts
-    // right row lands outside the frame — strict < / > with no other
-    // change to the fills.
-    def ordFor(side: Int): Int = side match {
-      case 1 => 1
-      case 0 => if (allowExactMatches) 0 else 2
-      case 2 => if (allowExactMatches) 2 else 0
-    }
-
-    def tag(df: DataFrame, ts: String, side: Int, isLeft: Boolean): DataFrame =
-      df.select(
-        (by.map(col) :+ col(ts).as("__ts") :+ lit(side).as("__side") :+
-          lit(ordFor(side)).as("__ord")) ++
-          (if (isLeft) leftOther.map(col)
-           else leftOther.map(c => lit(null).cast(left.schema(c).dataType).as(c))) ++
-          (if (isLeft) valueCols.map(c => lit(null).cast(right.schema(c).dataType).as(c))
-           else valueCols.map(col)): _*)
-
-    val parts = Seq(tag(left, leftTs, 1, isLeft = true)) ++
-      (if (needBack) Seq(tag(right, rightTs, 0, isLeft = false)) else Nil) ++
-      (if (needFwd) Seq(tag(right, rightTs, 2, isLeft = false)) else Nil)
-    val unioned = parts.reduce(_ unionByName _)
-
-    val ord = Window.partitionBy(by.map(col): _*)
-      .orderBy(col("__ts").asc, col("__ord").asc)
-    val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    // the whole candidate right row as one value: NULL fields inside a
-    // matched row propagate, and every value column is taken from the
-    // SAME matched row (last/first of a struct is atomic)
-    val matchRow = struct(col("__ts").as("__mts") +: valueCols.map(col): _*)
-    def backFill: Column =
-      last(when(col("__side") === 0, matchRow), ignoreNulls = true).over(back)
-    def fwdFill: Column =
-      first(when(col("__side") === 2, matchRow), ignoreNulls = true).over(fwd)
-
-    var df = unioned
-    if (needBack) df = df.withColumn("__b", backFill)
-    if (needFwd) df = df.withColumn("__f", fwdFill)
-
-    // tolerance: the chosen match must be within the window; any other
-    // candidate in that direction is farther, so nulling suffices
-    toleranceMicros.foreach { tol =>
-      if (needBack) {
-        val stale =
-          unix_micros(col("__ts")) - unix_micros(col("__b").getField("__mts")) > tol
-        df = df.withColumn("__b", when(stale, lit(null)).otherwise(col("__b")))
-      }
-      if (needFwd) {
-        val stale =
-          unix_micros(col("__f").getField("__mts")) - unix_micros(col("__ts")) > tol
-        df = df.withColumn("__f", when(stale, lit(null)).otherwise(col("__f")))
-      }
-    }
-
-    val picked = direction match {
-      case "backward" => valueCols.map(c => col("__b").getField(c).as(c))
-      case "forward"  => valueCols.map(c => col("__f").getField(c).as(c))
-      case "nearest" =>
-        val distB =
-          unix_micros(col("__ts")) - unix_micros(col("__b").getField("__mts"))
-        val distF =
-          unix_micros(col("__f").getField("__mts")) - unix_micros(col("__ts"))
-        val useBack = col("__f").isNull || (col("__b").isNotNull && distB <= distF)
-        valueCols.map(c =>
-          when(useBack, col("__b").getField(c))
-            .otherwise(col("__f").getField(c)).as(c))
-    }
-
-    df.filter(col("__side") === 1)
-      .select(leftCols.map(col) ++ picked: _*)
-  }
+      leftTs: String, rightTs: String, valueCols: Seq[String]): DataFrame =
+    graft.plans.AsofJoinNative.join(left, right, by, leftTs, rightTs, valueCols)
 }

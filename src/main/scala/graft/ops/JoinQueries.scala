@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.{QueryModule, Tables}
 import graft.OracleNum._
-import graft.operators.AsofJoin
+import graft.plans.AsofJoinNative
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,6 +19,26 @@ import org.apache.spark.sql.functions._
   * `isin`/indicator filtering — Spark is richer here, SURVEY §2.3).
   */
 object JoinQueries extends QueryModule {
+
+  /** join_asof_backward and join_asof_native: one builder, one oracle. */
+  private val asofBackward: Q = { (s, d) =>
+    import s.implicits._
+    val ev = Tables(s, d, "events")
+    val clicks = ev.filter($"event_type" === "click")
+      .select($"user_id", $"event_id", $"ts")
+    val purchases = ev.filter($"event_type" === "purchase")
+      .select($"user_id", $"ts", $"value")
+    AsofJoinNative.join(clicks, purchases,
+      by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
+      valueCols = Seq("value"))
+      .withColumnRenamed("value", "asof_val")
+  }
+
+  private val asofBackwardSql =
+    """SELECT a.user_id, a.event_id, a.ts, b."value" AS asof_val
+       FROM (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click') a
+       ASOF LEFT JOIN (SELECT user_id, ts, "value" FROM events WHERE event_type = 'purchase') b
+       ON a.user_id = b.user_id AND a.ts >= b.ts"""
 
   def queries: Map[String, Q] = Map(
     // merge how='inner' on one key (merge.py:149), fact-to-fact: AQE
@@ -342,23 +362,10 @@ object JoinQueries extends QueryModule {
     // merge_asof backward, by=user (merge.py:644 _AsOfMerge;
     // join.pyx:725 asof_join_backward_on_X_by_Y): latest purchase value
     // at/before each click
-    "join_asof_backward" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
-      AsofJoin.backward(clicks, purchases,
-        by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("value"))
-        .withColumnRenamed("value", "asof_val")
-    },
+    "join_asof_backward" -> asofBackward,
 
     // merge_asof with tolerance= (merge.py:644): matches older than
-    // 1 day are nulled — through the native merge-walk operator
-    // (plans/AsofJoinNative); the union+window rewrite remains the
-    // cross-checked fallback (AsofJoinSpec)
+    // 1 day are nulled
     "join_asof_tolerance" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -366,31 +373,17 @@ object JoinQueries extends QueryModule {
         .select($"user_id", $"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .select($"user_id", $"ts", $"value")
-      graft.plans.AsofJoinNative.join(s, clicks, purchases,
+      AsofJoinNative.join(clicks, purchases,
         by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
         valueCols = Seq("value"), toleranceUs = Some(86400000000L))
         .withColumnRenamed("value", "asof_val")
     },
 
-    // merge_asof through the native LogicalPlan/Strategy/SparkPlan
-    // operator (graft.plans.AsofJoinNative): same semantics and oracle
-    // as join_asof_backward, physical sorted merge-walk instead of the
-    // union+window rewrite
-    "join_asof_native" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
-      graft.plans.AsofJoinNative.backward(s, clicks, purchases,
-        by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("value"))
-        .withColumnRenamed("value", "asof_val")
-    },
+    // the same query under the name perfbench's frame_analytics
+    // workload runs
+    "join_asof_native" -> asofBackward,
 
-    // merge_asof direction='forward' (merge.py:644; join.pyx:812) —
-    // native merge-walk; rewrite cross-checked in AsofJoinSpec
+    // merge_asof direction='forward' (merge.py:644; join.pyx:812)
     "join_asof_forward" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -398,15 +391,14 @@ object JoinQueries extends QueryModule {
         .select($"user_id", $"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .select($"user_id", $"ts", $"value")
-      graft.plans.AsofJoinNative.join(s, clicks, purchases,
+      AsofJoinNative.join(clicks, purchases,
         by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
         valueCols = Seq("value"), direction = "forward")
         .withColumnRenamed("value", "asof_val")
     },
 
     // merge_asof direction='nearest' (join.pyx:900): closest match in
-    // either direction, backward wins ties — native merge-walk;
-    // rewrite cross-checked in AsofJoinSpec
+    // either direction, backward wins ties
     "join_asof_nearest" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -414,7 +406,7 @@ object JoinQueries extends QueryModule {
         .select($"user_id", $"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .select($"user_id", $"ts", $"value")
-      graft.plans.AsofJoinNative.join(s, clicks, purchases,
+      AsofJoinNative.join(clicks, purchases,
         by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
         valueCols = Seq("value"), direction = "nearest")
         .withColumnRenamed("value", "asof_val")
@@ -430,21 +422,18 @@ object JoinQueries extends QueryModule {
       val clicks = ev.filter($"event_type" === "click")
         .select($"user_id", $"event_id", $"ts")
       val all = ev.select($"user_id", $"ts", $"value")
-      AsofJoin.backward(clicks, all,
+      AsofJoinNative.join(clicks, all,
         by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
         valueCols = Seq("value"), allowExactMatches = false)
         .withColumnRenamed("value", "asof_val")
     },
 
-    // merge_asof with NO by key (merge.py:644 left_by=None): since r8
-    // this runs the NATIVE merge-walk (plans/AsofJoinNative.global) —
-    // range-bucketed time as a synthetic `by` key, per-bucket boundary
-    // carry rows, the same AsofJoinExec pointer walk as the keyed
-    // queries; no single-partition window, no union blow-up
-    // (operators/AsofJoin.globalBackward keeps the DataFrame-level
-    // rewrite for the API surface). Right side is aggregated to unique
-    // timestamps so the latest-match row is well-defined in both
-    // engines.
+    // merge_asof with NO by key (merge.py:644 left_by=None):
+    // AsofJoinNative.global — range-bucketed time as a synthetic `by`
+    // key, per-bucket boundary carry rows, the same AsofJoinExec
+    // pointer walk as the keyed queries; no single-partition window.
+    // Right side is aggregated to unique timestamps so the
+    // latest-match row is well-defined in both engines.
     "join_asof_global" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
@@ -452,7 +441,7 @@ object JoinQueries extends QueryModule {
         .select($"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      graft.plans.AsofJoinNative.global(s, clicks, purchases,
+      AsofJoinNative.global(clicks, purchases,
         leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"))
     },
 
@@ -466,7 +455,7 @@ object JoinQueries extends QueryModule {
         .select($"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      graft.plans.AsofJoinNative.global(s, clicks, purchases,
+      AsofJoinNative.global(clicks, purchases,
         leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"),
         direction = "forward")
     },
@@ -482,7 +471,7 @@ object JoinQueries extends QueryModule {
         .select($"event_id", $"ts")
       val purchases = ev.filter($"event_type" === "purchase")
         .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      graft.plans.AsofJoinNative.global(s, clicks, purchases,
+      AsofJoinNative.global(clicks, purchases,
         leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"),
         direction = "nearest")
     },
@@ -873,11 +862,7 @@ object JoinQueries extends QueryModule {
            FROM customer GROUP BY c_custkey) t
          GROUP BY key_multiplicity""",
 
-    "join_asof_backward" ->
-      """SELECT a.user_id, a.event_id, a.ts, b."value" AS asof_val
-         FROM (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click') a
-         ASOF LEFT JOIN (SELECT user_id, ts, "value" FROM events WHERE event_type = 'purchase') b
-         ON a.user_id = b.user_id AND a.ts >= b.ts""",
+    "join_asof_backward" -> asofBackwardSql,
 
     "join_asof_tolerance" ->
       """WITH a AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'),
@@ -891,11 +876,7 @@ object JoinQueries extends QueryModule {
          SELECT user_id, event_id, ts, v AS asof_val
          FROM j WHERE rn = 1""",
 
-    "join_asof_native" ->
-      """SELECT a.user_id, a.event_id, a.ts, b."value" AS asof_val
-         FROM (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click') a
-         ASOF LEFT JOIN (SELECT user_id, ts, "value" FROM events WHERE event_type = 'purchase') b
-         ON a.user_id = b.user_id AND a.ts >= b.ts""",
+    "join_asof_native" -> asofBackwardSql,
 
     "join_asof_forward" ->
       """WITH a AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'),

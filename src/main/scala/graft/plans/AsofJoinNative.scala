@@ -1,22 +1,22 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Native as-of join operator: LogicalPlan + Strategy + SparkPlan
-  * (SURVEY §4 "custom Catalyst work"; SCALE.md round-2 target #3).
-  *
-  * The DataFrame-level rewrite in `operators/AsofJoin` unions both
-  * sides and runs a windowed fill — correct, but it shuffles
-  * left+right as one stream and evaluates window state. This operator
-  * is the physical form of the reference's sorted pointer walk
-  * (`_libs/join.pyx:725` asof_join_backward_on_X_by_Y), distributed:
+  * (SURVEY §4 "custom Catalyst work"; SCALE.md round-2 target #3) —
+  * graft's one as-of join, behind `PFrame.mergeAsof` and every
+  * `join_asof_*` query. It is the physical form of the reference's
+  * sorted pointer walk (`_libs/join.pyx:725`
+  * asof_join_backward_on_X_by_Y), distributed:
   *
   *   - `requiredChildDistribution` co-partitions both sides on the
   *     `by` keys (EnsureRequirements inserts the exchanges, exactly as
@@ -27,8 +27,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *     once, carrying the latest right row per key — O(n+m) per
   *     partition, no window buffers, no union blow-up.
   *
-  * Semantics (matching `operators/AsofJoin`, which the shared DuckDB
-  * oracle checks): unmatched left rows are null-padded;
+  * Semantics (pandas `merge_asof`, checked against the DuckDB ASOF
+  * JOIN oracle): unmatched left rows are null-padded;
   *
   *   - direction=backward: latest right row with rts <= lts
   *     (rts < lts when allowExactMatches=false);
@@ -292,7 +292,6 @@ object AsofJoinNative {
     * O(buckets) — the same footprint as broadcasting range bounds.
     */
   def global(
-      spark: SparkSession,
       left: DataFrame,
       right: DataFrame,
       leftTs: String,
@@ -304,8 +303,9 @@ object AsofJoinNative {
     import org.apache.spark.sql.{Column, Row}
     // selective import: functions.left/right would shadow the params
     import org.apache.spark.sql.functions.{col, lit, max_by, min_by, struct, unix_micros, when}
-    import org.apache.spark.sql.types.LongType
 
+    checkArgs(left, right, Nil, leftTs, rightTs, direction)
+    val spark = left.sparkSession
     def micros(df: DataFrame, c: String): Column =
       if (df.schema(c).dataType == LongType) col(c) else unix_micros(col(c))
 
@@ -363,27 +363,16 @@ object AsofJoinNative {
     val carryDf = spark.createDataFrame(
       spark.sparkContext.parallelize(carry.toSeq, 1), rightPid.schema)
 
-    join(spark, leftP, rightPid.unionByName(carryDf), Seq("__pid"),
+    join(leftP, rightPid.unionByName(carryDf), Seq("__pid"),
       leftTs, rightTs, valueCols, direction, toleranceUs, allowExactMatches)
       .drop("__pid")
   }
 
-  def backward(
-      spark: SparkSession,
-      left: DataFrame,
-      right: DataFrame,
-      by: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      valueCols: Seq[String]): DataFrame =
-    join(spark, left, right, by, leftTs, rightTs, valueCols)
-
-  /** As-of join through the native operator. `left`/`right` may share
-    * lineage: the right side is re-aliased with fresh expression ids
-    * before plan construction.
+  /** As-of join on the `by` keys through the native operator.
+    * `left`/`right` may share lineage: the right side is re-aliased
+    * with fresh expression ids before plan construction.
     */
   def join(
-      spark: SparkSession,
       left: DataFrame,
       right: DataFrame,
       by: Seq[String],
@@ -393,43 +382,61 @@ object AsofJoinNative {
       direction: String = "backward",
       toleranceUs: Option[Long] = None,
       allowExactMatches: Boolean = true): DataFrame = {
-    require(Set("backward", "forward", "nearest")(direction),
-      s"as-of join: unknown direction '$direction'")
+    require(by.nonEmpty,
+      "as-of join: no 'by' keys; use AsofJoinNative.global for a keyless as-of join")
+    checkArgs(left, right, by, leftTs, rightTs, direction)
     val lPlan = GraftSqlBridge.analyzed(left)
     val rAnalyzed = GraftSqlBridge.analyzed(right)
-    // fresh exprIds on the right side so self-joins stay unambiguous
-    val rAliases = rAnalyzed.output.map(a => Alias(a, a.name)())
+    // the custom node gets no column pruning, so the right side is
+    // projected here to the columns the walk reads; the aliases give
+    // them fresh exprIds so self-joins stay unambiguous
+    val rKeep = ((by :+ rightTs) ++ valueCols).distinct
+    val rAliases = rKeep.map(c => Alias(attrOf(rAnalyzed.output, c), c)())
     val rPlan = Project(rAliases, rAnalyzed)
     val rOut: Seq[Attribute] = rAliases.map(_.toAttribute)
-
-    def attrOf(out: Seq[Attribute], name: String): Attribute =
-      out.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"column $name not found"))
-
-    // the merge walk reads timestamps via getLong — admit only
-    // long-backed ordered types (DateType is int-backed; reject it
-    // rather than misread)
-    val lTsAttr = attrOf(lPlan.output, leftTs)
-    val rTsAttr = attrOf(rOut, rightTs)
-    Seq(lTsAttr, rTsAttr).foreach { a =>
-      a.dataType match {
-        case org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType |
-             org.apache.spark.sql.types.LongType => ()
-        case dt => throw new IllegalArgumentException(
-          s"as-of join: 'on' column ${a.name} has type $dt; " +
-            "expected timestamp or long")
-      }
-    }
 
     val node = AsofJoinPlan(
       lPlan, rPlan,
       by.map(attrOf(lPlan.output, _)),
       by.map(attrOf(rOut, _)),
-      lTsAttr,
-      rTsAttr,
+      attrOf(lPlan.output, leftTs),
+      attrOf(rOut, rightTs),
       valueCols.map(attrOf(rOut, _)),
       direction, toleranceUs, allowExactMatches)
-    GraftSqlBridge.ofRows(spark, node)
+    GraftSqlBridge.ofRows(left.sparkSession, node)
+  }
+
+  private def attrOf(out: Seq[Attribute], name: String): Attribute =
+    out.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"column $name not found"))
+
+  private def checkArgs(left: DataFrame, right: DataFrame, by: Seq[String],
+      leftTs: String, rightTs: String, direction: String): Unit = {
+    require(Set("backward", "forward", "nearest")(direction),
+      s"as-of join: unknown direction '$direction'")
+    def typeOf(df: DataFrame, name: String): DataType =
+      df.schema.find(_.name == name).map(_.dataType).getOrElse(
+        throw new IllegalArgumentException(s"column $name not found"))
+    // the merge walk reads timestamps via getLong — admit only
+    // long-backed ordered types (DateType is int-backed; reject it
+    // rather than misread)
+    val lTsType = typeOf(left, leftTs)
+    val rTsType = typeOf(right, rightTs)
+    Seq(leftTs -> lTsType, rightTs -> rTsType).foreach {
+      case (_, TimestampType | TimestampNTZType | LongType) => ()
+      case (name, dt) => throw new IllegalArgumentException(
+        s"as-of join: 'on' column $name has type ${dt.simpleString}; " +
+          "expected timestamp, timestamp_ntz or long")
+    }
+    // each exchange hashes its side by that side's own key type and
+    // the walk reads both sides with the left type's ordering, so
+    // mismatched types would silently drop matches; pandas raises
+    // "incompatible merge keys ... must be the same type"
+    def sameType(role: String, l: String, lt: DataType, r: String, rt: DataType): Unit =
+      if (!DataTypeUtils.sameType(lt, rt)) throw new IllegalArgumentException(
+        s"as-of join: incompatible $role keys: left $l is ${lt.simpleString}, " +
+          s"right $r is ${rt.simpleString}; merge keys must be the same type")
+    sameType("'on'", leftTs, lTsType, rightTs, rTsType)
+    by.foreach(k => sameType("'by'", k, typeOf(left, k), k, typeOf(right, k)))
   }
 }

@@ -80,7 +80,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val installed = s.sessionState.planner.strategies
         .count(_.getClass.getName.contains("AsofStrategy"))
       assert(installed == 1, s"AsofStrategy installed $installed times")
-      val df = graft.plans.AsofJoinNative.backward(s, left, right,
+      val df = graft.plans.AsofJoinNative.join(left, right,
         by = Seq("k"), leftTs = "ts", rightTs = "rts", valueCols = Seq("v"))
       val got = df.orderBy("ts").collect().map(_.getDouble(2)).toSeq
       assert(got == Seq(1.5, 2.5))

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *    and oracle-checked directly (sel_multiindex_levels,
   *    set_concat_keys, set_update, agg_value_counts_series,
   *    rs_get_dummies_opts, win_ewm_* via Ewm, join_asof_* via
-  *    AsofJoin — the same operators PFrame calls);
+  *    AsofJoinNative — the same operators PFrame calls; three of the
+  *    as-of queries are still twinned below);
   *  - scalar lookups (.at/.iat/.count) and guards (transposeSmall,
   *    dot, between, fillna, astype, pipe, setIndex family) are
   *    pinned by PFrameSpec unit tests;
@@ -208,6 +209,29 @@ class PFrameConformanceSpec extends SparkSpec {
       PFrame(clicks).mergeAsof(PFrame(purchases),
           by = Seq("user_id"), on = "ts", valueCols = Seq("value"))
         .rename("value" -> "asof_val"))
+  }
+
+  test("mergeAsof allowExactMatches=false ~ join_asof_strict") {
+    val ev = tbl("events")
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id"), col("ts"))
+    val all = ev.select(col("user_id"), col("ts"), col("value"))
+    conforms("join_asof_strict",
+      PFrame(clicks).mergeAsof(PFrame(all),
+          by = Seq("user_id"), on = "ts", valueCols = Seq("value"),
+          allowExactMatches = false)
+        .rename("value" -> "asof_val"))
+  }
+
+  test("keyless mergeAsof nearest ~ join_asof_global_nearest") {
+    val ev = tbl("events")
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("ts"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .groupBy(col("ts")).agg(max(col("value")).as("purch_val"))
+    conforms("join_asof_global_nearest",
+      PFrame(clicks).mergeAsof(PFrame(purchases),
+        by = Nil, on = "ts", valueCols = Seq("purch_val"), direction = "nearest"))
   }
 
   // ── §2.4 / §2.5 grouped + windowed ────────────────────────────────

@@ -199,6 +199,41 @@ class PFrameSpec extends SparkSpec {
     assert(loose.toSeq == Seq(9.0))
   }
 
+  test("mergeAsof raises on a null 'by' key, like pandas") {
+    import spark.implicits._
+    val left = Seq((Some(1L), 100L), (None: Option[Long], 100L)).toDF("k", "ts")
+      .select($"k", timestamp_seconds($"ts").as("ts"))
+    val right = Seq((Some(1L), 50L, 1.0), (None: Option[Long], 60L, 2.0))
+      .toDF("k", "ts", "v")
+      .select($"k", timestamp_seconds($"ts").as("ts"), $"v")
+    val ex = intercept[Exception] {
+      PFrame(left).mergeAsof(PFrame(right), by = Seq("k"), on = "ts",
+        valueCols = Seq("v")).toDF.collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ msgs(e.getCause))
+    assert(msgs(ex).exists(_.contains("null 'by' key")), msgs(ex).mkString("\n"))
+  }
+
+  test("keyless mergeAsof nearest plans the merge-walk, not a partition-less window") {
+    import spark.implicits._
+    val left = Seq((1L, 10L), (2L, 20L), (3L, 31L)).toDF("id", "ts")
+      .select($"id", timestamp_seconds($"ts").as("ts"))
+    val right = Seq((12L, 1.0), (29L, 2.0)).toDF("ts", "v")
+      .select(timestamp_seconds($"ts").as("ts"), $"v")
+    val out = PFrame(left).mergeAsof(PFrame(right), by = Nil, on = "ts",
+      valueCols = Seq("v"), direction = "nearest").toDF
+    val plan = out.queryExecution.optimizedPlan
+    assert(plan.collect { case j: graft.plans.AsofJoinPlan => j }.nonEmpty,
+      s"expected the native as-of node:\n$plan")
+    assert(plan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window
+        if w.partitionSpec.isEmpty => w
+    }.isEmpty, s"partition-less window planned:\n$plan")
+    val got = out.select($"id", $"v").as[(Long, Double)].collect().toMap
+    assert(got == Map(1L -> 1.0, 2L -> 1.0, 3L -> 2.0))
+  }
+
   test("at/iat scalar access and update alignment") {
     import spark.implicits._
     val df = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))

@@ -27,15 +27,15 @@ class PlanHygieneSpec extends SparkSpec {
   }
 
   test("keyless as-of queries run the native merge-walk") {
-    // r8 (VERDICT r7 next-#8): join_asof_global* route through
-    // AsofJoinNative.global — range-bucketed time as a synthetic `by`
-    // key feeding the SAME AsofJoinExec pointer walk as the keyed
-    // queries; no partition-less window, no union+window rewrite
-    Seq("join_asof_global", "join_asof_global_forward",
-        "join_asof_global_nearest").foreach { q =>
+    // every join_asof_* query, keyed or keyless (AsofJoinNative.global:
+    // range-bucketed time as a synthetic `by` key), plans the one
+    // AsofJoinExec pointer walk — never a window
+    val asof = SparkEntry.queries.keys.filter(_.startsWith("join_asof_")).toSeq.sorted
+    assert(asof.nonEmpty)
+    asof.foreach { q =>
       val p = executed(q)
       // SparkPlan.nodeName strips the Exec suffix: the node prints as
-      // "AsofJoin [__pid#...]"
+      // "AsofJoin [user_id#...]"
       assert(p.contains("AsofJoin"), s"$q must plan the native walk")
       assert(!p.contains("Window"), s"$q must not fall back to a window")
     }
@@ -143,8 +143,7 @@ class PlanHygieneSpec extends SparkSpec {
       "win_rolling_cov", "win_rolling_kurt", "win_expanding",
       "win_weighted", "win_rank_average", "win_rank_options",
       "agg_rank_group", "agg_cumsum", "agg_shift_diff", "agg_spearman",
-      "agg_group_head", "na_ffill_limit", "join_asof_backward",
-      "ts_timedelta_stats")
+      "agg_group_head", "na_ffill_limit", "ts_timedelta_stats")
     for (n <- names) {
       val bad = optimized(n).collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
