@@ -599,13 +599,13 @@ final case class PGroupBy(df: DataFrame, keys: Seq[String]) {
     * through the probe-switched operators/AdaptiveDistinct (per-column
     * singleton sets share an anchor only for one column, so the probe
     * picks EXPAND when combos collapse map-side and SPLIT otherwise;
-    * `path` pins a plan and keeps the call lazy). Null semantics =
-    * pandas dropna=False (a null counts as one value, consistent
-    * across every physical path); filter first for dropna=True. */
-  def nunique(cols: Seq[String], path: String = ""): PFrame =
+    * below the operator's size gate no probe runs and the call stays
+    * lazy). Null semantics = pandas dropna=False (a null counts as one
+    * value, consistent across every physical path); filter first for
+    * dropna=True. */
+  def nunique(cols: Seq[String]): PFrame =
     PFrame(graft.operators.AdaptiveDistinct.nuniques(
-      df, keys, cols.map(c => s"${c}_nunique" -> Seq(c)),
-      forcePath = path), keys)
+      df, keys, cols.map(c => s"${c}_nunique" -> Seq(c))), keys)
 
   /** gb.transform('mean', col) — group aggregate broadcast to rows */
   def transform(func: String, colName: String, as: String): PFrame = {
@@ -647,15 +647,15 @@ final case class PGroupBy(df: DataFrame, keys: Seq[String]) {
     * (a RANGE frame); na_option places NULLs first/last in the order
     * instead of giving them NULL ranks.
     *
-    * NOTE: for the pair-determined methods this call is EAGER by
-    * default — the adaptive plan switch probes the (key, value)
+    * NOTE: for the pair-determined methods on an input whose
+    * estimated size reaches the operator's size gate, this call is
+    * EAGER — the adaptive plan switch probes the (key, value)
     * cardinality in one map-side job before choosing window vs
-    * histogram (AdaptiveRank scaladoc has the full contract). Pass
-    * `path = "window"` for a fully lazy build; streaming frames take
-    * the window plan automatically. */
+    * histogram (AdaptiveRank scaladoc has the full contract). Below
+    * the gate, and for streaming frames, the window plan is built
+    * with no job. */
   def rank(colName: String, method: String = "min", pct: Boolean = false,
-      naOption: String = "keep", as: String = "rank",
-      path: String = ""): PFrame = method match {
+      naOption: String = "keep", as: String = "rank"): PFrame = method match {
     case "first" =>
       // row-dependent (ties broken by position) — pair-histogram
       // restructuring does not apply; always the window plan
@@ -680,13 +680,12 @@ final case class PGroupBy(df: DataFrame, keys: Seq[String]) {
       // (operators/AdaptiveRank.scala)
       if (!pct)
         PFrame(graft.operators.AdaptiveRank.rank(
-          df, keys, colName, method = m, asRank = as, naOption = naOption,
-          forcePath = path))
+          df, keys, colName, method = m, asRank = as, naOption = naOption))
       else {
         val tmp = s"__${as}_rank"
         PFrame(graft.operators.AdaptiveRank.rank(
           df, keys, colName, method = m, asRank = tmp, asPct = as,
-          naOption = naOption, forcePath = path).drop(tmp))
+          naOption = naOption).drop(tmp))
       }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Exact (and opt-in approximate) per-group `nunique` over one or more
@@ -54,12 +54,12 @@ import org.apache.spark.sql.functions._
   * produce IDENTICAL values (null combos count once, like
   * `distinct()`), pinned by AdaptiveDistinctSpec.
   *
-  * Eagerness contract: like AdaptiveRank, the adaptive path may run a
-  * probe job at plan-build time — but ONLY above the
-  * [[probeGateBytesKey]] size gate (optimizer-estimated, no job), and
-  * the probe itself is bounded by [[probeSampleBytesKey]]. Below the
-  * gate plan-build runs NO job and stays lazy; `forcePath` always
-  * pins a plan with no probe decision.
+  * Eagerness contract: like AdaptiveRank, the entry point may run a
+  * probe job at plan-build time — but ONLY when the optimizer-estimated
+  * input size (no job) reaches [[ProbeGateBytes]], and the probe itself
+  * reads at most ~[[ProbeSampleBytes]]. Below the gate plan-build runs
+  * NO job and stays lazy. The decision is the pure [[choosePlan]], so
+  * specs reach every regime at fixture scale without a setting.
   */
 object AdaptiveDistinct {
 
@@ -74,17 +74,14 @@ object AdaptiveDistinct {
     * is below this skip the probe entirely and take the shape-robust
     * SPLIT plan: at this scale every plan finishes fast, so a probe
     * job is pure overhead and needlessly breaks API laziness
-    * (round-11 verdict #1). Conf-overridable so specs can pin both
-    * regimes. */
-  val probeGateBytesKey = "graft.adaptive.probeGateBytes"
-  val probeGateBytesDefault: Long = 256L << 20
+    * (round-11 verdict #1). Shared with [[AdaptiveRank]]. */
+  private[operators] val ProbeGateBytes: Long = 256L << 20
   /** Above the gate, the probe processes at most ~this many input
     * bytes: past it the input is row-sampled at cap/size. A sampled
     * distinct ratio reads HIGH for saturated domains (the sample sees
     * ~all combos over fewer rows), so sampling errs toward CLUSTERED —
     * the robust plan — never toward the Expand cliff. */
-  val probeSampleBytesKey = "graft.adaptive.probeSampleBytes"
-  val probeSampleBytesDefault: Long = 8L << 30
+  private[operators] val ProbeSampleBytes: Long = 8L << 30
 
   /** Optimizer-estimated input size in bytes — plan stats only, no
     * Spark job (file sources: pruned file-size estimate; local
@@ -92,24 +89,18 @@ object AdaptiveDistinct {
   private[graft] def estBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  private[graft] def confBytes(df: DataFrame, key: String, dflt: Long): Long =
-    df.sparkSession.conf.get(key, dflt.toString).toLong
-
-  /** Bounded probe input: the frame itself below the sample cap, else
-    * a uniform row-sample targeting ~cap bytes. */
-  private[operators] def probeInput(df: DataFrame): DataFrame =
-    probeInputWithFraction(df)._1
-
-  /** probeInput plus the sampling fraction actually applied (1.0 = the
-    * whole frame). Callers that turn the probe's distinct estimate into
-    * an ABSOLUTE decision (e.g. a broadcast-size gate) must know the
-    * probe was sampled: a distinct count over a row-sample is only a
-    * LOWER bound of the true cardinality — it cannot be linearly
-    * rescaled, and comparing it to an absolute limit re-opens the
-    * driver-OOM the limit guards against (round-12 ADVICE). Ratio
-    * decisions (sample-distinct / sample-rows) remain valid. */
-  private[operators] def probeInputWithFraction(df: DataFrame): (DataFrame, Double) = {
-    val cap = confBytes(df, probeSampleBytesKey, probeSampleBytesDefault)
+  /** Bounded probe input — the frame itself at or below `cap`, else a
+    * uniform row-sample targeting ~cap bytes — plus the sampling
+    * fraction actually applied (1.0 = the whole frame). Callers that
+    * turn the probe's distinct estimate into an ABSOLUTE decision (e.g.
+    * a broadcast-size gate) must know the probe was sampled: a
+    * distinct count over a row-sample is only a LOWER bound of the
+    * true cardinality — it cannot be linearly rescaled, and comparing
+    * it to an absolute limit re-opens the driver-OOM the limit guards
+    * against (round-12 ADVICE). Ratio decisions (sample-distinct /
+    * sample-rows) remain valid. */
+  private[graft] def probeInputWithFraction(df: DataFrame,
+      cap: Long = ProbeSampleBytes): (DataFrame, Double) = {
     val est = estBytes(df)
     if (est <= cap) (df, 1.0)
     else {
@@ -142,20 +133,51 @@ object AdaptiveDistinct {
       approx_count_distinct(struct((groupKeys ++ superset).map(col): _*)).as("__c") +:
       cands.map(c => approx_count_distinct(col(c)).as(s"__a_$c"))
     // bounded: past the sample cap the scan processes a row-sample,
-    // never the whole input (see probeInput's bias note)
-    val r = probeInput(df).agg(aggs.head, aggs.tail: _*).head()
+    // never the whole input (see ProbeSampleBytes' bias note)
+    val r = probeInputWithFraction(df)._1.agg(aggs.head, aggs.tail: _*).head()
     Probe(r.getLong(0), r.getLong(1),
       cands.zipWithIndex.map { case (c, i) => c -> r.getLong(2 + i) }.toMap,
       df.sparkSession.sessionState.conf.numShufflePartitions)
   }
 
+  /** The exact physical plans; see the object scaladoc. */
+  private[graft] sealed trait Plan
+  private[graft] object Plan {
+    case object Expand extends Plan
+    case object Split extends Plan
+    case object Bucketed extends Plan
+    final case class Clustered(anchor: String) extends Plan
+  }
+
+  /** The adaptive decision, pure in its inputs: the optimizer-estimated
+    * input size, whether a bucketed layout anchors every set, and the
+    * sketch probe — evaluated only when the size clears the gate.
+    *
+    * SIZE GATE (round-11 verdict #1): below [[ProbeGateBytes]] no probe
+    * runs and SPLIT is taken: it is the shape-robust no-probe plan
+    * (superset dedup shuffles the data once regardless of combo
+    * cardinality, where a blind EXPAND would shuffle k× near-unique
+    * data). Checked BEFORE the layout: the dedup-then-count shapes only
+    * pay off on data-sized dedups. (Round-14 measured EXPAND below the
+    * gate and REJECTED it: Expand triples the rows through the partial
+    * aggregate — agg_minmax_nunique 0.83 s → 1.8 s at sf0.1.) */
+  private[graft] def choosePlan(estBytes: BigInt, layoutServes: Boolean,
+      probe: => Probe): Plan =
+    if (estBytes < ProbeGateBytes) Plan.Split
+    else if (layoutServes) Plan.Bucketed
+    else {
+      val p = probe
+      if (p.useExpand) Plan.Expand
+      else p.anchor.fold[Plan](Plan.Split)(Plan.Clustered(_))
+    }
+
   /** One row per `groupKeys` combination with an exact distinct count
-    * per entry of `sets` (output column name -> columns). `layout`
-    * optionally supplies a bucketed twin of `df` plus its bucket
-    * column — used (BUCKETED) only when that column anchors every set.
-    * `maxRelErr > 0` opts into APPROX with that error bound.
-    * `forcePath`: "" adaptive | expand | clustered | split | bucketed |
-    * approx (tests and the paired bench queries pin paths).
+    * per entry of `sets` (output column name -> columns), on the plan
+    * [[choosePlan]] picks. `layout` optionally supplies a bucketed twin
+    * of `df` plus its bucket column — used (BUCKETED) only when that
+    * column anchors every set. `maxRelErr > 0` opts into APPROX with
+    * that error bound: it changes what the result means, so it is the
+    * caller's choice, never the probe's.
     * `extraAggs` — already-aliased non-distinct aggregates (min/max/
     * count/...) computed alongside: on the single-Aggregate paths
     * (expand/approx) they FOLD INTO the same aggregate — one scan, one
@@ -167,95 +189,84 @@ object AdaptiveDistinct {
       sets: Seq[(String, Seq[String])],
       layout: Option[(DataFrame, String)] = None,
       maxRelErr: Double = 0.0,
-      forcePath: String = "",
-      extraAggs: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
+      extraAggs: Seq[Column] = Nil): DataFrame = {
     require(sets.nonEmpty, "nuniques: no distinct sets")
     require(sets.forall(_._2.nonEmpty), "nuniques: empty column set")
-    val layoutServes = layout.exists { case (_, bkt) =>
-      sets.forall(_._2.contains(bkt))
+    if (maxRelErr > 0) {
+      val aggs = sets.map { case (n, cs) =>
+        approx_count_distinct(struct(cs.map(col): _*), maxRelErr).as(n)
+      } ++ extraAggs
+      df.groupBy(groupKeys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     }
-    val path = forcePath match {
-      case "" =>
-        if (maxRelErr > 0) "approx"
-        // same eagerness contract as AdaptiveRank: a probe job cannot
-        // run on an unstarted stream — take the single-Aggregate plan,
-        // which is the one Structured Streaming can execute at all
-        else if (df.isStreaming) "expand"
-        // SIZE GATE (round-11 verdict #1): below the gate no probe job
-        // runs at all — plan-build stays lazy and SPLIT is taken: it
-        // is the shape-robust no-probe plan (superset dedup shuffles
-        // the data once regardless of combo cardinality, where a blind
-        // EXPAND would shuffle k× near-unique data), and it is exactly
-        // the pre-adaptive round-10 plan. Checked BEFORE the layout:
-        // the dedup-then-count shapes only pay off on data-sized
-        // dedups. (Round-14 measured the EXPAND alternative below the
-        // gate and REJECTED it: Expand triples the rows through the
-        // partial aggregate — agg_minmax_nunique 0.83 s → 1.8 s at
-        // sf0.1 — so SPLIT stays.)
-        else if (estBytes(df) < BigInt(confBytes(df, probeGateBytesKey,
-          probeGateBytesDefault))) "split"
-        else if (layoutServes) "bucketed"
-        else {
-          val p = probe(df, groupKeys, sets)
-          if (p.useExpand) "expand"
-          else if (p.anchor.isDefined) s"clustered:${p.anchor.get}"
-          else "split"
-        }
-      case "clustered" =>
-        val cands = anchorCandidates(sets)
-        require(cands.nonEmpty, "clustered: sets share no anchor column")
-        s"clustered:${cands.head}"
-      case p @ ("expand" | "split" | "approx") => p
-      case "bucketed" =>
-        require(layoutServes,
-          "bucketed: no layout provided, or its bucket column is not in every set")
-        "bucketed"
-      case other => throw new IllegalArgumentException(s"forcePath: $other")
+    // same eagerness contract as AdaptiveRank: a probe job cannot run
+    // on an unstarted stream — take the single-Aggregate plan, which
+    // is the one Structured Streaming can execute at all
+    else if (df.isStreaming) expand(df, groupKeys, sets, extraAggs)
+    else {
+      val layoutServes = layout.exists { case (_, bkt) =>
+        sets.forall(_._2.contains(bkt))
+      }
+      choosePlan(estBytes(df), layoutServes, probe(df, groupKeys, sets)) match {
+        case Plan.Split => split(df, groupKeys, sets, extraAggs)
+        case Plan.Bucketed => bucketed(layout.get, groupKeys, sets, extraAggs)
+        case Plan.Expand => expand(df, groupKeys, sets, extraAggs)
+        case Plan.Clustered(anchor) => clustered(df, groupKeys, sets, anchor, extraAggs)
+      }
     }
-    path match {
-      case "approx" =>
-        val rsd = if (maxRelErr > 0) maxRelErr else 0.02
-        val aggs = (sets.map { case (n, cs) =>
-          approx_count_distinct(struct(cs.map(col): _*), rsd).as(n)
-        }) ++ extraAggs
-        df.groupBy(groupKeys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      case "expand" =>
-        // struct-wrapped so a null combo counts once, exactly like the
-        // distinct()-based paths (bare countDistinct drops null rows);
-        // extraAggs ride the SAME aggregate — one scan, no join
-        val aggs = (sets.map { case (n, cs) =>
-          countDistinct(struct(cs.map(col): _*)).as(n)
-        }) ++ extraAggs
-        df.groupBy(groupKeys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-      case "split" =>
-        val superset = sets.flatMap(_._2).distinct
-        val sup = df.select(((groupKeys ++ superset).distinct).map(col): _*).distinct()
-        withExtras(df, groupKeys, extraAggs,
-          joinCounts(sup, groupKeys, sets, superset))
-      case "bucketed" =>
-        // the scan is already HashPartitioning(bucketCol): clusteredAgg
-        // runs with NO data-sized exchange at all (pinned in
-        // PlanHygieneSpec / AdaptiveDistinctSpec)
-        withExtras(layout.get._1, groupKeys, extraAggs,
-          clusteredAgg(layout.get._1, groupKeys, sets))
-      case clustered if clustered.startsWith("clustered:") =>
-        val anchor = clustered.stripPrefix("clustered:")
-        val superset = sets.flatMap(_._2).distinct
-        // ONE data-sized exchange, on the anchor only — everything
-        // above it is partition-local (see clusteredAgg)
-        withExtras(df, groupKeys, extraAggs,
-          clusteredAgg(
-            df.select(((groupKeys ++ superset).distinct).map(col): _*)
-              .repartition(col(anchor)),
-            groupKeys, sets))
-    }
+  }
+
+  /** EXPAND: every set's distinct count in one Aggregate. Struct-wrapped
+    * so a null combo counts once, exactly like the distinct()-based
+    * paths (bare countDistinct drops null rows); extraAggs ride the
+    * SAME aggregate — one scan, no join. */
+  private[graft] def expand(df: DataFrame, groupKeys: Seq[String],
+      sets: Seq[(String, Seq[String])], extraAggs: Seq[Column]): DataFrame = {
+    val aggs = sets.map { case (n, cs) =>
+      countDistinct(struct(cs.map(col): _*)).as(n)
+    } ++ extraAggs
+    df.groupBy(groupKeys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** SPLIT: dedup the superset once, derive each set's count from it. */
+  private[graft] def split(df: DataFrame, groupKeys: Seq[String],
+      sets: Seq[(String, Seq[String])], extraAggs: Seq[Column]): DataFrame = {
+    val superset = sets.flatMap(_._2).distinct
+    val sup = df.select(((groupKeys ++ superset).distinct).map(col): _*).distinct()
+    withExtras(df, groupKeys, extraAggs,
+      joinCounts(sup, groupKeys, sets, superset))
+  }
+
+  /** CLUSTERED: ONE data-sized exchange, on `anchor` only — everything
+    * above it is partition-local (see clusteredAgg). */
+  private[graft] def clustered(df: DataFrame, groupKeys: Seq[String],
+      sets: Seq[(String, Seq[String])], anchor: String,
+      extraAggs: Seq[Column]): DataFrame = {
+    require(sets.forall(_._2.contains(anchor)),
+      s"clustered: anchor $anchor is not in every set")
+    val superset = sets.flatMap(_._2).distinct
+    withExtras(df, groupKeys, extraAggs,
+      clusteredAgg(
+        df.select(((groupKeys ++ superset).distinct).map(col): _*)
+          .repartition(col(anchor)),
+        groupKeys, sets))
+  }
+
+  /** BUCKETED: the layout's scan is already HashPartitioning(bucket
+    * column), so clusteredAgg runs with NO data-sized exchange at all
+    * (pinned in PlanHygieneSpec / AdaptiveDistinctSpec). */
+  private[graft] def bucketed(layout: (DataFrame, String), groupKeys: Seq[String],
+      sets: Seq[(String, Seq[String])], extraAggs: Seq[Column]): DataFrame = {
+    val (li, bkt) = layout
+    require(sets.forall(_._2.contains(bkt)),
+      "bucketed: the layout's bucket column is not in every set")
+    withExtras(li, groupKeys, extraAggs, clusteredAgg(li, groupKeys, sets))
   }
 
   /** Join the non-distinct extras (aggregated over the RAW frame) onto
     * a dedup-path result, null-safe on the keys so null-keyed groups
     * survive exactly as groupBy keeps them. */
   private def withExtras(raw: DataFrame, groupKeys: Seq[String],
-      extraAggs: Seq[org.apache.spark.sql.Column], nu: DataFrame): DataFrame = {
+      extraAggs: Seq[Column], nu: DataFrame): DataFrame = {
     if (extraAggs.isEmpty) return nu
     require(groupKeys.nonEmpty, "nuniques: extraAggs need group keys to join on")
     val base = raw.groupBy(groupKeys.map(col): _*).agg(extraAggs.head, extraAggs.tail: _*)

@@ -69,73 +69,65 @@ object AdaptiveRank {
     val pair = (keyCols :+ valueCol).map(col)
     // approx_count_distinct over the raw pair struct — one map-side
     // scan, ~2% HLL error, far inside the 8× regime margin; bounded
-    // by AdaptiveDistinct.probeInput past the sample cap (a sampled
-    // ratio errs toward WINDOW — the no-extra-join plan)
+    // by AdaptiveDistinct's sample cap (a sampled ratio errs toward
+    // WINDOW — the no-extra-join plan)
     val (in, frac) = AdaptiveDistinct.probeInputWithFraction(df)
     val r = in.agg(count(lit(1)).as("n"),
       approx_count_distinct(struct(pair: _*)).as("d")).head()
     Probe(r.getLong(0), r.getLong(1), sampled = frac < 1.0)
   }
 
-  /** Append rank columns for (keyCols, valueCol) to `df`, choosing the
-    * physical plan from a sketch probe (or an explicit `forcePath`:
-    * "window" | "histogram" | "" = adaptive — tests and the paired
-    * bench queries pin each path explicitly). Output columns `asAvg`
-    * (rank by `method`) and, when non-empty, `asPct`.
+  /** The two physical plans; see the object scaladoc. */
+  private[graft] sealed trait Plan
+  private[graft] object Plan {
+    case object Windowed extends Plan
+    final case class Histogram(broadcastJoin: Boolean) extends Plan
+  }
+
+  /** The adaptive decision, pure in its inputs: the optimizer-estimated
+    * input size and the sketch probe, evaluated only when the size
+    * clears the gate. SIZE GATE (round-11 verdict #1): below
+    * [[AdaptiveDistinct.ProbeGateBytes]] the window plan is taken with
+    * NO probe job — plan-build stays lazy, and at this scale the
+    * histogram's extra join never pays. */
+  private[graft] def choosePlan(estBytes: BigInt, probe: => Probe): Plan =
+    if (estBytes < AdaptiveDistinct.ProbeGateBytes) Plan.Windowed
+    else {
+      val p = probe
+      if (p.useHistogram) Plan.Histogram(broadcastJoin = p.broadcastable)
+      else Plan.Windowed
+    }
+
+  /** Append rank columns for (keyCols, valueCol) to `df`, on the
+    * physical plan [[choosePlan]] picks. Output columns `asRank` (rank
+    * by `method`) and, when non-empty, `asPct`.
     *
     * EAGERNESS CONTRACT (round-10 ADVICE, tightened round 12): the
-    * adaptive path runs the probe — one map-side
-    * `approx_count_distinct` job — at PLAN-BUILD time ONLY when the
-    * optimizer-estimated input size clears
-    * [[AdaptiveDistinct.probeGateBytesKey]]; below the gate the window
-    * plan is taken with NO job, so small-frame rank() is fully lazy
-    * (the regime where the probe was pure overhead). Above the gate
-    * the probe input is bounded by
-    * [[AdaptiveDistinct.probeSampleBytesKey]]. Callers that need
-    * laziness regardless of size pass `forcePath = "window"`.
-    * Streaming frames short-circuit to the window plan automatically —
-    * a probe job cannot run on an unstarted stream, and the histogram
-    * join-back would be a stream-stream join with no watermark
-    * anyway. */
+    * probe — one map-side `approx_count_distinct` job — runs at
+    * PLAN-BUILD time ONLY when the optimizer-estimated input size
+    * reaches [[AdaptiveDistinct.ProbeGateBytes]]; below the gate the
+    * window plan is taken with NO job, so small-frame rank() is fully
+    * lazy (the regime where the probe was pure overhead). Above the
+    * gate the probe reads at most ~[[AdaptiveDistinct.ProbeSampleBytes]].
+    * Streaming frames short-circuit to the window plan — a probe job
+    * cannot run on an unstarted stream, and the histogram join-back
+    * would be a stream-stream join with no watermark anyway. */
   def rank(df: DataFrame, keyCols: Seq[String], valueCol: String,
            method: String = "average", asRank: String = "rank_avg",
-           asPct: String = "", naOption: String = "keep",
-           forcePath: String = ""): DataFrame = {
+           asPct: String = "", naOption: String = "keep"): DataFrame = {
     require(Set("average", "min", "max", "dense").contains(method),
       s"AdaptiveRank supports pair-determined methods, got: $method")
     require(Set("keep", "top", "bottom").contains(naOption),
       s"na_option: $naOption")
-    if (df.isStreaming)
-      return windowPlan(df, keyCols, valueCol, method, asRank, asPct, naOption)
-    // SIZE GATE (round-11 verdict #1): below the gate the adaptive
-    // path takes the window plan with NO probe job — plan-build stays
-    // lazy, and at this scale the histogram's extra join never pays
-    val gated = forcePath.isEmpty &&
-      AdaptiveDistinct.estBytes(df) < BigInt(AdaptiveDistinct.confBytes(
-        df, AdaptiveDistinct.probeGateBytesKey, AdaptiveDistinct.probeGateBytesDefault))
-    val p = forcePath match {
-      case "window"    => None
-      // round-14: a FORCED histogram needs no probe — the probe's only
-      // remaining job there was gating the broadcast hint, and AQE
-      // already converts the join-back to a broadcast join at runtime
-      // from the histogram's ACTUAL size (strictly safer than any
-      // estimate, and one less plan-build job per call).
-      // CONTRACT (ADVICE r14): forcePath="histogram" therefore assumes
-      // an AQE-enabled session (every graft harness session is — the
-      // engine never disables it). With AQE off, the join-back would
-      // silently degrade to a corpus-wide shuffle join: values are
-      // unchanged, only the broadcast promotion is lost. Callers
-      // running AQE-less sessions should use forcePath="" so the probe
-      // gates the explicit broadcast hint instead.
-      case "histogram" => None
-      case ""          => if (gated) None else Some(probe(df, keyCols, valueCol))
-      case other => throw new IllegalArgumentException(s"forcePath: $other")
+    val plan =
+      if (df.isStreaming) Plan.Windowed
+      else choosePlan(AdaptiveDistinct.estBytes(df), probe(df, keyCols, valueCol))
+    plan match {
+      case Plan.Windowed =>
+        windowPlan(df, keyCols, valueCol, method, asRank, asPct, naOption)
+      case Plan.Histogram(b) =>
+        histogramPlan(df, keyCols, valueCol, method, asRank, asPct, naOption, b)
     }
-    val useHist = forcePath == "histogram" ||
-      (forcePath.isEmpty && p.exists(_.useHistogram))
-    if (useHist) histogramPlan(df, keyCols, valueCol, method, asRank, asPct,
-      naOption, broadcastJoin = p.exists(_.broadcastable))
-    else windowPlan(df, keyCols, valueCol, method, asRank, asPct, naOption)
   }
 
   /** pandas na_option as an ordering: keep/bottom sort NULLs last,
@@ -151,7 +143,7 @@ object AdaptiveRank {
     else outCols.foldLeft(df)((d, c) =>
       d.withColumn(c, when(col(valueCol).isNotNull, col(c))))
 
-  private def windowPlan(df: DataFrame, keyCols: Seq[String],
+  private[graft] def windowPlan(df: DataFrame, keyCols: Seq[String],
       valueCol: String, method: String, asRank: String, asPct: String,
       naOption: String): DataFrame = {
     val keys = keyCols.map(col)
@@ -179,7 +171,7 @@ object AdaptiveRank {
       asRank +: (if (asPct.isEmpty) Nil else Seq(asPct)))
   }
 
-  private def histogramPlan(df: DataFrame, keyCols: Seq[String],
+  private[graft] def histogramPlan(df: DataFrame, keyCols: Seq[String],
       valueCol: String, method: String, asRank: String, asPct: String,
       naOption: String, broadcastJoin: Boolean): DataFrame = {
     val keys = keyCols.map(col)

@@ -78,59 +78,20 @@ object DistributedPercentile {
     * Spark's Percentile pinned by PFrame.quantile / the DuckDB
     * oracle); unlike the sketch-bracket global form there is no
     * coverage window to miss — the full histogram always covers, so
-    * the raise_error below is a pure can't-happen invariant net.
+    * the selection's raise_error is a pure can't-happen invariant net.
     *
     * Contract notes: nulls and NaNs are ignored (as [[exact]]); a
     * group whose every value is null/NaN is ABSENT from the output
     * (callers needing such groups must outer-join them back). Output
-    * columns: keys ++ outNames, one row per surviving group.
+    * columns: keys ++ outNames, one row per surviving group. This is
+    * the one-column case of [[exactGroupedStacked]], which holds the
+    * only selection and interpolation body.
     */
   def exactGrouped(df: DataFrame, keys: Seq[String], colName: String,
-                   ps: Seq[Double], outNames: Seq[String]): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"percentiles out of [0,1]: $ps")
-    require(outNames.size == ps.size, "one output name per percentile")
-    val kcols = keys.map(col)
-    val v = df.select(kcols :+ col(colName).cast("double").as("__v"): _*)
-      .filter(col("__v").isNotNull && !isnan(col("__v")))
-
-    // 1. per-(group, value) histogram — the only scan of the input
-    val hist = v.groupBy(kcols :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"))
-      .cache()
-    // 2. exclusive prefix count of smaller values within the group
-    val ranked = GlobalOrder.prefixSum(hist, keys, "__v", "__c", "__below")
-    // per-group totals ride a tiny broadcast back onto the histogram
-    val ns = hist.groupBy(kcols: _*).agg(sum(col("__c")).as("__n"))
-    val withN = ranked.join(broadcast(ns), keys)
-
-    // 3. order-statistic selection: pos = p·(n−1), k = floor(pos); the
-    // value whose absolute rank interval covers k (and k+1 when
-    // interpolating) is picked by one conditional-max aggregate
-    def pos(i: Int): Column = lit(ps(i)) * (col("__n") - 1)
-    def kOf(i: Int): Column = floor(pos(i))
-    val selAggs = ps.indices.flatMap { i =>
-      val lo = col("__below")
-      val hi = col("__below") + col("__c")
-      Seq(
-        max(when(lo <= kOf(i) && kOf(i) < hi, col("__v"))).as(s"__lo$i"),
-        max(when(lo <= kOf(i) + 1 && kOf(i) + 1 < hi, col("__v"))).as(s"__hi$i"))
-    }
-    val selected = withN.groupBy(kcols: _*)
-      .agg(selAggs.head, (selAggs.tail :+ max(col("__n")).as("__n")): _*)
-
-    val outCols = ps.indices.map { i =>
-      val frac = pos(i) - kOf(i)
-      val lo = col(s"__lo$i"); val hi = col(s"__hi$i")
-      when(lo.isNull || (frac > 0.0 && hi.isNull), raise_error(lit(
-        s"DistributedPercentile.exactGrouped: rank not covered for " +
-        s"p=${ps(i)} — histogram/prefix-sum invariant violated")))
-        .when(frac === 0.0 || hi <=> lo, lo)
-        .otherwise(lo * (lit(1.0) - frac) + hi * frac)
-        .as(outNames(i))
-    }
-    selected.select(kcols ++ outCols: _*)
-  }
+                   ps: Seq[Double], outNames: Seq[String]): DataFrame =
+    exactGroupedStacked(
+      df.select(keys.map(col) :+ lit("").as("__dp_tag") :+ col(colName).as("__dp_v"): _*),
+      keys, "__dp_tag", "__dp_v", Seq(("", ps, outNames)))
 
   /** Multi-column sibling of [[exactGrouped]] (round-15, guide §1.2):
     * callers that want exact percentiles of SEVERAL columns over the
@@ -169,8 +130,10 @@ object DistributedPercentile {
     val ns = hist.groupBy(gk: _*).agg(sum(col("__c")).as("__n"))
     val withN = ranked.join(broadcast(ns), keys :+ tagCol)
 
-    // 3. per-column selection over the shared ranked frame — exactly
-    // [[exactGrouped]]'s conditional-max aggregate and interpolation
+    // 3. per-column order-statistic selection over the shared ranked
+    // frame: pos = p·(n−1), k = floor(pos); the value whose absolute
+    // rank interval covers k (and k+1 when interpolating) is picked by
+    // one conditional-max aggregate
     val perCol = specs.map { case (tag, ps, outNames) =>
       def pos(i: Int): Column = lit(ps(i)) * (col("__n") - 1)
       def kOf(i: Int): Column = floor(pos(i))

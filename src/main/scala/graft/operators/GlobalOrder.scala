@@ -31,14 +31,18 @@ import org.apache.spark.sql.types._
   *      column pruning canonicalizes the two exchange subtrees
   *      differently). Literal bounds make every branch agree by
   *      construction;
-  *   3. ONE hash exchange on the bucket id; `row_number() over
-  *      (partition by bucket order by sortCols)` — the exchange
+  *   3. ONE hash exchange on the bucket id; an exclusive running
+  *      count `over (partition by bucket order by sortCols rows
+  *      between unbounded preceding and 1 preceding)` — the exchange
   *      satisfies the window's distribution, so no second shuffle and
   *      no partition-less window;
   *   4. bucket row counts = a tiny aggregate; bucket start offsets = a
   *      triangular self-join prefix sum over those ≤ n rows
   *      (no partition-less window — PlanHygieneSpec forbids those);
   *   5. ordinal = broadcast-joined bucket offset + in-bucket counter.
+  *
+  * [[prefixSum]] is the same body with a weight column in place of
+  * the count and optional group keys in front of the bucket id.
   *
   * Everything stays whole-stage-codegen except the exchanges. Ties on
   * the leading key all land in one bucket (exactly RangePartitioner's
@@ -59,72 +63,24 @@ object GlobalOrder {
     case _ => false
   }
 
-  /** Round-15 (guide §2, partitioning-follows-data): rows per bucket
-    * below which the whole input collapses to ONE bucket. The bounds
-    * probe now returns the row count in the same action, so a tiny
-    * input (e.g. a 150-row group histogram from
-    * DistributedPercentile.exactGrouped) no longer fans every stage
-    * of the ordinal machinery into `spark.sql.shuffle.partitions`
-    * near-empty tasks — at a cluster's thousands of partitions that
-    * is thousands of no-op tasks per query. Inputs above the target
-    * keep today's bucket count unchanged at every scale; bucket
-    * layout never affects the computed values (bounds only balance
-    * buckets — GlobalOrderSpec pins the ordinals). */
-  private val OneBucketRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_ORDINAL_ONE_BUCKET_ROWS", "16384").toLong
+  /** Round-15 (guide §2, partitioning-follows-data): input rows at or
+    * below which the whole input is ONE bucket. The bounds
+    * probe returns the row count in the same action, so a tiny input
+    * (e.g. a 150-row group histogram from
+    * DistributedPercentile.exactGroupedStacked) does not fan every
+    * stage of the ordinal machinery into `spark.sql.shuffle.partitions`
+    * near-empty tasks — at a cluster's thousands of partitions that is
+    * thousands of no-op tasks per query. Bucket layout never affects
+    * the computed values (bounds only balance buckets —
+    * GlobalOrderSpec pins the ordinals on both sides of this cut-off). */
+  private val OneBucketRows = 16384L
 
   /** df + `ordinalCol` (0-based long) following `sortCols` order. */
   def zipOrdinal(df: DataFrame, sortCols: Seq[Column], ordinalCol: String = "__ord"): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val lead = sortCols.head
-    val leadType = df.select(lead.as("__go_k")).schema.head.dataType
-    if (!quantileSupported(leadType)) return zipOrdinalRdd(df, sortCols, ordinalCol)
-
-    // pass 1: ≤ n-1 bucket bounds (approximate is fine — bounds only
-    // balance buckets, never affect the ordinal values) + the row
-    // count in the SAME action for the one-bucket collapse
-    val probs = array((1 until n).map(i => lit(i.toDouble / n)): _*)
-    val row1 = df
-      .select(percentile_approx(lead.cast("double"), probs, lit(10000)).as("q"),
-        count(lit(1)).as("__go_n"))
-      .head()
-    val rows = row1.getLong(1)
-    val bounds: Seq[Any] =
-      if (rows <= OneBucketRows) Seq.empty
-      else row1.getSeq[Any](0) match {
-        case null => Seq.empty
-        case qs => qs.distinct.filter(_ != null)
-      }
-
-    // deterministic bucket id: count of bounds strictly below the key;
-    // NULL keys bucket to 0 = Spark's nulls-first ascending order.
-    // Binary search over the literal bounds (functions/SearchSorted),
-    // NOT a when-chain fold: at 256 partitions the 255-node fold fell
-    // off the fast codegen path and cost 60 s on a 15M-row ordinal
-    // (31 min on the sf100 qcut) — the generated Arrays.binarySearch
-    // call is O(log n) per row and stays inside whole-stage codegen
-    val pidExpr = graft.functions.SearchSorted.bucketOf(
-      lead.cast("double"), bounds.map(_.asInstanceOf[Double]),
-      inclusive = false)
-
-    // empty bounds = constant pid: today that already lands every row
-    // in one partition OF n — shrink the exchange to 1 so the other
-    // n−1 tasks don't exist at all
-    val nPart = if (bounds.isEmpty) 1 else n
-    val base = df.withColumn("__go_pid", pidExpr)
-      .repartition(nPart, col("__go_pid"))
-    val w = Window.partitionBy(col("__go_pid")).orderBy(sortCols: _*)
-    val withCtr = base.withColumn("__go_ctr", row_number().over(w).cast("long") - 1L)
-    val counts = base.groupBy(col("__go_pid")).agg(count(lit(1)).as("__go_cnt"))
-    // prefix sum over ≤ n tiny rows; empty buckets contribute nothing
-    // to either side, so offsets stay contiguous
-    val offsets = counts.as("a")
-      .join(counts.as("b"), col("b.__go_pid") < col("a.__go_pid"), "left")
-      .groupBy(col("a.__go_pid").as("__go_pid"))
-      .agg(coalesce(sum(col("b.__go_cnt")), lit(0L)).as("__go_off"))
-    withCtr.join(broadcast(offsets), Seq("__go_pid"))
-      .withColumn(ordinalCol, col("__go_off") + col("__go_ctr"))
-      .drop("__go_pid", "__go_ctr", "__go_off")
+    val leadType = df.select(sortCols.head.as("__go_k")).schema.head.dataType
+    if (!quantileSupported(leadType)) zipOrdinalRdd(df, sortCols, ordinalCol)
+    // an exclusive running count over a total order is row_number() - 1
+    else bucketedPrefixSum(df, Nil, sortCols, lit(1L), ordinalCol)
   }
 
   /** Scalable weighted EXCLUSIVE prefix sum (round-15): adds `outCol`
@@ -135,14 +91,6 @@ object GlobalOrder {
     * rows below the key, from which pandas' average rank is
     * `below + (cnt+1)/2` with no row-level global window.
     *
-    * Same machinery as [[zipOrdinal]], weight-generalized:
-    *   1. ≤ n−1 approximate quantile bounds of `key` (bounded driver
-    *      state), deterministic literal-fold bucket id;
-    *   2. ONE hash exchange on (partKeys, bucket); in-bucket exclusive
-    *      running sum via a PARTITIONED window (rows preceding);
-    *   3. per-(partKeys, bucket) totals + a triangular prefix-sum join
-    *      over ≤ n tiny rows per group, broadcast back.
-    *
     * Requires key values DISTINCT within each partKeys group (it is a
     * histogram operator — ties would double-count); callers own that
     * invariant. Unlike a single-partition window, heavy skew on one
@@ -150,47 +98,68 @@ object GlobalOrder {
     * buckets by value.
     */
   def prefixSum(df: DataFrame, partKeys: Seq[String], keyCol: String,
-                weightCol: String, outCol: String): DataFrame = {
+                weightCol: String, outCol: String): DataFrame =
+    bucketedPrefixSum(df, partKeys, Seq(col(keyCol)), col(weightCol), outCol)
+
+  /** The one body behind [[zipOrdinal]] and [[prefixSum]]: `outCol` =
+    * Σ `weight` over the rows before this one in `sortCols` order,
+    * within `partKeys` groups (the steps are listed in the object
+    * scaladoc). The leading sort key must be numeric or temporal. */
+  private def bucketedPrefixSum(df: DataFrame, partKeys: Seq[String],
+      sortCols: Seq[Column], weight: Column, outCol: String): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val pk = partKeys.map(col)
+    val lead = sortCols.head.cast("double")
+    // pass 1: ≤ n-1 bucket bounds (approximate is fine — bounds only
+    // balance buckets, never affect the values) + the row count in
+    // the SAME action for the one-bucket collapse
     val probs = array((1 until n).map(i => lit(i.toDouble / n)): _*)
     val row1 = df
-      .select(percentile_approx(col(keyCol).cast("double"), probs, lit(10000)).as("q"),
-        count(lit(1)).as("__ps_n"))
+      .select(percentile_approx(lead, probs, lit(10000)).as("q"),
+        count(lit(1)).as("__go_n"))
       .head()
-    // histogram small enough for one bucket → skip the bucket split
-    // entirely (see OneBucketRows); the partition-by-group window
-    // still bounds per-task state by the largest GROUP's histogram
-    val bounds: Seq[Any] =
+    val bounds: Seq[Double] =
       if (row1.getLong(1) <= OneBucketRows) Seq.empty
       else row1.getSeq[Any](0) match {
         case null => Seq.empty
-        case qs => qs.distinct.filter(_ != null)
+        case qs => qs.distinct.filter(_ != null).map(_.asInstanceOf[Double])
       }
-    val pidExpr = graft.functions.SearchSorted.bucketOf(
-      col(keyCol).cast("double"), bounds.map(_.asInstanceOf[Double]),
+
+    // deterministic bucket id: count of bounds strictly below the key;
+    // NULL keys bucket to 0 = Spark's nulls-first ascending order.
+    // Binary search over the literal bounds (functions/SearchSorted),
+    // NOT a when-chain fold: at 256 partitions the 255-node fold fell
+    // off the fast codegen path and cost 60 s on a 15M-row ordinal
+    // (31 min on the sf100 qcut) — the generated Arrays.binarySearch
+    // call is O(log n) per row and stays inside whole-stage codegen
+    val pidExpr = graft.functions.SearchSorted.bucketOf(lead, bounds,
       inclusive = false)
+
+    // empty bounds = constant pid: shrink the exchange to 1 partition
+    // so the other n−1 tasks don't exist at all
     val nPart = if (bounds.isEmpty) 1 else n
-    val base = df.withColumn("__ps_pid", pidExpr)
-      .repartition(nPart, pk :+ col("__ps_pid"): _*)
-    val w = Window.partitionBy(pk :+ col("__ps_pid"): _*)
-      .orderBy(col(keyCol)).rowsBetween(Window.unboundedPreceding, -1)
-    val withCtr = base.withColumn("__ps_ctr",
-      coalesce(sum(col(weightCol)).over(w), lit(0L)))
+    val bucketKeys = partKeys.map(col) :+ col("__go_pid")
+    val base = df.withColumn("__go_pid", pidExpr)
+      .repartition(nPart, bucketKeys: _*)
+    // the exchange satisfies the window's distribution: no second
+    // shuffle and no partition-less window
+    val w = Window.partitionBy(bucketKeys: _*).orderBy(sortCols: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val withCtr = base.withColumn("__go_ctr",
+      coalesce(sum(weight).over(w), lit(0L)))
     // per-(group, bucket) totals; triangular prefix over ≤ n tiny rows
-    // per group (empty buckets contribute nothing to either side)
-    val counts = base.groupBy(pk :+ col("__ps_pid"): _*)
-      .agg(sum(col(weightCol)).as("__ps_cnt"))
+    // per group (empty buckets contribute nothing to either side, so
+    // offsets stay contiguous)
+    val counts = base.groupBy(bucketKeys: _*).agg(sum(weight).as("__go_cnt"))
     val cond = partKeys.map(k => col(s"a.$k") <=> col(s"b.$k"))
-      .foldLeft(col("b.__ps_pid") < col("a.__ps_pid"))(_ && _)
+      .foldLeft(col("b.__go_pid") < col("a.__go_pid"))(_ && _)
     val offsets = counts.as("a")
       .join(counts.as("b"), cond, "left")
-      .groupBy(partKeys.map(k => col(s"a.$k")) :+ col("a.__ps_pid"): _*)
-      .agg(coalesce(sum(col("b.__ps_cnt")), lit(0L)).as("__ps_off"))
-      .toDF(partKeys ++ Seq("__ps_pid", "__ps_off"): _*)
-    withCtr.join(broadcast(offsets), partKeys :+ "__ps_pid")
-      .withColumn(outCol, col("__ps_off") + col("__ps_ctr"))
-      .drop("__ps_pid", "__ps_ctr", "__ps_off")
+      .groupBy(partKeys.map(k => col(s"a.$k")) :+ col("a.__go_pid"): _*)
+      .agg(coalesce(sum(col("b.__go_cnt")), lit(0L)).as("__go_off"))
+      .toDF(partKeys ++ Seq("__go_pid", "__go_off"): _*)
+    withCtr.join(broadcast(offsets), partKeys :+ "__go_pid")
+      .withColumn(outCol, col("__go_off") + col("__go_ctr"))
+      .drop("__go_pid", "__go_ctr", "__go_off")
   }
 
   /** Lineage-shared rdd zip: the zipWithIndex count job and the data

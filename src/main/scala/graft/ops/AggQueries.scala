@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{OracleNum, QueryModule, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -728,50 +728,9 @@ object AggQueries extends QueryModule {
     // half-integers, so the decimal moments are exact on both engines.
     "agg_spearman" -> { (s, d) =>
       import s.implicits._
-      // Round-15 restructure: rank-from-histogram instead of two
-      // zipOrdinal passes. method='average' rank of a value v is
-      // exactly below(v) + (cnt(v)+1)/2 — the window-average of
-      // contiguous ordinals the old form computed — so the ranks come
-      // from the (xv, yv) JOINT histogram: one partial-aggregating
-      // shuffle of the base (collapsing ties BEFORE anything else),
-      // two tiny per-column rollups ranked by a scale-safe bucketed
-      // prefix sum (GlobalOrder.prefixSum — no row-level global
-      // window, no second scan of the base), and moment sums weighted
-      // by the joint counts. All rank/moment arithmetic is exact
-      // (half-integer ranks, decimal sums; c·Σ == Σ over copies in
-      // exact decimal), so the emitted double is bit-identical to the
-      // old form — oracle-pinned. The old plan re-executed the first
-      // zipOrdinal's whole pipeline inside the second one's probe and
-      // data branches; this one scans the base once.
-      val base = Tables(s, d, "lineitem")
+      spearman(Tables(s, d, "lineitem")
         .filter($"l_orderkey" < 5000)
-        .select($"l_quantity".as("xv"), $"l_discount".as("yv"))
-      val joint = base.groupBy($"xv", $"yv")
-        .agg(count(lit(1)).as("c")).cache()
-      def ranksOf(k: String, cName: String, rName: String) = {
-        val h = joint.groupBy(col(k)).agg(sum($"c").as(cName))
-        graft.operators.GlobalOrder.prefixSum(h, Nil, k, cName, "__below")
-          .withColumn(rName, $"__below" + (col(cName) + 1) / lit(2.0))
-          .select(col(k), col(rName))
-      }
-      val r = joint
-        .join(ranksOf("xv", "cx", "rx"), "xv")
-        .join(ranksOf("yv", "cy", "ry"), "yv")
-      // weighted moments: value-identical to the per-row decimal sums
-      // (exact decimal arithmetic; products bounded well inside the
-      // chosen precisions, so no truncation on either form)
-      def d1(c: Column) = c.cast("decimal(12,1)")
-      val cw = $"c".cast("decimal(12,0)")
-      val m = r.agg(
-        sum($"c").cast("double").as("n"),
-        sum(d1($"rx") * cw).cast("double").as("sx"),
-        sum(d1($"ry") * cw).cast("double").as("sy"),
-        sum(d1($"rx") * d1($"rx") * cw).cast("double").as("sxx"),
-        sum(d1($"ry") * d1($"ry") * cw).cast("double").as("syy"),
-        sum(d1($"rx") * d1($"ry") * cw).cast("double").as("sxy"))
-      m.select(round(($"n" * $"sxy" - $"sx" * $"sy") /
-        (sqrt($"n" * $"sxx" - $"sx" * $"sx") * sqrt($"n" * $"syy" - $"sy" * $"sy")), 6)
-        .as("spearman_qd"))
+        .select($"l_quantity".as("xv"), $"l_discount".as("yv")), Nil)
     },
 
     // Tukey-fence outlier detection per group (the describe() +
@@ -864,44 +823,16 @@ object AggQueries extends QueryModule {
           count(lit(1)).as("n"))
     },
 
-    // per-group Spearman (method='average' ranks). Round-15: the same
-    // rank-from-histogram restructure as agg_spearman (per-group rank
-    // of v = below + (cnt+1)/2, identical to the old rank() +
-    // (ties−1)/2 window form — both exact half-integer arithmetic),
-    // with the prefix sum partitioned by group. The old per-group
-    // row-level windows put every group's FULL rows through two sorts;
-    // here the base shuffles once into the joint histogram and
-    // everything after runs on distinct (g, value) rows.
+    // per-group Spearman (method='average' ranks): agg_spearman's
+    // rank-from-histogram form with the prefix sum partitioned by
+    // group — the base shuffles once into the joint histogram and
+    // everything after runs on distinct (group, value) rows.
     "agg_spearman_grouped" -> { (s, d) =>
       import s.implicits._
-      val base = Tables(s, d, "lineitem")
+      spearman(Tables(s, d, "lineitem")
         .filter($"l_orderkey" < 5000)
-        .select($"l_returnflag".as("g"), $"l_quantity".as("xv"),
-          $"l_discount".as("yv"))
-      val joint = base.groupBy($"g", $"xv", $"yv")
-        .agg(count(lit(1)).as("c")).cache()
-      def ranksOf(k: String, cName: String, rName: String) = {
-        val h = joint.groupBy($"g", col(k)).agg(sum($"c").as(cName))
-        graft.operators.GlobalOrder.prefixSum(h, Seq("g"), k, cName, "__below")
-          .withColumn(rName, $"__below" + (col(cName) + 1) / lit(2.0))
-          .select($"g", col(k), col(rName))
-      }
-      val r = joint
-        .join(ranksOf("xv", "cx", "rx"), Seq("g", "xv"))
-        .join(ranksOf("yv", "cy", "ry"), Seq("g", "yv"))
-      def d1(c: Column) = c.cast("decimal(12,1)")
-      val cw = $"c".cast("decimal(12,0)")
-      val m = r.groupBy($"g").agg(
-        sum($"c").cast("double").as("n"),
-        sum(d1($"rx") * cw).cast("double").as("sx"),
-        sum(d1($"ry") * cw).cast("double").as("sy"),
-        sum(d1($"rx") * d1($"rx") * cw).cast("double").as("sxx"),
-        sum(d1($"ry") * d1($"ry") * cw).cast("double").as("syy"),
-        sum(d1($"rx") * d1($"ry") * cw).cast("double").as("sxy"))
-      m.select($"g".as("l_returnflag"),
-        round(($"n" * $"sxy" - $"sx" * $"sy") /
-          (sqrt($"n" * $"sxx" - $"sx" * $"sx") * sqrt($"n" * $"syy" - $"sy" * $"sy")), 6)
-          .as("spearman_qd"))
+        .select($"l_returnflag", $"l_quantity".as("xv"),
+          $"l_discount".as("yv")), Seq("l_returnflag"))
     },
 
     // Kendall tau-b on the FULL orders table via Knight's O(n log n)
@@ -959,6 +890,48 @@ object AggQueries extends QueryModule {
           $"l_linestatus", $"ngroup")
     }
   )
+
+  /** Spearman's rho of `xv` and `yv` within `keys` groups (Nil: one
+    * global row), method='average' ranks, as `keys ++ spearman_qd`.
+    * The average rank of a value v is exactly below(v) + (cnt(v)+1)/2,
+    * so the ranks come from the (keys, xv, yv) JOINT histogram: one
+    * partial-aggregating shuffle of the base (collapsing ties BEFORE
+    * anything else), two tiny per-column rollups ranked by a
+    * scale-safe bucketed prefix sum (GlobalOrder.prefixSum — no
+    * row-level window, no second scan of the base), and moment sums
+    * weighted by the joint counts. All rank/moment arithmetic is exact
+    * (half-integer ranks, decimal sums; c·Σ == Σ over copies in exact
+    * decimal, products bounded well inside the chosen precisions), so
+    * the emitted double equals the per-row decimal form bit for bit —
+    * oracle-pinned. */
+  private def spearman(base: DataFrame, keys: Seq[String]): DataFrame = {
+    val kcols = keys.map(col)
+    val joint = base.groupBy(kcols :+ col("xv") :+ col("yv"): _*)
+      .agg(count(lit(1)).as("c")).cache()
+    def ranksOf(k: String, cName: String, rName: String) = {
+      val h = joint.groupBy(kcols :+ col(k): _*).agg(sum(col("c")).as(cName))
+      graft.operators.GlobalOrder.prefixSum(h, keys, k, cName, "__below")
+        .withColumn(rName, col("__below") + (col(cName) + 1) / lit(2.0))
+        .select(kcols :+ col(k) :+ col(rName): _*)
+    }
+    val r = joint
+      .join(ranksOf("xv", "cx", "rx"), keys :+ "xv")
+      .join(ranksOf("yv", "cy", "ry"), keys :+ "yv")
+    def d1(c: Column) = c.cast("decimal(12,1)")
+    val cw = col("c").cast("decimal(12,0)")
+    val (rx, ry) = (d1(col("rx")), d1(col("ry")))
+    val m = r.groupBy(kcols: _*).agg(
+      sum(col("c")).cast("double").as("n"),
+      sum(rx * cw).cast("double").as("sx"),
+      sum(ry * cw).cast("double").as("sy"),
+      sum(rx * rx * cw).cast("double").as("sxx"),
+      sum(ry * ry * cw).cast("double").as("syy"),
+      sum(rx * ry * cw).cast("double").as("sxy"))
+    val (n, sx, sy) = (col("n"), col("sx"), col("sy"))
+    m.select(kcols :+ round((n * col("sxy") - sx * sy) /
+      (sqrt(n * col("sxx") - sx * sx) * sqrt(n * col("syy") - sy * sy)), 6)
+      .as("spearman_qd"): _*)
+  }
 
   def oracle: Map[String, String] = baseOracle +
     // the bucketed twin is a pure layout restructuring: same result,

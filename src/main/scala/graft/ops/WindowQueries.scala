@@ -543,21 +543,21 @@ object WindowQueries extends QueryModule {
     // integer-exact until the final halving/division so the values are
     // bit-identical to the window form: rank_min = cum − cnt + 1,
     // rank_avg = rank_min + (cnt−1)/2, rank_pct = rank_avg / total.
-    // since round 10 the restructuring lives in operators/AdaptiveRank
-    // (the promoted single entry point); this query pins the histogram
-    // path for the bench. na_option='top' (nulls ranked first) mirrors
-    // the window twin's plain `orderBy(value)`; the join-back's
-    // broadcast is AQE's runtime-size decision since round 14 (events'
+    // since round 10 the restructuring lives in operators/AdaptiveRank;
+    // this query builds its histogram plan directly for the bench.
+    // na_option='top' (nulls ranked first) mirrors the window twin's
+    // plain `orderBy(value)`; the join-back carries no broadcast hint,
+    // so AQE decides from the histogram's runtime size (events'
     // ~49k-pair histogram converts to a broadcast join; a near-unique
-    // domain stays a shuffle join on the pair — no probe job, no
-    // forced corpus-sized broadcast)
+    // domain stays a shuffle join on the pair). That needs an
+    // AQE-enabled session — every graft session is one.
     "win_rank_hist" -> { (s, d) =>
       import s.implicits._
       val ev = Tables(s, d, "events")
         .select($"event_type", $"event_id", $"value")
-      graft.operators.AdaptiveRank.rank(ev, Seq("event_type"), "value",
+      graft.operators.AdaptiveRank.histogramPlan(ev, Seq("event_type"), "value",
           method = "average", asRank = "rank_avg", asPct = "rank_pct",
-          naOption = "top", forcePath = "histogram")
+          naOption = "top", broadcastJoin = false)
         .select($"event_type", $"event_id", $"value",
           $"rank_avg", $"rank_pct")
     },

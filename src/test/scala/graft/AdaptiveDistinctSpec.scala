@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import graft.operators.AdaptiveDistinct
+import graft.operators.AdaptiveDistinct.Plan
 
 /** Pins the round-11 adaptive exact-nunique entry point (VERDICT r10
   * next-#1): one operator whose sketch probe picks EXPAND / CLUSTERED /
@@ -30,6 +31,13 @@ class AdaptiveDistinctSpec extends SparkSpec {
     (0 until 1600).map(i => (s"g${i % 2}", i.toLong, s"c${i % 7}"))
       .toDF("g", "b", "c")
   }
+
+  /** A synthetic 1 TiB size estimate: past the probe gate, so the
+    * decision reaches the probe regime at fixture scale. */
+  private val aboveGate = BigInt(1) << 40
+
+  private def split(df: DataFrame): DataFrame =
+    AdaptiveDistinct.split(df, Seq("g"), sets, Nil)
 
   private def collectSorted(df: DataFrame): Seq[(Option[String], Long, Long)] =
     df.collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2)))
@@ -60,12 +68,10 @@ class AdaptiveDistinctSpec extends SparkSpec {
          s"c${i % 3}")) :+
         ((None: Option[String], None: Option[Long], null: String)))
       .toDF("g", "b", "c")
-    val paths = Seq("expand", "clustered", "split")
-    val outs = paths.map(p => p ->
-      AdaptiveDistinct.nuniques(df, Seq("g"), sets, forcePath = p)
-        .collect()
-        .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2)))
-        .toSeq.sortBy(_._1.getOrElse("")))
+    val outs = Seq(
+      "expand" -> AdaptiveDistinct.expand(df, Seq("g"), sets, Nil),
+      "clustered" -> AdaptiveDistinct.clustered(df, Seq("g"), sets, "b", Nil),
+      "split" -> split(df)).map { case (p, out) => p -> collectSorted(out) }
     val ref = outs.head._2
     assert(ref.exists(_._1.isEmpty), "a null-keyed group must survive")
     outs.tail.foreach { case (p, v) =>
@@ -77,9 +83,7 @@ class AdaptiveDistinctSpec extends SparkSpec {
     for (df <- Seq(lowCard, nearUnique)) {
       val adaptive = collectSorted(
         AdaptiveDistinct.nuniques(df, Seq("g"), sets))
-      val split = collectSorted(
-        AdaptiveDistinct.nuniques(df, Seq("g"), sets, forcePath = "split"))
-      assert(adaptive == split)
+      assert(adaptive == collectSorted(split(df)))
     }
   }
 
@@ -98,8 +102,7 @@ class AdaptiveDistinctSpec extends SparkSpec {
       case s if s.nodeName.contains("Scan") || s.nodeName.contains("LocalTable") => true
       case other => other.children.exists(rawBelow)
     }
-    val cl = AdaptiveDistinct.nuniques(nearUnique, Seq("g"), sets,
-      forcePath = "clustered")
+    val cl = AdaptiveDistinct.clustered(nearUnique, Seq("g"), sets, "b", Nil)
     val dataSized = cl.queryExecution.sparkPlan.collect {
       case e: ShuffleExchangeExec if e.children.exists(rawBelow) => e
     }
@@ -119,8 +122,7 @@ class AdaptiveDistinctSpec extends SparkSpec {
     // runtime stage reuse pays it once
     assert(dataSized.map(_.canonicalized).distinct.size == 1,
       "branch exchanges must be identical for reuse")
-    val ex = AdaptiveDistinct.nuniques(lowCard, Seq("g"), sets,
-      forcePath = "expand")
+    val ex = AdaptiveDistinct.expand(lowCard, Seq("g"), sets, Nil)
     assert(ex.queryExecution.sparkPlan.toString.contains("Expand"),
       "expand path must plan the multi-distinct Expand")
   }
@@ -130,18 +132,22 @@ class AdaptiveDistinctSpec extends SparkSpec {
     val extras = Seq(min(org.apache.spark.sql.functions.col("b")).as("min_b"),
       max(org.apache.spark.sql.functions.col("b")).as("max_b"),
       count(lit(1)).as("n"))
-    def run(p: String) = AdaptiveDistinct.nuniques(
-        nearUnique, Seq("g"), sets, forcePath = p, extraAggs = extras)
+    def run(plan: Plan) = (plan match {
+        case Plan.Expand => AdaptiveDistinct.expand(nearUnique, Seq("g"), sets, extras)
+        case Plan.Clustered(a) =>
+          AdaptiveDistinct.clustered(nearUnique, Seq("g"), sets, a, extras)
+        case _ => AdaptiveDistinct.split(nearUnique, Seq("g"), sets, extras)
+      })
       .collect()
       .map(r => (r.getAs[String]("g"), r.getAs[Long]("nu_b"), r.getAs[Long]("nu_bc"),
         r.getAs[Long]("min_b"), r.getAs[Long]("max_b"), r.getAs[Long]("n")))
       .toSeq.sortBy(_._1)
-    val ex = run("expand")
-    assert(run("clustered") == ex, "clustered+extras disagrees with expand+extras")
-    assert(run("split") == ex, "split+extras disagrees with expand+extras")
+    val ex = run(Plan.Expand)
+    assert(run(Plan.Clustered("b")) == ex, "clustered+extras disagrees with expand+extras")
+    assert(run(Plan.Split) == ex, "split+extras disagrees with expand+extras")
     // the expand form must be ONE aggregate over one scan — no join
-    val plan = AdaptiveDistinct.nuniques(nearUnique, Seq("g"), sets,
-      forcePath = "expand", extraAggs = extras).queryExecution.sparkPlan.toString
+    val plan = AdaptiveDistinct.expand(nearUnique, Seq("g"), sets, extras)
+      .queryExecution.sparkPlan.toString
     assert(!plan.contains("Join"), s"expand+extras must not plan a join:\n$plan")
   }
 
@@ -155,46 +161,56 @@ class AdaptiveDistinctSpec extends SparkSpec {
     val gated = AdaptiveDistinct.nuniques(lowCard, Seq("g"), sets)
     assert(!gated.queryExecution.sparkPlan.toString.contains("Expand"),
       "gated adaptive must take SPLIT (no probe, no Expand)")
-    spark.conf.set(AdaptiveDistinct.probeGateBytesKey, "1")
-    try {
-      val probed = AdaptiveDistinct.nuniques(lowCard, Seq("g"), sets)
-      assert(probed.queryExecution.sparkPlan.toString.contains("Expand"),
-        "above the gate the probe must route low-combo data to Expand")
-      assert(collectSorted(gated) == collectSorted(probed),
-        "gate changes the plan, never the values")
-    } finally spark.conf.unset(AdaptiveDistinct.probeGateBytesKey)
+    // the decision itself: below the gate the probe is never evaluated
+    assert(AdaptiveDistinct.choosePlan(AdaptiveDistinct.estBytes(lowCard),
+      layoutServes = true, fail("probe ran below the gate")) == Plan.Split)
+    // above it a serving layout wins without a probe, else the probe
+    // routes low-combo data to Expand and near-unique data to Clustered
+    assert(AdaptiveDistinct.choosePlan(aboveGate, layoutServes = true,
+      fail("probe ran although a layout serves")) == Plan.Bucketed)
+    assert(AdaptiveDistinct.choosePlan(aboveGate, layoutServes = false,
+      AdaptiveDistinct.probe(lowCard, Seq("g"), sets)) == Plan.Expand)
+    assert(AdaptiveDistinct.choosePlan(aboveGate, layoutServes = false,
+      AdaptiveDistinct.probe(nearUnique, Seq("g"), sets)) == Plan.Clustered("b"))
+    val probed = AdaptiveDistinct.expand(lowCard, Seq("g"), sets, Nil)
+    assert(probed.queryExecution.sparkPlan.toString.contains("Expand"))
+    assert(collectSorted(gated) == collectSorted(probed),
+      "gate changes the plan, never the values")
   }
 
   test("probe input is bounded by the sample cap; values stay exact") {
-    spark.conf.set(AdaptiveDistinct.probeGateBytesKey, "1")
-    spark.conf.set(AdaptiveDistinct.probeSampleBytesKey, "1")
-    try {
-      // degenerate cap: the probe sees a near-empty sample — the plan
-      // choice may differ, but every exact path agrees by construction
-      val out = collectSorted(AdaptiveDistinct.nuniques(nearUnique, Seq("g"), sets))
-      val ref = collectSorted(
-        AdaptiveDistinct.nuniques(nearUnique, Seq("g"), sets, forcePath = "split"))
-      assert(out == ref)
-    } finally {
-      spark.conf.unset(AdaptiveDistinct.probeGateBytesKey)
-      spark.conf.unset(AdaptiveDistinct.probeSampleBytesKey)
+    // degenerate cap: the probe sees a near-empty sample — the plan
+    // choice may differ, but every exact path agrees by construction
+    val (sample, fraction) = AdaptiveDistinct.probeInputWithFraction(nearUnique, cap = 1L)
+    assert(fraction < 1.0, "past the cap the probe input must be sampled")
+    assert(AdaptiveDistinct.probeInputWithFraction(nearUnique)._2 == 1.0)
+    val p = AdaptiveDistinct.probe(sample, Seq("g"), sets)
+    assert(p.rows < 1600, s"the probe must read the sample, not the frame: $p")
+    val out = AdaptiveDistinct.choosePlan(aboveGate, layoutServes = false, p) match {
+      case Plan.Expand => AdaptiveDistinct.expand(nearUnique, Seq("g"), sets, Nil)
+      case Plan.Clustered(a) => AdaptiveDistinct.clustered(nearUnique, Seq("g"), sets, a, Nil)
+      case _ => split(nearUnique)
     }
+    assert(collectSorted(out) == collectSorted(split(nearUnique)))
   }
 
   test("bucketed path requires a layout that anchors every set") {
-    intercept[IllegalArgumentException] {
-      AdaptiveDistinct.nuniques(lowCard, Seq("g"), sets, forcePath = "bucketed")
-    }
     // a layout bucketed on a column NOT in every set must not serve
     intercept[IllegalArgumentException] {
-      AdaptiveDistinct.nuniques(lowCard, Seq("g"), sets,
-        layout = Some((lowCard, "c")), forcePath = "bucketed")
+      AdaptiveDistinct.bucketed((lowCard, "c"), Seq("g"), sets, Nil)
     }
+    // ... and the entry point ignores it rather than using it
+    assert(collectSorted(AdaptiveDistinct.nuniques(lowCard, Seq("g"), sets,
+      layout = Some((lowCard, "c")))) == collectSorted(split(lowCard)))
+    // without a serving layout the decision never yields BUCKETED
+    assert(AdaptiveDistinct.choosePlan(aboveGate, layoutServes = false,
+      AdaptiveDistinct.probe(nearUnique, Seq("g"), sets)) != Plan.Bucketed)
+    assert(collectSorted(AdaptiveDistinct.bucketed((lowCard, "b"), Seq("g"), sets, Nil)) ==
+      collectSorted(split(lowCard)))
   }
 
   test("approx path honors the error contract and is never probe-chosen") {
-    val exact = collectSorted(
-      AdaptiveDistinct.nuniques(nearUnique, Seq("g"), sets, forcePath = "split"))
+    val exact = collectSorted(split(nearUnique))
     val approx = collectSorted(
       AdaptiveDistinct.nuniques(nearUnique, Seq("g"), sets, maxRelErr = 0.02))
     assert(approx.size == exact.size)

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import graft.operators.AdaptiveRank
+import graft.operators.{AdaptiveDistinct, AdaptiveRank}
+import graft.operators.AdaptiveRank.Plan
 
 /** Pins the round-10 promotion of the histogram-rank restructuring to
   * an adaptive operator (VERDICT r9 #3): one entry point whose sketch
@@ -27,6 +28,18 @@ class AdaptiveRankSpec extends SparkSpec {
       .toDF("k", "v", "id")
   }
 
+  /** Build one physical plan directly, bypassing the decision. */
+  private def build(plan: Plan, df: DataFrame, method: String = "average",
+      asRank: String = "rank_avg", asPct: String = "",
+      naOption: String = "keep"): DataFrame = plan match {
+    case Plan.Windowed =>
+      AdaptiveRank.windowPlan(df, Seq("k"), "v", method, asRank, asPct, naOption)
+    case Plan.Histogram(b) =>
+      AdaptiveRank.histogramPlan(df, Seq("k"), "v", method, asRank, asPct, naOption, b)
+  }
+
+  private val histogram = Plan.Histogram(broadcastJoin = false)
+
   test("probe picks histogram at low pair cardinality, window otherwise") {
     assert(AdaptiveRank.probe(lowCard, Seq("k"), "v").useHistogram)
     assert(!AdaptiveRank.probe(nearUnique, Seq("k"), "v").useHistogram)
@@ -46,14 +59,18 @@ class AdaptiveRankSpec extends SparkSpec {
   test("adaptive path plans the join only in the histogram regime") {
     def hasJoin(df: DataFrame): Boolean =
       df.queryExecution.executedPlan.toString.contains("Join")
-    // drop the size gate so the probe actually runs on these tiny inputs
-    spark.conf.set(graft.operators.AdaptiveDistinct.probeGateBytesKey, "1")
-    try {
-      val hist = AdaptiveRank.rank(lowCard, Seq("k"), "v")
-      val win  = AdaptiveRank.rank(nearUnique, Seq("k"), "v")
-      assert(hasJoin(hist), "low-cardinality input should take the histogram plan")
-      assert(!hasJoin(win), "near-unique input should take the window plan")
-    } finally spark.conf.unset(graft.operators.AdaptiveDistinct.probeGateBytesKey)
+    // a synthetic 1 TiB size estimate is past the gate, so the
+    // decision reaches the probe regime at fixture scale
+    val aboveGate = BigInt(1) << 40
+    val histPlan = AdaptiveRank.choosePlan(aboveGate,
+      AdaptiveRank.probe(lowCard, Seq("k"), "v"))
+    val winPlan = AdaptiveRank.choosePlan(aboveGate,
+      AdaptiveRank.probe(nearUnique, Seq("k"), "v"))
+    assert(histPlan == Plan.Histogram(broadcastJoin = true),
+      "low-cardinality input should take the (broadcast) histogram plan")
+    assert(winPlan == Plan.Windowed, "near-unique input should take the window plan")
+    assert(hasJoin(build(histPlan, lowCard)))
+    assert(!hasJoin(build(winPlan, nearUnique)))
   }
 
   test("below the size gate the adaptive path takes the window plan — no probe job") {
@@ -64,6 +81,8 @@ class AdaptiveRankSpec extends SparkSpec {
     val out = AdaptiveRank.rank(lowCard, Seq("k"), "v")
     assert(!out.queryExecution.executedPlan.toString.contains("Join"),
       "gated adaptive rank must build the window plan with no probe")
+    assert(AdaptiveRank.choosePlan(AdaptiveDistinct.estBytes(lowCard),
+      fail("probe ran below the gate")) == Plan.Windowed)
   }
 
   test("histogram and window plans agree bit-for-bit, incl. nulls") {
@@ -71,9 +90,8 @@ class AdaptiveRankSpec extends SparkSpec {
     val df = ((0 until 200).map(i => (s"k${i % 2}", Some((i % 5).toDouble), i.toLong)) ++
       (200 until 210).map(i => (s"k${i % 2}", None: Option[Double], i.toLong)))
       .toDF("k", "v", "id")
-    def run(path: String, method: String, na: String) =
-      AdaptiveRank.rank(df, Seq("k"), "v", method = method,
-          asRank = "r", asPct = "p", naOption = na, forcePath = path)
+    def run(plan: Plan, method: String, na: String) =
+      build(plan, df, method = method, asRank = "r", asPct = "p", naOption = na)
         .select($"id", $"r".cast("double"), $"p")
         .collect()
         .map(r => (r.getLong(0),
@@ -82,8 +100,8 @@ class AdaptiveRankSpec extends SparkSpec {
         .sortBy(_._1)
     for (method <- Seq("average", "min", "max", "dense");
          na <- Seq("keep", "top", "bottom")) {
-      val w = run("window", method, na)
-      val h = run("histogram", method, na)
+      val w = run(Plan.Windowed, method, na)
+      val h = run(histogram, method, na)
       assert(w.length == 210 && h.length == 210,
         s"$method/$na: row counts ${w.length}/${h.length}")
       assert(w.sameElements(h), s"$method/$na: values differ")
@@ -96,9 +114,8 @@ class AdaptiveRankSpec extends SparkSpec {
     // the same call succeeded or threw depending on the probe's pick
     import org.apache.spark.sql.functions.lit
     val df = lowCard.withColumn("r", lit(0)).withColumn("p", lit(0.0))
-    for (path <- Seq("window", "histogram")) {
-      val out = AdaptiveRank.rank(df, Seq("k"), "v", method = "min",
-        asRank = "r", asPct = "p", naOption = "keep", forcePath = path)
+    for (path <- Seq(Plan.Windowed, histogram)) {
+      val out = build(path, df, method = "min", asRank = "r", asPct = "p")
       assert(out.columns.count(_ == "r") == 1, s"$path duplicated column r")
       assert(out.columns.count(_ == "p") == 1, s"$path duplicated column p")
       assert(out.count() == 600)
@@ -109,9 +126,8 @@ class AdaptiveRankSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(("a", Some(1.0)), ("a", Some(2.0)), ("a", None))
       .toDF("k", "v")
-    for (path <- Seq("window", "histogram")) {
-      val out = AdaptiveRank.rank(df, Seq("k"), "v", method = "min",
-          asRank = "r", asPct = "p", naOption = "keep", forcePath = path)
+    for (path <- Seq(Plan.Windowed, histogram)) {
+      val out = build(path, df, method = "min", asRank = "r", asPct = "p")
         .collect().map(r => (Option(r.get(1)).map(_.toString),
           if (r.isNullAt(2)) None else Some(r.getLong(2)),
           if (r.isNullAt(3)) None else Some(r.getDouble(3))))

@@ -73,25 +73,40 @@ class DistributedPercentileSpec extends SparkSpec {
 
   test("stacked multi-column form == per-column exactGrouped join") {
     // the round-15 scan-sharing variant must be row-identical to
-    // running one exactGrouped pipeline per column and joining —
+    // running one exactGrouped pipeline per column and joining, and
+    // both must equal Spark's exact `percentile` aggregate per group —
     // including a group where one column is all-null (dropped by the
-    // inner join in both forms) and heavy ties
+    // inner join in both forms), heavy ties, and an input whose
+    // histogram exceeds the prefix sum's one-bucket cut-off
     import spark.implicits._
-    val df = Seq(
+    val small = Seq(
       ("a", Some(1.0), Some(10.0)), ("a", Some(2.0), Some(10.0)),
       ("a", Some(2.0), Some(30.0)), ("a", Some(9.0), None),
       ("b", Some(5.0), None), ("b", Some(5.0), None),
       ("b", Some(7.0), None), ("c", None, Some(1.0))).toDF("g", "x", "y")
+    // 40,000 rows, ~30,000 distinct x values with ties, in two groups
+    val large = (0 until 40000).map(i =>
+        (s"g${i % 2}", Some(((i * 7919L) % 30000) / 4.0), Some((i % 500).toDouble)))
+      .toDF("g", "x", "y")
     val ps1 = Seq(0.5, 0.25, 0.75); val ps2 = Seq(0.9)
-    val sep = DistributedPercentile.exactGrouped(
-        df.select($"g", $"x"), Seq("g"), "x", ps1, Seq("m", "q25", "q75"))
-      .join(DistributedPercentile.exactGrouped(
-        df.select($"g", $"y"), Seq("g"), "y", ps2, Seq("q90")), Seq("g"))
-    val stacked = DistributedPercentile.exactGroupedStacked(
-      df.selectExpr("g", "stack(2, 'x', x, 'y', y) as (cn, v)"),
-      Seq("g"), "cn", "v",
-      Seq(("x", ps1, Seq("m", "q25", "q75")), ("y", ps2, Seq("q90"))))
-    assert(sep.exceptAll(stacked).isEmpty && stacked.exceptAll(sep).isEmpty,
-      s"stacked=${stacked.collect().toSeq} separate=${sep.collect().toSeq}")
+    val names1 = Seq("m", "q25", "q75"); val names2 = Seq("q90")
+    for (df <- Seq(small, large)) {
+      val sep = DistributedPercentile.exactGrouped(
+          df.select($"g", $"x"), Seq("g"), "x", ps1, names1)
+        .join(DistributedPercentile.exactGrouped(
+          df.select($"g", $"y"), Seq("g"), "y", ps2, names2), Seq("g"))
+      val stacked = DistributedPercentile.exactGroupedStacked(
+        df.selectExpr("g", "stack(2, 'x', x, 'y', y) as (cn, v)"),
+        Seq("g"), "cn", "v", Seq(("x", ps1, names1), ("y", ps2, names2)))
+      val aggs = (ps1.zip(names1).map { case (p, n) => expr(s"percentile(x, $p)").as(n) } ++
+        ps2.zip(names2).map { case (p, n) => expr(s"percentile(y, $p)").as(n) })
+      val ref = df.groupBy($"g").agg(aggs.head, aggs.tail: _*).na.drop()
+      def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+        a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+      assert(same(sep, stacked),
+        s"stacked=${stacked.collect().toSeq} separate=${sep.collect().toSeq}")
+      assert(same(stacked, ref),
+        s"stacked=${stacked.collect().toSeq} percentile=${ref.collect().toSeq}")
+    }
   }
 }

@@ -2,9 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Static lint over every DuckDB oracle: no uncast integer SUM.
+/** Static, Spark-free lints: the DuckDB oracles' numeric rules below,
+  * and the rule that `operators/` picks its plans from its input alone
+  * (last test).
   *
-  * DuckDB widens SUM over any integer type to HUGEINT (int128) while
+  * Oracle rule 1, no uncast integer SUM. DuckDB widens SUM over any integer type to HUGEINT (int128) while
   * Spark's sum over int/long stays LongType — the driver's typed
   * compare then hash-mismatches even when every value is equal. This
   * trap has fired twice (pipe_pack_sequences in round 2,
@@ -159,6 +161,23 @@ class OracleLintSpec extends AnyFunSuite {
         from += 5
       }
     }
+    assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
+  }
+
+  /** The operators choose each physical plan from their input (sizes,
+    * sketch probes, layouts): a plan switch read from the environment
+    * or a session conf key is a hidden option that tests and benchmarks
+    * must then cover in every setting. */
+  test("no operator reads an environment variable or a graft conf key") {
+    val dir = new java.io.File("src/main/scala/graft/operators")
+    val files = Option(dir.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+    assert(files.nonEmpty, s"no operator sources under ${dir.getAbsolutePath}")
+    val violations = for {
+      f <- files.sortBy(_.getName)
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .linesIterator.toSeq.zipWithIndex
+      if line.contains("sys.env") || line.contains("\"graft.")
+    } yield s"${f.getName}:${i + 1}: ${line.trim}"
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 }

@@ -15,9 +15,6 @@ class PlanHygieneSpec extends SparkSpec {
   private def optimized(name: String): LogicalPlan =
     SparkEntry.queries(name)(spark, sf()).queryExecution.optimizedPlan
 
-  private def executedPlan(name: String): org.apache.spark.sql.execution.SparkPlan =
-    SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan
-
   test("q1 scan pushes the shipdate filter and prunes columns") {
     val p = executed("q1_groupby_agg")
     assert(p.contains("PushedFilters") && p.contains("l_shipdate"),
@@ -201,12 +198,21 @@ class PlanHygieneSpec extends SparkSpec {
     // partials / the 3-row flag join), never between a scan and the
     // wide distinct. Structural check: no Exchange node may have a
     // FileScan in its subtree without an intervening Aggregate.
-    // The r12 size gate routes fixture-scale inputs to the single-
-    // Aggregate plan, so drop it here to pin the BUCKETED shape the
-    // query takes at data scale.
-    spark.conf.set(graft.operators.AdaptiveDistinct.probeGateBytesKey, "1")
-    val plan = try executedPlan("agg_bkt_nunique")
-      finally spark.conf.unset(graft.operators.AdaptiveDistinct.probeGateBytesKey)
+    // The size gate routes fixture-scale inputs to SPLIT, so build the
+    // BUCKETED plan the query takes at data scale directly, with the
+    // query's own sets and extra aggregates.
+    import org.apache.spark.sql.functions.{col, count, max, min}
+    val li = graft.sources.BucketedLayout.lineitemByPart(spark, sf())
+    val plan = graft.operators.AdaptiveDistinct.bucketed((li, "l_partkey"),
+      Seq("l_returnflag"),
+      Seq("nunique_part" -> Seq("l_partkey"),
+        "nunique_sp" -> Seq("l_suppkey", "l_partkey")),
+      Seq(min(col("l_extendedprice")).as("min_price"),
+        max(col("l_extendedprice")).as("max_price"),
+        min(col("l_shipdate")).as("min_ship"),
+        max(col("l_shipdate")).as("max_ship"),
+        count(col("l_partkey")).as("n")))
+      .queryExecution.executedPlan
     def offending(p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
       def scanBelowNoAgg(n: org.apache.spark.sql.execution.SparkPlan): Boolean =
         n match {
