@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated TPC-H-ish testdata (TESTDATA.md).
   *
@@ -11,6 +15,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * pushdown) is the single entry point for data. At cluster scale the
   * same call reads a partitioned table; nothing below assumes
   * single-file layout.
+  *
+  * Building a table costs no Spark job: the schema comes from one
+  * footer read on the driver ([[parquetSchema]]) and is handed to
+  * `spark.read.schema(...)`, so a query builder pays planning time
+  * only. Only the file listing and that footer are touched.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -26,26 +35,60 @@ object Tables {
     * (recursively) directory tables.
     */
   def footerRowCount(spark: SparkSession, dir: String, name: String): Long = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val p = new Path(s"$dir/$name.parquet")
     val conf = spark.sessionState.newHadoopConf()
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try total += rd.getRecordCount
-        finally rd.close()
-      }
-    }
-    total
+    parquetFiles(spark, s"$dir/$name.parquet").filterNot(isSummary).map { st =>
+      val rd = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try rd.getRecordCount
+      finally rd.close()
+    }.sum
+  }
+
+  /** The reader schema Spark infers for the parquet table at `path`,
+    * from ONE footer read on the driver — no Spark job. Spark's own
+    * inference reads the same single footer but schedules a one-task
+    * job for it (~60 ms per read on a 4-core host); on an object store
+    * this is one footer GET from the driver. The footer is the one
+    * `ParquetUtils.inferSchema` picks: `_common_metadata`, else
+    * `_metadata`, else the first data file by path; the conversion is
+    * Spark's own ([[GraftParquetBridge.readSchema]]). Like every graft
+    * table, the files are taken to share one schema: the session's
+    * `spark.sql.parquet.mergeSchema` is not consulted.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val files = parquetFiles(spark, path)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(files.find(!isSummary(_)))
+      .flatMap(f => GraftParquetBridge.readSchema(spark, Seq(f)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no readable parquet file under $path"))
+  }
+
+  /** Every file a parquet read of `path` scans (the file itself, or the
+    * leaves under the directory), sorted by path, listed on the driver
+    * with Spark's rule: names starting with `_` or `.` are skipped,
+    * except the `_metadata`/`_common_metadata` summaries. A missing
+    * path raises `FileNotFoundException` naming it. */
+  private def parquetFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => GraftParquetBridge.isHiddenName(c.getPath.getName))
+        .flatMap(leaves)
+    leaves(fs.getFileStatus(p)).sortBy(_.getPath.toString)
+  }
+
+  private def isSummary(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    n == ParquetFileWriter.PARQUET_METADATA_FILE ||
+      n == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE
   }
 
   /** Loads a table, normalizing timestamp columns to TimestampType.
+    * The reader schema is [[parquetSchema]]'s (no Spark job).
     *
     * The driver's testdata has shipped two physical encodings across
     * rounds: TIMESTAMP(NANOS) (unreadable natively by Spark 4 — the
@@ -62,7 +105,8 @@ object Tables {
     * see the same schema; the cast here is the belt to that suspender.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
     val df2 =
       if (name == "events" && df.schema("ts").dataType == LongType)
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *   3. one scan: (value, count) histogram of rows INSIDE the union
   *      of windows — O(N·eps) rows collapsing to distinct values,
   *      collected to the driver (bounded by the window width, not by
-  *      the column's distinct count).
+  *      the column's distinct count) and sorted there.
   * The exact order statistics are then read off the histogram with
   * the pass-2 offsets and interpolated exactly like Spark/pandas
   * (pos = p·(n−1), linear between adjacent order stats). If a window
@@ -182,12 +182,17 @@ object DistributedPercentile {
     val row2 = v.agg(belowCols.head, belowCols.tail: _*).head()
     val belows = ps.indices.map(j => row2.getLong(j))
 
-    // pass 3: distinct-value histogram inside the union of windows
+    // pass 3: distinct-value histogram inside the union of windows,
+    // sorted on the driver: it is collected anyway, and a distributed
+    // orderBy would add a range-bounds sampling job and a sort
+    // exchange. Values are distinct, non-NaN and zero-normalized by
+    // the groupBy, so the total order matches Spark's ascending sort.
     val inAny = windows.map { case (lo, hi) =>
       col("v") >= lo && col("v") <= hi }.reduce(_ || _)
     val hist = v.filter(inAny).groupBy(col("v")).agg(count(lit(1)).as("c"))
-      .orderBy(col("v")).collect()
+      .collect()
       .map(r => (r.getDouble(0), r.getLong(1)))
+      .sortBy(_._1)(Ordering.Double.TotalOrdering)
 
     val out: Seq[Option[Double]] = ps.indices.map { j =>
       val (lo, hi) = windows(j)

@@ -152,14 +152,19 @@ object GlobalOrder {
     val counts = base.groupBy(bucketKeys: _*).agg(sum(weight).as("__go_cnt"))
     val cond = partKeys.map(k => col(s"a.$k") <=> col(s"b.$k"))
       .foldLeft(col("b.__go_pid") < col("a.__go_pid"))(_ && _)
+    // offsets carry their group keys renamed so the join back can be
+    // null-safe (`<=>`): a NULL group key is a group like any other
+    val offKeys = partKeys.indices.map(i => s"__go_g$i")
     val offsets = counts.as("a")
       .join(counts.as("b"), cond, "left")
       .groupBy(partKeys.map(k => col(s"a.$k")) :+ col("a.__go_pid"): _*)
       .agg(coalesce(sum(col("b.__go_cnt")), lit(0L)).as("__go_off"))
-      .toDF(partKeys ++ Seq("__go_pid", "__go_off"): _*)
-    withCtr.join(broadcast(offsets), partKeys :+ "__go_pid")
+      .toDF(offKeys ++ Seq("__go_opid", "__go_off"): _*)
+    val onKeys = partKeys.zip(offKeys).map { case (k, o) => col(k) <=> col(o) }
+      .foldLeft(col("__go_pid") === col("__go_opid"))(_ && _)
+    withCtr.join(broadcast(offsets), onKeys)
       .withColumn(outCol, col("__go_off") + col("__go_ctr"))
-      .drop("__go_pid", "__go_ctr", "__go_off")
+      .drop(offKeys ++ Seq("__go_pid", "__go_opid", "__go_ctr", "__go_off"): _*)
   }
 
   /** Lineage-shared rdd zip: the zipWithIndex count job and the data

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{OracleNum, QueryModule}
+import graft.{OracleNum, QueryModule, Tables}
 import OracleNum._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -117,19 +117,18 @@ object StreamQueries extends QueryModule {
     * conditional — a rewritten copy, e.g. ScaleUp's sf1, already
     * carries a real TimestampType ts) */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val staticDf = s.read.parquet(s"$d/events.parquet")
-    val rdr = s.readStream.schema(staticDf.schema)
+    val schema = Tables.parquetSchema(s, s"$d/events.parquet")
+    val rdr = s.readStream.schema(schema)
     maxFilesOpt.foreach(n => rdr.option("maxFilesPerTrigger", n))
     val raw = rdr.parquet(streamDir(d))
-    if (staticDf.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
 
   /** streaming view of the documents table */
   private def docsStream(s: SparkSession, d: String): DataFrame = {
-    val staticDf = s.read.parquet(s"$d/documents.parquet")
-    val rdr = s.readStream.schema(staticDf.schema)
+    val rdr = s.readStream.schema(Tables.parquetSchema(s, s"$d/documents.parquet"))
     maxFilesOpt.foreach(n => rdr.option("maxFilesPerTrigger", n))
     rdr.parquet(streamDir(d, "documents"))
   }
@@ -259,7 +258,7 @@ object StreamQueries extends QueryModule {
     // scale this costs one broadcast per trigger and the stream never
     // shuffles for the join.
     "stream_static_join" -> { (s, d) =>
-      val dim = s.read.parquet(s"$d/customer.parquet")
+      val dim = Tables(s, d, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
       val agg = eventsStream(s, d)
         .join(dim, Seq("user_id"))

@@ -33,6 +33,13 @@ class GlobalOrderSpec extends SparkSpec {
       } => h.numPartitions
     }
 
+  /** Exclusive running sum of the weights per distinct key (NULL sorts
+    * first, as in Spark's ascending order). */
+  private def bruteForce(rows: Seq[(Option[Double], Long)]): Map[Option[Double], Long] = {
+    val sorted = rows.sortBy(r => (r._1.isDefined, r._1.getOrElse(0.0)))
+    sorted.map(_._1).zip(sorted.scanLeft(0L)(_ + _._2)).toMap
+  }
+
   /** 45,000 rows: lead key `k` with 9-way ties and a NULL every 97th
     * row, unique tiebreak `id`. */
   private def tiedWithNulls: DataFrame = {
@@ -108,11 +115,6 @@ class GlobalOrderSpec extends SparkSpec {
     }
     val grouped = hist.toDF("g", "k", "w")
     val keyless = hist.filter(_._1 == "g0").map(t => (t._2, t._3)).toDF("k", "w")
-    def bruteForce(rows: Seq[(Option[Double], Long)]): Map[Option[Double], Long] = {
-      // NULL sorts first, as in Spark's ascending order
-      val sorted = rows.sortBy(r => (r._1.isDefined, r._1.getOrElse(0.0)))
-      sorted.map(_._1).zip(sorted.scanLeft(0L)(_ + _._2)).toMap
-    }
     val out = GlobalOrder.prefixSum(keyless, Nil, "k", "w", "below")
     assert(bucketExchanges(out).exists(_ > 1), "expected the multi-bucket path")
     val want = bruteForce(hist.filter(_._1 == "g0").map(t => (t._2, t._3)))
@@ -127,6 +129,28 @@ class GlobalOrderSpec extends SparkSpec {
       .as[(String, Option[Double], Long)].collect()
     assert(gGot.length == hist.length)
     gGot.foreach { case (g, k, b) => assert(gWant(g)(k) == b, s"$g/$k: $b") }
+  }
+
+  test("prefixSum keeps a NULL group key, one-bucket and multi-bucket") {
+    import spark.implicits._
+    // three groups, one of them NULL; keys distinct within each group
+    def hist(n: Int) = (0 until n).map { i =>
+      val g = if (i % 3 == 0) None else Some(s"g${i % 3}")
+      (g, Some(((i / 3) * 7919L % n).toDouble), (i % 5 + 1).toLong)
+    }
+    for ((n, multi) <- Seq((300, false), (30000, true))) {
+      val rows = hist(n)
+      val out = GlobalOrder.prefixSum(rows.toDF("g", "k", "w"), Seq("g"), "k", "w", "below")
+      assert(bucketExchanges(out).exists(_ > 1) == multi, s"n=$n: bucket path")
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> bruteForce(rs.map(t => (t._2, t._3))) }
+      val got = out.select($"g", $"k", $"below")
+        .as[(Option[String], Option[Double], Long)].collect()
+      val lost = n - got.length
+      assert(lost == 0, s"n=$n: rows lost")
+      assert(got.count(_._1.isEmpty) == n / 3)
+      got.foreach { case (g, k, b) => assert(want(g)(k) == b, s"n=$n $g/$k: $b") }
+    }
   }
 
   test("a string lead key takes the rdd-zip fallback and still equals row_number() - 1") {

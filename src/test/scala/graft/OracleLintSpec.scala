@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Static, Spark-free lints: the DuckDB oracles' numeric rules below,
-  * and the rule that `operators/` picks its plans from its input alone
-  * (last test).
+  * the rule that `operators/` picks its plans from its input alone, and
+  * the rule that fixture tables are read through `Tables` (last two
+  * tests).
   *
   * Oracle rule 1, no uncast integer SUM. DuckDB widens SUM over any integer type to HUGEINT (int128) while
   * Spark's sum over int/long stays LongType — the driver's typed
@@ -178,6 +179,29 @@ class OracleLintSpec extends AnyFunSuite {
         .linesIterator.toSeq.zipWithIndex
       if line.contains("sys.env") || line.contains("\"graft.")
     } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
+  }
+
+  /** A fixture table is read through `Tables`, which takes its schema
+    * from one footer on the driver. A direct `read.parquet` of it infers
+    * the schema with a one-task Spark job at query-build time. `sources/`
+    * exercises the readers themselves and is exempt. */
+  test("no builder outside Tables and sources/ reads a fixture table with read.parquet") {
+    val root = new java.io.File("src/main/scala/graft")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val files = scalaFiles(root).filterNot { f =>
+      f.getName == "Tables.scala" || f.getParentFile.getName == "sources" }
+    assert(files.nonEmpty, s"no sources under ${root.getAbsolutePath}")
+    val fixtureRead = ("""read\b.*\.parquet\(\s*s"[^"]*/(""" +
+      Tables.all.mkString("|") + """)\.parquet"""").r.unanchored
+    val violations = for {
+      f <- files
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .linesIterator.toSeq.zipWithIndex
+      if fixtureRead.matches(line)
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 }
