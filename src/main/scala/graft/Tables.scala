@@ -65,12 +65,26 @@ object Tables {
         s"no readable parquet file under $path"))
   }
 
+  /** The one place graft writes data of its own for the fixtures under
+    * `dir`: `<spark.sql.warehouse.dir>/graft_work/<hex(dir.hashCode)>/<name>`,
+    * qualified through the session's Hadoop file system. Source
+    * round-trips, bucketed layouts and stream sinks and checkpoints all
+    * live here, so a session writes only inside its own warehouse (on
+    * a cluster, shared storage every executor reaches) and two
+    * sessions with different warehouses never share scratch. Everything
+    * under `graft_work` is rebuilt on demand and safe to delete. */
+  def workDir(spark: SparkSession, dir: String, name: String): String = {
+    val p = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir"),
+      s"graft_work/${Integer.toHexString(dir.hashCode)}"), name)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
+  }
+
   /** Every file a parquet read of `path` scans (the file itself, or the
     * leaves under the directory), sorted by path, listed on the driver
     * with Spark's rule: names starting with `_` or `.` are skipped,
     * except the `_metadata`/`_common_metadata` summaries. A missing
     * path raises `FileNotFoundException` naming it. */
-  private def parquetFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+  private[graft] def parquetFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     def leaves(st: FileStatus): Seq[FileStatus] =

@@ -39,7 +39,9 @@ import org.apache.spark.sql.functions._
   * unlike positional small-weight sums.
   */
 object PortableHash {
-  val P = 1000000007L
+  /** a `final val` constant: Scala inlines it as a literal at every use,
+    * the FrameSampleScan kernel's inner loop included */
+  final val P = 1000000007L
   /** second hash modulus for the 64-bit combine (NTT prime < 2^30) */
   val P2 = 998244353L
   /** band-key fuse modulus (Mersenne prime 2^31 - 1) */

@@ -19,12 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object FrameSampleScan {
   final val Stride = 16
-  final val P = 1000000007L // PortableHash.P, inlined for codegen
 
   /** fp == aggregate(transform(sequence(1, length(text), 16),
     * i -> ascii(substr(text, i, 1)).cast(long)), 0L,
-    * (acc, x) -> (acc * 31 + x) % P) — i.e. the polynomial rolling
-    * hash of every 16th CHARACTER (code point, like
+    * (acc, x) -> (acc * 31 + x) % P), P = [[PortableHash.P]] — i.e. the
+    * polynomial rolling hash of every 16th CHARACTER (code point, like
     * UTF8String.numChars; ascii() yields the code point — pinned
     * against the HOF on multi-byte docs by FrameSampleKernelSpec).
     * acc < P < 2^30 so acc*31 + cp stays far inside int64, exactly as
@@ -38,7 +37,7 @@ object FrameSampleScan {
     var acc = 0L
     var i = 0
     while (i < cps.length) {
-      acc = (acc * 31 + cps(i)) % P
+      acc = (acc * 31 + cps(i)) % PortableHash.P
       i += Stride
     }
     acc

@@ -127,8 +127,10 @@ object DistributedPercentile {
       .cache()
     // 2. ONE prefix-sum pass, ranks partitioned per (group, column)
     val ranked = GlobalOrder.prefixSum(hist, keys :+ tagCol, "__v", "__c", "__below")
+    // one row per (group, column): no broadcast hint, AQE broadcasts
+    // it only when its runtime size is under the threshold
     val ns = hist.groupBy(gk: _*).agg(sum(col("__c")).as("__n"))
-    val withN = ranked.join(broadcast(ns), keys :+ tagCol)
+    val withN = ranked.join(ns, keys :+ tagCol)
 
     // 3. per-column order-statistic selection over the shared ranked
     // frame: pos = p·(n−1), k = floor(pos); the value whose absolute

@@ -39,7 +39,11 @@ import org.apache.spark.sql.types._
   *   4. bucket row counts = a tiny aggregate; bucket start offsets = a
   *      triangular self-join prefix sum over those ≤ n rows
   *      (no partition-less window — PlanHygieneSpec forbids those);
-  *   5. ordinal = broadcast-joined bucket offset + in-bucket counter.
+  *   5. ordinal = joined bucket offset + in-bucket counter. Without
+  *      group keys the offsets are ≤ n rows and are broadcast; with
+  *      group keys they carry one row per (group, bucket) and grow with
+  *      the group count, so they get no hint and AQE broadcasts them
+  *      only when their runtime size is under the threshold.
   *
   * [[prefixSum]] is the same body with a weight column in place of
   * the count and optional group keys in front of the bucket id.
@@ -162,7 +166,9 @@ object GlobalOrder {
       .toDF(offKeys ++ Seq("__go_opid", "__go_off"): _*)
     val onKeys = partKeys.zip(offKeys).map { case (k, o) => col(k) <=> col(o) }
       .foldLeft(col("__go_pid") === col("__go_opid"))(_ && _)
-    withCtr.join(broadcast(offsets), onKeys)
+    // ≤ n offset rows without groups; with groups the side grows with
+    // the group count, and AQE picks the join by runtime size
+    withCtr.join(if (partKeys.isEmpty) broadcast(offsets) else offsets, onKeys)
       .withColumn(outCol, col("__go_off") + col("__go_ctr"))
       .drop(offKeys ++ Seq("__go_pid", "__go_opid", "__go_ctr", "__go_off"): _*)
   }

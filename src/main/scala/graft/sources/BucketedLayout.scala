@@ -24,13 +24,20 @@ import org.apache.spark.sql.functions.col
   * bucket count on the bucket column — the same hash the bucket id
   * uses — before the write.
   *
-  * Writes are once per (table, dataset dir) per JVM and synchronized:
-  * Verify runs query builders on parallel threads, and the first
-  * toucher of a layout must finish writing before the others read.
+  * A layout is written once per (table, dataset dir) per session: the
+  * session catalog is the cache, so a table that exists is read back,
+  * and one that was never written (or was dropped) is written again,
+  * under [[graft.Tables.workDir]]. The explicit `path` makes it an
+  * external table: a managed one would fail with
+  * `LOCATION_ALREADY_EXISTS` when a new JVM rewrites it. Building is
+  * synchronized because builders may run concurrently in one session,
+  * and the first to touch a layout must finish writing it before the
+  * others read.
   */
 object BucketedLayout {
 
-  private val written = scala.collection.mutable.Set[String]()
+  private def tableName(d: String, name: String): String =
+    s"${name}_${Integer.toHexString(d.hashCode)}"
 
   private def layout(s: SparkSession, d: String, name: String,
                      buckets: Int, bucketCol: String, sortCols: Seq[String])
@@ -40,17 +47,14 @@ object BucketedLayout {
     // not mutated here: they must be active when the downstream query
     // plans, which is after this builder returns
     graft.EngineConf.requireLayoutSettings(s)
-    val suf = Integer.toHexString(d.hashCode)
-    val tbl = s"${name}_$suf"
-    if (!written.contains(tbl)) {
+    val tbl = tableName(d, name)
+    if (!s.catalog.tableExists(tbl))
       build.repartition(buckets, col(bucketCol))
         .write.mode("overwrite")
-        .option("path", s"/tmp/graft_src/$suf/layout_$name")
+        .option("path", Tables.workDir(s, d, s"layout_$name"))
         .bucketBy(buckets, bucketCol)
         .sortBy(sortCols.head, sortCols.tail: _*)
         .saveAsTable(tbl)
-      written += tbl
-    }
     s.table(tbl)
   }
 
@@ -114,10 +118,8 @@ object BucketedLayout {
     * aggregate. */
   def existingLineitemByPart(s: SparkSession, d: String): Option[DataFrame] =
     synchronized {
-      val n = dataBuckets(s)
-      val tbl = s"lineitem_by_part_${n}_${Integer.toHexString(d.hashCode)}"
-      if (written.contains(tbl) || s.catalog.tableExists(tbl)) Some(s.table(tbl))
-      else None
+      val tbl = tableName(d, s"lineitem_by_part_${dataBuckets(s)}")
+      if (s.catalog.tableExists(tbl)) Some(s.table(tbl)) else None
     }
 
   /** lineitem and orders CO-BUCKETED on the order key, both sorted by

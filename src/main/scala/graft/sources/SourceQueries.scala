@@ -11,14 +11,12 @@ import org.apache.spark.sql.functions._
   * `io/json/_json.py`, `io/parquet.py`, `io/orc.py`. Spark's readers
   * replace the whole layer — schema'd parallel scans with pushdown.
   * Each query here round-trips the parquet testdata through another
-  * format into /tmp and aggregates the re-read copy; the oracle runs
+  * format into the session's work dir ([[Tables.workDir]], under the
+  * warehouse) and aggregates the re-read copy; the oracle runs
   * on the *original* table, so any serialization loss (precision,
   * nulls, timestamps) fails the hash compare.
   */
 object SourceQueries extends QueryModule {
-
-  private def tmpDir(d: String, fmt: String): String =
-    s"/tmp/graft_src/${Integer.toHexString(d.hashCode)}/$fmt"
 
   private def roundTrip(s: SparkSession, d: String, fmt: String): DataFrame = {
     import s.implicits._
@@ -27,7 +25,7 @@ object SourceQueries extends QueryModule {
         // CSV has no timestamp type fidelity guarantee across writers;
         // serialize explicitly and parse back below
         date_format($"o_orderdate", "yyyy-MM-dd HH:mm:ss").as("o_date_str"))
-    val path = tmpDir(d, fmt)
+    val path = Tables.workDir(s, d, fmt)
     fmt match {
       case "csv" =>
         src.write.mode("overwrite").option("header", "true").csv(path)
@@ -183,7 +181,7 @@ object SourceQueries extends QueryModule {
       val src = Tables(s, d, "orders")
         .select($"o_orderkey", $"o_custkey", $"o_orderstatus", $"o_totalprice",
           date_format($"o_orderdate", "yyyy-MM-dd HH:mm:ss").as("o_date_str"))
-      val path = tmpDir(d, "chunked_csv")
+      val path = Tables.workDir(s, d, "chunked_csv")
       src.repartition(16).write.mode("overwrite")
         .option("header", "true").csv(path)
       val chunks = ChunkedReader.byFiles(s, path, "csv", filesPerChunk = 3,
@@ -196,7 +194,7 @@ object SourceQueries extends QueryModule {
     // partitioning concept — Spark-native capability, SURVEY §4)
     "src_partitioned_parquet" -> { (s, d) =>
       import s.implicits._
-      val path = tmpDir(d, "part_parquet")
+      val path = Tables.workDir(s, d, "part_parquet")
       Tables(s, d, "orders")
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
       s.read.parquet(path)
@@ -215,7 +213,7 @@ object SourceQueries extends QueryModule {
     // counts catch exactly that.
     "src_partition_overwrite" -> { (s, d) =>
       import s.implicits._
-      val path = tmpDir(d, "part_overwrite")
+      val path = Tables.workDir(s, d, "part_overwrite")
       val orders = Tables(s, d, "orders")
       orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
       val saved = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -242,7 +240,7 @@ object SourceQueries extends QueryModule {
     // non-null count pin the union-by-name semantics either way.
     "src_merge_schema" -> { (s, d) =>
       import s.implicits._
-      val path = tmpDir(d, "merge_schema")
+      val path = Tables.workDir(s, d, "merge_schema")
       val orders = Tables(s, d, "orders")
       orders.select($"o_orderkey", $"o_orderstatus", $"o_totalprice")
         .write.mode("overwrite").parquet(s"$path/batch=1")
@@ -272,12 +270,12 @@ object SourceQueries extends QueryModule {
       val custT = s"customer_bkt_$suf"
       Tables(s, d, "orders").select($"o_custkey", $"o_totalprice")
         .write.mode("overwrite")
-        .option("path", tmpDir(d, "bucket_orders"))
+        .option("path", Tables.workDir(s, d, "bucket_orders"))
         .bucketBy(8, "o_custkey").sortBy("o_custkey")
         .saveAsTable(ordersT)
       Tables(s, d, "customer").select($"c_custkey", $"c_mktsegment")
         .write.mode("overwrite")
-        .option("path", tmpDir(d, "bucket_customer"))
+        .option("path", Tables.workDir(s, d, "bucket_customer"))
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
         .saveAsTable(custT)
       s.table(custT)
@@ -293,8 +291,12 @@ object SourceQueries extends QueryModule {
     // — the shape that parallelizes a big table across executors; at
     // cluster scale you'd size numPartitions to the table, not 8.
     "src_jdbc_roundtrip" -> { (s, d) =>
-      System.setProperty("derby.system.home", "/tmp/graft_src/derby_home")
-      val url = s"jdbc:derby:${tmpDir(d, "derby")}/db;create=true"
+      // embedded Derby opens a local directory: the work dir must be on
+      // the driver's file system
+      val db = new java.net.URI(Tables.workDir(s, d, "derby"))
+      require(db.getScheme == "file",
+        s"src_jdbc_roundtrip needs a local warehouse for its Derby DB, got $db")
+      val url = s"jdbc:derby:${db.getPath}/db;create=true"
       val props = new java.util.Properties()
       props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       val src = Tables(s, d, "orders")
@@ -326,7 +328,7 @@ object SourceQueries extends QueryModule {
     // the original table, so every option must actually fire to match.
     "src_csv_opts" -> { (s, d) =>
       import s.implicits._
-      val path = tmpDir(d, "csv_opts")
+      val path = Tables.workDir(s, d, "csv_opts")
       val lines = Tables(s, d, "orders").select(concat_ws(",",
           $"o_orderkey",
           when($"o_orderkey" % 101 === 0, lit("not_a_number"))
@@ -367,7 +369,7 @@ object SourceQueries extends QueryModule {
     // codegen'd, pushdown-friendly on the line length, and trivially
     // splittable (each line independent), so it scales like CSV.
     "src_fwf" -> { (s, d) =>
-      val path = tmpDir(d, "fwf")
+      val path = Tables.workDir(s, d, "fwf")
       Tables(s, d, "orders")
         .select(format_string("%10d%10d%-2s%16s%19s",
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
@@ -404,7 +406,7 @@ object SourceQueries extends QueryModule {
     // approxQuantile when values are skewed).
     "src_zorder_box" -> { (s, d) =>
       import s.implicits._
-      val path = tmpDir(d, "zorder")
+      val path = Tables.workDir(s, d, "zorder")
       val days = datediff($"o_orderdate".cast("date"),
         lit("1970-01-01").cast("date")).cast("long")
       val base = Tables(s, d, "orders")

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.{OracleNum, QueryModule, Tables}
 import OracleNum._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -16,79 +17,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `flatMapGroupsWithState` (the streaming form of the EWM recursion
   * in graft.functions.Ewm).
   *
-  * For the oracle harness the stream is driven from the events parquet
-  * with a memory sink and `processAllAvailable()` — batch-equivalent
-  * results, so the same DuckDB SQL verifies them. In production the
-  * identical plan runs over Kafka/files with a real trigger; state
-  * lives in the state store, partitioned by group key, so scale-out
-  * matches any keyed aggregation.
+  * For the oracle harness the stream is driven from the fixture
+  * parquet, read in place, with `processAllAvailable()` into a parquet
+  * sink — batch-equivalent results, so the same DuckDB SQL verifies
+  * them. In production the identical plan runs over Kafka/files with a
+  * real trigger; state lives in the state store, partitioned by group
+  * key, so scale-out matches any keyed aggregation.
   */
 object StreamQueries extends QueryModule {
-
-  /** The file stream source wants a flat directory of files; expose
-    * the events parquet through symlinks (testdata stays read-only).
-    * A single-file table links once; a directory table (ScaleUp's sf1
-    * layout) links each part file flat — the file source does not
-    * recurse into subdirectories.
-    */
-  private def streamDir(d: String, table: String = "events"): String = {
-    import java.nio.file.{Files, Paths}
-    val dir = Paths.get("/tmp/graft_stream",
-      Integer.toHexString(s"$d/$table".hashCode))
-    Files.createDirectories(dir)
-    val src = Paths.get(d, s"$table.parquet")
-    var bytes = 0L
-    if (Files.isDirectory(src)) {
-      Files.list(src).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        bytes += Files.size(p)
-        val link = dir.resolve(p.getFileName)
-        if (!Files.exists(link)) Files.createSymbolicLink(link, p)
-      }
-    } else {
-      bytes = Files.size(src)
-      val link = dir.resolve(s"$table.parquet")
-      if (!Files.exists(link)) Files.createSymbolicLink(link, src)
-    }
-    lastInputBytes = math.max(lastInputBytes, bytes)
-    dir.toString
-  }
-
-  /** bytes of the most recently linked stream source — the input-size
-    * signal [[runToMemory]] sizes the stateful-operator partition
-    * count from (see there); `max` because a query may link several
-    * sources (the stream-stream join links events twice) and the
-    * builders run sequentially per query */
-  @volatile private var lastInputBytes: Long = 0L
-
-  /** State-store partition count for the next streaming drive.
-    *
-    * Every stateful operator opens + commits ONE state store per
-    * shuffle partition per micro-batch — a fixed cost independent of
-    * row count (measured on stream_stream_join at sf0.1: 8.0 s at 32
-    * partitions vs 2.9 s at 8, RocksDB no better; 4 stores/side × 32
-    * partitions of open/commit dwarfed the actual join). So the
-    * partition count follows STREAMED INPUT BYTES (guide §2.2 —
-    * partitions sized by data, never by the local core count):
-    * ceil(bytes / target), target 32 MB per partition
-    * (`SPARK_GRAFT_STREAM_STATE_TARGET_MB` overrides), floor 1, no
-    * upper clamp — at sf0.1 that is 1 store per operator per batch; a
-    * 100 TB/day stream gets ~3M-row-sized thousands, exactly the
-    * production sizing rule. `SPARK_GRAFT_STREAM_STATE_PARTITIONS`
-    * pins an explicit count (scaled StreamBench runs).
-    * Values are unaffected: state is hash-partitioned by key and the
-    * partition count only changes WHERE a key's store lives. */
-  private def statePartitions: Option[Int] =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.trim.toInt)
-      .orElse {
-        val bytes = lastInputBytes
-        if (bytes <= 0L) None
-        else {
-          val targetMb = sys.env.get("SPARK_GRAFT_STREAM_STATE_TARGET_MB")
-            .map(_.trim.toLong).getOrElse(32L)
-          val target = math.max(1L, targetMb) << 20
-          Some(math.min((bytes + target - 1) / target, Int.MaxValue.toLong).toInt)
-        }
-      }
 
   /** SPARK_GRAFT_STREAM_MAX_FILES splits the drive into real
     * micro-batches (N source files per trigger) instead of one
@@ -113,27 +49,48 @@ object StreamQueries extends QueryModule {
   def dedupDelay: String =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_DEDUP_DELAY", "35 days")
 
+  /** Streaming view of fixture table `table`, read in place. A
+    * directory table (ScaleUp's and TimeOrderEvents' layout) is read
+    * directly. The file source takes only directories, so a
+    * single-file table is read through its parent with a glob filter
+    * on its own name. */
+  private def tableStream(s: SparkSession, d: String, table: String): DataFrame = {
+    val path = s"$d/$table.parquet"
+    val rdr = s.readStream.schema(Tables.parquetSchema(s, path))
+    maxFilesOpt.foreach(n => rdr.option("maxFilesPerTrigger", n))
+    val p = new Path(path)
+    if (p.getFileSystem(s.sessionState.newHadoopConf()).getFileStatus(p).isDirectory)
+      rdr.parquet(path)
+    else rdr.option("pathGlobFilter", p.getName).parquet(d)
+  }
+
   /** streaming view of the events table (nanos->micros like Tables;
     * conditional — a rewritten copy, e.g. ScaleUp's sf1, already
     * carries a real TimestampType ts) */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.parquetSchema(s, s"$d/events.parquet")
-    val rdr = s.readStream.schema(schema)
-    maxFilesOpt.foreach(n => rdr.option("maxFilesPerTrigger", n))
-    val raw = rdr.parquet(streamDir(d))
-    if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    val raw = tableStream(s, d, "events")
+    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
 
-  /** streaming view of the documents table */
-  private def docsStream(s: SparkSession, d: String): DataFrame = {
-    val rdr = s.readStream.schema(Tables.parquetSchema(s, s"$d/documents.parquet"))
-    maxFilesOpt.foreach(n => rdr.option("maxFilesPerTrigger", n))
-    rdr.parquet(streamDir(d, "documents"))
-  }
+  /** Streamed input bytes per state-store partition.
+    *
+    * Every stateful operator opens + commits ONE state store per
+    * shuffle partition per micro-batch — a fixed cost independent of
+    * row count (measured on stream_stream_join at sf0.1: 8.0 s at 32
+    * partitions vs 2.9 s at 8, RocksDB no better; 4 stores/side × 32
+    * partitions of open/commit dwarfed the actual join). So the
+    * partition count follows STREAMED INPUT BYTES (guide §2.2 —
+    * partitions sized by data, never by the local core count):
+    * ceil(bytes / 32 MB), floor 1, no upper clamp — at sf0.1 that is
+    * 1 store per operator per batch; a 100 TB/day stream gets
+    * ~3M-row-sized thousands, exactly the production sizing rule.
+    * Values are unaffected: state is hash-partitioned by key and the
+    * partition count only changes WHERE a key's store lives. */
+  private val StateTargetBytes = 32L << 20
 
-  /** Progress metrics of the most recent [[runToMemory]] drive —
+  /** Progress metrics of the most recent [[runToSink]] drive —
     * populated from the query's progress log so StreamBench can report
     * throughput and state-store footprint without re-plumbing every
     * query builder's return type. */
@@ -141,81 +98,66 @@ object StreamQueries extends QueryModule {
       stateRowsPeak: Long, stateRowsRemoved: Long)
   @volatile var lastRunMetrics: Option[RunMetrics] = None
 
-  /** Run a streaming frame to completion and return its full output.
+  /** Run a streaming frame over fixture table `table` to completion
+    * and return its full output.
     *
-    * Default sink is `memory` — right for the oracle harness at test
-    * scale, but the memory sink ships every output row to the DRIVER
-    * (stream_session_window at sf100 blew `spark.driver.maxResultSize`
-    * at 1 GB of serialized sessions — the canonical non-scalable
-    * collect). `SPARK_GRAFT_STREAM_FILE_SINK=<dir>` switches to the
-    * production shape: a `foreachBatch` parquet sink, IDEMPOTENT under
-    * micro-batch replay (round-10 ADVICE — a retried batch must not
-    * double-write): every write is a SaveMode.Overwrite of a
-    * batch-scoped subdirectory. Complete mode overwrites the fixed
-    * `latest/` dir (the last batch IS the result, and a replay of it
-    * re-produces the identical overwrite); Append mode overwrites
-    * `b<batchId>/` (each batch emits only finalized rows exactly once
-    * per batch id, so a replayed id replaces its own output instead of
-    * appending a duplicate). Output size is bounded by the cluster's
-    * disks, never the driver. The scaled differentials set it; both
-    * sinks feed the same compare. */
-  private def runToMemory(s: SparkSession, df: DataFrame, mode: OutputMode): DataFrame = {
-    val fileSinkBase = sys.env.get("SPARK_GRAFT_STREAM_FILE_SINK")
-    val name = s"stream_out_${System.nanoTime()}"
+    * The sink is a `foreachBatch` parquet writer under
+    * [[Tables.workDir]]: output size is bounded by the cluster's disks,
+    * never the driver (a memory sink ships every row to the driver —
+    * stream_session_window at sf100 blew `spark.driver.maxResultSize`
+    * at 1 GB of serialized sessions). It is IDEMPOTENT under
+    * micro-batch replay (a retried batch must not double-write): every
+    * write is a SaveMode.Overwrite of a batch-scoped subdirectory.
+    * Complete mode overwrites the fixed `latest/` dir (the last batch
+    * IS the result, and a replay of it re-produces the identical
+    * overwrite); Append mode overwrites `b<batchId>/` (each batch emits
+    * only finalized rows exactly once per batch id, so a replayed id
+    * replaces its own output instead of appending a duplicate). The
+    * checkpoint is a sibling of the output dir, never inside it: the
+    * append read-back's `recursiveFileLookup` would take it for data.
+    * Each drive gets fresh dirs, because a reused checkpoint would
+    * resume past the input it already read. */
+  private def runToSink(s: SparkSession, d: String, table: String,
+                        df: DataFrame, mode: OutputMode): DataFrame = {
+    val root = Tables.workDir(s, d, s"stream/${System.nanoTime()}")
+    val out = s"$root/out"
     val complete = mode == OutputMode.Complete()
-    // state-store partition sizing (see statePartitions): the shuffle
+    // state-store partition sizing (see StateTargetBytes): the shuffle
     // partition count at stream START pins the state partition count
     // for the query's lifetime, so set it scoped around the drive and
     // restore the session value afterwards (the drive is synchronous)
+    val bytes = Tables.parquetFiles(s, s"$d/$table.parquet").map(_.getLen).sum
+    val sized = math.max(1L, (bytes + StateTargetBytes - 1) / StateTargetBytes)
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val sized = statePartitions
-    lastInputBytes = 0L // consume the signal; next query re-links
-    sized.foreach { n =>
-      System.err.println(s"[stream] state partitions := $n (was $prevShuffle)")
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    }
+    System.err.println(s"[stream] state partitions := $sized (was $prevShuffle)")
+    s.conf.set("spark.sql.shuffle.partitions", sized.toString)
     try {
-    val writer = df.writeStream.outputMode(mode)
-    val q = fileSinkBase match {
-      case Some(base) =>
-        val dir = s"$base/$name"
-        writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val q = df.writeStream.outputMode(mode)
+        .option("checkpointLocation", s"$root/checkpoint")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sub = if (complete) "latest" else s"b$batchId"
-          batch.write.mode(SaveMode.Overwrite).parquet(s"$dir/$sub")
+          batch.write.mode(SaveMode.Overwrite).parquet(s"$out/$sub")
         }.start()
-      case None => writer.format("memory").queryName(name).start()
-    }
-    q.processAllAvailable()
-    val progs = q.recentProgress.toSeq
-    lastRunMetrics = Some(RunMetrics(
-      inputRows = progs.map(_.numInputRows).sum,
-      batches = progs.count(_.numInputRows > 0),
-      stateRowsPeak = progs.map(p =>
-        p.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(math.max),
-      stateRowsRemoved = progs.map(p =>
-        p.stateOperators.map(_.numRowsRemoved).sum).sum))
-    q.stop()
-    fileSinkBase match {
-      case Some(base) =>
-        val dir = new java.io.File(s"$base/$name")
-        // a query whose every batch was empty never created the dir
-        if (!dir.isDirectory) s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-        else if (complete) s.read.parquet(s"${dir.getPath}/latest")
-        // append: one b<batchId>/ subdir per non-empty batch; the
-        // names are deliberately NOT key=value so no partition column
-        // is inferred — recursiveFileLookup flattens them back
-        else s.read.option("recursiveFileLookup", "true")
-          .parquet(dir.getPath)
-      case None =>
-        // materialize before the in-memory sink table goes away
-        val out = s.table(name).cache()
-        out.count()
-        out
-    }
-    } finally {
-      if (sized.isDefined) s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
+      q.processAllAvailable()
+      val progs = q.recentProgress.toSeq
+      lastRunMetrics = Some(RunMetrics(
+        inputRows = progs.map(_.numInputRows).sum,
+        batches = progs.count(_.numInputRows > 0),
+        stateRowsPeak = progs.map(p =>
+          p.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(math.max),
+        stateRowsRemoved = progs.map(p =>
+          p.stateOperators.map(_.numRowsRemoved).sum).sum))
+      q.stop()
+      val outPath = new Path(out)
+      // a query whose every batch was empty never created the dir
+      if (!outPath.getFileSystem(s.sessionState.newHadoopConf()).exists(outPath))
+        s.createDataFrame(s.sparkContext.emptyRDD[Row], df.schema)
+      else if (complete) s.read.schema(df.schema).parquet(s"$out/latest")
+      // append: one b<batchId>/ subdir per batch; the names are
+      // deliberately NOT key=value so no partition column is inferred
+      // — recursiveFileLookup flattens them back
+      else s.read.schema(df.schema).option("recursiveFileLookup", "true").parquet(out)
+    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
   def queries: Map[String, Q] = Map(
@@ -226,7 +168,7 @@ object StreamQueries extends QueryModule {
         .groupBy(window(col("ts"), "1 day"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
         .select(col("window.start").as("day"), col("n"), col("sum_val"))
-      runToMemory(s, agg, OutputMode.Complete())
+      runToSink(s, d, "events", agg, OutputMode.Complete())
     },
 
     // sliding 2h window every 1h, per event type
@@ -235,7 +177,7 @@ object StreamQueries extends QueryModule {
         .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("w_start"), col("event_type"), col("n"))
-      runToMemory(s, agg, OutputMode.Complete())
+      runToSink(s, d, "events", agg, OutputMode.Complete())
     },
 
     // watermarked append-mode aggregate: only windows the 10-minute
@@ -248,7 +190,7 @@ object StreamQueries extends QueryModule {
         .groupBy(window(col("ts"), "1 day"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
         .select(col("window.start").as("day"), col("n"), col("sum_val"))
-      runToMemory(s, agg, OutputMode.Append())
+      runToSink(s, d, "events", agg, OutputMode.Append())
     },
 
     // stream-static enrichment join: the streaming fact side joins a
@@ -264,7 +206,7 @@ object StreamQueries extends QueryModule {
         .join(dim, Seq("user_id"))
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
-      runToMemory(s, agg, OutputMode.Complete())
+      runToSink(s, d, "events", agg, OutputMode.Complete())
     },
 
     // stream-stream interval join (no pandas analogue; Spark-native
@@ -290,7 +232,7 @@ object StreamQueries extends QueryModule {
           col("purch_ts") <= col("click_ts") + expr("interval 1 hour"))
         .select(col("user_id"), col("click_id"), col("click_ts"),
           col("purch_ts"), col("purch_val"))
-      runToMemory(s, j, OutputMode.Append())
+      runToSink(s, d, "events", j, OutputMode.Append())
     },
 
     // per-user session windows (30-minute inactivity gap): the state
@@ -312,7 +254,7 @@ object StreamQueries extends QueryModule {
           col("session_window.start").as("sess_start"),
           col("session_window.end").as("sess_end"),
           col("n"), col("sum_val"))
-      runToMemory(s, agg, OutputMode.Append())
+      runToSink(s, d, "events", agg, OutputMode.Append())
     },
 
     // streaming exact dedup via dropDuplicates state — the streaming
@@ -327,7 +269,7 @@ object StreamQueries extends QueryModule {
       val out = eventsStream(s, d)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      runToMemory(s, out, OutputMode.Append())
+      runToSink(s, d, "events", out, OutputMode.Append())
     },
 
     // the BOUNDED-STATE streaming dedup (VERDICT r7 next-#7):
@@ -348,7 +290,7 @@ object StreamQueries extends QueryModule {
         .withWatermark("ts", dedupDelay)
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-      runToMemory(s, out, OutputMode.Append())
+      runToSink(s, d, "events", out, OutputMode.Append())
     },
 
     // streaming suppression against a static denylist with a bloom
@@ -371,7 +313,7 @@ object StreamQueries extends QueryModule {
       val out = neg.unionByName(cand)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n_events"), dsum($"value").as("sum_value"))
-      runToMemory(s, out, OutputMode.Complete())
+      runToSink(s, d, "events", out, OutputMode.Complete())
     },
 
     // streaming CURATION composite — the incremental-ingest face of
@@ -390,7 +332,7 @@ object StreamQueries extends QueryModule {
     // the state store keeps cannot change the aggregate.
     "stream_curation" -> { (s, d) =>
       import s.implicits._
-      val kept = docsStream(s, d)
+      val kept = tableStream(s, d, "documents")
         .filter($"n_chars".between(100, 2000) &&
           size(split($"text", " ")) >= 20 &&
           $"lang".isin("en", "es", "de"))
@@ -398,7 +340,7 @@ object StreamQueries extends QueryModule {
         .dropDuplicates("source", "digest")
       val out = kept.groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
-      runToMemory(s, out, OutputMode.Complete())
+      runToSink(s, d, "documents", out, OutputMode.Complete())
     },
 
     // stateful per-user recursion via flatMapGroupsWithState: final
@@ -425,7 +367,7 @@ object StreamQueries extends QueryModule {
         }
         .toDF("user_id", "n_events", "ewm_final")
         .withColumn("ewm_final", round(col("ewm_final"), 6))
-      runToMemory(s, out, OutputMode.Append())
+      runToSink(s, d, "events", out, OutputMode.Append())
     }
   )
 

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Static, Spark-free lints: the DuckDB oracles' numeric rules below,
-  * the rule that `operators/` picks its plans from its input alone, and
-  * the rule that fixture tables are read through `Tables` (last two
+  * the rule that `operators/` picks its plans from its input alone, the
+  * rule that fixture tables are read through `Tables`, and the rule that
+  * graft's own writes stay under the session's warehouse (last three
   * tests).
   *
   * Oracle rule 1, no uncast integer SUM. DuckDB widens SUM over any integer type to HUGEINT (int128) while
@@ -165,20 +166,31 @@ class OracleLintSpec extends AnyFunSuite {
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 
+  private val mainRoot = new java.io.File("src/main/scala")
+
+  private def scalaFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+
+  /** `file:line: text` for each line of `files` that `bad` flags. */
+  private def lint(files: Seq[java.io.File])(bad: (java.io.File, String) => Boolean): Seq[String] = {
+    assert(files.nonEmpty, s"no sources under ${mainRoot.getAbsolutePath}")
+    for {
+      f <- files
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .linesIterator.toSeq.zipWithIndex
+      if bad(f, line)
+    } yield s"${mainRoot.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+  }
+
   /** The operators choose each physical plan from their input (sizes,
     * sketch probes, layouts): a plan switch read from the environment
     * or a session conf key is a hidden option that tests and benchmarks
     * must then cover in every setting. */
   test("no operator reads an environment variable or a graft conf key") {
-    val dir = new java.io.File("src/main/scala/graft/operators")
-    val files = Option(dir.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))
-    assert(files.nonEmpty, s"no operator sources under ${dir.getAbsolutePath}")
-    val violations = for {
-      f <- files.sortBy(_.getName)
-      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .linesIterator.toSeq.zipWithIndex
-      if line.contains("sys.env") || line.contains("\"graft.")
-    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    val violations = lint(scalaFiles(new java.io.File(mainRoot, "graft/operators"))) {
+      (_, line) => line.contains("sys.env") || line.contains("\"graft.")
+    }
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 
@@ -187,21 +199,29 @@ class OracleLintSpec extends AnyFunSuite {
     * the schema with a one-task Spark job at query-build time. `sources/`
     * exercises the readers themselves and is exempt. */
   test("no builder outside Tables and sources/ reads a fixture table with read.parquet") {
-    val root = new java.io.File("src/main/scala/graft")
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val files = scalaFiles(root).filterNot { f =>
+    val files = scalaFiles(new java.io.File(mainRoot, "graft")).filterNot { f =>
       f.getName == "Tables.scala" || f.getParentFile.getName == "sources" }
-    assert(files.nonEmpty, s"no sources under ${root.getAbsolutePath}")
     val fixtureRead = ("""read\b.*\.parquet\(\s*s"[^"]*/(""" +
       Tables.all.mkString("|") + """)\.parquet"""").r.unanchored
-    val violations = for {
-      f <- files
-      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .linesIterator.toSeq.zipWithIndex
-      if fixtureRead.matches(line)
-    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+    val violations = lint(files)((_, line) => fixtureRead.matches(line))
+    assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
+  }
+
+  /** graft writes its own data only under the session's warehouse
+    * (`Tables.workDir`): a fixed host path is shared by every session on
+    * the host and is the driver's local disk on a cluster. A JVM-wide
+    * system property leaks across sessions the same way, and the
+    * stream sink, its state sizing and its output all follow the data
+    * with no environment switch. ScaleUp's default output path is the
+    * one `/tmp` literal: a command-line default, not scratch. */
+  test("src/main writes no fixed /tmp path, sets no system property, reads no retired stream knob") {
+    val retired = Seq("SPARK_GRAFT_STREAM_FILE_SINK",
+      "SPARK_GRAFT_STREAM_STATE_PARTITIONS", "SPARK_GRAFT_STREAM_STATE_TARGET_MB")
+    val violations = lint(scalaFiles(mainRoot)) { (f, line) =>
+      (line.contains("\"/tmp") &&
+        !(f.getName == "ScaleUp.scala" && line.contains("\"/tmp/sf1\""))) ||
+        line.contains("System.setProperty") || retired.exists(line.contains)
+    }
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 }

@@ -405,4 +405,37 @@ class PlanHygieneSpec extends SparkSpec {
     assert(pushed.contains("o_custkey") && pushed.contains("o_days"),
       s"both box dimensions must appear in PushedFilters; got: $pushed")
   }
+
+  test("grouped prefix sum and percentiles broadcast nothing when the thresholds forbid it") {
+    // the per-group sides (GlobalOrder's (group, bucket) offsets and
+    // exactGrouped's per-group counts) grow with the group count, so
+    // they carry no broadcast hint: with both thresholds at -1 the
+    // final adaptive plan may hold no BroadcastExchange
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.functions.{col, lit}
+    val helper = new AdaptiveSparkPlanHelper {}
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      // 3,000 groups of 10 rows: above GlobalOrder's one-bucket limit,
+      // so the multi-bucket offsets path is the one planned
+      val df = spark.range(0, 30000).select((col("id") % 3000).as("g"),
+        (col("id") * 7 % 101).as("v"), lit(1L).as("w"))
+      for ((name, out) <- Seq(
+          "prefixSum" -> graft.operators.GlobalOrder.prefixSum(df, Seq("g"), "v", "w", "below"),
+          "exactGrouped" -> graft.operators.DistributedPercentile.exactGrouped(
+            df, Seq("g"), "v", Seq(0.5), Seq("med")))) {
+        out.collect()
+        val plan = out.queryExecution.executedPlan
+        val bcasts = helper.collect(plan) { case b: BroadcastExchangeLike => b }
+        assert(bcasts.isEmpty, s"$name broadcasts a per-group side:\n$plan")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

@@ -37,7 +37,10 @@ fi
 sleep 2
 
 # 2. scratch: DuckDB spill, verify dumps, stale bench scratch
-for d in /tmp/duck_tmp /tmp/duck_tmp_* /tmp/vout_* /tmp/vout /tmp/arrow_hdr_probe; do
+# /tmp/graft_src and /tmp/graft_stream are retired scratch roots: graft
+# now writes under <warehouse>/graft_work (Tables.workDir)
+for d in /tmp/duck_tmp /tmp/duck_tmp_* /tmp/vout_* /tmp/vout /tmp/arrow_hdr_probe \
+         /tmp/graft_src /tmp/graft_stream; do
   if [ -e "$d" ]; then du -sh "$d" 2>/dev/null; rm -rf "$d"; echo "removed $d"; fi
 done
 # spark block-manager leftovers from killed JVMs (live JVMs keep theirs)
@@ -45,6 +48,13 @@ find /tmp -maxdepth 1 -name 'blockmgr-*' -mmin +10 -exec rm -rf {} + 2>/dev/null
 find /tmp -maxdepth 1 -name 'spark-*' -mmin +10 -exec rm -rf {} + 2>/dev/null
 
 # 3. proof
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+echo "-- graft scratch (layouts, source round-trips, stream sinks; safe to delete) --"
+if [ -d "$ROOT/spark-warehouse/graft_work" ]; then
+  du -sh "$ROOT/spark-warehouse/graft_work"
+else
+  echo "none at $ROOT/spark-warehouse/graft_work"
+fi
 echo "-- survivors (top cpu) --"
 ps aux --sort=-%cpu | head -8
 echo "-- disk --"
