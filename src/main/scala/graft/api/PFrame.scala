@@ -344,8 +344,10 @@ final case class PFrame(df: DataFrame, index: Seq[String] = Nil) {
     * the exact path survives scale — Spark's own `percentile`
     * aggregate merges a value→count map of every distinct value on
     * one reducer (517 s at 600M rows, SCALE.md r8); the distributed
-    * selection answers the same values in map-side partial-aggregated
-    * passes (27.8 s, oracle-equal to DuckDB's quantile_cont). */
+    * selection answers the same values (oracle-equal to DuckDB's
+    * quantile_cont) in two one-job scans per column, tree-merged, with
+    * a driver collect bounded by a fixed row budget. The scans run
+    * here, eagerly: the result frame is built from driver scalars. */
   def quantile(cols: Seq[String], qs: Seq[Double]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}

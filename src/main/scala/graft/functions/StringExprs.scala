@@ -30,17 +30,45 @@ object FrameSampleScan {
     * in the HOF fold. Empty text folds over an empty sequence -> 0,
     * same as here. The HOF form materialized a sampled-char array per
     * row and ran the fold interpreted (HigherOrderFunction has no
-    * codegen); this is one code-point decode of the document inside
+    * codegen); this is one walk over the document's UTF-8 bytes inside
     * whole-stage codegen. */
   def sampledFp(s: UTF8String): Long = {
-    val cps = s.toString.codePoints().toArray
     var acc = 0L
-    var i = 0
-    while (i < cps.length) {
-      acc = (acc * 31 + cps(i)) % PortableHash.P
-      i += Stride
+    var b = 0 // byte offset of character c
+    var c = 0
+    while (b < s.numBytes) {
+      if (c % Stride == 0) acc = (acc * 31 + Utf8.codePointAt(s, b)) % PortableHash.P
+      b += Utf8.charBytes(s, b)
+      c += 1
     }
     acc
+  }
+}
+
+/** Code points decoded straight from a UTF8String's bytes, with no
+  * String or code-point array per row. Characters are stepped as
+  * `UTF8String.numChars`/`substring` step them (the lead byte gives
+  * the length), so the c-th character here is `substr(text, c + 1, 1)`;
+  * a malformed or truncated sequence decodes to U+FFFD, as the JDK
+  * decoder behind `ascii()` does.
+  */
+private[functions] object Utf8 {
+  def charBytes(s: UTF8String, b: Int): Int = UTF8String.numBytesForFirstByte(s.getByte(b))
+
+  def codePointAt(s: UTF8String, b: Int): Int = {
+    val b0 = s.getByte(b) & 0xff
+    val len = charBytes(s, b)
+    if (len == 1) return if (b0 < 0x80) b0 else 0xfffd
+    if (len > 4 || b + len > s.numBytes) return 0xfffd
+    var cp = b0 & (0x7f >> len)
+    var i = 1
+    while (i < len) {
+      val bi = s.getByte(b + i) & 0xff
+      if ((bi & 0xc0) != 0x80) return 0xfffd
+      cp = (cp << 6) | (bi & 0x3f)
+      i += 1
+    }
+    cp
   }
 }
 
@@ -58,26 +86,28 @@ object AudioFrameScan {
     * and ascii() yields the character's code point. The HOF form this
     * replaces evaluated an interpreted sequence→transform→aggregate
     * chain of 32 substr+ascii calls PER EXPLODED FRAME (~35 µs/frame
-    * measured at sf0.1); this is one code-point decode of the doc plus
-    * one add per (frame, position). Documents shorter than FrameLen
-    * characters yield an empty array (the query's length filter
-    * removes them before the explode either way). */
+    * measured at sf0.1); this is one walk over the doc's UTF-8 bytes,
+    * one add per character and one per frame. Documents shorter than
+    * FrameLen characters yield an empty array (the query's length
+    * filter removes them before the explode either way). */
   def energies(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val cps = s.toString.codePoints().toArray
-    val n = cps.length
+    val n = s.numChars
     if (n < FrameLen)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Long])
     val nf = (n - FrameLen) / Hop + 1
+    // FrameLen == 2·Hop: frame k is hop-blocks k and k+1, so one walk
+    // sums each block and each frame adds two blocks
+    val blocks = new Array[Long](nf + 1)
+    var b = 0
+    var c = 0
+    while (c < blocks.length * Hop) {
+      blocks(c / Hop) += Utf8.codePointAt(s, b)
+      b += Utf8.charBytes(s, b)
+      c += 1
+    }
     val out = new Array[Long](nf)
     var k = 0
-    while (k < nf) {
-      var acc = 0L
-      var i = k * Hop
-      val end = i + FrameLen
-      while (i < end) { acc += cps(i); i += 1 }
-      out(k) = acc
-      k += 1
-    }
+    while (k < nf) { out(k) = blocks(k) + blocks(k + 1); k += 1 }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 }

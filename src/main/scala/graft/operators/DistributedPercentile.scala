@@ -1,57 +1,76 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.functions._
 
-/** Exact interpolated percentiles by DISTRIBUTED two-pass bracket
-  * selection — the scale-safe replacement for Spark's exact
-  * `percentile` aggregate, whose final merge concentrates a
-  * value→count map of EVERY distinct value on one reducer (517 s of
-  * the sf100 differential was that single merge for
-  * `agg_approx_stats`'s verification half; reference semantics:
-  * pandas `quantile`, interpolation='linear' — core/nanops.py).
+/** Exact interpolated percentiles by DISTRIBUTED bracket selection —
+  * the scale-safe replacement for Spark's exact `percentile`
+  * aggregate, whose final merge concentrates a value→count map of
+  * EVERY distinct value on one reducer (517 s of the sf100
+  * differential was that single merge for `agg_approx_stats`'s
+  * verification half; reference semantics: pandas `quantile`,
+  * interpolation='linear' — core/nanops.py).
   *
-  * Passes (all map-side partial aggregates; nothing single-reducer
-  * ever sees more than O(windows) state):
-  *   1. one scan: non-null count + `approx_percentile` at accuracy
-  *      1/eps around each target, giving value windows guaranteed
-  *      (GK sketch rank-error bound ≤ N·eps) to cover the needed
-  *      order statistics;
-  *   2. one scan: count of rows strictly below each window's low
-  *      bound (k conditional sums in a single agg);
-  *   3. one scan: (value, count) histogram of rows INSIDE the union
-  *      of windows — O(N·eps) rows collapsing to distinct values,
-  *      collected to the driver (bounded by the window width, not by
-  *      the column's distinct count) and sorted there.
-  * The exact order statistics are then read off the histogram with
-  * the pass-2 offsets and interpolated exactly like Spark/pandas
-  * (pos = p·(n−1), linear between adjacent order stats). If a window
-  * failed to cover its ranks (cannot happen within the sketch's
-  * documented bound; kept as a loud safety net), the window widens
-  * 8× and the selection re-runs.
+  * [[exact]] is two scans of ONE Spark job each, over the column's
+  * `queryExecution.toRdd` (whole-stage codegen, no `Row`), with
+  * partials combined by `treeAggregate`:
+  *   1. a Greenwald–Khanna sketch ([[QuantileSketch]]) gives n and,
+  *      around each target, a value window guaranteed (rank error
+  *      ≤ n/10000) to cover the needed order statistics;
+  *   2. per window, the rows strictly below it and a value → count map
+  *      of the rows inside it (−0.0 folded into 0.0), sorted on the
+  *      driver, where the order statistics are read off and
+  *      interpolated exactly like Spark/pandas (pos = p·(n−1)).
+  * A window holds about 2·delta·n rows. When the windows could exceed
+  * [[RowBudget]] rows, one more one-job pass re-sketches only the rows
+  * inside them, at the accuracy that makes them fit: the driver
+  * collect is bounded by the budget, not by n. If a window failed to
+  * cover its ranks (cannot happen within the sketch's bound; a loud
+  * safety net), the windows widen 8× and the selection re-runs. The
+  * jobs run while the caller builds its query: the result is driver
+  * scalars that the query embeds as literals.
   */
 object DistributedPercentile {
 
-  /** Exact percentiles of `col` in `df` (nulls ignored), Spark
-    * `percentile` / pandas linear-interpolation semantics. */
-  def exact(df: DataFrame, colName: String, ps: Seq[Double]): Seq[Double] = {
-    require(ps.forall(p => p >= 0.0 && p <= 1.0), s"percentiles out of [0,1]: $ps")
-    val v = df.select(col(colName).cast("double").as("v"))
-      .filter(col("v").isNotNull && !isnan(col("v")))
+  /** The pass-1 sketch's relative rank error is 1/Accuracy
+    * (`approx_percentile`'s default accuracy). */
+  private val Accuracy = 10000
 
-    val accuracy = 10000
-    var delta = 3.0 / accuracy // 3× the sketch's 1/accuracy rank bound
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val res = tryExact(v, ps, accuracy, delta)
-      if (res.isDefined) return res.get
-      require(attempt < 4,
-        s"DistributedPercentile: windows failed to converge at delta=$delta")
-      delta = math.min(0.5, delta * 8)
-    }
-    throw new IllegalStateException("unreachable")
+  /** Rows all windows together may hold before pass 2 collects them;
+    * above it the windows are narrowed first, so the driver's map has
+    * at most this many entries. */
+  private val RowBudget: Long = 1L << 20
+
+  /** Exact percentiles of `col` in `df` (nulls and NaNs ignored),
+    * Spark `percentile` / pandas linear-interpolation semantics. */
+  def exact(df: DataFrame, colName: String, ps: Seq[Double]): Seq[Double] =
+    select(df, colName, ps)._1
+
+  /** The body of [[exact]], which also returns how many distinct values
+    * pass 2 collected to the driver. `rowBudget` and the first window
+    * half-width `delta` (in quantile units, 3× the sketch's error) are
+    * parameters so that specs reach the narrowing and the retry at
+    * fixture scale. */
+  private[graft] def select(df: DataFrame, colName: String, ps: Seq[Double],
+      rowBudget: Long = RowBudget, delta: Double = 3.0 / Accuracy): (Seq[Double], Int) = {
+    require(ps.forall(p => p >= 0.0 && p <= 1.0), s"percentiles out of [0,1]: $ps")
+    val rows = df.select(col(colName).cast("double").as("v"))
+      .filter(col("v").isNotNull && !isnan(col("v")))
+      .queryExecution.toRdd
+    // pass 1 (one job): the sketch, whose count is n
+    val (sketch, n) = QuantileSketch(rows, 1.0 / Accuracy)
+    if (n == 0) return (ps.map(_ => Double.NaN), 0)
+    // at most 4 attempts, each with windows 8× wider than the last
+    Iterator.iterate(delta)(d => math.min(0.5, d * 8)).take(4)
+      .flatMap(tryExact(rows, sketch, n, ps, _, rowBudget)).nextOption()
+      .getOrElse(throw new IllegalStateException(
+        s"DistributedPercentile: windows failed to converge from delta=$delta"))
   }
 
   /** Exact per-GROUP interpolated percentiles — the grouped sibling of
@@ -164,61 +183,43 @@ object DistributedPercentile {
     perCol.reduce(_.join(_, keys))
   }
 
-  private def tryExact(v: DataFrame, ps: Seq[Double], accuracy: Int,
-                       delta: Double): Option[Seq[Double]] = {
-    // pass 1: count + bracket windows in ONE scan
+  private def tryExact(rows: RDD[InternalRow], sketch: QuantileSummaries, n: Long,
+                       ps: Seq[Double], delta: Double,
+                       rowBudget: Long): Option[(Seq[Double], Int)] = {
+    // order statistic k = floor(p·(n−1)); interpolating also needs k+1
+    val ks = ps.map(p => (p * (n - 1)).toLong)
+    val needs = ps.indices.map(j => if (ps(j) * (n - 1) > ks(j)) ks(j) + 1 else ks(j))
     val probes = ps.flatMap(p =>
       Seq(math.max(0.0, p - delta), math.min(1.0, p + delta)))
-    val row1 = v.agg(
-      count(lit(1)).as("n"),
-      expr(s"approx_percentile(v, array(${probes.mkString(",")}), $accuracy)")
-        .as("w")).head()
-    val n = row1.getLong(0)
-    if (n == 0) return Some(ps.map(_ => Double.NaN))
-    val w = row1.getSeq[Double](1)
-    val windows = ps.indices.map(j => (w(2 * j), w(2 * j + 1)))
+    val w = sketch.query(probes).get
+    val wide = ps.indices.map(j => (w(2 * j), w(2 * j + 1)))
+    // the GK bound: one window holds ≤ (2·delta + 2/Accuracy)·n rows
+    val perWindow = (2 * delta + 2.0 / Accuracy) * n
+    val fitted = if (perWindow * ps.size <= rowBudget) Some(wide)
+      else narrow(rows, wide, ks, needs, perWindow, delta * Accuracy, rowBudget)
+    if (fitted.isEmpty) return None
+    val windows = fitted.get
 
-    // pass 2: rows strictly below each window's low bound
-    val belowCols: Seq[Column] = windows.map { case (lo, _) =>
-      sum(when(col("v") < lo, 1L).otherwise(0L)) }
-    val row2 = v.agg(belowCols.head, belowCols.tail: _*).head()
-    val belows = ps.indices.map(j => row2.getLong(j))
-
-    // pass 3: distinct-value histogram inside the union of windows,
-    // sorted on the driver: it is collected anyway, and a distributed
-    // orderBy would add a range-bounds sampling job and a sort
-    // exchange. Values are distinct, non-NaN and zero-normalized by
-    // the groupBy, so the total order matches Spark's ascending sort.
-    val inAny = windows.map { case (lo, hi) =>
-      col("v") >= lo && col("v") <= hi }.reduce(_ || _)
-    val hist = v.filter(inAny).groupBy(col("v")).agg(count(lit(1)).as("c"))
-      .collect()
-      .map(r => (r.getDouble(0), r.getLong(1)))
-      .sortBy(_._1)(Ordering.Double.TotalOrdering)
+    // pass 2 (one job): per window, the rows strictly below it and a
+    // value → count map of the rows inside it. Keys are non-NaN and
+    // zero-normalized, so the driver's total-order sort matches
+    // Spark's ascending sort.
+    val scanned = scan(rows, windows, () => mutable.HashMap.empty[Double, Long])(
+      (m, x) => { m(x + 0.0) = m.getOrElse(x + 0.0, 0L) + 1; m },
+      (a, b) => { b.foreach { case (x, c) => a(x) = a.getOrElse(x, 0L) + c }; a })
 
     val out: Seq[Option[Double]] = ps.indices.map { j =>
-      val (lo, hi) = windows(j)
-      val pos = ps(j) * (n - 1)
-      val k = pos.toLong
-      val frac = pos - k
-      val entries = hist.filter(e => e._1 >= lo && e._1 <= hi)
-      val inWin = entries.map(_._2).sum
+      val (below, counts) = scanned(j)
+      val entries = counts.toArray.sortBy(_._1)(Ordering.Double.TotalOrdering)
+      // ends(i): rows of the column up to and including entries(i)
+      val ends = entries.map(_._2).scanLeft(below)(_ + _).tail
+      def orderStat(idx: Long): Double = entries(ends.indexWhere(idx < _))._1
+      val k = ks(j)
+      val frac = ps(j) * (n - 1) - k
       // coverage: order stats k and (k+1 when interpolating) must lie
-      // inside [belows(j), belows(j) + inWin)
-      val need = if (frac > 0) k + 1 else k
-      if (belows(j) > k || belows(j) + inWin <= need) None
+      // inside [below, below + rows in the window)
+      if (below > k || ends.lastOption.getOrElse(below) <= needs(j)) None
       else {
-        def orderStat(idx: Long): Double = {
-          var cum = belows(j)
-          var res = Double.NaN
-          val it = entries.iterator
-          var found = false
-          while (!found && it.hasNext) {
-            val (value, cnt) = it.next()
-            if (idx < cum + cnt) { res = value; found = true } else cum += cnt
-          }
-          res
-        }
         val lo1 = orderStat(k)
         // convex combination, NOT lo + f*(hi−lo): Spark's Percentile
         // aggregate interpolates (1−f)·lo + f·hi and the two forms
@@ -233,6 +234,58 @@ object DistributedPercentile {
              else lo1 * (1.0 - frac) + hi1 * frac)
       }
     }
-    if (out.exists(_.isEmpty)) None else Some(out.map(_.get))
+    if (out.exists(_.isEmpty)) None
+    else Some((out.map(_.get), scanned.map(_._2.size).sum))
+  }
+
+  /** The row-budget step: ONE more one-job pass re-sketches only the
+    * rows inside each window, at the relative error that fits the
+    * narrowed windows into `rowBudget` by the same GK bound, and
+    * counts the rows below each window, so that order statistic k is
+    * in-window rank k − below. None when a needed rank lies outside
+    * its window (the retry widens the windows). */
+  private def narrow(rows: RDD[InternalRow], windows: Seq[(Double, Double)],
+                     ks: Seq[Long], needs: Seq[Long], perWindow: Double,
+                     ratio: Double, rowBudget: Long): Option[Seq[(Double, Double)]] = {
+    val eps = rowBudget / ((2 * ratio + 2) * perWindow * windows.size)
+    val scanned = scan(rows, windows, () => QuantileSketch.empty(eps))(
+      (s, x) => s.insert(x), (a, b) => a.compress().merge(b.compress()))
+    val narrowed = windows.indices.map { j =>
+      val (below, sketch) = scanned(j)
+      val s = sketch.compress()
+      val m = s.count
+      // query(q) answers 1-based rank ⌈q·m⌉: 0-based rank r is (r + 1)/m
+      if (ks(j) < below || needs(j) >= below + m) None
+      else Some((
+        s.query(math.max(0.0, (ks(j) - below + 1.0) / m - ratio * eps)).get,
+        s.query(math.min(1.0, (needs(j) - below + 1.0) / m + ratio * eps)).get))
+    }
+    if (narrowed.exists(_.isEmpty)) None else Some(narrowed.map(_.get))
+  }
+
+  /** ONE job over `rows`: per window, the count of rows strictly below
+    * it and `add` folded over the rows inside it, per partition and
+    * then across partitions by `merge`. */
+  private def scan[A: ClassTag](rows: RDD[InternalRow], windows: Seq[(Double, Double)],
+      zero: () => A)(add: (A, Double) => A, merge: (A, A) => A): Seq[(Long, A)] = {
+    val los = windows.map(_._1).toArray
+    val his = windows.map(_._2).toArray
+    val combine = (a: (Array[Long], Array[A]), b: (Array[Long], Array[A])) =>
+      (a._1.zip(b._1).map(t => t._1 + t._2), a._2.zip(b._2).map(t => merge(t._1, t._2)))
+    val (belows, accs) = rows.mapPartitions { it =>
+      val below = new Array[Long](los.length)
+      val acc = Array.fill(los.length)(zero())
+      while (it.hasNext) {
+        val x = it.next().getDouble(0)
+        var j = 0
+        while (j < los.length) {
+          if (x < los(j)) below(j) += 1 else if (x <= his(j)) acc(j) = add(acc(j), x)
+          j += 1
+        }
+      }
+      Iterator((below, acc))
+    }.treeAggregate((new Array[Long](los.length), Array.fill(los.length)(zero())))(
+      combine, combine)
+    belows.toSeq.zip(accs)
   }
 }

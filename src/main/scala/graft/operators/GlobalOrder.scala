@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   * target):
   *
   *   1. a bounds pass collects ≤ n-1 approximate quantiles of the
-  *      leading sort key (bounded driver state — the same footprint as
-  *      RangePartitioner's sampled bounds, which this replaces);
+  *      leading sort key from one per-partition sketch job
+  *      ([[QuantileSketch]]; bounded driver state — the same footprint
+  *      as RangePartitioner's sampled bounds, which this replaces);
   *   2. bucket id = a DETERMINISTIC literal-fold expression over those
   *      bounds. Determinism is the load-bearing property:
   *      `repartitionByRange` samples its bounds with an
@@ -52,9 +53,9 @@ import org.apache.spark.sql.types._
   * the leading key all land in one bucket (exactly RangePartitioner's
   * behavior for a single-key sort), so heavy skew on ONE value
   * degrades to that bucket's window — the same degradation a range
-  * exchange has. Non-numeric leading keys (no percentile_approx
-  * support) fall back to the rdd zip, which shares lineage between its
-  * count job and data job and is therefore also consistent.
+  * exchange has. Non-numeric leading keys (no double to sketch) fall
+  * back to the rdd zip, which shares lineage between its count job
+  * and data job and is therefore also consistent.
   *
   * With a total order (sort keys + tiebreaks unique) the assigned
   * ordinal is exactly `row_number() - 1`, so correctness oracles are
@@ -113,20 +114,13 @@ object GlobalOrder {
       sortCols: Seq[Column], weight: Column, outCol: String): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val lead = sortCols.head.cast("double")
-    // pass 1: ≤ n-1 bucket bounds (approximate is fine — bounds only
-    // balance buckets, never affect the values) + the row count in
-    // the SAME action for the one-bucket collapse
-    val probs = array((1 until n).map(i => lit(i.toDouble / n)): _*)
-    val row1 = df
-      .select(percentile_approx(lead, probs, lit(10000)).as("q"),
-        count(lit(1)).as("__go_n"))
-      .head()
+    // pass 1, one job: ≤ n-1 bucket bounds (approximate is fine —
+    // bounds only balance buckets, never affect the values) + the row
+    // count, NULL lead keys included, for the one-bucket collapse
+    val (sketch, rows) = QuantileSketch(df.select(lead).queryExecution.toRdd, 1e-4)
     val bounds: Seq[Double] =
-      if (row1.getLong(1) <= OneBucketRows) Seq.empty
-      else row1.getSeq[Any](0) match {
-        case null => Seq.empty
-        case qs => qs.distinct.filter(_ != null).map(_.asInstanceOf[Double])
-      }
+      if (rows <= OneBucketRows) Seq.empty
+      else sketch.query((1 until n).map(_.toDouble / n)).getOrElse(Seq.empty).distinct
 
     // deterministic bucket id: count of bounds strictly below the key;
     // NULL keys bucket to 0 = Spark's nulls-first ascending order.
@@ -176,7 +170,7 @@ object GlobalOrder {
   /** Lineage-shared rdd zip: the zipWithIndex count job and the data
     * job run over the SAME shuffled RDD, so the layout is consistent
     * by construction. Non-columnar — kept as the fallback for sort
-    * keys percentile_approx can't bucket. */
+    * keys the bounds sketch can't bucket. */
   private def zipOrdinalRdd(df: DataFrame, sortCols: Seq[Column], ordinalCol: String): DataFrame = {
     val spark = df.sparkSession
     val arranged = df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)

@@ -424,9 +424,10 @@ object AggQueries extends QueryModule {
     // Spark's exact `percentile` aggregate merges a value→count map of
     // EVERY distinct value on one reducer — that single merge cost
     // 517 s of the sf100 differential (SCALE.md r8). The scale-safe
-    // exact path is operators/DistributedPercentile: sketch-bracket →
-    // rank offsets → windowed histogram, every pass map-side
-    // partial-aggregated, driver state bounded by the bracket width.
+    // exact path is operators/DistributedPercentile: two scans of one
+    // job each (a GK sketch brackets each target; one more scan counts
+    // the rows below each bracket and the values inside it), partials
+    // tree-merged, the driver collect bounded by a fixed row budget.
     // The oracle compares the VALUES against DuckDB's exact
     // quantile_cont — proving exactness, not just plausibility.
     "agg_quantile_global" -> { (s, d) =>
@@ -667,7 +668,8 @@ object AggQueries extends QueryModule {
     // exact-percentile operator (o_totalprice is ~unique per row, so
     // the old `percentile` aggregate merged a value→count map of the
     // whole column on one reducer — the agg_quantile_global pathology,
-    // 517 s at sf100); the moment/min/max aggregate is untouched.
+    // 517 s at sf100): two one-job scans at build time, the quartiles
+    // embedded as literals; the moment/min/max aggregate is untouched.
     "agg_describe" -> { (s, d) =>
       import s.implicits._
       val p = $"o_totalprice".cast("decimal(12,2)")

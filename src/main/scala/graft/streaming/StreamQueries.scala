@@ -116,7 +116,8 @@ object StreamQueries extends QueryModule {
     * checkpoint is a sibling of the output dir, never inside it: the
     * append read-back's `recursiveFileLookup` would take it for data.
     * Each drive gets fresh dirs, because a reused checkpoint would
-    * resume past the input it already read. */
+    * resume past the input it already read; the checkpoint is deleted
+    * after a clean stop, and only `out` outlives the call. */
   private def runToSink(s: SparkSession, d: String, table: String,
                         df: DataFrame, mode: OutputMode): DataFrame = {
     val root = Tables.workDir(s, d, s"stream/${System.nanoTime()}")
@@ -148,9 +149,13 @@ object StreamQueries extends QueryModule {
         stateRowsRemoved = progs.map(p =>
           p.stateOperators.map(_.numRowsRemoved).sum).sum))
       q.stop()
-      val outPath = new Path(out)
+      // the checkpoint only serves a restart of this drive, and every
+      // drive is fresh: drop it after a clean stop. The output stays,
+      // because the returned frame reads it.
+      val fs = new Path(root).getFileSystem(s.sessionState.newHadoopConf())
+      fs.delete(new Path(s"$root/checkpoint"), true)
       // a query whose every batch was empty never created the dir
-      if (!outPath.getFileSystem(s.sessionState.newHadoopConf()).exists(outPath))
+      if (!fs.exists(new Path(out)))
         s.createDataFrame(s.sparkContext.emptyRDD[Row], df.schema)
       else if (complete) s.read.schema(df.schema).parquet(s"$out/latest")
       // append: one b<batchId>/ subdir per batch; the names are

@@ -32,10 +32,11 @@ class AudioFrameKernelSpec extends SparkSpec {
     import spark.implicits._
     // 31 chars (below the frame gate), exactly 32, 33 (one frame, not
     // two), 48 (frame boundary), 49 (second frame appears), spaces,
-    // and a multi-byte doc long enough to frame
+    // a 2/3-byte doc long enough to frame, and one of 4-byte
+    // (supplementary-plane) characters mixed with ASCII
     val edge = Seq(
       "x" * 31, "y" * 32, "z" * 33, "q" * 48, "r" * 49, ("ab " * 20).trim,
-      "é" * 40 + "漢" * 10, null)
+      "é" * 40 + "漢" * 10, "a\uD834\uDD1E" * 30 + "\uD83D\uDE00" * 9, null)
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val corpus = Tables(spark, sf(), "documents").select($"doc_id", $"text")
     for (d <- Seq(edge, corpus)) {

@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.operators.DistributedPercentile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** DistributedPercentile must be value-for-value exact against Spark's
@@ -17,6 +20,24 @@ class DistributedPercentileSpec extends SparkSpec {
     df.select(expr(
         s"percentile($c, array(${ps.mkString(",")}))").as("p"))
       .head().getSeq[Double](0)
+
+  /** `body`'s result and the Spark jobs it started, counted by a
+    * listener (events post asynchronously: wait for `atLeast` of them,
+    * then a little longer for any straggler). */
+  private def jobsDuring[T](atLeast: Int)(body: => T): (T, Int) = {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + 10000000000L
+      while (jobs.get() < atLeast && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("matches Spark's exact percentile on a real column") {
     val li = Tables(spark, sf(), "lineitem")
@@ -108,5 +129,63 @@ class DistributedPercentileSpec extends SparkSpec {
       assert(same(stacked, ref),
         s"stacked=${stacked.collect().toSeq} percentile=${ref.collect().toSeq}")
     }
+  }
+
+  test("a global selection is two scans of one Spark job each") {
+    val li = Tables(spark, sf(), "lineitem")
+    val ps = Seq(0.25, 0.5, 0.75, 0.9)
+    val (got, jobs) = jobsDuring(2)(DistributedPercentile.exact(li, "l_extendedprice", ps))
+    assert(jobs == 2, s"$jobs Spark jobs for one exact call")
+    assert(got == sparkExact(
+      li.select(col("l_extendedprice").cast("double").as("v")), "v", ps))
+  }
+
+  test("ties across partitions, mixed signed zeros, NaN and nulls match Spark") {
+    import spark.implicits._
+    // 50 distinct values with ~50 copies each, round-robined over 7
+    // partitions, so every tie run straddles partitions; a fifth of
+    // the rows are ±0.0 in the middle of the order. NaN is ignored
+    // (pandas skips it), so Spark's reference runs without it.
+    val vals = (0 until 3000).map { i =>
+      i % 10 match {
+        case 0 => None
+        case 1 => Some(Double.NaN)
+        case 2 => Some(-0.0)
+        case 3 => Some(0.0)
+        case _ => Some(((i * 37) % 50 - 25) / 4.0)
+      }
+    }
+    val df = vals.toDF("v").repartition(7)
+    val ps = Seq(0.0, 0.1, 0.25, 0.4, 0.45, 0.5, 0.55, 0.75, 0.9, 1.0)
+    val got = DistributedPercentile.exact(df, "v", ps)
+    val want = sparkExact(df.filter(!isnan($"v")), "v", ps)
+    got.zip(want).zip(ps).foreach { case ((g, w), p) =>
+      assert(g == w, s"p=$p: got $g want $w")
+    }
+  }
+
+  test("a window too narrow to cover its ranks widens until it is exact") {
+    // 100,000 distinct values and interpolating targets: a first window
+    // of ±1e-6 holds a single value and cannot cover two order stats,
+    // so the coverage check fails and the windows widen 8× per retry,
+    // each retry one more pass-2 job
+    val df = spark.range(100000).select(((col("id") * 7919) % 100000 / 8.0).as("v"))
+    val ps = Seq(0.5, 0.9)
+    val ((got, _), jobs) = jobsDuring(3)(DistributedPercentile.select(df, "v", ps, delta = 1e-6))
+    assert(jobs > 2, s"$jobs jobs: the first window covered its ranks")
+    assert(got == sparkExact(df, "v", ps))
+  }
+
+  test("the driver collect stays within the row budget") {
+    // 200,000 distinct values: the first windows hold about 160 rows
+    // each, so a budget of 100 forces the narrowing pass
+    val df = spark.range(200000).select(((col("id") * 7919) % 200000 / 4.0).as("v"))
+    val ps = Seq(0.1, 0.5, 0.99)
+    val want = sparkExact(df, "v", ps)
+    val (fullValues, fullCollected) = DistributedPercentile.select(df, "v", ps)
+    val (values, collected) = DistributedPercentile.select(df, "v", ps, rowBudget = 100)
+    assert(fullValues == want && values == want, s"full=$fullValues budget=$values want=$want")
+    assert(collected <= 100 && collected < fullCollected,
+      s"collected $collected values under a budget of 100 ($fullCollected without)")
   }
 }

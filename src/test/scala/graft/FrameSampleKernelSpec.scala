@@ -27,12 +27,13 @@ class FrameSampleKernelSpec extends SparkSpec {
   test("kernel sampled fingerprints == HOF fingerprints on corpus and edges") {
     import spark.implicits._
     // single char, 15/16/17 chars (stride boundary: position 17 is
-    // sampled iff length >= 17), spaces, a multi-byte doc past one
-    // stride, and null. Empty text is pinned separately below: the HOF
+    // sampled iff length >= 17), spaces, a 2/3-byte doc past one
+    // stride, a doc of 4-byte (supplementary-plane) characters mixed
+    // with ASCII, and null. Empty text is pinned separately below: the HOF
     // form THROWS on it (sequence(1, 0, 16) has illegal boundaries).
     val edge = Seq(
       "a", "x" * 15, "y" * 16, "z" * 17, ("ab " * 20).trim,
-      "é" * 40 + "漢" * 10, null)
+      "é" * 40 + "漢" * 10, "a\uD834\uDD1E" * 30 + "\uD83D\uDE00" * 9, null)
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val corpus = Tables(spark, sf(), "documents").select($"doc_id", $"text")
     for (d <- Seq(edge, corpus)) {
