@@ -16,7 +16,7 @@ import org.apache.spark.sql.catalyst.util.QuantileSummaries
   * √partitions of them). NULLs and NaNs are counted in the returned
   * row count but not sketched.
   */
-private[operators] object QuantileSketch {
+private[graft] object QuantileSketch {
 
   def apply(rows: RDD[InternalRow], relativeError: Double): (QuantileSummaries, Long) = {
     val (summary, n) = rows.mapPartitions { it =>

@@ -311,14 +311,15 @@ object AsofJoinNative {
 
     val n = math.max(1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     // epoch micros < 2^53 are exact in double, so the quantile sketch
-    // loses nothing; bounds only steer bucket balance, never results
-    val probs = (1 until n).map(_.toDouble / n).toArray
+    // loses nothing; bounds only steer bucket balance, never results.
+    // One sketch job over the codegen'd scan (operators/QuantileSketch);
+    // an empty left side sketches nothing and gets no bounds
     val bounds: Array[Long] =
-      if (probs.isEmpty) Array.empty
-      else left.select(micros(left, leftTs).cast("double").as("__m"))
-        .na.drop()
-        .stat.approxQuantile("__m", probs, 0.001)
-        .map(_.toLong).distinct.sorted
+      if (n == 1) Array.empty
+      else graft.operators.QuantileSketch(
+          left.select(micros(left, leftTs).cast("double")).queryExecution.toRdd, 0.001)
+        ._1.query((1 until n).map(_.toDouble / n)).getOrElse(Nil)
+        .map(_.toLong).distinct.sorted.toArray
 
     // bucket id = #bounds ≤ ts via generated binary search
     // (functions/SearchSorted) — the literal when-chain fold this

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
 /** Feather / Arrow IPC (pandas `read_feather`/`to_feather`,
@@ -14,74 +13,33 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
   * `ArrowConverters`) — so types round-trip exactly as Spark's pandas
   * interchange maps them, binary-typed (no stringly cast-back).
   *
-  * Distributed shape mirrors the rest of the package: one capped
+  * Distributed shape is the package's [[ChunkFiles]]: one capped
   * self-contained stream file per partition chunk on write (each
   * carries its own schema message + record batches + end-of-stream),
-  * one file per task on read via `binaryFile`.
+  * one file per task on read.
   */
 object ArrowStream {
 
-  /** Max rows per emitted file; batches inside cap at
-    * [[rowsPerBatch]], which also bounds per-task conversion memory.
-    * The cap also keeps every file far under `binaryFile`'s hard
-    * per-file ceiling — that source materializes each file as ONE
-    * byte-array row, so 2 GB (JVM array max) is a structural limit of
-    * the read path; 65,536 rows of any sane row width stays orders of
-    * magnitude below it. */
-  val rowsPerFile = 65536
+  /** Record batches inside a file cap at this many rows, which also
+    * bounds per-task conversion memory. */
   val rowsPerBatch = 8192L
 
   /** Write df as `.arrows` IPC stream files under `path` (overwrite
-    * semantics), ≤ `cap` rows each, parallel across partitions. */
-  def write(df: DataFrame, path: String, cap: Int = rowsPerFile): Unit = {
-    val sc = df.sparkSession.sparkContext
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(sc.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    val confB = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
+    * semantics), ≤ `cap` rows each, parallel across partitions. An
+    * empty frame writes one schema-only stream (zero batches + EOS is
+    * a valid IPC stream). */
+  def write(df: DataFrame, path: String, cap: Int = ChunkFiles.rowsPerFile): Unit = {
     val schema = df.schema
-    val written = df.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val conf = confB.value.value
-      it.grouped(cap).zipWithIndex.map { case (rows, ci) =>
-        val file = new org.apache.hadoop.fs.Path(path, f"part-$pid%05d-$ci.arrows")
-        val o = new java.io.BufferedOutputStream(
-          file.getFileSystem(conf).create(file, true), 1 << 16)
-        try GraftSqlBridge.writeArrowStream(rows.iterator, schema, rowsPerBatch, o)
-        finally o.close()
-        1
-      }
-    }.count()
-    // empty frame: one schema-only stream (zero batches + EOS is a
-    // valid IPC stream), so read restores the schema
-    if (written == 0L) {
-      val file = new org.apache.hadoop.fs.Path(path, "part-empty-0.arrows")
-      val o = new java.io.BufferedOutputStream(
-        file.getFileSystem(sc.hadoopConfiguration).create(file, true), 1 << 16)
-      try GraftSqlBridge.writeArrowStream(Iterator.empty, schema, rowsPerBatch, o)
-      finally o.close()
+    ChunkFiles.write(df, path, "arrows", cap) { (rows, o) =>
+      GraftSqlBridge.writeArrowStream(rows.iterator, schema, rowsPerBatch, o)
     }
   }
 
-  /** Parse every `.arrows` file under `path` (one per task); schema
-    * from the first file's stream HEADER — all chunks share it by
-    * construction, as in [[StataDta.read]]. The header read is
-    * bounded: the IPC schema message is the stream's first bytes, so
-    * the driver opens the file and reads only those
-    * ([[GraftSqlBridge.arrowSchemaFromHeader]]) instead of shipping
-    * the whole file driver-side (round-12 verdict #4). */
-  def read(s: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val first = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*.arrows"))
-      .map(_.getPath).sortBy(_.getName).headOption.getOrElse(
-        throw new java.io.FileNotFoundException(s"no .arrows files under $path"))
-    val in = new java.io.BufferedInputStream(fs.open(first), 1 << 16)
-    val schema = try GraftSqlBridge.arrowSchemaFromHeader(in) finally in.close()
-    val rows = s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.arrows").load(path)
-      .select("content").rdd.flatMap(r =>
-        GraftSqlBridge.readArrowStream(r.getAs[Array[Byte]](0))._1)
-    s.createDataFrame(rows, schema)
-  }
+  /** Parse every `.arrows` file under `path` (one per task). The
+    * schema comes from the first file's stream HEADER: the IPC schema
+    * message is the stream's first bytes, so the driver reads only
+    * those ([[GraftSqlBridge.arrowSchemaFromHeader]]). */
+  def read(s: SparkSession, path: String): DataFrame =
+    ChunkFiles.read(s, path, "arrows")(GraftSqlBridge.arrowSchemaFromHeader)(
+      (bytes, _) => GraftSqlBridge.readArrowStream(bytes)._1)
 }

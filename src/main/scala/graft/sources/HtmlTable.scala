@@ -11,20 +11,20 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * documents, one parsed per task", not "one 100 TB HTML file":
   *
   *  - WRITE: each partition renders its rows as a sequence of
-  *    self-contained XHTML documents of at most [[rowsPerDoc]] rows
-  *    (thead carries the column names, tbody one tr per row) —
-  *    parallel across partitions, written through the text sink.
-  *    The cap is load-bearing: one-doc-per-partition looked fine at
+  *    self-contained XHTML documents of at most 65,536 rows, one
+  *    `.html` file each ([[ChunkFiles]]; thead carries the column
+  *    names, tbody one tr per row), parallel across partitions. The
+  *    cap is load-bearing: one-doc-per-partition looked fine at
   *    sf0.01 and OOMed at sf10, where a 600k-row partition became a
   *    60 MB document (caught by the round-11 scaled differential).
-  *  - READ: `spark.read.option("wholetext", true).text` hands each
-  *    document to one task; parsing is STREAMING StAX (JDK
-  *    `javax.xml.stream`) — constant memory per document regardless
-  *    of row count, where a DOM parse explodes a 60 MB doc into GBs
-  *    of Node objects. Header names come from thead; every cell is a
-  *    string — HTML is stringly-typed on the wire, so callers apply a
-  *    schema by casting, the same discipline as the CSV/XML
-  *    round-trips.
+  *    An empty frame writes one header-only document.
+  *  - READ: each `.html` document goes to one task; parsing is
+  *    STREAMING StAX (JDK `javax.xml.stream`) — constant memory per
+  *    document regardless of row count, where a DOM parse explodes a
+  *    60 MB doc into GBs of Node objects. Header names come from
+  *    thead; every cell is a string — HTML is stringly-typed on the
+  *    wire, so callers apply a schema by casting, the same discipline
+  *    as the CSV/XML round-trips.
   *
   * Nulls round-trip as empty cells (cast back to NULL for non-string
   * types). Cell text is entity-escaped on write, so values containing
@@ -32,50 +32,47 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object HtmlTable {
 
-  /** Max rows per emitted document (~64k rows ≈ 6 MB of markup). */
-  val rowsPerDoc = 65536
-
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
   /** Render df (all columns as strings) to XHTML docs under `path`
-    * (overwrite semantics), ≤ [[rowsPerDoc]] rows each. */
+    * (overwrite semantics), ≤ [[ChunkFiles.rowsPerFile]] rows each. */
   def write(df: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
     val cols = df.columns.toSeq
     val strDf = df.select(cols.map(c => col(c).cast("string").as(c)): _*)
     val head = cols.map(c => s"<th>${esc(c)}</th>").mkString
-    val cap = rowsPerDoc
-    val docs = strDf.rdd.mapPartitions { it =>
-      it.grouped(cap).map { rows =>
-        val sb = new StringBuilder
-        sb.append("<html><body><table><thead><tr>").append(head)
-          .append("</tr></thead><tbody>")
-        rows.foreach { r =>
-          sb.append("<tr>")
-          (0 until r.length).foreach { i =>
-            val v = if (r.isNullAt(i)) "" else esc(r.getString(i))
-            sb.append("<td>").append(v).append("</td>")
-          }
-          sb.append("</tr>")
+    ChunkFiles.write(strDf, path, "html", ChunkFiles.rowsPerFile) { (rows, o) =>
+      val w = new java.io.OutputStreamWriter(o, java.nio.charset.StandardCharsets.UTF_8)
+      w.write("<html><body><table><thead><tr>")
+      w.write(head)
+      w.write("</tr></thead><tbody>")
+      rows.foreach { r =>
+        w.write("<tr>")
+        (0 until r.length).foreach { i =>
+          w.write("<td>")
+          if (!r.isNullAt(i)) w.write(esc(r.getString(i)))
+          w.write("</td>")
         }
-        sb.append("</tbody></table></body></html>")
-        sb.toString
+        w.write("</tr>")
       }
+      w.write("</tbody></table></body></html>")
+      w.flush()
     }
-    docs.saveAsTextFile(path)
   }
 
-  /** Scan events only until </thead>: the column names. */
-  private def headerOf(doc: String): Seq[String] = {
-    import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
+  private def staxReader(in: java.io.InputStream) = {
+    import javax.xml.stream.XMLInputFactory
     val f = XMLInputFactory.newInstance()
     f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val rd = f.createXMLStreamReader(new java.io.StringReader(doc))
+    f.createXMLStreamReader(in, "UTF-8")
+  }
+
+  /** Scan events only until </thead>: the column names. */
+  private def headerOf(in: java.io.InputStream): Seq[String] = {
+    import javax.xml.stream.XMLStreamConstants
+    val rd = staxReader(in)
     val names = scala.collection.mutable.ArrayBuffer[String]()
     var done = false
     while (!done && rd.hasNext) rd.next() match {
@@ -88,19 +85,14 @@ object HtmlTable {
     names.toSeq
   }
 
-  /** Streaming-parse one XHTML doc: (header names, row iterator).
-    * Constant memory beyond the input string and one row. */
-  private def parseDoc(doc: String): (Seq[String], Iterator[Row]) = {
-    import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val rd = f.createXMLStreamReader(new java.io.StringReader(doc))
-    val header = scala.collection.mutable.ArrayBuffer[String]()
+  /** Streaming-parse one XHTML doc's tbody rows. Constant memory
+    * beyond the input bytes and one row. */
+  private def parseRows(doc: Array[Byte]): Iterator[Row] = {
+    import javax.xml.stream.XMLStreamConstants
+    val rd = staxReader(new java.io.ByteArrayInputStream(doc))
     var inHead = false
-    // header pass state feeds straight into the lazy row iterator:
     // one forward scan over the event stream, no DOM
-    val rows = new Iterator[Row] {
+    new Iterator[Row] {
       private var nextRow: Row = _
       private def advance(): Unit = {
         nextRow = null
@@ -110,7 +102,6 @@ object HtmlTable {
           rd.next() match {
             case XMLStreamConstants.START_ELEMENT => rd.getLocalName match {
               case "thead" => inHead = true
-              case "th" if inHead => header += rd.getElementText
               case "tr" if !inHead => cells = scala.collection.mutable.ArrayBuffer[String]()
               case "td" => cell = new StringBuilder
               case _ =>
@@ -134,31 +125,14 @@ object HtmlTable {
       override def hasNext: Boolean = nextRow != null
       override def next(): Row = { val r = nextRow; advance(); r }
     }
-    (header.toSeq, rows)  // header is complete once thead is consumed,
-    // which happens before the first row is requested (thead precedes
-    // tbody in the documents this sink writes)
   }
 
   /** Parse every XHTML doc under `path` (one doc per task) into a
     * DataFrame of strings named by the thead header. */
-  def read(s: SparkSession, path: String): DataFrame = {
-    // a FILE holds one document per writer-emitted chunk (the text
-    // sink newline-separates elements and the docs contain no
-    // newlines); split on the </html> boundary so every document is
-    // parsed independently — StAX rejects multiple roots in one
-    // stream, which surfaced at sf10 where partitions emit several
-    // capped docs per file
-    val docs = s.read.option("wholetext", "true").text(path)
-      .rdd.map(_.getString(0))
-      .flatMap(_.split("(?<=</html>)").iterator.map(_.trim).filter(_.nonEmpty))
-    // header from one doc (all docs share it by construction — ONE
-    // tiny driver read of the thead only); row parsing stays
-    // distributed, one streaming pass per document
-    val firstDoc = docs.first()
-    val names = headerOf(firstDoc)
-    require(names.nonEmpty, s"HtmlTable.read: no <thead> header in $path")
-    val schema = StructType(names.map(StructField(_, StringType, nullable = true)))
-    val rows = docs.flatMap { doc => parseDoc(doc)._2 }
-    s.createDataFrame(rows, schema)
-  }
+  def read(s: SparkSession, path: String): DataFrame =
+    ChunkFiles.read(s, path, "html") { in =>
+      val names = headerOf(in)
+      require(names.nonEmpty, s"HtmlTable.read: no <thead> header in $path")
+      StructType(names.map(StructField(_, StringType, nullable = true)))
+    }((doc, _) => parseRows(doc))
 }

@@ -14,11 +14,13 @@ import org.apache.spark.sql.types.StructType
   *   spark.sql("CREATE TABLE t USING spss OPTIONS (path '...')")
   * }}}
   *
-  * Each provider is a thin adapter over the corresponding object in
-  * this package ([[Xlsx]], [[StataDta]], [[SpssSav]], [[SasXport]],
-  * [[HtmlTable]]) — schema comes from one driver-side read of the
-  * first file's header/dictionary, scan and write stay distributed
-  * (one file per task / one capped file per partition chunk).
+  * Each provider passes the `read`/`write` of one format object in this
+  * package ([[Xlsx]], [[StataDta]], [[SpssSav]], [[SasXport]],
+  * [[HtmlTable]], [[ArrowStream]]), all on the shared [[ChunkFiles]] shape: the
+  * schema comes from the driver reading the first chunk file's
+  * header/dictionary by name (no Spark job), while scan and write stay
+  * distributed (one file per task / one capped file per partition
+  * chunk).
   *
   * Save modes: Overwrite replaces the directory (the writers' native
   * semantics); ErrorIfExists (the default) and Ignore check the
@@ -27,11 +29,12 @@ import org.apache.spark.sql.types.StructType
   * the first's files rather than extend them; these are interchange
   * formats, not accumulating tables.
   */
-abstract class InterchangeSource extends RelationProvider
-    with CreatableRelationProvider with DataSourceRegister with Serializable {
+abstract class InterchangeSource private[sources] (name: String,
+    read: (SparkSession, String) => DataFrame, write: (DataFrame, String) => Unit)
+    extends RelationProvider with CreatableRelationProvider with DataSourceRegister
+    with Serializable {
 
-  protected def readImpl(s: SparkSession, path: String): DataFrame
-  protected def writeImpl(df: DataFrame, path: String): Unit
+  override def shortName(): String = name
 
   private def pathOf(parameters: Map[String, String]): String =
     parameters.getOrElse("path", throw new IllegalArgumentException(
@@ -39,7 +42,7 @@ abstract class InterchangeSource extends RelationProvider
 
   override def createRelation(ctx: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
-    val df = readImpl(ctx.sparkSession, pathOf(parameters))
+    val df = read(ctx.sparkSession, pathOf(parameters))
     new BaseRelation with TableScan {
       override def sqlContext: SQLContext = ctx
       override def schema: StructType = df.schema
@@ -61,63 +64,27 @@ abstract class InterchangeSource extends RelationProvider
         throw new IllegalStateException(s"$shortName: $path already exists " +
           "(default ErrorIfExists mode)")
       case SaveMode.Ignore if fs.exists(p) => // leave as-is
-      case _ => writeImpl(data, path)
+      case _ => write(data, path)
     }
     createRelation(ctx, parameters)
   }
 }
 
 /** `format("xlsx")` — Excel workbooks (pandas read_excel/to_excel). */
-class XlsxSourceProvider extends InterchangeSource {
-  override def shortName(): String = "xlsx"
-  override protected def readImpl(s: SparkSession, path: String): DataFrame =
-    Xlsx.read(s, path)
-  override protected def writeImpl(df: DataFrame, path: String): Unit =
-    Xlsx.write(df, path)
-}
+class XlsxSourceProvider extends InterchangeSource("xlsx", Xlsx.read, Xlsx.write(_, _))
 
 /** `format("stata")` — Stata dta-118 (pandas read_stata/to_stata). */
-class StataSourceProvider extends InterchangeSource {
-  override def shortName(): String = "stata"
-  override protected def readImpl(s: SparkSession, path: String): DataFrame =
-    StataDta.read(s, path)
-  override protected def writeImpl(df: DataFrame, path: String): Unit =
-    StataDta.write(df, path)
-}
+class StataSourceProvider extends InterchangeSource("stata", StataDta.read, StataDta.write(_, _))
 
 /** `format("spss")` — SPSS system files (pandas read_spss). */
-class SpssSourceProvider extends InterchangeSource {
-  override def shortName(): String = "spss"
-  override protected def readImpl(s: SparkSession, path: String): DataFrame =
-    SpssSav.read(s, path)
-  override protected def writeImpl(df: DataFrame, path: String): Unit =
-    SpssSav.write(df, path)
-}
+class SpssSourceProvider extends InterchangeSource("spss", SpssSav.read, SpssSav.write(_, _))
 
 /** `format("xport")` — SAS Transport (pandas read_sas format="xport"). */
-class XportSourceProvider extends InterchangeSource {
-  override def shortName(): String = "xport"
-  override protected def readImpl(s: SparkSession, path: String): DataFrame =
-    SasXport.read(s, path)
-  override protected def writeImpl(df: DataFrame, path: String): Unit =
-    SasXport.write(df, path)
-}
+class XportSourceProvider extends InterchangeSource("xport", SasXport.read, SasXport.write(_, _))
 
 /** `format("xhtml")` — XHTML tables (pandas read_html/to_html). */
-class HtmlSourceProvider extends InterchangeSource {
-  override def shortName(): String = "xhtml"
-  override protected def readImpl(s: SparkSession, path: String): DataFrame =
-    HtmlTable.read(s, path)
-  override protected def writeImpl(df: DataFrame, path: String): Unit =
-    HtmlTable.write(df, path)
-}
+class HtmlSourceProvider extends InterchangeSource("xhtml", HtmlTable.read, HtmlTable.write(_, _))
 
 /** `format("arrows")` — Arrow IPC stream files (pandas
   * read_feather/to_feather's IPC format, stream flavor). */
-class ArrowSourceProvider extends InterchangeSource {
-  override def shortName(): String = "arrows"
-  override protected def readImpl(s: SparkSession, path: String): DataFrame =
-    ArrowStream.read(s, path)
-  override protected def writeImpl(df: DataFrame, path: String): Unit =
-    ArrowStream.write(df, path)
-}
+class ArrowSourceProvider extends InterchangeSource("arrows", ArrowStream.read, ArrowStream.write(_, _))

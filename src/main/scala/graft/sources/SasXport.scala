@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -10,9 +9,9 @@ import org.apache.spark.sql.types._
   * round-trips. PURE JDK: 80-byte card images, big-endian NAMESTR
   * descriptors, IBM 360 hex-float numerics.
   *
-  * Distributed shape mirrors [[StataDta]]/[[SpssSav]]: one capped
+  * Distributed shape is the package's [[ChunkFiles]]: one capped
   * `.xpt` member per partition chunk on write, one file per task on
-  * read via `binaryFile`.
+  * read.
   *
   * - XPORT numerics are IBM hex floats (base-16 exponent, 56-bit
   *   fraction). IEEE→IBM here is EXACT (the base-16 alignment shift
@@ -36,9 +35,6 @@ import org.apache.spark.sql.types._
   *   pandas heuristic otherwise.
   */
 object SasXport {
-
-  /** Max rows per emitted member file. */
-  val rowsPerFile = 65536
 
   private val epoch1960Sec = -315619200L // 1960-01-01T00:00Z in unix sec
   private val epoch1960Day = java.time.LocalDate.of(1960, 1, 1)
@@ -125,115 +121,92 @@ object SasXport {
 
   /** Write df as TS-140 xport members under `path` (overwrite
     * semantics), ≤ `cap` rows each, parallel across partitions. */
-  def write(df: DataFrame, path: String, cap: Int = rowsPerFile): Unit = {
-    val sc = df.sparkSession.sparkContext
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(sc.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    val confB = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
+  def write(df: DataFrame, path: String, cap: Int = ChunkFiles.rowsPerFile): Unit = {
     val fields = df.schema.fields.toSeq
     require(fields.forall(_.name.getBytes("UTF-8").length <= 40),
       "SasXport.write: column names ride the 40-byte LABEL field; rename longer columns first")
     val shorts = (1 to fields.length).map(i => s"V$i")
-    val written = df.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val conf = confB.value.value
-      it.grouped(cap).zipWithIndex.map { case (rows, ci) =>
-        writeXpt(rows, fields, shorts,
-          new org.apache.hadoop.fs.Path(path, f"part-$pid%05d-$ci.xpt"), conf)
-        1
-      }
-    }.count()
-    // empty frame: one zero-observation member (NOBS=0), so read
-    // restores the schema
-    if (written == 0L)
-      writeXpt(Seq.empty, fields, shorts,
-        new org.apache.hadoop.fs.Path(path, "part-empty-0.xpt"),
-        sc.hadoopConfiguration)
+    // an empty frame writes one zero-observation member (NOBS=0)
+    ChunkFiles.write(df, path, "xpt", cap)(writeXpt(_, fields, shorts, _))
   }
 
   private def writeXpt(rows: Seq[Row], fields: Seq[StructField],
-      shorts: IndexedSeq[String], file: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-        val vars = fields.zipWithIndex.map { case (f, i) =>
-          val w = if (f.dataType == StringType) {
-            val m = rows.iterator.map(r =>
-              if (r.isNullAt(i)) 0
-              else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8).length)
-              .foldLeft(1)(math.max)
-            require(m <= 200, s"SasXport.write: column '${f.name}' has a $m-byte " +
-              "value; xport v5 char fields cap at 200 bytes")
-            m
-          } else 0
-          planOf(f, shorts(i), w)
+      shorts: IndexedSeq[String], o: java.io.OutputStream): Unit = {
+    val vars = fields.zipWithIndex.map { case (f, i) =>
+      val w = if (f.dataType == StringType) {
+        val m = rows.iterator.map(r =>
+          if (r.isNullAt(i)) 0
+          else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8).length)
+          .foldLeft(1)(math.max)
+        require(m <= 200, s"SasXport.write: column '${f.name}' has a $m-byte " +
+          "value; xport v5 char fields cap at 200 bytes")
+        m
+      } else 0
+      planOf(f, shorts(i), w)
+    }
+    val rowWidth = vars.map(_.width).sum
+    val wb = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.BIG_ENDIAN)
+    def wAscii(s: String): Unit = o.write(s.getBytes("US-ASCII"))
+    def w8(v: Long): Unit = {
+      wb.clear(); wb.putLong(v); o.write(wb.array(), 0, 8)
+    }
+    wAscii(libHeader)
+    wAscii(pad("SAS     SAS     SASLIB", 24) + pad("9.4", 8) +
+      pad("Linux", 8) + " " * 24 + fixedStamp)
+    wAscii(pad(fixedStamp, 80))
+    wAscii(memberHeader)
+    wAscii(dscrptrHeader)
+    wAscii(pad("SAS", 8) + pad("GRAFT", 8) + pad("SASDATA", 8) +
+      pad("9.4", 8) + pad("Linux", 8) + " " * 24 + fixedStamp)
+    // NOBS=<n> in the 40-char dataset label disambiguates
+    // blank-padded tails (see scaladoc)
+    wAscii(pad(fixedStamp, 16) + " " * 16 + pad(s"NOBS=${rows.length}", 40) +
+      pad("", 8))
+    wAscii(namestrHeader(vars.length))
+    // NAMESTR records, 140 bytes big-endian, packed then padded to 80
+    val ns = java.nio.ByteBuffer.allocate(((vars.length * 140 + 79) / 80) * 80)
+      .order(java.nio.ByteOrder.BIG_ENDIAN)
+    var pos = 0
+    vars.zipWithIndex.foreach { case (v, i) =>
+      ns.putShort(if (v.isChar) 2 else 1) // ntype
+      ns.putShort(0)                      // nhfun
+      ns.putShort(v.width.toShort)        // field length
+      ns.putShort((i + 1).toShort)        // varnum
+      ns.put(pad(v.shortName, 8).getBytes("US-ASCII"))
+      // label = real name; pad in BYTES (a 40-char pad of a
+      // multi-byte UTF-8 name would overflow the fixed field)
+      val lb = v.longName.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      ns.put(lb)
+      (lb.length until 40).foreach(_ => ns.put(' '.toByte))
+      ns.put(pad(v.sasFmt, 8).getBytes("US-ASCII")) // format name
+      ns.putShort(0); ns.putShort(0); ns.putShort(0) // nfl/nfd/nfj
+      ns.put(pad("", 2).getBytes("US-ASCII"))        // nfill
+      ns.put(pad("", 8).getBytes("US-ASCII"))        // informat
+      ns.putShort(0); ns.putShort(0)                 // nifl/nifd
+      ns.putInt(pos)                                 // npos
+      ns.put(new Array[Byte](52))
+      pos += v.width
+    }
+    while (ns.hasRemaining) ns.put(' '.toByte)
+    o.write(ns.array())
+    wAscii(obsHeader)
+    var outLen = 0L
+    rows.foreach { r =>
+      vars.zipWithIndex.foreach { case (v, i) =>
+        if (v.isChar) {
+          val b = if (r.isNullAt(i)) Array.empty[Byte]
+            else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          o.write(b)
+          var j = b.length
+          while (j < v.width) { o.write(' '); j += 1 }
+        } else {
+          w8(if (r.isNullAt(i)) MISSING
+            else ieeeToIbm(numOf(r, i, fields(i).dataType, fields(i).name)))
         }
-        val rowWidth = vars.map(_.width).sum
-        val o = new java.io.BufferedOutputStream(
-          file.getFileSystem(conf).create(file, true), 1 << 16)
-        val wb = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.BIG_ENDIAN)
-        def wAscii(s: String): Unit = o.write(s.getBytes("US-ASCII"))
-        def w8(v: Long): Unit = {
-          wb.clear(); wb.putLong(v); o.write(wb.array(), 0, 8)
-        }
-        try {
-          wAscii(libHeader)
-          wAscii(pad("SAS     SAS     SASLIB", 24) + pad("9.4", 8) +
-            pad("Linux", 8) + " " * 24 + fixedStamp)
-          wAscii(pad(fixedStamp, 80))
-          wAscii(memberHeader)
-          wAscii(dscrptrHeader)
-          wAscii(pad("SAS", 8) + pad("GRAFT", 8) + pad("SASDATA", 8) +
-            pad("9.4", 8) + pad("Linux", 8) + " " * 24 + fixedStamp)
-          // NOBS=<n> in the 40-char dataset label disambiguates
-          // blank-padded tails (see scaladoc)
-          wAscii(pad(fixedStamp, 16) + " " * 16 + pad(s"NOBS=${rows.length}", 40) +
-            pad("", 8))
-          wAscii(namestrHeader(vars.length))
-          // NAMESTR records, 140 bytes big-endian, packed then padded to 80
-          val ns = java.nio.ByteBuffer.allocate(((vars.length * 140 + 79) / 80) * 80)
-            .order(java.nio.ByteOrder.BIG_ENDIAN)
-          var pos = 0
-          vars.zipWithIndex.foreach { case (v, i) =>
-            ns.putShort(if (v.isChar) 2 else 1) // ntype
-            ns.putShort(0)                      // nhfun
-            ns.putShort(v.width.toShort)        // field length
-            ns.putShort((i + 1).toShort)        // varnum
-            ns.put(pad(v.shortName, 8).getBytes("US-ASCII"))
-            // label = real name; pad in BYTES (a 40-char pad of a
-            // multi-byte UTF-8 name would overflow the fixed field)
-            val lb = v.longName.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            ns.put(lb)
-            (lb.length until 40).foreach(_ => ns.put(' '.toByte))
-            ns.put(pad(v.sasFmt, 8).getBytes("US-ASCII")) // format name
-            ns.putShort(0); ns.putShort(0); ns.putShort(0) // nfl/nfd/nfj
-            ns.put(pad("", 2).getBytes("US-ASCII"))        // nfill
-            ns.put(pad("", 8).getBytes("US-ASCII"))        // informat
-            ns.putShort(0); ns.putShort(0)                 // nifl/nifd
-            ns.putInt(pos)                                 // npos
-            ns.put(new Array[Byte](52))
-            pos += v.width
-          }
-          while (ns.hasRemaining) ns.put(' '.toByte)
-          o.write(ns.array())
-          wAscii(obsHeader)
-          var outLen = 0L
-          rows.foreach { r =>
-            vars.zipWithIndex.foreach { case (v, i) =>
-              if (v.isChar) {
-                val b = if (r.isNullAt(i)) Array.empty[Byte]
-                  else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                o.write(b)
-                var j = b.length
-                while (j < v.width) { o.write(' '); j += 1 }
-              } else {
-                w8(if (r.isNullAt(i)) MISSING
-                  else ieeeToIbm(numOf(r, i, fields(i).dataType, fields(i).name)))
-              }
-            }
-            outLen += rowWidth
-          }
-          while (outLen % 80 != 0) { o.write(' '); outLen += 1 }
-        } finally o.close()
+      }
+      outLen += rowWidth
+    }
+    while (outLen % 80 != 0) { o.write(' '); outLen += 1 }
   }
 
   // ---- reader ----
@@ -339,15 +312,10 @@ object SasXport {
 
   /** Parse every xport member under `path` (one per task); schema
     * from the first file's NAMESTR block — all chunks share it by
-    * construction, as in [[StataDta.read]]. */
-  def read(s: SparkSession, path: String): DataFrame = {
-    val bin = s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xpt").load(path)
-      .select("content")
-    val m = openMeta(bin.head().getAs[Array[Byte]](0))
-    val schema = StructType(m.vars.map(v =>
-      StructField(v.longName, sparkType(v), nullable = true)))
-    val rows = bin.rdd.flatMap(r => parseRows(r.getAs[Array[Byte]](0)))
-    s.createDataFrame(rows, schema)
-  }
+    * construction. */
+  def read(s: SparkSession, path: String): DataFrame =
+    ChunkFiles.read(s, path, "xpt") { in =>
+      StructType(openMeta(in.readAllBytes()).vars.map(v =>
+        StructField(v.longName, sparkType(v), nullable = true)))
+    }((bytes, _) => parseRows(bytes))
 }

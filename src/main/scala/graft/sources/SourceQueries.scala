@@ -42,9 +42,9 @@ object SourceQueries extends QueryModule {
         s.read.orc(path)
       case "html" =>
         // read_html/to_html (io/html.py:1023) — sources/HtmlTable:
-        // one XHTML doc per partition on write, one doc per task on
-        // read, cells stringly-typed like CSV/XML so the cast-back
-        // restores the schema
+        // one capped XHTML doc per partition chunk on write, one doc
+        // per task on read, cells stringly-typed like CSV/XML so the
+        // cast-back restores the schema
         HtmlTable.write(src, path)
         val raw = HtmlTable.read(s, path)
         raw.select(src.schema.fields.toSeq.map(f =>
@@ -402,8 +402,8 @@ object SourceQueries extends QueryModule {
     // aggregate is layout-invariant, so any interleave/write/read bug
     // breaks the hash). At 100 TB the same lines are the full job —
     // one O(1)-row bounds aggregate, then the range exchange is the
-    // one shuffle (production would rank-quantize the tiles via
-    // approxQuantile when values are skewed).
+    // one shuffle (production would rank-quantize the tiles by a
+    // quantile sketch when values are skewed).
     "src_zorder_box" -> { (s, d) =>
       import s.implicits._
       val path = Tables.workDir(s, d, "zorder")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -11,9 +10,8 @@ import org.apache.spark.sql.types._
   * records, type-7 extension records, dictionary terminator, 8-byte
   * element cases.
   *
-  * Distributed shape mirrors [[StataDta]]: one capped `.sav` per
-  * partition chunk on write, one file per task on read via
-  * `binaryFile`.
+  * Distributed shape is the package's [[ChunkFiles]]: one capped
+  * `.sav` per partition chunk on write, one file per task on read.
   *
   * - sav stores ONE numeric type: double (so every numeric column
   *   widens to double, exactly what pandas' read_spss surfaces as
@@ -33,9 +31,6 @@ import org.apache.spark.sql.types._
   *   externally-authored files load.
   */
 object SpssSav {
-
-  /** Max rows per emitted file. */
-  val rowsPerFile = 65536
 
   private val SYSMIS = -java.lang.Double.MAX_VALUE
   /** Seconds from the sav epoch (1582-10-14T00:00 GMT) to unix epoch. */
@@ -110,111 +105,89 @@ object SpssSav {
 
   /** Write df as uncompressed sav files under `path` (overwrite
     * semantics), ≤ `cap` rows each, parallel across partitions. */
-  def write(df: DataFrame, path: String, cap: Int = rowsPerFile): Unit = {
-    val sc = df.sparkSession.sparkContext
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(sc.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    val confB = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
+  def write(df: DataFrame, path: String, cap: Int = ChunkFiles.rowsPerFile): Unit = {
     val fields = df.schema.fields.toSeq
     val shorts = shortNames(fields.length)
-    val written = df.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val conf = confB.value.value
-      it.grouped(cap).zipWithIndex.map { case (rows, ci) =>
-        writeSav(rows, fields, shorts,
-          new org.apache.hadoop.fs.Path(path, f"part-$pid%05d-$ci.sav"), conf)
-        1
-      }
-    }.count()
-    // empty frame: one zero-case sav (ncases=0 with full dictionary),
-    // so read restores the schema
-    if (written == 0L)
-      writeSav(Seq.empty, fields, shorts,
-        new org.apache.hadoop.fs.Path(path, "part-empty-0.sav"),
-        sc.hadoopConfiguration)
+    // an empty frame writes one zero-case sav (ncases=0 with full
+    // dictionary)
+    ChunkFiles.write(df, path, "sav", cap)(writeSav(_, fields, shorts, _))
   }
 
   private def writeSav(rows: Seq[Row], fields: Seq[StructField],
-      shorts: IndexedSeq[String], file: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-        val vars = fields.zipWithIndex.map { case (f, i) =>
-          val w = if (f.dataType == StringType) {
-            val m = rows.iterator.map(r =>
-              if (r.isNullAt(i)) 0
-              else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8).length)
-              .foldLeft(1)(math.max)
-            require(m <= 255, s"SpssSav.write: column '${f.name}' has a $m-byte " +
-              "value; sav fixed strings cap at 255 bytes")
-            m
-          } else 0
-          planOf(f, shorts(i), w)
+      shorts: IndexedSeq[String], o: java.io.OutputStream): Unit = {
+    val vars = fields.zipWithIndex.map { case (f, i) =>
+      val w = if (f.dataType == StringType) {
+        val m = rows.iterator.map(r =>
+          if (r.isNullAt(i)) 0
+          else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8).length)
+          .foldLeft(1)(math.max)
+        require(m <= 255, s"SpssSav.write: column '${f.name}' has a $m-byte " +
+          "value; sav fixed strings cap at 255 bytes")
+        m
+      } else 0
+      planOf(f, shorts(i), w)
+    }
+    val caseSize = vars.map(_.elems).sum
+    // --- file header record ($FL2, 176 bytes) ---
+    wPad(o, "$FL2", 4)
+    wPad(o, "@(#) SPSS DATA FILE - graft Spark-native writer", 60)
+    w4(o, 2)                 // layout_code: endianness sentinel
+    w4(o, caseSize)          // nominal_case_size (8-byte elements)
+    w4(o, 0)                 // compression: none
+    w4(o, 0)                 // weight_index
+    w4(o, rows.length)       // ncases
+    w8d(o, 100.0)            // compression bias (unused here)
+    wPad(o, "01 Jan 70", 9)  // creation date (fixed: deterministic files)
+    wPad(o, "00:00:00", 8)
+    wPad(o, "", 64)          // file label
+    wPad(o, "", 3)           // padding
+    // --- variable records (type 2), one + continuations ---
+    vars.foreach { v =>
+      w4(o, 2)
+      w4(o, v.strWidth)      // 0 numeric, >0 string width
+      w4(o, 0); w4(o, 0)     // no label, no missing values
+      val f = v.fmtType match {
+        case FMT_A => fmt(FMT_A, v.strWidth, 0)
+        case FMT_DATETIME => fmt(FMT_DATETIME, 20, 0)
+        case FMT_DATE => fmt(FMT_DATE, 11, 0)
+        case _ => fmt(FMT_F, 8, 2)
+      }
+      w4(o, f); w4(o, f)     // print + write formats
+      wPad(o, v.shortName, 8)
+      // string vars wider than 8 bytes span ceil(w/8) elements;
+      // each extra element is a continuation record (type -1)
+      (1 until v.elems).foreach { _ =>
+        w4(o, 2); w4(o, -1); w4(o, 0); w4(o, 0); w4(o, 0); w4(o, 0)
+        wPad(o, "", 8)
+      }
+    }
+    // --- type-7 subtype-13: SHORT=Long name map (tab-joined) ---
+    val nameMap = vars.map(v => s"${v.shortName}=${v.longName}")
+      .mkString("\t").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    w4(o, 7); w4(o, 13); w4(o, 1); w4(o, nameMap.length)
+    o.write(nameMap)
+    // --- type-7 subtype-20: character encoding ---
+    val enc = "UTF-8".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    w4(o, 7); w4(o, 20); w4(o, 1); w4(o, enc.length)
+    o.write(enc)
+    // --- dictionary terminator ---
+    w4(o, 999); w4(o, 0)
+    // --- cases: 8-byte elements, uncompressed ---
+    rows.foreach { r =>
+      vars.zipWithIndex.foreach { case (v, i) =>
+        if (v.strWidth > 0) {
+          val b = if (r.isNullAt(i)) Array.empty[Byte]
+            else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          o.write(b)
+          var j = b.length
+          val padded = v.elems * 8
+          while (j < padded) { o.write(' '); j += 1 }
+        } else {
+          w8d(o, if (r.isNullAt(i)) SYSMIS
+            else numOf(r, i, fields(i).dataType, fields(i).name))
         }
-        val caseSize = vars.map(_.elems).sum
-        val o = new java.io.BufferedOutputStream(
-          file.getFileSystem(conf).create(file, true), 1 << 16)
-        try {
-          // --- file header record ($FL2, 176 bytes) ---
-          wPad(o, "$FL2", 4)
-          wPad(o, "@(#) SPSS DATA FILE - graft Spark-native writer", 60)
-          w4(o, 2)                 // layout_code: endianness sentinel
-          w4(o, caseSize)          // nominal_case_size (8-byte elements)
-          w4(o, 0)                 // compression: none
-          w4(o, 0)                 // weight_index
-          w4(o, rows.length)       // ncases
-          w8d(o, 100.0)            // compression bias (unused here)
-          wPad(o, "01 Jan 70", 9)  // creation date (fixed: deterministic files)
-          wPad(o, "00:00:00", 8)
-          wPad(o, "", 64)          // file label
-          wPad(o, "", 3)           // padding
-          // --- variable records (type 2), one + continuations ---
-          vars.foreach { v =>
-            w4(o, 2)
-            w4(o, v.strWidth)      // 0 numeric, >0 string width
-            w4(o, 0); w4(o, 0)     // no label, no missing values
-            val f = v.fmtType match {
-              case FMT_A => fmt(FMT_A, v.strWidth, 0)
-              case FMT_DATETIME => fmt(FMT_DATETIME, 20, 0)
-              case FMT_DATE => fmt(FMT_DATE, 11, 0)
-              case _ => fmt(FMT_F, 8, 2)
-            }
-            w4(o, f); w4(o, f)     // print + write formats
-            wPad(o, v.shortName, 8)
-            // string vars wider than 8 bytes span ceil(w/8) elements;
-            // each extra element is a continuation record (type -1)
-            (1 until v.elems).foreach { _ =>
-              w4(o, 2); w4(o, -1); w4(o, 0); w4(o, 0); w4(o, 0); w4(o, 0)
-              wPad(o, "", 8)
-            }
-          }
-          // --- type-7 subtype-13: SHORT=Long name map (tab-joined) ---
-          val nameMap = vars.map(v => s"${v.shortName}=${v.longName}")
-            .mkString("\t").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          w4(o, 7); w4(o, 13); w4(o, 1); w4(o, nameMap.length)
-          o.write(nameMap)
-          // --- type-7 subtype-20: character encoding ---
-          val enc = "UTF-8".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-          w4(o, 7); w4(o, 20); w4(o, 1); w4(o, enc.length)
-          o.write(enc)
-          // --- dictionary terminator ---
-          w4(o, 999); w4(o, 0)
-          // --- cases: 8-byte elements, uncompressed ---
-          rows.foreach { r =>
-            vars.zipWithIndex.foreach { case (v, i) =>
-              if (v.strWidth > 0) {
-                val b = if (r.isNullAt(i)) Array.empty[Byte]
-                  else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                o.write(b)
-                var j = b.length
-                val padded = v.elems * 8
-                while (j < padded) { o.write(' '); j += 1 }
-              } else {
-                w8d(o, if (r.isNullAt(i)) SYSMIS
-                  else numOf(r, i, fields(i).dataType, fields(i).name))
-              }
-            }
-          }
-        } finally o.close()
+      }
+    }
   }
 
   // ---- reader ----
@@ -383,15 +356,10 @@ object SpssSav {
 
   /** Parse every sav file under `path` (one per task); schema from
     * the first file's dictionary — all chunks share it by
-    * construction, as in [[StataDta.read]]. */
-  def read(s: SparkSession, path: String): DataFrame = {
-    val bin = s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.sav").load(path)
-      .select("content")
-    val m = openMeta(bin.head().getAs[Array[Byte]](0))
-    val schema = StructType(m.vars.map(v =>
-      StructField(v.longName, sparkType(v), nullable = true)))
-    val rows = bin.rdd.flatMap(r => parseRows(r.getAs[Array[Byte]](0)))
-    s.createDataFrame(rows, schema)
-  }
+    * construction. */
+  def read(s: SparkSession, path: String): DataFrame =
+    ChunkFiles.read(s, path, "sav") { in =>
+      StructType(openMeta(in.readAllBytes()).vars.map(v =>
+        StructField(v.longName, sparkType(v), nullable = true)))
+    }((bytes, _) => parseRows(bytes))
 }

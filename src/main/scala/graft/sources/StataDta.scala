@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -11,9 +10,9 @@ import org.apache.spark.sql.types._
   * tags around little/big-endian binary payloads, fixed-width
   * row-major data.
   *
-  * Distributed shape mirrors [[Xlsx]]/[[HtmlTable]]: one capped file
+  * Distributed shape is the package's [[ChunkFiles]]: one capped file
   * per partition chunk on write (each a complete, independently
-  * readable dta), one file per task on read via `binaryFile`.
+  * readable dta), one file per task on read.
   *
   * Type mapping (write):
   *   - string  -> str{w}, w = max UTF-8 byte width in the chunk
@@ -44,10 +43,6 @@ import org.apache.spark.sql.types._
   * has no string missing — same as pandas, io/stata.py:625).
   */
 object StataDta {
-
-  /** Max rows per emitted file (row-major fixed width; ~64k rows of a
-    * typical 50-byte row ≈ 3 MB, cheap for the per-task read). */
-  val rowsPerFile = 65536
 
   private val epoch1960Ms = -315619200000L // 1960-01-01T00:00Z in unix ms
   private val epoch1960Day = java.time.LocalDate.of(1960, 1, 1)
@@ -113,13 +108,7 @@ object StataDta {
 
   /** Write df as dta-118 files under `path` (overwrite semantics),
     * ≤ `cap` rows each, parallel across partitions. */
-  def write(df: DataFrame, path: String, cap: Int = rowsPerFile): Unit = {
-    val sc = df.sparkSession.sparkContext
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(sc.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    val confB = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
+  def write(df: DataFrame, path: String, cap: Int = ChunkFiles.rowsPerFile): Unit = {
     val fields = df.schema.fields.toSeq
     // pandas io/stata.py:473-481 — integral columns whose values escape
     // their native Stata range (the top of each range is missing-code
@@ -154,196 +143,180 @@ object StataDta {
       }.toMap
     }
     val plans = fields.map(f => widened.getOrElse(f.name, planOf(f)))
-    val written = df.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val conf = confB.value.value
-      it.grouped(cap).zipWithIndex.map { case (rows, ci) =>
-        writeDta(rows, fields, plans,
-          new org.apache.hadoop.fs.Path(path, f"part-$pid%05d-$ci.dta"), conf)
-        1
-      }
-    }.count()
-    // empty frame: one zero-observation dta (valid per the format —
-    // N=0 with full descriptors), so read restores the schema
-    if (written == 0L)
-      writeDta(Seq.empty, fields, plans,
-        new org.apache.hadoop.fs.Path(path, "part-empty-0.dta"),
-        sc.hadoopConfiguration)
+    // an empty frame writes one zero-observation dta (valid per the
+    // format: N=0 with full descriptors)
+    ChunkFiles.write(df, path, "dta", cap)(writeDta(_, fields, plans, _))
   }
 
   private def writeDta(rows: Seq[Row], fields: Seq[StructField],
-      plans: Seq[VarPlan], file: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-        // chunk pass 1: per-column max UTF-8 width for str{w} types
-        val widths = plans.zipWithIndex.map { case (pl, i) =>
-          if (fields(i).dataType != StringType) pl.width
-          else math.max(1, rows.iterator.map { r =>
-            if (r.isNullAt(i)) 0
-            else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-          }.foldLeft(0)(math.max)) match {
-            case w if w > 2045 => throw new IllegalArgumentException(
-              s"StataDta.write: column '${fields(i).name}' has a $w-byte value; " +
-                "Stata fixed strings cap at 2045 bytes (strL blobs not emitted by this sink)")
-            case w => w
-          }
-        }
-        val types = plans.zipWithIndex.map { case (pl, i) =>
-          if (fields(i).dataType == StringType) widths(i) else pl.dtaType
-        }
-        val fmts = plans.zipWithIndex.map { case (pl, i) =>
-          if (fields(i).dataType == StringType) s"%${widths(i)}s" else pl.fmt
-        }
-        val k = fields.length
-        val n = rows.length.toLong
-        val rowWidth = widths.sum.toLong
-        // section lengths are all fixed once K/N/rowWidth are known,
-        // so the <map> offsets are exact (readers seek through them)
-        val offHeader = 0L
-        val lenHeader = 11 + 8 + 22 + 26 + (3 + 2 + 4) + (3 + 8 + 4) +
-          (7 + 2 + 8) + (11 + 1 + 12) + 9
-        val offMap = offHeader + lenHeader
-        val lenMap = 5 + 14 * 8 + 6
-        val offTypes = offMap + lenMap
-        val lenTypes = 16 + 2L * k + 17
-        val offNames = offTypes + lenTypes
-        val lenNames = 10 + 129L * k + 11
-        val offSort = offNames + lenNames
-        val lenSort = 10 + 2L * (k + 1) + 11
-        val offFmts = offSort + lenSort
-        val lenFmts = 9 + 57L * k + 10
-        val offVln = offFmts + lenFmts
-        val lenVln = 19 + 129L * k + 20
-        val offVlab = offVln + lenVln
-        val lenVlab = 17 + 321L * k + 18
-        val offChars = offVlab + lenVlab
-        val lenChars = 17 + 18
-        val offData = offChars + lenChars
-        val lenData = 6 + n * rowWidth + 7
-        val offStrls = offData + lenData
-        val lenStrls = 7 + 8
-        val offVl = offStrls + lenStrls
-        val lenVl = 14 + 15
-        val offClose = offVl + lenVl
-        val offEof = offClose + 12
+      plans: Seq[VarPlan], o: java.io.OutputStream): Unit = {
+    // chunk pass 1: per-column max UTF-8 width for str{w} types
+    val widths = plans.zipWithIndex.map { case (pl, i) =>
+      if (fields(i).dataType != StringType) pl.width
+      else math.max(1, rows.iterator.map { r =>
+        if (r.isNullAt(i)) 0
+        else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+      }.foldLeft(0)(math.max)) match {
+        case w if w > 2045 => throw new IllegalArgumentException(
+          s"StataDta.write: column '${fields(i).name}' has a $w-byte value; " +
+            "Stata fixed strings cap at 2045 bytes (strL blobs not emitted by this sink)")
+        case w => w
+      }
+    }
+    val types = plans.zipWithIndex.map { case (pl, i) =>
+      if (fields(i).dataType == StringType) widths(i) else pl.dtaType
+    }
+    val fmts = plans.zipWithIndex.map { case (pl, i) =>
+      if (fields(i).dataType == StringType) s"%${widths(i)}s" else pl.fmt
+    }
+    val k = fields.length
+    val n = rows.length.toLong
+    val rowWidth = widths.sum.toLong
+    // section lengths are all fixed once K/N/rowWidth are known,
+    // so the <map> offsets are exact (readers seek through them)
+    val offHeader = 0L
+    val lenHeader = 11 + 8 + 22 + 26 + (3 + 2 + 4) + (3 + 8 + 4) +
+      (7 + 2 + 8) + (11 + 1 + 12) + 9
+    val offMap = offHeader + lenHeader
+    val lenMap = 5 + 14 * 8 + 6
+    val offTypes = offMap + lenMap
+    val lenTypes = 16 + 2L * k + 17
+    val offNames = offTypes + lenTypes
+    val lenNames = 10 + 129L * k + 11
+    val offSort = offNames + lenNames
+    val lenSort = 10 + 2L * (k + 1) + 11
+    val offFmts = offSort + lenSort
+    val lenFmts = 9 + 57L * k + 10
+    val offVln = offFmts + lenFmts
+    val lenVln = 19 + 129L * k + 20
+    val offVlab = offVln + lenVln
+    val lenVlab = 17 + 321L * k + 18
+    val offChars = offVlab + lenVlab
+    val lenChars = 17 + 18
+    val offData = offChars + lenChars
+    val lenData = 6 + n * rowWidth + 7
+    val offStrls = offData + lenData
+    val lenStrls = 7 + 8
+    val offVl = offStrls + lenStrls
+    val lenVl = 14 + 15
+    val offClose = offVl + lenVl
+    val offEof = offClose + 12
 
-        val o = new java.io.BufferedOutputStream(
-          file.getFileSystem(conf).create(file, true), 1 << 16)
-        try {
-          wAscii(o, "<stata_dta><header><release>118</release><byteorder>LSF</byteorder><K>")
-          w2(o, k); wAscii(o, "</K><N>"); w8(o, n); wAscii(o, "</N><label>")
-          w2(o, 0); wAscii(o, "</label><timestamp>"); o.write(0)
-          wAscii(o, "</timestamp></header>")
-          wAscii(o, "<map>")
-          Seq(offHeader, offMap, offTypes, offNames, offSort, offFmts, offVln,
-            offVlab, offChars, offData, offStrls, offVl, offClose, offEof)
-            .foreach(w8(o, _))
-          wAscii(o, "</map>")
-          wAscii(o, "<variable_types>"); types.foreach(w2(o, _))
-          wAscii(o, "</variable_types>")
-          wAscii(o, "<varnames>"); plans.foreach(pl => wPadded(o, pl.name, 129))
-          wAscii(o, "</varnames>")
-          wAscii(o, "<sortlist>"); (0 to k).foreach(_ => w2(o, 0))
-          wAscii(o, "</sortlist>")
-          wAscii(o, "<formats>"); fmts.foreach(wPadded(o, _, 57))
-          wAscii(o, "</formats>")
-          wAscii(o, "<value_label_names>"); plans.foreach(_ => wPadded(o, "", 129))
-          wAscii(o, "</value_label_names>")
-          wAscii(o, "<variable_labels>"); plans.foreach(_ => wPadded(o, "", 321))
-          wAscii(o, "</variable_labels>")
-          wAscii(o, "<characteristics></characteristics>")
-          wAscii(o, "<data>")
-          rows.foreach { r =>
-            var i = 0
-            while (i < k) {
-              fields(i).dataType match {
-                case StringType =>
-                  val b = if (r.isNullAt(i)) Array.empty[Byte]
-                    else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                  o.write(b); o.write(new Array[Byte](widths(i) - b.length))
-                case ByteType if plans(i).dtaType == T_INT => // widened: value escaped byte range
-                  w2(o, if (r.isNullAt(i)) MISS_INT else r.getByte(i).toInt)
-                case ByteType =>
-                  if (r.isNullAt(i)) o.write(MISS_BYTE)
-                  else {
-                    val v = r.getByte(i).toInt
-                    require(v >= -127 && v <= 100, s"StataDta.write: ${fields(i).name}=$v " +
-                      "is in Stata's byte missing-code space — the frame-wide widening " +
-                      "scan should have upcast this column (data changed mid-write?)")
-                    o.write(v)
-                  }
-                case BooleanType =>
-                  o.write(if (r.isNullAt(i)) MISS_BYTE else if (r.getBoolean(i)) 1 else 0)
-                case ShortType if plans(i).dtaType == T_LONG => // widened: value escaped int range
-                  w4(o, if (r.isNullAt(i)) MISS_LONG else r.getShort(i).toInt)
-                case ShortType =>
-                  if (r.isNullAt(i)) w2(o, MISS_INT)
-                  else {
-                    val v = r.getShort(i).toInt
-                    require(v >= -32767 && v <= 32740, s"StataDta.write: ${fields(i).name}=$v " +
-                      "is in Stata's int missing-code space — the frame-wide widening " +
-                      "scan should have upcast this column (data changed mid-write?)")
-                    w2(o, v)
-                  }
-                case IntegerType if plans(i).dtaType == T_DOUBLE => // sidecast
-                  w8(o, java.lang.Double.doubleToLongBits(
-                    if (r.isNullAt(i)) MISS_DOUBLE else r.getInt(i).toDouble))
-                case IntegerType =>
-                  if (r.isNullAt(i)) w4(o, MISS_LONG)
-                  else {
-                    val v = r.getInt(i)
-                    require(v >= -2147483647 && v <= maxLong, s"StataDta.write: " +
-                      s"${fields(i).name}=$v exceeds Stata's int32 long — the frame-wide " +
-                      "widening scan should have sidecast this column (data changed mid-write?)")
-                    w4(o, v)
-                  }
-                case LongType if plans(i).dtaType == T_DOUBLE => // sidecast
-                  if (r.isNullAt(i))
-                    w8(o, java.lang.Double.doubleToLongBits(MISS_DOUBLE))
-                  else {
-                    val v = r.getLong(i)
-                    require(math.abs(v) <= (1L << 53), s"StataDta.write: " +
-                      s"${fields(i).name}=$v exceeds a double's exact-integer " +
-                      "range — pandas would silently lose precision here; " +
-                      "cast to double explicitly to accept the rounding")
-                    w8(o, java.lang.Double.doubleToLongBits(v.toDouble))
-                  }
-                case LongType =>
-                  if (r.isNullAt(i)) w4(o, MISS_LONG)
-                  else {
-                    val v = r.getLong(i)
-                    // [-2147483647, 2147483620]: Stata's valid long range — the
-                    // same bounds the widening scan checked, so a scan-passed
-                    // value can never trip this
-                    require(v >= -2147483647L && v <= maxLong, s"StataDta.write: " +
-                      s"${fields(i).name}=$v exceeds Stata's int32 long — the frame-wide " +
-                      "widening scan should have sidecast this column (data changed mid-write?)")
-                    w4(o, v.toInt)
-                  }
-                case FloatType =>
-                  w4(o, java.lang.Float.floatToIntBits(
-                    if (r.isNullAt(i)) MISS_FLOAT else r.getFloat(i)))
-                case DoubleType =>
-                  w8(o, java.lang.Double.doubleToLongBits(
-                    if (r.isNullAt(i)) MISS_DOUBLE else r.getDouble(i)))
-                case _: DecimalType =>
-                  w8(o, java.lang.Double.doubleToLongBits(
-                    if (r.isNullAt(i)) MISS_DOUBLE
-                    else r.getDecimal(i).doubleValue()))
-                case TimestampType =>
-                  w8(o, java.lang.Double.doubleToLongBits(
-                    if (r.isNullAt(i)) MISS_DOUBLE
-                    else (r.getTimestamp(i).getTime - epoch1960Ms).toDouble))
-                case DateType =>
-                  w4(o, if (r.isNullAt(i)) MISS_LONG
-                    else java.time.temporal.ChronoUnit.DAYS
-                      .between(epoch1960Day, r.getDate(i).toLocalDate).toInt)
-                case other => throw new IllegalStateException(s"unreachable: $other")
-              }
-              i += 1
+    wAscii(o, "<stata_dta><header><release>118</release><byteorder>LSF</byteorder><K>")
+    w2(o, k); wAscii(o, "</K><N>"); w8(o, n); wAscii(o, "</N><label>")
+    w2(o, 0); wAscii(o, "</label><timestamp>"); o.write(0)
+    wAscii(o, "</timestamp></header>")
+    wAscii(o, "<map>")
+    Seq(offHeader, offMap, offTypes, offNames, offSort, offFmts, offVln,
+      offVlab, offChars, offData, offStrls, offVl, offClose, offEof)
+      .foreach(w8(o, _))
+    wAscii(o, "</map>")
+    wAscii(o, "<variable_types>"); types.foreach(w2(o, _))
+    wAscii(o, "</variable_types>")
+    wAscii(o, "<varnames>"); plans.foreach(pl => wPadded(o, pl.name, 129))
+    wAscii(o, "</varnames>")
+    wAscii(o, "<sortlist>"); (0 to k).foreach(_ => w2(o, 0))
+    wAscii(o, "</sortlist>")
+    wAscii(o, "<formats>"); fmts.foreach(wPadded(o, _, 57))
+    wAscii(o, "</formats>")
+    wAscii(o, "<value_label_names>"); plans.foreach(_ => wPadded(o, "", 129))
+    wAscii(o, "</value_label_names>")
+    wAscii(o, "<variable_labels>"); plans.foreach(_ => wPadded(o, "", 321))
+    wAscii(o, "</variable_labels>")
+    wAscii(o, "<characteristics></characteristics>")
+    wAscii(o, "<data>")
+    rows.foreach { r =>
+      var i = 0
+      while (i < k) {
+        fields(i).dataType match {
+          case StringType =>
+            val b = if (r.isNullAt(i)) Array.empty[Byte]
+              else r.getString(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            o.write(b); o.write(new Array[Byte](widths(i) - b.length))
+          case ByteType if plans(i).dtaType == T_INT => // widened: value escaped byte range
+            w2(o, if (r.isNullAt(i)) MISS_INT else r.getByte(i).toInt)
+          case ByteType =>
+            if (r.isNullAt(i)) o.write(MISS_BYTE)
+            else {
+              val v = r.getByte(i).toInt
+              require(v >= -127 && v <= 100, s"StataDta.write: ${fields(i).name}=$v " +
+                "is in Stata's byte missing-code space — the frame-wide widening " +
+                "scan should have upcast this column (data changed mid-write?)")
+              o.write(v)
             }
-          }
-          wAscii(o, "</data>")
-          wAscii(o, "<strls></strls><value_labels></value_labels></stata_dta>")
-        } finally o.close()
+          case BooleanType =>
+            o.write(if (r.isNullAt(i)) MISS_BYTE else if (r.getBoolean(i)) 1 else 0)
+          case ShortType if plans(i).dtaType == T_LONG => // widened: value escaped int range
+            w4(o, if (r.isNullAt(i)) MISS_LONG else r.getShort(i).toInt)
+          case ShortType =>
+            if (r.isNullAt(i)) w2(o, MISS_INT)
+            else {
+              val v = r.getShort(i).toInt
+              require(v >= -32767 && v <= 32740, s"StataDta.write: ${fields(i).name}=$v " +
+                "is in Stata's int missing-code space — the frame-wide widening " +
+                "scan should have upcast this column (data changed mid-write?)")
+              w2(o, v)
+            }
+          case IntegerType if plans(i).dtaType == T_DOUBLE => // sidecast
+            w8(o, java.lang.Double.doubleToLongBits(
+              if (r.isNullAt(i)) MISS_DOUBLE else r.getInt(i).toDouble))
+          case IntegerType =>
+            if (r.isNullAt(i)) w4(o, MISS_LONG)
+            else {
+              val v = r.getInt(i)
+              require(v >= -2147483647 && v <= maxLong, s"StataDta.write: " +
+                s"${fields(i).name}=$v exceeds Stata's int32 long — the frame-wide " +
+                "widening scan should have sidecast this column (data changed mid-write?)")
+              w4(o, v)
+            }
+          case LongType if plans(i).dtaType == T_DOUBLE => // sidecast
+            if (r.isNullAt(i))
+              w8(o, java.lang.Double.doubleToLongBits(MISS_DOUBLE))
+            else {
+              val v = r.getLong(i)
+              require(math.abs(v) <= (1L << 53), s"StataDta.write: " +
+                s"${fields(i).name}=$v exceeds a double's exact-integer " +
+                "range — pandas would silently lose precision here; " +
+                "cast to double explicitly to accept the rounding")
+              w8(o, java.lang.Double.doubleToLongBits(v.toDouble))
+            }
+          case LongType =>
+            if (r.isNullAt(i)) w4(o, MISS_LONG)
+            else {
+              val v = r.getLong(i)
+              // [-2147483647, 2147483620]: Stata's valid long range — the
+              // same bounds the widening scan checked, so a scan-passed
+              // value can never trip this
+              require(v >= -2147483647L && v <= maxLong, s"StataDta.write: " +
+                s"${fields(i).name}=$v exceeds Stata's int32 long — the frame-wide " +
+                "widening scan should have sidecast this column (data changed mid-write?)")
+              w4(o, v.toInt)
+            }
+          case FloatType =>
+            w4(o, java.lang.Float.floatToIntBits(
+              if (r.isNullAt(i)) MISS_FLOAT else r.getFloat(i)))
+          case DoubleType =>
+            w8(o, java.lang.Double.doubleToLongBits(
+              if (r.isNullAt(i)) MISS_DOUBLE else r.getDouble(i)))
+          case _: DecimalType =>
+            w8(o, java.lang.Double.doubleToLongBits(
+              if (r.isNullAt(i)) MISS_DOUBLE
+              else r.getDecimal(i).doubleValue()))
+          case TimestampType =>
+            w8(o, java.lang.Double.doubleToLongBits(
+              if (r.isNullAt(i)) MISS_DOUBLE
+              else (r.getTimestamp(i).getTime - epoch1960Ms).toDouble))
+          case DateType =>
+            w4(o, if (r.isNullAt(i)) MISS_LONG
+              else java.time.temporal.ChronoUnit.DAYS
+                .between(epoch1960Day, r.getDate(i).toLocalDate).toInt)
+          case other => throw new IllegalStateException(s"unreachable: $other")
+        }
+        i += 1
+      }
+    }
+    wAscii(o, "</data>")
+    wAscii(o, "<strls></strls><value_labels></value_labels></stata_dta>")
   }
 
   // ---- reader ----
@@ -483,14 +456,9 @@ object StataDta {
 
   /** Parse every dta file under `path` (one per task); schema (names,
     * types, %tc/%td restores) from the descriptors of the first file
-    * — all chunks share it by construction, as in [[Xlsx.read]]. */
-  def read(s: SparkSession, path: String): DataFrame = {
-    val bin = s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.dta").load(path)
-      .select("content")
-    val head = bin.head().getAs[Array[Byte]](0)
-    val schema = schemaOf(openData(new Cursor(head))._1)
-    val rows = bin.rdd.flatMap(r => parseRows(r.getAs[Array[Byte]](0)))
-    s.createDataFrame(rows, schema)
-  }
+    * — all chunks share it by construction. */
+  def read(s: SparkSession, path: String): DataFrame =
+    ChunkFiles.read(s, path, "dta") { in =>
+      schemaOf(openData(new Cursor(in.readAllBytes()))._1)
+    }((bytes, _) => parseRows(bytes))
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -13,18 +12,17 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * pandas reads one workbook on one machine; the honest distributed
   * shape is "a directory of many workbooks, one per task":
   *
-  *  - WRITE: each partition streams its rows as self-contained
-  *    workbooks of at most [[rowsPerFile]] rows (row 1 carries the
-  *    column names — pandas' `header=True`), ZIP-compressed directly
-  *    onto the filesystem stream, so task memory is O(1 row)
-  *    regardless of partition size. Cells are written as INLINE
+  *  - WRITE: each partition writes its rows as self-contained
+  *    workbooks of at most `cap` rows ([[ChunkFiles]]; row 1 carries
+  *    the column names — pandas' `header=True`), ZIP-compressed
+  *    straight onto the filesystem stream. Cells are written as INLINE
   *    strings (`t="inlineStr"`) — a shared-strings table would need a
   *    second pass plus an unbounded dedup map per task; inline cells
   *    keep the writer single-pass and are read by Excel, openpyxl and
   *    pandas alike.
-  *  - READ: `spark.read.format("binaryFile")` hands each workbook's
-  *    bytes to one task; the sheet entry is StAX-parsed (constant
-  *    memory beyond the compressed input). Externally-authored files
+  *  - READ: each workbook's bytes go to one task ([[ChunkFiles]]);
+  *    the sheet entry is StAX-parsed (constant memory beyond the
+  *    compressed input). Externally-authored files
   *    are supported too: shared-string cells (`t="s"`), formula
   *    strings (`t="str"`), booleans (`t="b"`) and sparse rows
   *    (position recovered from the `r="BC12"` cell reference) all
@@ -38,11 +36,6 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * values survives.
   */
 object Xlsx {
-
-  /** Max rows per emitted workbook. Well under the 1,048,576-row
-    * sheet hard cap; ~64k rows keeps each file a few MB compressed so
-    * the per-task `binaryFile` read stays cheap. */
-  val rowsPerFile = 65536
 
   /** True at `i` when `s` carries a literal `_xHHHH_` sequence — the
     * OOXML escape pattern — which must itself be escaped on write so
@@ -142,46 +135,21 @@ object Xlsx {
       |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships"><Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/></Relationships>""".stripMargin
 
   /** Render df (all columns cast to string) as xlsx workbooks under
-    * `path` (overwrite semantics), ≤ `cap` rows each, parallel across
-    * partitions. The ZIP stream writes straight to the (Hadoop)
-    * filesystem — no per-file buffering in task memory. */
-  def write(df: DataFrame, path: String, cap: Int = rowsPerFile): Unit = {
+    * `path` (overwrite semantics), ≤ `cap` rows each (well under the
+    * 1,048,576-row sheet cap), parallel across partitions. An empty
+    * frame writes one header-only workbook, as pandas' to_excel does. */
+  def write(df: DataFrame, path: String, cap: Int = ChunkFiles.rowsPerFile): Unit = {
     import org.apache.spark.sql.functions.col
-    val sc = df.sparkSession.sparkContext
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(sc.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    // hadoopConfiguration is driver-side only; ship it to tasks the
-    // supported way (Configuration is a Writable) so the sink works
-    // against HDFS/object stores, not just file:// in local mode
-    val confB = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
     val cols = df.columns.toSeq
     val strDf = df.select(cols.map(c => col(c).cast("string").as(c)): _*)
     val header = cols.zipWithIndex.map { case (c, i) =>
       s"""<c r="${colLetters(i)}1" t="inlineStr"><is><t xml:space="preserve">${esc(c)}</t></is></c>"""
     }.mkString(s"""<row r="1">""", "", "</row>")
-    val written = strDf.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val conf = confB.value.value
-      it.grouped(cap).zipWithIndex.map { case (rows, ci) =>
-        writeWorkbook(rows, header,
-          new org.apache.hadoop.fs.Path(path, f"part-$pid%05d-$ci.xlsx"), conf)
-        1
-      }
-    }.count()
-    // empty frame: one header-only workbook, so read restores the
-    // schema — pandas' to_excel writes the header row of an empty
-    // frame too
-    if (written == 0L)
-      writeWorkbook(Nil, header,
-        new org.apache.hadoop.fs.Path(path, "part-empty-0.xlsx"),
-        sc.hadoopConfiguration)
+    ChunkFiles.write(strDf, path, "xlsx", cap)(writeWorkbook(_, header, _))
   }
 
-  private def writeWorkbook(rows: Iterable[Row], header: String,
-      file: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val out = file.getFileSystem(conf).create(file, true)
+  private def writeWorkbook(rows: Seq[Row], header: String,
+      out: java.io.OutputStream): Unit = {
     val zos = new java.util.zip.ZipOutputStream(out)
     val w = new java.io.OutputStreamWriter(zos, java.nio.charset.StandardCharsets.UTF_8)
     def entry(name: String, body: String): Unit = {
@@ -331,21 +299,13 @@ object Xlsx {
   /** Parse every workbook under `path` (one per task) into a
     * DataFrame of strings named by the row-1 header — pandas
     * `read_excel(header=0)`. */
-  def read(s: SparkSession, path: String): DataFrame = {
-    val bin = s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xlsx").load(path)
-      .select("content")
-    // ONE small driver read for the header (all files share it by
-    // construction, as in HtmlTable.read); row parsing stays
-    // distributed, one streaming pass per workbook
-    val names = headerOf(bin.head().getAs[Array[Byte]](0))
-    require(names.nonEmpty, s"Xlsx.read: empty header row in $path")
-    val width = names.length
-    val schema = StructType(names.map(StructField(_, StringType, nullable = true)))
-    val rows = bin.rdd.flatMap { r =>
-      parseRows(r.getAs[Array[Byte]](0), width).drop(1) // drop per-file header
+  def read(s: SparkSession, path: String): DataFrame =
+    ChunkFiles.read(s, path, "xlsx") { in =>
+      val names = headerOf(in.readAllBytes())
+      require(names.nonEmpty, s"Xlsx.read: empty header row in $path")
+      StructType(names.map(StructField(_, StringType, nullable = true)))
+    } { (bytes, schema) =>
+      parseRows(bytes, schema.length).drop(1) // drop per-file header
         .map(a => Row.fromSeq(a.toSeq))
     }
-    s.createDataFrame(rows, schema)
-  }
 }

@@ -61,19 +61,9 @@ class BloomExprsSpec extends SparkSpec {
   }
 
   test("footerRowCount matches the real count and runs zero Spark jobs") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val meta = Tables.footerRowCount(spark, sf(), "documents")
-      Thread.sleep(500) // listener events post asynchronously
-      assert(jobs.get() == 0, "footer row count must not launch a job")
-      assert(meta == Tables(spark, sf(), "documents").count())
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (meta, jobs) = jobsDuring()(Tables.footerRowCount(spark, sf(), "documents"))
+    assert(jobs == 0, "footer row count must not launch a job")
+    assert(meta == Tables(spark, sf(), "documents").count())
   }
 
   test("bloom-pruned semi join equals the plain semi join") {

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.operators.DistributedPercentile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** DistributedPercentile must be value-for-value exact against Spark's
@@ -20,24 +17,6 @@ class DistributedPercentileSpec extends SparkSpec {
     df.select(expr(
         s"percentile($c, array(${ps.mkString(",")}))").as("p"))
       .head().getSeq[Double](0)
-
-  /** `body`'s result and the Spark jobs it started, counted by a
-    * listener (events post asynchronously: wait for `atLeast` of them,
-    * then a little longer for any straggler). */
-  private def jobsDuring[T](atLeast: Int)(body: => T): (T, Int) = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      val deadline = System.nanoTime() + 10000000000L
-      while (jobs.get() < atLeast && System.nanoTime() < deadline) Thread.sleep(50)
-      Thread.sleep(500)
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("matches Spark's exact percentile on a real column") {
     val li = Tables(spark, sf(), "lineitem")

@@ -207,6 +207,19 @@ class OracleLintSpec extends AnyFunSuite {
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 
+  /** The interchange formats share one distributed shape,
+    * `sources/ChunkFiles`: a format supplies only its byte codec. A
+    * second chunk loop, `binaryFile` scan or text sink in `sources/` is
+    * a copy of that shape drifting on its own. */
+  test("only sources/ChunkFiles writes chunk files or scans binaryFile") {
+    val violations = lint(scalaFiles(new java.io.File(mainRoot, "graft/sources"))) {
+      (f, line) => f.getName != "ChunkFiles.scala" &&
+        Seq("mapPartitionsWithIndex", "format(\"binaryFile\")", "saveAsTextFile")
+          .exists(line.contains)
+    }
+    assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
+  }
+
   /** graft writes its own data only under the session's warehouse
     * (`Tables.workDir`): a fixed host path is shared by every session on
     * the host and is the driver's local disk on a cluster. A JVM-wide

@@ -65,18 +65,9 @@ class TablesSpec extends SparkSpec {
   }
 
   test("building a table and reading its schema starts no Spark job") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(Tables(spark, sf(), "lineitem").schema.nonEmpty)
-      Thread.sleep(500) // listener events post asynchronously
-      assert(jobs.get() == 0, s"${jobs.get()} Spark job(s) to build a table")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (schema, jobs) = jobsDuring()(Tables(spark, sf(), "lineitem").schema)
+    assert(schema.nonEmpty)
+    assert(jobs == 0, s"$jobs Spark job(s) to build a table")
   }
 
   test("a missing path or an empty directory raises an error naming the path") {
