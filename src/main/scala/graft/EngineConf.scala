@@ -54,7 +54,13 @@ object EngineConf {
     * sizes cache partitions by AQE's advisory bytes rather than a
     * constant, which is the partitioning-follows-data behavior every
     * uncached stage already has. Values are unaffected (physical
-    * partitioning only). */
+    * partitioning only).
+    *
+    * Sharing one cached frame's work across its consumers needs no
+    * setting: the `plans.ShareCacheScans` rule that
+    * [[GraftExtensions]] installs lets AQE reuse an exchange or
+    * broadcast above a cache scan, so each runs once per query, not
+    * once per consumer. */
   val perfSettings: Map[String, String] = Map(
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions._
-import graft.plans.AsofStrategy
+import graft.plans.{AsofStrategy, ShareCacheScans}
 
 /** Cluster-deployment registration point: installs every graft custom
   * piece into a session at construction time via the standard
@@ -13,10 +13,15 @@ import graft.plans.AsofStrategy
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `.withExtensions(new GraftExtensions)`) and gets the native
-  * as-of join strategy plus all `graft_*` SQL functions in EVERY
-  * session of the application — no per-query `register` calls, and
-  * catalog-level (not temp) function registration.
+  * (or `.withExtensions(new GraftExtensions)`) and gets, in EVERY
+  * session of the application:
+  *  - the native as-of join strategy (`plans.AsofStrategy`);
+  *  - the index-alignment elision rule (`plans.AlignmentElision`);
+  *  - the query-stage prep rule `plans.ShareCacheScans`, which lets
+  *    AQE reuse an exchange or broadcast above a cached frame across
+  *    all of that frame's consumers;
+  *  - all `graft_*` SQL functions, registered at catalog level (not
+  *    temp), so no query makes a per-query `register` call.
   *
   * This is the ONLY code that installs graft into a session: every
   * in-repo harness builds its session through [[EngineConf.configure]]
@@ -30,6 +35,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def install(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => AsofStrategy)
+    // exchanges above a cached frame canonicalize, so AQE reuses them
+    // across the frame's consumers (plans/SharedCacheScan.scala)
+    ext.injectQueryStagePrepRule(_ => ShareCacheScans)
     // index-alignment elision (SURVEY §4 item 4): a provably
     // same-lineage aligned binary op loses its self-join. Post-hoc
     // resolution, not optimizer: column pruning would split the shared

@@ -366,7 +366,9 @@ object DedupQueries extends QueryModule {
       .toDF("doc_id", "bidx", "bk")
     // band-key frequency via a count window over the exploded keys: the
     // candidate self-join consumes `keys` twice and the two identical
-    // window subtrees collapse into ONE reused exchange. (A groupBy +
+    // window subtrees collapse into ONE reused exchange. `reps` is a
+    // cached frame, so this holds only while plans.ShareCacheScans lets
+    // AQE canonicalize an exchange above a cache scan. (A groupBy +
     // hot-list join-back would partial-aggregate map-side, but it adds
     // a blocking stage per join side and measured ~2x slower at sf0.1
     // with no shuffle-volume win: the count runs over representatives,

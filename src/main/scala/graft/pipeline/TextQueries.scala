@@ -151,7 +151,8 @@ object TextQueries extends QueryModule {
         (size(array_distinct(words)).cast("double") / nw).as("x4"),
         when($"lang" === "en", 1.0).otherwise(0.0).as("y"))
       val cached = feats.cache()
-      val n = cached.count()
+      // feats keeps every documents row: the footer count is n, no job
+      val n = Tables.footerRowCount(s, d, "documents")
       def zOf(w: Array[Double]): Column =
         lit(w(0)) + lit(w(1)) * $"x1" + lit(w(2)) * $"x2" +
           lit(w(3)) * $"x3" + lit(w(4)) * $"x4"

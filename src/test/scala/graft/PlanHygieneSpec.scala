@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec, TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Enforces the plan-hygiene claims in SCALE.md instead of just
   * documenting them: filters reach the parquet scan, projections prune
@@ -437,5 +440,42 @@ class PlanHygieneSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  test("no exchange over a cached frame executes twice in one query") {
+    // every query whose build reaches a `.cache()` call: an exchange or
+    // broadcast that two consumers of the cached frame share must run
+    // once and be reused, not executed once per consumer
+    val names = Seq(
+      "agg_median_quantile", "agg_outlier_iqr", "agg_spearman",
+      "agg_spearman_grouped", "dedup_clusters", "dedup_minhash_pairs",
+      "dedup_semantic_clusters", "dedup_simhash_pairs",
+      "dedup_simhash_pairs_sample", "pipe_curation", "pipe_ppl_sample",
+      "pipe_split_safe", "sim_knn_graph", "txt_bigram_lm",
+      "txt_contamination", "txt_lr_train")
+    val twice = names.flatMap { n =>
+      val df = SparkEntry.queries(n)(spark, sf())
+      df.collect()
+      PlanHygieneSpec.duplicatedExchanges(df.queryExecution.executedPlan)
+        .map(e => s"$n: $e")
+    }
+    assert(twice.isEmpty, s"exchanges executed twice:\n${twice.mkString("\n")}")
+  }
+}
+
+object PlanHygieneSpec extends AdaptiveSparkPlanHelper {
+
+  /** Exchanges or broadcasts that ran as more than one stage of a final
+    * adaptive plan although they compute the same thing: their
+    * canonical forms are equal, so AQE could have reused the first. A
+    * cache-read stage is unwrapped to its scan before canonicalizing,
+    * because that stage class keeps its stage id in its canonical form
+    * and would hide the duplicate. */
+  def duplicatedExchanges(plan: SparkPlan): Seq[String] = {
+    val executed = collectWithSubqueries(plan) {
+      case q: QueryStageExec if q.plan.isInstanceOf[Exchange] => q.plan
+    }
+    executed.groupBy(_.transformUp { case t: TableCacheQueryStageExec => t.plan }.canonicalized)
+      .values.filter(_.size > 1).map(_.head.simpleString(200)).toSeq
   }
 }
