@@ -46,7 +46,7 @@ object EngineConf {
     * build plan of CACHED frames (coalesce small shuffle partitions,
     * split skewed ones) instead of freezing the static
     * shuffle.partitions count into the cache. The dedup/curation
-    * pipeline caches reused intermediates (sig0/reps/mapping/exact);
+    * pipeline caches reused intermediates (shingles/reps/mapping/exact);
     * with the default `false`, every consumer of those caches runs one
     * task per static shuffle partition regardless of data size —
     * measured at sf0.1: pipe_curation 4.5 s → 1.9 s with AQE allowed

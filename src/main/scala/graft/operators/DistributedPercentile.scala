@@ -141,9 +141,8 @@ object DistributedPercentile {
       .filter(col("__v").isNotNull && !isnan(col("__v")))
 
     // 1. ONE per-(group, column, value) histogram for every column
-    val hist = v.groupBy(gk :+ col("__v"): _*)
-      .agg(count(lit(1)).as("__c"))
-      .cache()
+    val hist = graft.Cached(v.groupBy(gk :+ col("__v"): _*)
+      .agg(count(lit(1)).as("__c")))
     // 2. ONE prefix-sum pass, ranks partitioned per (group, column)
     val ranked = GlobalOrder.prefixSum(hist, keys :+ tagCol, "__v", "__c", "__below")
     // one row per (group, column): no broadcast hint, AQE broadcasts

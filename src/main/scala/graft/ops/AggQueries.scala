@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{OracleNum, QueryModule, Tables}
+import graft.{Cached, OracleNum, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -908,8 +908,8 @@ object AggQueries extends QueryModule {
     * oracle-pinned. */
   private def spearman(base: DataFrame, keys: Seq[String]): DataFrame = {
     val kcols = keys.map(col)
-    val joint = base.groupBy(kcols :+ col("xv") :+ col("yv"): _*)
-      .agg(count(lit(1)).as("c")).cache()
+    val joint = Cached(base.groupBy(kcols :+ col("xv") :+ col("yv"): _*)
+      .agg(count(lit(1)).as("c")))
     def ranksOf(k: String, cName: String, rName: String) = {
       val h = joint.groupBy(kcols :+ col(k): _*).agg(sum(col("c")).as(cName))
       graft.operators.GlobalOrder.prefixSum(h, keys, k, cName, "__below")

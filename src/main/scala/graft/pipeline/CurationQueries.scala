@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import graft.{QueryModule, Tables}
+import graft.{Cached, QueryModule, Tables}
 import graft.functions.PortableHash._
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus curation: the composed training-data pipeline a
@@ -33,26 +32,6 @@ import org.apache.spark.sql.functions._
   * same anti-join.
   */
 object CurationQueries extends QueryModule {
-
-  /** marker-word lists — same heuristic as txt_langid */
-  private val Markers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "a", "of"),
-    "es" -> Seq("el", "la", "de"),
-    "de" -> Seq("der", "die", "und"),
-    "fr" -> Seq("le", "les", "et"))
-
-  private def words: Column = split(col("text"), " ")
-
-  private def markerCount(ws: Seq[String]): Column =
-    aggregate(words, lit(0L),
-      (acc, w) => acc + when(w.isin(ws.map(lit): _*), 1L).otherwise(0L))
-
-  private def markerCountSql(ws: Seq[String]): String = {
-    val inList = ws.map(w => s"'$w'").mkString(", ")
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split(text, ' '), w -> CASE WHEN w IN ($inList) THEN 1 ELSE 0 END)), " +
-      s"(a, b) -> a + b)"
-  }
 
   private val MinWords = 20
   private val SourceCap = 40L
@@ -91,16 +70,15 @@ object CurationQueries extends QueryModule {
       // subtrees (the LSH signature build, the anti-join's left side,
       // and through it the per-source counts), each of which would
       // otherwise replay the full scan+gate+dedup-shuffle; same
-      // materialize-the-reused-intermediate rationale as the sig0
+      // materialize-the-reused-intermediate rationale as the shingle
       // cache inside verifiedRepPairsOf (guide §5: reused AND
       // expensive to recompute).
-      val exact = filtered
+      val exact = Cached(filtered
         .groupBy(md5($"text").as("__dg"))
         .agg(min_by(
           struct($"doc_id", $"text", $"lang", $"source", $"n_words"),
           $"doc_id").as("__r"))
-        .select($"__r.*")
-        .cache()
+        .select($"__r.*"))
       // 4: near-dedup — drop docs whose verified near-dup has a
       // smaller id; pairs computed over the SURVIVORS only
       // knownDistinct: `exact` holds one row per md5(text) digest, so
@@ -153,7 +131,9 @@ object CurationQueries extends QueryModule {
 
   def oracle: Map[String, String] = Map(
     "pipe_curation" -> {
-      val sc = Markers.map { case (l, ws) => s"${markerCountSql(ws)} AS score_$l" }
+      // the same marker-word heuristic as txt_langid
+      val sc = TextQueries.Markers.map { case (l, ws) =>
+        s"${TextQueries.markerCountSql(ws)} AS score_$l" }
         .mkString(",\n             ")
       // ORACLE-FEASIBILITY restructure (round-12 verdict #1): same
       // pipeline semantics, staged so DuckDB survives the sf100

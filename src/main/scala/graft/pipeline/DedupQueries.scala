@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import graft.{QueryModule, Tables}
+import graft.{Cached, QueryModule, Tables}
 import graft.functions.PortableHash
 import graft.functions.PortableHash._
+import graft.operators.ContentFamilies
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,9 +35,6 @@ object DedupQueries extends QueryModule {
           i => concat_ws(" ", element_at(l, i), element_at(l, i + 1), element_at(l, i + 2))))
         .otherwise(array().cast("array<string>")))
   }
-
-  /** portable hashes of the shingles */
-  private def shingleHashes: Column = transform(shingles, g => wordHash(g))
 
   /** doc_id + the 4 LSH band keys + shingle count, one scan, no shuffle.
     *
@@ -115,17 +113,15 @@ object DedupQueries extends QueryModule {
     * array — see the dedup_simhash scaladoc for why materialization
     * matters.
     *
-    * Adaptive content collapse (r8; the same HLL sketch regime switch
-    * as verifiedRepPairsOf): identical texts have identical simhashes,
-    * so on a copy-heavy corpus (sf100 stress copy: 1000 copies/doc,
-    * where the uncollapsed form burned 609 s recomputing 24 shingle
-    * folds per COPY) the signature is computed once per DISTINCT text
-    * and re-attached by a narrow digest join. A no-copy corpus skips
-    * the collapse — zero added shuffle, signatures stay map-side.
-    * Both paths produce identical rows, so a sketch misread costs
-    * performance only.
+    * Identical texts have identical simhashes, so when the
+    * [[ContentFamilies]] probe finds copy families (sf100 stress copy:
+    * 1000 copies/doc, where the uncollapsed form burned 609 s
+    * recomputing 24 shingle folds per COPY) the signature is computed
+    * once per distinct text and reaches every copy through one narrow
+    * digest join (`Families.attach`). A no-copy corpus skips the
+    * collapse: no added shuffle, signatures stay map-side.
     */
-  private def simhashSig(docs: DataFrame): DataFrame = {
+  private[graft] def simhashSig(docs: DataFrame): DataFrame = {
     // round-14: the 24 per-bit interpreted aggregate() HOF folds (plus
     // the interpreted shingle+wordHash chain feeding them) are ONE
     // codegen-registered kernel pass now — graft_shingle_hash64 builds
@@ -134,39 +130,12 @@ object DedupQueries extends QueryModule {
     // and graft_simhash24 folds all 24 bit counters in a single loop
     // (SimHashKernelSpec pins bit-exactness against the HOF chain).
     // Measured: dedup_simhash 6.0 s → sub-second at sf0.1.
-    def sigOf(d: DataFrame, id: Column) = d
-      .select(id.as("__id"), expr("graft_shingle_hash64(text)").as("hs"))
-      .select(col("__id"), expr("graft_simhash24(hs)").as("simhash"))
-    // NOTE (round-14): a byte-size gate on this probe was tried and
-    // REVERTED — the collapse guards a blowup that is unbounded in the
-    // input bytes (a 58 MB corpus of 100× copies quadruples every
-    // bucket join 10^4-fold), so the one cheap text-hash sketch below
-    // always runs. See the verifiedRepPairsOf probe comment.
-    // dual 96-bit digest (xxhash64 + murmur), same scheme as
-    // verifiedRepPairsOf: a single 64-bit hash is not collision-safe
-    // at 1e9+ docs — a collision would silently assign a wrong
-    // simhash to one of the colliding texts
-    val withDg = docs.select(col("doc_id"), col("text"),
-      xxhash64(col("text")).as("__dg1"), hash(col("text")).as("__dg2"))
-    val Array(nDistinct, nTotal) = withDg
-      .agg(approx_count_distinct(col("__dg1")), count(lit(1)))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
-    if (nTotal > 0 && nDistinct.toDouble / nTotal < 0.9) {
-      val reps = withDg.groupBy(col("__dg1"), col("__dg2"))
-        .agg(first(col("text")).as("text"))
-      val repSig = reps
-        .select(col("__dg1").as("__r1"), col("__dg2").as("__r2"),
-          expr("graft_shingle_hash64(text)").as("hs"))
-        .select(col("__r1"), col("__r2"),
-          expr("graft_simhash24(hs)").as("simhash"))
-      withDg.select(col("doc_id"), col("__dg1"), col("__dg2"))
-        .join(repSig,
-          col("__dg1") === col("__r1") && col("__dg2") === col("__r2"))
-        .select(col("doc_id"), col("simhash"))
-    } else {
-      sigOf(docs, col("doc_id"))
-        .select(col("__id").as("doc_id"), col("simhash"))
-    }
+    if (ContentFamilies.hasCopies(docs, "text")) {
+      val fam = ContentFamilies(docs.select("doc_id", "text"), "doc_id", "text")
+      fam.attach(expr("graft_simhash24(graft_shingle_hash64(text))").as("simhash"))
+    } else docs
+      .select(col("doc_id"), expr("graft_shingle_hash64(text)").as("hs"))
+      .select(col("doc_id"), expr("graft_simhash24(hs)").as("simhash"))
   }
 
   /** verified near-dup pairs (da < db, jaccard >= 0.5) with the exact
@@ -184,11 +153,12 @@ object DedupQueries extends QueryModule {
     * 1. Exact-content collapse. Docs with an identical shingle-hash
     *    array band identically and verify to jaccard 1.0 against each
     *    other, so LSH runs on ONE representative per distinct content
-    *    and the copy pairs are reconstituted afterwards by two narrow
-    *    joins on (doc_id, rep). A boilerplate-heavy corpus (or an
-    *    exact-duplicated one, like the replicated sf10 stress set,
-    *    where every doc has R copies) would otherwise square the
-    *    candidate join: R copies x R copies per original pair. The
+    *    (the families of [[ContentFamilies]]) and the copy pairs are
+    *    reconstituted afterwards by two narrow joins on (doc_id, rep).
+    *    A boilerplate-heavy corpus (or an exact-duplicated one, like
+    *    the replicated sf10 stress set, where every doc has R copies)
+    *    would otherwise square the candidate join: R copies x R copies
+    *    per original pair. The
     *    collapse makes verify work scale with DISTINCT content; the
     *    output (inherently quadratic in copy count) is produced by the
     *    expansion joins without touching a shingle array.
@@ -255,105 +225,47 @@ object DedupQueries extends QueryModule {
     // knownDistinct (round-15): the CALLER asserts every text in
     // `docs` is content-distinct (it just exact-deduped — e.g.
     // pipe_curation's md5-keyed groupBy keeps exactly one row per
-    // digest), so the collapse probe's answer is known a priori:
-    // ratio ≈ 1 → bypass. Skipping it removes one aggregate job + a
-    // driver collect() sync from every execution of the consuming
-    // query (the probe is otherwise re-run per bench rep — the cache
-    // holds the FRAME, not the probe's scalar). Value-identical even
-    // if the assertion were wrong: both regimes produce the same pair
-    // list (the probe only picks the cheaper plan), and with no exact
-    // copies the drop-policy copy-immunity contract is vacuous.
-    if (knownDistinct) {
-      val r = docs
-        .select($"doc_id", expr("graft_shingle_hash64(text)").as("sh"))
-        .select($"doc_id", $"sh",
-          expr("graft_minhash_bands(sh)").as("bands"))
-        .cache()
-      val m = r.select($"doc_id", $"doc_id".as("rep"),
-        coalesce(size($"sh"), lit(0)).as("n_sh"))
-      return (repPairsFromBands(s, r, cap, policy), m, false)
-    }
-
-    // ADAPTIVE COLLAPSE probe, round-14 form: the regime decision
-    // (copy-heavy corpus → collapse; distinct corpus → bypass) now
-    // sketches xxhash64(text) over the RAW docs frame instead of the
-    // shingle-array digests — one cheap column scan with no shingle
-    // work and no premature sig0 materialization. Identical text ⇔
-    // identical shingle array, so copy families are detected exactly
-    // as before; distinct texts with coinciding shingle SETS (the only
-    // divergence) read the ratio HIGH, i.e. err toward the bypass,
-    // which is correct-only-slower. A size gate was tried here first
-    // and REVERTED: it skipped the probe below 256 MB estimated, and
-    // the replicated sf10 corpus (100 exact copies per doc, 58 MB on
-    // disk) then took the bypass whose candidate join is quadratic in
-    // the copy count — dedup_minhash_pairs 3.7 s → 30 s at sf10. The
-    // collapse probe guards against a blowup that is UNBOUNDED in the
-    // input bytes, so no byte-sized gate is sound.
-    val Array(nDistinct, nTotal) = docs
-      .agg(approx_count_distinct(xxhash64($"text")), count(lit(1)))
-      .collect()(0).toSeq.map(_.asInstanceOf[Long]).toArray
+    // digest), so the probe's answer is known a priori and its
+    // aggregate job + driver collect() are skipped on every execution
+    // (the cache holds the FRAME, not the probe's scalar).
+    // Value-identical even if the assertion were wrong: both regimes
+    // produce the same pair list (the probe only picks the cheaper
+    // plan), and with no exact copies the drop-policy copy-immunity
+    // contract is vacuous.
     // hotBandPolicy=drop always collapses: that policy's contract is
     // "exact copies are IMMUNE to dropped buckets" (they flow through
     // the mapping expansion, not the band join) — in the bypass they
     // would ride the band join and die with a dropped bucket
-    // (LshHotBandSpec pins this)
-    val collapsed = policy == "drop" ||
-      (nTotal > 0 && nDistinct.toDouble / nTotal < 0.9)
+    // (LshHotBandSpec pins this).
+    // The probe sketches the raw text, not the shingle arrays: identical
+    // text ⇔ identical shingle array, and distinct texts with equal
+    // shingle SETS (the only divergence) read the ratio high, i.e. err
+    // toward the bypass, which is correct-only-slower.
+    val collapsed = !knownDistinct &&
+      (policy == "drop" || ContentFamilies.hasCopies(docs, "text"))
+    val sh = docs.select($"doc_id", expr("graft_shingle_hash64(text)").as("sh"))
     if (!collapsed) {
       // no copy families: every doc is its own representative — ONE
       // cached (doc_id, sh, bands) frame, no digest columns at all
-      val r = docs
-        .select($"doc_id", expr("graft_shingle_hash64(text)").as("sh"))
-        .select($"doc_id", $"sh",
-          expr("graft_minhash_bands(sh)").as("bands"))
-        .cache()
+      val r = Cached(sh.select($"doc_id", $"sh",
+        expr("graft_minhash_bands(sh)").as("bands")))
       val m = r.select($"doc_id", $"doc_id".as("rep"),
         coalesce(size($"sh"), lit(0)).as("n_sh"))
-      return (repPairsFromBands(s, r, cap, policy), m, false)
+      (repPairsFromBands(s, r, cap, policy), m, false)
+    } else {
+      // exact-content collapse over the shingle arrays (ContentFamilies
+      // has the digest and the plan shape). Cached: the shingle frame,
+      // which the families and the mapping both read; the banded
+      // representatives, which the candidate self-join and the verify
+      // joins read; and the mapping, which the pair expansion reads
+      // three times.
+      val fam = ContentFamilies(
+        Cached(sh.withColumn("n_sh", coalesce(size($"sh"), lit(0)))), "doc_id", "sh")
+      val reps = Cached(fam.reps.select($"rep".as("doc_id"), $"sh",
+        expr("graft_minhash_bands(sh)").as("bands")))
+      val mapping = Cached(fam.mapping.select($"doc_id", $"rep", $"n_sh"))
+      (repPairsFromBands(s, reps, cap, policy), mapping, true)
     }
-
-    // exact-content collapse, digest-keyed. Earlier rounds used
-    // min(doc_id) over Window.partitionBy(sh): correct, but at scale
-    // it shuffles every doc's full shingle array with NO map-side
-    // combine, and a hot content family (boilerplate duplicated
-    // millions of times) lands in one window task. Instead:
-    //   - `sig0` computes shingles + a 128-bit content digest in the
-    //     scan stage, cached once (the one frame both consumers read);
-    //   - `reps` is a digest-keyed groupBy — partial aggregation
-    //     collapses copy families BEFORE the shuffle, so shuffle
-    //     volume scales with DISTINCT content per partition and no
-    //     task ever sees a whole copy family; minhash bands are
-    //     materialized in the cache because the candidate self-join
-    //     reads them from both sides;
-    //   - `mapping` re-attaches the representative via a narrow
-    //     long-digest equi-join (3 scalar cols — the sh arrays never
-    //     shuffle a second time).
-    // digest = two independent native array hashes (xxhash64 + murmur,
-    // 96 bits — collision-free in practice at 1e9+ docs and far
-    // cheaper than serializing the array to hash it)
-    val sig0 = docs
-      .select($"doc_id", expr("graft_shingle_hash64(text)").as("sh"))
-      .withColumn("dg1", xxhash64($"sh"))
-      .withColumn("dg2", hash($"sh"))
-      .withColumn("n_sh", coalesce(size($"sh"), lit(0)))
-      .cache()
-    val reps = sig0.groupBy($"dg1", $"dg2")
-      .agg(min($"doc_id").as("doc_id"), first($"sh").as("sh"))
-      .select($"dg1", $"dg2", $"doc_id", $"sh",
-        expr("graft_minhash_bands(sh)").as("bands"))
-      .cache()
-    // rep per doc via a narrow equi-join on the digest against reps'
-    // (digest, min doc_id) — the sh arrays never move (3 scalar cols
-    // a side), AQE broadcasts the rep side whenever distinct content
-    // is modest, and the frame is cached because the pair expansion
-    // reads it three times (each read would otherwise replay the
-    // shuffle; measured ~2x on pipe_curation at sf0.1 vs the
-    // uncached window form this replaced).
-    val mapping = sig0.select($"doc_id", $"dg1", $"dg2", $"n_sh")
-      .join(reps.select($"dg1", $"dg2", $"doc_id".as("rep")), Seq("dg1", "dg2"))
-      .select($"doc_id", $"rep", $"n_sh")
-      .cache()
-    (repPairsFromBands(s, reps, cap, policy), mapping, true)
   }
 
   /** Band-bucket candidate join + exact verify over a (doc_id, sh,
@@ -613,8 +525,8 @@ object DedupQueries extends QueryModule {
     // distance (one long per doc; bucket = high 12 bits).
     // The shingle-hash array is MATERIALIZED by a projection before the
     // 24 per-bit folds: each fold references col("hs"), so the
-    // shingling+hashing subtree exists once in the plan. Inlining
-    // `shingleHashes` into all 24 folds re-evaluated the shingling per
+    // shingling+hashing subtree exists once in the plan. Inlining the
+    // shingle hashes into all 24 folds re-evaluated the shingling per
     // bit — 24 passes over every document's text (969 s for 500k sf10
     // docs; ~40 s materialized).
     "dedup_simhash" -> { (s, d) =>
@@ -632,9 +544,8 @@ object DedupQueries extends QueryModule {
       // per join side (measured 207 s/run at sf0.1; 1.7 s cached).
       // Same materialize-before-self-join pattern as the minhash reps
       // cache; the cached frame is 16 bytes/doc.
-      val sig = simhashSig(Tables(s, d, "documents"))
-        .withColumn("bucket", ($"simhash" / lit(4096L)).cast("long"))
-        .cache()
+      val sig = Cached(simhashSig(Tables(s, d, "documents"))
+        .withColumn("bucket", ($"simhash" / lit(4096L)).cast("long")))
       val a = sig.select($"doc_id".as("da"), $"simhash".as("sa"), $"bucket")
       val b = sig.select($"doc_id".as("db"), $"simhash".as("sb"), $"bucket")
       a.join(b, Seq("bucket")).filter($"da" < $"db")
@@ -660,9 +571,8 @@ object DedupQueries extends QueryModule {
       // pmod(bucket, 41) below the projection would inline the 24-fold
       // simhash expression into the filter and re-evaluate the shingle
       // chain per row; over the cache the filter costs one long op
-      val sig = simhashSig(Tables(s, d, "documents"))
-        .withColumn("bucket", ($"simhash" / lit(4096L)).cast("long"))
-        .cache()
+      val sig = Cached(simhashSig(Tables(s, d, "documents"))
+        .withColumn("bucket", ($"simhash" / lit(4096L)).cast("long")))
         .filter(pmod($"bucket", lit(41L)) === 7)
       val a = sig.select($"doc_id".as("da"), $"simhash".as("sa"), $"bucket")
       val b = sig.select($"doc_id".as("db"), $"simhash".as("sb"), $"bucket")

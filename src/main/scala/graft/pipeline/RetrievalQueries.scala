@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryModule, Tables}
+import graft.{Cached, QueryModule, Tables}
 import graft.OracleNum._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -169,10 +169,9 @@ object RetrievalQueries extends QueryModule {
     // counts, the first-word counts, AND the scoring join; uncached,
     // the interpreted bigram HOF + explode re-ran three times per
     // execution (guide §5: reused and expensive to recompute)
-    val inst = Tables(s, d, "documents")
+    val inst = Cached(Tables(s, d, "documents")
       .select($"doc_id", explode(bigramsOf(words)).as("bigram"))
-      .withColumn("w1", substring_index($"bigram", " ", 1))
-      .cache()
+      .withColumn("w1", substring_index($"bigram", " ", 1)))
     val c12 = inst.groupBy($"bigram").agg(count(lit(1)).as("c12"))
     val c1 = inst.groupBy($"w1").agg(count(lit(1)).as("c1"))
     val vocab = Tables(s, d, "documents")

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import graft.{QueryModule, Tables}
+import graft.{Cached, QueryModule, Tables}
+import graft.operators.ContentFamilies
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -479,11 +480,11 @@ object SimilarityQueries extends QueryModule {
     // is the shapes already proven: map-side signatures, one candidate
     // shuffle, O(V) component state.
     //
-    // Exact-duplicate collapse (same defense as DedupQueries'
-    // verifiedPairsOf): bit-identical embeddings land in the same
-    // bucket of EVERY table and always verify (cos 1.0), so LSH + CC
-    // run on one representative per distinct vector and copies are
-    // re-attached by a narrow digest join afterwards. A corpus with R
+    // Exact-duplicate collapse (operators/ContentFamilies): bit-
+    // identical embeddings land in the same bucket of EVERY table and
+    // always verify (cos 1.0), so LSH + CC run on one representative
+    // per distinct vector and copies are re-attached by the family
+    // mapping afterwards. A corpus with R
     // copies per vector (the replicated sfN stress sets, or any
     // pipeline that re-embeds unchanged documents) would otherwise
     // inflate every bucket join R^2-fold; collapsed, the pair work is
@@ -492,18 +493,12 @@ object SimilarityQueries extends QueryModule {
     // is row-identical to the uncollapsed form.
     "dedup_semantic_clusters" -> { (s, d) =>
       import s.implicits._
-      val keyed = Tables(s, d, "embeddings")
-        .select($"vec_id", $"embedding",
-          xxhash64($"embedding").as("dg1"), hash($"embedding").as("dg2"))
-        .cache()
-      val reps = keyed.groupBy($"dg1", $"dg2")
-        .agg(min($"vec_id").as("vec_id"), first($"embedding").as("embedding"))
-      // rep per vector over the NARROW digest projection — embeddings
-      // themselves never shuffle here
-      val mapping = keyed.select($"vec_id", $"dg1", $"dg2")
-        .withColumn("rep",
-          min($"vec_id").over(Window.partitionBy($"dg1", $"dg2")))
-        .select($"vec_id", $"rep")
+      val fam = ContentFamilies(
+        Cached(Tables(s, d, "embeddings").select($"vec_id", $"embedding")),
+        "vec_id", "embedding")
+      val reps = fam.reps.select($"rep".as("vec_id"), $"embedding")
+      // cached: both reads of the labelled rows below join it
+      val mapping = Cached(fam.mapping)
       val tb = explode(array((0 until NumTables).map(t =>
         struct(lit(t).as("tbl"),
           lshBucket($"embedding", t * BitsPerTable, BitsPerTable).as("bucket"))): _*))
@@ -537,11 +532,11 @@ object SimilarityQueries extends QueryModule {
     // (tbl, bucket) equi-join as sim_lsh_multitable; the per-vector
     // top-k is a window over candidate pairs only.
     //
-    // Exact-copy collapse (same defense as dedup_semantic_clusters /
-    // verifiedPairsOf): bit-identical embeddings share every bucket, so
-    // a corpus with R copies per vector would inflate the candidate
+    // Exact-copy collapse (operators/ContentFamilies): bit-identical
+    // embeddings share every bucket, so a corpus with R copies per
+    // vector would inflate the candidate
     // join R^2-fold. Instead LSH + cosine run once per DISTINCT vector
-    // (digest-keyed representatives) and the per-vector top-5 is
+    // (the family representatives) and the per-vector top-5 is
     // reconstructed by a bounded expansion that is provably equal to
     // the plain all-vector form (KnnGraphSpec pins it on a
     // copy-injected corpus):
@@ -694,18 +689,12 @@ object SimilarityQueries extends QueryModule {
                                 emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val K = 5
-    val keyed = emb
-      .select($"vec_id", $"embedding",
-        xxhash64($"embedding").as("dg1"), hash($"embedding").as("dg2"))
-      .cache()
-    val fam = keyed.groupBy($"dg1", $"dg2")
-      .agg(min($"vec_id").as("rep"), count(lit(1)).as("fsize"),
-        first($"embedding").as("embedding"))
-      .cache()
-    val mapping = keyed.select($"vec_id", $"dg1", $"dg2")
-      .join(fam.select($"dg1", $"dg2", $"rep"), Seq("dg1", "dg2"))
-      .select($"vec_id", $"rep")
-      .cache()
+    // the embeddings are cached as the families' input, and both
+    // outputs because the expansion below reads each of them twice
+    val families = ContentFamilies(
+      Cached(emb.select($"vec_id", $"embedding")), "vec_id", "embedding")
+    val fam = Cached(families.reps)
+    val mapping = Cached(families.mapping)
     val members6 = mapping
       .withColumn("mrn", row_number().over(
         Window.partitionBy($"rep").orderBy($"vec_id")))

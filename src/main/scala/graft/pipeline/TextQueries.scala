@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{QueryModule, Tables}
+import graft.{Cached, QueryModule, Tables}
 import graft.functions.PortableHash._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object TextQueries extends QueryModule {
 
   /** marker-word lists for the n-gram language heuristic */
-  private val Markers: Seq[(String, Seq[String])] = Seq(
+  private[pipeline] val Markers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "of"),
     "es" -> Seq("el", "la", "de"),
     "de" -> Seq("der", "die", "und"),
@@ -35,11 +35,7 @@ object TextQueries extends QueryModule {
     "list_transform(range(1, len(string_split(text, ' '))), " +
       "i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i + 1])"
 
-  private def markerCount(ws: Seq[String]): Column =
-    aggregate(words, lit(0L),
-      (acc, w) => acc + when(w.isin(ws.map(lit): _*), 1L).otherwise(0L))
-
-  private def markerCountSql(ws: Seq[String]): String = {
+  private[pipeline] def markerCountSql(ws: Seq[String]): String = {
     val inList = ws.map(w => s"'$w'").mkString(", ")
     s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
       s"list_transform(string_split(text, ' '), w -> CASE WHEN w IN ($inList) THEN 1 ELSE 0 END)), " +
@@ -150,7 +146,7 @@ object TextQueries extends QueryModule {
         least(nw / 100.0, lit(1.0)).as("x3"),
         (size(array_distinct(words)).cast("double") / nw).as("x4"),
         when($"lang" === "en", 1.0).otherwise(0.0).as("y"))
-      val cached = feats.cache()
+      val cached = Cached(feats)
       // feats keeps every documents row: the footer count is n, no job
       val n = Tables.footerRowCount(s, d, "documents")
       def zOf(w: Array[Double]): Column =
@@ -363,9 +359,8 @@ object TextQueries extends QueryModule {
       // round-14: ONE cached exploded-bigram frame feeds both the
       // benchmark-side counts and the corpus side — previously the
       // interpreted bigram HOF + explode ran twice (once per side)
-      val inst = Tables(s, d, "documents")
-        .select($"doc_id", $"lang", explode(bigramsOf(words)).as("bigram"))
-        .cache()
+      val inst = Cached(Tables(s, d, "documents")
+        .select($"doc_id", $"lang", explode(bigramsOf(words)).as("bigram")))
       val bench = inst
         .filter($"lang" === "en")
         .groupBy($"bigram").agg(count(lit(1)).as("bn"))

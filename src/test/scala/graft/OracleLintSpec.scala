@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Static, Spark-free lints: the DuckDB oracles' numeric rules below,
   * the rule that `operators/` picks its plans from its input alone, the
-  * rule that fixture tables are read through `Tables`, and the rule that
-  * graft's own writes stay under the session's warehouse (last three
-  * tests).
+  * rule that fixture tables are read through `Tables`, the rules that
+  * exact copies collapse and frames cache through one helper each, and
+  * the rule that graft's own writes stay under the session's warehouse
+  * (last six tests).
   *
   * Oracle rule 1, no uncast integer SUM. DuckDB widens SUM over any integer type to HUGEINT (int128) while
   * Spark's sum over int/long stays LongType — the driver's typed
@@ -216,6 +217,32 @@ class OracleLintSpec extends AnyFunSuite {
       (f, line) => f.getName != "ChunkFiles.scala" &&
         Seq("mapPartitionsWithIndex", "format(\"binaryFile\")", "saveAsTextFile")
           .exists(line.contains)
+    }
+    assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
+  }
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }
+
+  /** Exact copies collapse in one place, `operators/ContentFamilies`,
+    * whose 96-bit digest pairs xxhash64 with Spark's murmur3 `hash`. A
+    * second `hash(` call is a copy of that collapse drifting on its own. */
+  test("only operators/ContentFamilies calls Spark's murmur hash") {
+    val murmur = """(?<![A-Za-z0-9_])hash\(""".r.unanchored
+    val violations = lint(scalaFiles(mainRoot)) { (f, line) =>
+      f.getName != "ContentFamilies.scala" && !isComment(line) && murmur.matches(line)
+    }
+    assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
+  }
+
+  /** Builders cache through `graft.Cached`, which skips a frame whose
+    * plan is already cached. A direct `.cache()` on a rebuilt query logs
+    * "Asked to cache already cached data." once per rebuild. */
+  test("only graft.Cached calls .cache()") {
+    val violations = lint(scalaFiles(mainRoot)) { (f, line) =>
+      f.getName != "Cached.scala" && !isComment(line) && line.contains(".cache()")
     }
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
