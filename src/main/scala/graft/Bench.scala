@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Throughput benchmark (driver contract): one JSON line with per-query
   * wall time over the headline set at SPARK_GRAFT_SF_DIR.
   *
@@ -29,6 +31,10 @@ package graft
   * bench/bench_details_last.json), NOT on the contract line: the
   * driver's output-tail capture is small and the inlined diagnostics
   * made the line unparseable from r09 through r14 (round-15 fix).
+  * The sidecar also carries `codegen_compiles` (per query, per timed
+  * rep) and `codegen_compiles_after_warmup` (every compile from the end
+  * of the warm-up and canary to the end of the run): a warm rep that
+  * compiles is a codegen-cache thrash (see EngineConf.perfSettings).
   */
 object Bench {
   val headline: Seq[String] = Seq(
@@ -69,6 +75,17 @@ object Bench {
     "join_bloom_semi",     // bloom-pruned semi join (map-side probe)
     "pipe_curation"        // end-to-end curation composite
   )
+
+  /** One timed rep: wall seconds, whether it succeeded, 1-min loadavg
+    * at its start, disk GB and GC seconds inside it, and the classes
+    * Spark's codegen compiled during it (a warm rep should compile
+    * none; a nonzero count means the codegen cache is thrashing). */
+  final case class Rep(sec: Double, ok: Boolean, load: Double, readGb: Double,
+      gcSec: Double, compiles: Long)
+
+  /** Classes compiled so far by Spark's codegen in this JVM (driver and,
+    * in local mode, tasks): every cache miss compiles once. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -239,12 +256,11 @@ object Bench {
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
 
-    // (seconds, ok, 1-min loadavg at rep start, disk GB read by rep,
-    //  GC seconds inside the timed window)
-    def rep(name: String): (Double, Boolean, Double, Double, Double) = {
+    def rep(name: String): Rep = {
       val la = loadAvg()
       val rb0 = diskReadBytes()
       val gc0 = gcMillis()
+      val cg0 = compiles()
       val t0 = System.nanoTime()
       val ok =
         try { exec(name); true }
@@ -253,25 +269,28 @@ object Bench {
           false
         }
       val dt = (System.nanoTime() - t0) / 1e9
+      val cg = compiles() - cg0
       val gcSec = (gcMillis() - gc0) / 1e3
       val gb = if (rb0 < 0) -1.0 else (diskReadBytes() - rb0) / 1e9
       // untimed: release this rep's shuffle deps so the ContextCleaner
       // can delete their files (see the cleaner GC note on
       // EngineConf.localSession)
       System.gc()
-      (dt, ok, la, gb, gcSec)
+      Rep(dt, ok, la, gb, gcSec, cg)
     }
-    def spreadOf(v: Seq[(Double, Boolean, Double, Double, Double)]): Option[Double] = {
-      val ok = v.collect { case (t, true, _, _, _) => t }
+    def okSecs(v: Seq[Rep]): Seq[Double] = v.filter(_.ok).map(_.sec)
+    def spreadOf(v: Seq[Rep]): Option[Double] = {
+      val ok = okSecs(v)
       if (ok.size < 2) None else Some(ok.max / ok.min)
     }
+    val compiledBeforeReps = compiles()
     val results = headline.filter(nameFilter).map { name =>
       if (bktWarmup && name.contains("_bkt_")) {
         setStageTag(name, 0) // untimed: pays any pending layout build (see above)
         try exec(name) catch { case _: Throwable => () }
       }
       var repNo = 0
-      def timedRep(): (Double, Boolean, Double, Double, Double) = {
+      def timedRep(): Rep = {
         repNo += 1; setStageTag(name, repNo); rep(name)
       }
       var samples = (1 to reps).map(_ => timedRep())
@@ -282,33 +301,22 @@ object Bench {
         samples = samples :+ timedRep()
       name -> samples
     }
-    def minOk(v: Seq[(Double, Boolean, Double, Double, Double)]): Option[Double] = {
-      val ok = v.collect { case (t, true, _, _, _) => t }
-      if (ok.isEmpty) None else Some(ok.min)
-    }
-    val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" + minOk(v).map(x => f"$x%.4f").getOrElse("null")
+    val compilesAfterWarmup = compiles() - compiledBeforeReps
+    def minOk(v: Seq[Rep]): Option[Double] = okSecs(v).minOption
+    def perQuery(f: Seq[Rep] => String): String = results.map { case (k, v) =>
+      "\"" + k + "\":" + f(v)
     }.mkString("{", ",", "}")
-    val raw = results.map { case (k, v) =>
-      "\"" + k + "\":" +
-        v.map { case (t, ok, _, _, _) => if (ok) t.toString else "null" }
-          .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val loads = results.map { case (k, v) =>
-      "\"" + k + "\":" + v.map(_._3.toString).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val readGb = results.map { case (k, v) =>
-      "\"" + k + "\":" + v.map(x => f"${x._4}%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val gcSecs = results.map { case (k, v) =>
-      "\"" + k + "\":" + v.map(x => f"${x._5}%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val spreads = results.map { case (k, v) =>
-      "\"" + k + "\":" + spreadOf(v).map(x => f"$x%.2f").getOrElse("null")
-    }.mkString("{", ",", "}")
+    def perRep(f: Rep => String)(v: Seq[Rep]): String = v.map(f).mkString("[", ",", "]")
+    val qs = perQuery(v => minOk(v).map(x => f"$x%.4f").getOrElse("null"))
+    val raw = perQuery(perRep(r => if (r.ok) r.sec.toString else "null"))
+    val loads = perQuery(perRep(_.load.toString))
+    val readGb = perQuery(perRep(r => f"${r.readGb}%.2f"))
+    val gcSecs = perQuery(perRep(r => f"${r.gcSec}%.2f"))
+    val codegen = perQuery(perRep(_.compiles.toString))
+    val spreads = perQuery(v => spreadOf(v).map(x => f"$x%.2f").getOrElse("null"))
     val failed = results.collect {
-      case (k, v) if v.exists(!_._2) =>
-        "\"" + k + "\":" + v.count(!_._2)
+      case (k, v) if v.exists(!_.ok) =>
+        "\"" + k + "\":" + v.count(!_.ok)
     }.mkString("{", ",", "}")
     val total = results.flatMap { case (_, v) => minOk(v) }.sum
     def arr(v: Seq[Double]) = v.map(x => f"$x%.3f").mkString("[", ",", "]")
@@ -325,7 +333,7 @@ object Bench {
     // write failures are non-fatal — diagnostics must never sink the
     // contract line). Timing methodology is untouched.
     val canary = s""""canary_st_sec":${minOr(canSt)},"canary_mt_sec":${minOr(canMt)}"""
-    val sidecar = s"""{"metric":"total","value":${f"$total%.4f"},"unit":"sec","queries":$qs,"samples":$raw,"loadavg":$loads,"read_gb":$readGb,"gc_sec":$gcSecs,"spread":$spreads,"failed":$failed,$canary,"canary_st":${arr(canSt)},"canary_mt":${arr(canMt)},"sf":"$sfDir"}"""
+    val sidecar = s"""{"metric":"total","value":${f"$total%.4f"},"unit":"sec","queries":$qs,"samples":$raw,"loadavg":$loads,"read_gb":$readGb,"gc_sec":$gcSecs,"codegen_compiles":$codegen,"codegen_compiles_after_warmup":$compilesAfterWarmup,"spread":$spreads,"failed":$failed,$canary,"canary_st":${arr(canSt)},"canary_mt":${arr(canMt)},"sf":"$sfDir"}"""
     val sidecarPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SIDECAR",
       "bench/bench_details_last.json")
     try {

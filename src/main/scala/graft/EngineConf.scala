@@ -60,9 +60,27 @@ object EngineConf {
     * setting: the `plans.ShareCacheScans` rule that
     * [[GraftExtensions]] installs lets AQE reuse an exchange or
     * broadcast above a cache scan, so each runs once per query, not
-    * once per consumer. */
+    * once per consumer.
+    *
+    * codegen.cache.maxEntries=1000 holds graft's generated-class
+    * working set in Spark's codegen cache, so a warm query compiles
+    * nothing. The cache is LRU (per Guava segment, so it starts to
+    * evict below its bound) and keyed by generated source; with the
+    * default 100 entries, a repeated query set needing more classes
+    * evicts them before their next use and recompiles them, on the
+    * driver and again in tasks. Measured on perfbench (local[2]):
+    * `frame_analytics` needs 85 classes (4–17 recompiles per warm pass
+    * at the default), `llm_pipeline` about 151 (55–109 per warm pass, a
+    * fifth of its CPU samples); both recompile 0 at 1000, and the
+    * retained non-heap median on `llm_pipeline` read 249 MB at 100 and
+    * 246 MB at 1000 (10 runs each). 1000 is 6×
+    * the larger set. The conf is static: `CodeGenerator` sizes its
+    * cache once per JVM, from the conf active at its first use, so it
+    * must be in the session conf before the first query runs — as
+    * [[configure]] puts it. */
   val perfSettings: Map[String, String] = Map(
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** Fold the engine settings into a session builder — including the
     * extensions class, so every harness session carries the custom

@@ -39,7 +39,11 @@ import org.apache.spark.sql.types._
   *      no partition-less window;
   *   4. bucket row counts = a tiny aggregate; bucket start offsets = a
   *      triangular self-join prefix sum over those ≤ n rows
-  *      (no partition-less window — PlanHygieneSpec forbids those);
+  *      (no partition-less window — PlanHygieneSpec forbids those).
+  *      With group keys, a window sum partitioned by the group keys
+  *      instead: one row per (group, bucket), so a self-join there
+  *      would grow with the group count times the square of the
+  *      bucket count;
   *   5. ordinal = joined bucket offset + in-bucket counter. Without
   *      group keys the offsets are ≤ n rows and are broadcast; with
   *      group keys they carry one row per (group, bucket) and grow with
@@ -144,20 +148,29 @@ object GlobalOrder {
       .rowsBetween(Window.unboundedPreceding, -1)
     val withCtr = base.withColumn("__go_ctr",
       coalesce(sum(weight).over(w), lit(0L)))
-    // per-(group, bucket) totals; triangular prefix over ≤ n tiny rows
-    // per group (empty buckets contribute nothing to either side, so
-    // offsets stay contiguous)
+    // per-(group, bucket) totals; a bucket's offset is the sum of the
+    // totals of its group's earlier buckets (empty buckets contribute
+    // nothing, so offsets stay contiguous)
     val counts = base.groupBy(bucketKeys: _*).agg(sum(weight).as("__go_cnt"))
-    val cond = partKeys.map(k => col(s"a.$k") <=> col(s"b.$k"))
-      .foldLeft(col("b.__go_pid") < col("a.__go_pid"))(_ && _)
+    val prefix =
+      if (partKeys.isEmpty)
+        // ≤ n rows: a triangle of ≤ n²/2 pairs, bounded by the
+        // partition count, not the data. A window here would have no
+        // partition, which PlanHygieneSpec forbids and Spark warns on.
+        counts.as("a").join(counts.as("b"),
+            col("b.__go_pid") < col("a.__go_pid"), "left")
+          .groupBy(col("a.__go_pid"))
+          .agg(coalesce(sum(col("b.__go_cnt")), lit(0L)).as("__go_off"))
+      else
+        // one row per (group, bucket): a window sum per group, linear
+        // in the buckets, where a self-join grows with their square
+        counts.select(bucketKeys :+ coalesce(sum(col("__go_cnt")).over(
+          Window.partitionBy(partKeys.map(col): _*).orderBy("__go_pid")
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__go_off"): _*)
     // offsets carry their group keys renamed so the join back can be
     // null-safe (`<=>`): a NULL group key is a group like any other
     val offKeys = partKeys.indices.map(i => s"__go_g$i")
-    val offsets = counts.as("a")
-      .join(counts.as("b"), cond, "left")
-      .groupBy(partKeys.map(k => col(s"a.$k")) :+ col("a.__go_pid"): _*)
-      .agg(coalesce(sum(col("b.__go_cnt")), lit(0L)).as("__go_off"))
-      .toDF(offKeys ++ Seq("__go_opid", "__go_off"): _*)
+    val offsets = prefix.toDF(offKeys ++ Seq("__go_opid", "__go_off"): _*)
     val onKeys = partKeys.zip(offKeys).map { case (k, o) => col(k) <=> col(o) }
       .foldLeft(col("__go_pid") === col("__go_opid"))(_ && _)
     // ≤ n offset rows without groups; with groups the side grows with
