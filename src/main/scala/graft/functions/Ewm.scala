@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Exponentially weighted moving aggregates (pandas
@@ -8,21 +10,29 @@ import org.apache.spark.sql.functions._
   * `_libs/window/aggregations.pyx:2044` ewm / `:2143` ewmcov).
   *
   * EWM is a linear recursion (y_t depends on y_{t-1}) — the one pandas
-  * window family with no Spark window-function equivalent. The
-  * Spark-first design distributes by group key and runs the O(n)
-  * recursion per group over a sorted iterator:
+  * window family with no Spark window-function equivalent. It runs as
+  * one kernel under two drivers:
   *
-  *   - `groupByKey(key)` co-partitions each entity's rows (one shuffle,
-  *     the same exchange any per-key window needs);
-  *   - `flatMapGroups` sorts the group in memory and folds the
-  *     recursion — state is a handful of doubles, never materialized
-  *     globally.
+  *   - the kernel, [[Moments]], is pandas' `ewmcov` state over a pair
+  *     series (x, y) plus the `ewm` kernel's adjust=False mean. Every
+  *     statistic reads it: mean and variance are the x = y case (the
+  *     adjust=True mean is num/den, the adjust=False mean is `ewm`'s
+  *     recursion), sum is the unnormalized numerator, cov and corr
+  *     read the cross moments (`ewmcov`), and the `times=` mean feeds
+  *     the same update a per-step decay 2^(-Δt/halflife);
+  *   - the shuffle driver: `groupByKey(key)` co-partitions each
+  *     entity's rows (one shuffle, the same exchange any per-key window
+  *     needs), then each group is sorted in memory and folded. It
+  *     serves `ewmMean`, `ewmSum`, `ewmCov` and `ewmMeanTimes`;
+  *   - the sorted-run driver: over a layout already clustered by key
+  *     and sorted by (key, order), one streaming pass per partition
+  *     with no shuffle and no sort (`ewmMeanSortedRuns`).
   *
   * At 100 TB this scales with group count; a single group's rows must
   * fit an executor (same constraint pandas-on-a-node has for the whole
-  * series). For unbounded single streams, the Structured Streaming
-  * variant with `flatMapGroupsWithState` carries (num, den) across
-  * micro-batches (see graft.streaming).
+  * series). For unbounded single streams, `stream_stateful_ewm` carries
+  * the adjust=False mean across micro-batches through [[noAdjStep]]
+  * (see graft.streaming).
   *
   * Null semantics (pandas ewm docstring, aggregations.pyx ewm kernel):
   * a missing value emits the carried-forward statistic; with
@@ -41,51 +51,163 @@ object Ewm {
   def alphaFromHalflife(halflife: Double): Double =
     1.0 - math.exp(-math.log(2.0) / halflife)
 
-  /** Per-group EWM mean/variance recursion (aggregations.pyx:2044
-    * kernel state), shared verbatim by the shuffle path (`ewmMean`'s
-    * flatMapGroups) and the zero-shuffle sorted-run path
-    * (`ewmMeanSortedRuns`) so the two can never drift numerically. */
-  private final class MeanState(alpha: Double, ignoreNa: Boolean) {
-    private val decay = 1 - alpha
-    private var num = 0.0; private var den = 0.0   // adjust=true mean
-    private var num2 = 0.0; private var sw2 = 0.0  // variance (Σw·x², Σw²)
-    private var yNoAdj = Double.NaN                // adjust=false state
+  /** pandas' adjust=False mean update (aggregations.pyx:2044 with new
+    * weight alpha): `wd` is the carried weight after this step's
+    * decay; a NaN mean (no observation yet) starts at `x`. */
+  private[graft] def noAdjStep(y: Double, wd: Double, alpha: Double, x: Double): Double =
+    if (y.isNaN) x else (wd * y + alpha * x) / (wd + alpha)
+
+  /** The one EWM kernel: pandas' `ewmcov` moments (aggregations.pyx:2143)
+    * of a pair series plus the adjust=False mean of x. `step` folds one
+    * observation after a decay of `decay`; the new weight is 1 with
+    * `adjust`, else `alpha` (the first observation always weighs 1),
+    * and without `adjust` the weights are rescaled to sum 1 after it.
+    * `observe` applies pandas' null rule: a row missing either value
+    * decays the state one step unless `ignoreNa`. */
+  private final class Moments(alpha: Double, adjust: Boolean, ignoreNa: Boolean) {
+    private var nobs = 0L
+    private var numx = 0.0; private var numy = 0.0; private var numxy = 0.0
+    private var numx2 = 0.0; private var numy2 = 0.0
+    private var den = 0.0; private var sw2 = 0.0   // Σw, Σw²
+    private var yNoAdj = Double.NaN                // adjust=false mean
     private var wNoAdj = 1.0                       // carried weight across gaps
 
-    def reset(): Unit = {
-      num = 0.0; den = 0.0; num2 = 0.0; sw2 = 0.0
-      yNoAdj = Double.NaN; wNoAdj = 1.0
+    def step(decay: Double, x: Double, y: Double): Unit = {
+      val nw = if (adjust || nobs == 0) 1.0 else alpha
+      numx = decay * numx + nw * x
+      numy = decay * numy + nw * y
+      numxy = decay * numxy + nw * (x * y)
+      numx2 = decay * numx2 + nw * (x * x)
+      numy2 = decay * numy2 + nw * (y * y)
+      den = decay * den + nw
+      sw2 = (decay * decay) * sw2 + nw * nw
+      if (!adjust) {
+        // pandas rescales the adjust=False weights to sum 1 after each
+        // observation, so a gap decays the history against weight 1
+        numx /= den; numy /= den; numxy /= den; numx2 /= den; numy2 /= den
+        sw2 /= den * den; den = 1.0
+      }
+      yNoAdj = noAdjStep(yNoAdj, wNoAdj * decay, alpha, x)
+      wNoAdj = 1.0
+      nobs += 1
     }
 
-    /** advance one row; returns (ewm_adj, ewm_noadj, ewm_var) */
-    def step(vOpt: Option[Double]): (Option[Double], Option[Double], Option[Double]) = {
-      vOpt match {
-        case Some(x) =>
-          num = decay * num + x
-          den = decay * den + 1.0
-          num2 = decay * num2 + x * x
-          sw2 = (decay * decay) * sw2 + 1.0
-          if (yNoAdj.isNaN) { yNoAdj = x; wNoAdj = 1.0 }
-          else {
-            val wd = wNoAdj * decay
-            yNoAdj = (wd * yNoAdj + alpha * x) / (wd + alpha)
-            wNoAdj = 1.0
-          }
-        case None if !ignoreNa =>
+    def observe(decay: Double, x: Option[Double], y: Option[Double]): Unit =
+      (x, y) match {
+        case (Some(a), Some(b)) => step(decay, a, b)
+        case _ if !ignoreNa =>
           // absolute-position weighting: one decay step, no value
-          num = decay * num; den = decay * den
-          num2 = decay * num2; sw2 = (decay * decay) * sw2
+          numx = decay * numx; numy = decay * numy; numxy = decay * numxy
+          numx2 = decay * numx2; numy2 = decay * numy2
+          den = decay * den; sw2 = (decay * decay) * sw2
           wNoAdj = wNoAdj * decay
-        case None => () // ignore_na=true: state untouched
+        case _ => ()
       }
-      val ewmVar =
-        if (den > 0 && den * den - sw2 > 0)
-          Some((num2 / den - (num / den) * (num / den)) *
-            ((den * den) / (den * den - sw2)))
+
+    def sum: Option[Double] = if (nobs > 0) Some(numx) else None
+    def mean: Option[Double] = if (den > 0) Some(numx / den) else None
+    def meanNoAdj: Option[Double] = if (yNoAdj.isNaN) None else Some(yNoAdj)
+
+    /** bias=False covariance; the variance when x = y. Both it and
+      * `corr` need two observations, as in pandas: one observation
+      * decayed across null rows leaves den² - sw2 and the centred
+      * moments at rounding residue, not 0. */
+    def cov: Option[Double] =
+      if (nobs > 1 && den * den - sw2 > 0)
+        Some((numxy / den - (numx / den) * (numy / den)) *
+          ((den * den) / (den * den - sw2)))
+      else None
+
+    def corr: Option[Double] =
+      if (nobs > 1 && den > 0) {
+        val m2x = numx2 / den - (numx / den) * (numx / den)
+        val m2y = numy2 / den - (numy / den) * (numy / den)
+        if (m2x > 0 && m2y > 0)
+          Some((numxy / den - (numx / den) * (numy / den)) / math.sqrt(m2x * m2y))
         else None
-      (if (den > 0) Some(num / den) else None,
-       if (yNoAdj.isNaN) None else Some(yNoAdj),
-       ewmVar)
+      } else None
+  }
+
+  /** One input row: key, order micros, value payload. */
+  private type In[V] = (Option[Long], Option[Long], V)
+
+  private def input[V: TypeTag](spark: SparkSession, df: DataFrame,
+      keyCol: String, orderCol: String, value: Column): Dataset[In[V]] = {
+    import spark.implicits._
+    df.select(col(keyCol).cast("long"), unix_micros(col(orderCol)), value).as[In[V]]
+  }
+
+  private def keyOf(keyCol: String)(r: In[_]): Long = r._1.getOrElse(
+    throw new IllegalArgumentException(
+      s"Ewm: null key in '$keyCol' — pandas rejects NaN group keys"))
+
+  private def orderOf(orderCol: String)(r: In[_]): Long = r._2.getOrElse(
+    throw new IllegalArgumentException(s"Ewm: null/invalid order in '$orderCol'"))
+
+  /** The shuffle driver: one `groupByKey` per key, the group sorted by
+    * order, then folded row by row through a fresh `perKey()` function.
+    * Null checks live in the key function / sort key: no extra
+    * Serialize/Deserialize object stage before the groupByKey. */
+  private def shuffled[V: TypeTag, O <: Product: TypeTag](spark: SparkSession,
+      df: DataFrame, keyCol: String, orderCol: String, value: Column)(
+      perKey: () => In[V] => O): Dataset[O] = {
+    import spark.implicits._
+    input[V](spark, df, keyCol, orderCol, value)
+      .groupByKey(keyOf(keyCol))
+      .flatMapGroups((_, it) => it.toArray.sortBy(orderOf(orderCol)).iterator.map(perKey()))
+  }
+
+  /** The sorted-run driver: the input is ALREADY clustered by key and
+    * sorted by (key, order) within each partition. Group boundaries
+    * are key changes, and the lexicographic (key, order) layout is
+    * asserted per row, so a regression in either column fails loudly
+    * instead of folding rows into the wrong group's recursion. */
+  private def sortedRuns[V: TypeTag, O <: Product: TypeTag](spark: SparkSession,
+      df: DataFrame, keyCol: String, orderCol: String, value: Column)(
+      perKey: () => In[V] => O): Dataset[O] = {
+    import spark.implicits._
+    input[V](spark, df, keyCol, orderCol, value).mapPartitions { it =>
+      var fold: In[V] => O = null
+      var curKey = 0L
+      var lastOrd = 0L
+      it.map { r =>
+        val k = keyOf(keyCol)(r)
+        val o = orderOf(orderCol)(r)
+        if (fold == null) { fold = perKey(); curKey = k }
+        else if (k == curKey) {
+          require(o >= lastOrd,
+            s"Ewm sorted-run: order regression within key $k — " +
+              "input is not (key, order)-sorted; use ewmMean")
+        } else {
+          require(k > curKey,
+            s"Ewm sorted-run: key regression $curKey -> $k — " +
+              "input is not clustered-sorted by key; use ewmMean")
+          fold = perKey(); curKey = k
+        }
+        lastOrd = o
+        fold(r)
+      }
+    }
+  }
+
+  /** Name a driver's (key, order micros, ...) output and turn the
+    * micros back into the order column. */
+  private def named(out: Dataset[_], keyCol: String, orderCol: String,
+      cols: String*): DataFrame =
+    out.toDF(keyCol +: "ord_micros" +: cols: _*)
+      .select(col(keyCol) +: timestamp_micros(col("ord_micros")).as(orderCol) +:
+        cols.map(col): _*)
+
+  /** ewmMean's per-key fold (both drivers). */
+  private def meanFold(alpha: Double, ignoreNa: Boolean): () => In[Option[Double]] => (
+      Long, Long, Option[Double], Option[Double], Option[Double], Option[Double]) = {
+    val decay = 1 - alpha
+    () => {
+      val st = new Moments(alpha, adjust = true, ignoreNa)
+      r => {
+        st.observe(decay, r._3, r._3)
+        (r._1.get, r._2.get, r._3, st.mean, st.meanNoAdj, st.cov)
+      }
     }
   }
 
@@ -103,41 +225,15 @@ object Ewm {
       orderCol: String,
       valueCol: String,
       alpha: Double,
-      ignoreNa: Boolean = false): DataFrame = {
-    import spark.implicits._
-    df.select(
-        col(keyCol).cast("long").as("k"),
-        unix_micros(col(orderCol)).as("o"),
-        col(valueCol).cast("double").as("v"))
-      .as[(Option[Long], Option[Long], Option[Double])]
-      // null checks live in the key function / sort key: no extra
-      // Serialize/Deserialize object stage before the groupByKey
-      .groupByKey(_._1.getOrElse(throw new IllegalArgumentException(
-        s"Ewm: null key in '$keyCol' — pandas rejects NaN group keys")))
-      .flatMapGroups { (key, it) =>
-        val rows = it.toArray.sortBy(_._2.getOrElse(
-          throw new IllegalArgumentException(
-            s"Ewm: null/invalid order in '$orderCol'")))
-        val st = new MeanState(alpha, ignoreNa)
-        rows.iterator.map { case (_, ordOpt, vOpt) =>
-          val (adj, noadj, v2) = st.step(vOpt)
-          (key, ordOpt.get, vOpt, adj, noadj, v2)
-        }
-      }
-      .toDF(keyCol, "ord_micros", valueCol, "ewm_adj", "ewm_noadj", "ewm_var")
-      .withColumn(orderCol, timestamp_micros(col("ord_micros")))
-      .drop("ord_micros")
-      .select(keyCol, orderCol, valueCol, "ewm_adj", "ewm_noadj", "ewm_var")
-  }
+      ignoreNa: Boolean = false): DataFrame =
+    named(shuffled(spark, df, keyCol, orderCol, col(valueCol).cast("double"))(
+        meanFold(alpha, ignoreNa)),
+      keyCol, orderCol, valueCol, "ewm_adj", "ewm_noadj", "ewm_var")
 
-  /** EWM mean over a frame ALREADY clustered by key and sorted by
+  /** [[ewmMean]] over a frame ALREADY clustered by key and sorted by
     * (key, order) within each partition — a `BucketedLayout` read.
-    * Zero shuffle, zero sort: one streaming pass per partition with
-    * O(1) state; group boundaries are key changes. The required
-    * lexicographic (key, order) run layout is asserted per row — a
-    * regression in either column fails loudly instead of silently
-    * folding rows into the wrong group's recursion. Same `MeanState`
-    * kernel as `ewmMean`, so the two paths are numerically identical.
+    * Zero shuffle, zero sort: the sorted-run driver with the same fold
+    * as `ewmMean`, so the two paths are numerically identical.
     */
   def ewmMeanSortedRuns(
       spark: SparkSession,
@@ -146,48 +242,13 @@ object Ewm {
       orderCol: String,
       valueCol: String,
       alpha: Double,
-      ignoreNa: Boolean = false): DataFrame = {
-    import spark.implicits._
-    df.select(
-        col(keyCol).cast("long").as("k"),
-        unix_micros(col(orderCol)).as("o"),
-        col(valueCol).cast("double").as("v"))
-      .as[(Option[Long], Option[Long], Option[Double])]
-      .mapPartitions { it =>
-        val st = new MeanState(alpha, ignoreNa)
-        var started = false
-        var curKey = 0L
-        var lastOrd = 0L
-        it.map { case (kOpt, oOpt, vOpt) =>
-          val k = kOpt.getOrElse(throw new IllegalArgumentException(
-            s"Ewm: null key in '$keyCol' — pandas rejects NaN group keys"))
-          val o = oOpt.getOrElse(throw new IllegalArgumentException(
-            s"Ewm: null/invalid order in '$orderCol'"))
-          if (!started) { started = true; curKey = k; lastOrd = o }
-          else if (k == curKey) {
-            require(o >= lastOrd,
-              s"Ewm sorted-run: order regression within key $k — " +
-                "input is not (key, order)-sorted; use ewmMean")
-            lastOrd = o
-          } else {
-            require(k > curKey,
-              s"Ewm sorted-run: key regression $curKey -> $k — " +
-                "input is not clustered-sorted by key; use ewmMean")
-            curKey = k; lastOrd = o; st.reset()
-          }
-          val (adj, noadj, v2) = st.step(vOpt)
-          (k, o, vOpt, adj, noadj, v2)
-        }
-      }
-      .toDF(keyCol, "ord_micros", valueCol, "ewm_adj", "ewm_noadj", "ewm_var")
-      .withColumn(orderCol, timestamp_micros(col("ord_micros")))
-      .drop("ord_micros")
-      .select(keyCol, orderCol, valueCol, "ewm_adj", "ewm_noadj", "ewm_var")
-  }
+      ignoreNa: Boolean = false): DataFrame =
+    named(sortedRuns(spark, df, keyCol, orderCol, col(valueCol).cast("double"))(
+        meanFold(alpha, ignoreNa)),
+      keyCol, orderCol, valueCol, "ewm_adj", "ewm_noadj", "ewm_var")
 
-  /** EWM sum (pandas 1.4+ `ExponentialMovingWindow.sum`, window/ewm.py
-    * family; kernel shares aggregations.pyx:2044's recursion without
-    * the weight normalization): s_t = (1-alpha)*s_{t-1} + x_t. pandas
+  /** EWM sum (pandas 1.4+ `ExponentialMovingWindow.sum`): the kernel's
+    * unnormalized numerator, s_t = (1-alpha)*s_{t-1} + x_t. pandas
     * only defines sum for adjust=True — with adjust=False the
     * normalized recursion has no sum analogue — so no adjust knob here.
     * Missing values follow the same ignore_na split as ewmMean: a gap
@@ -202,40 +263,15 @@ object Ewm {
       valueCol: String,
       alpha: Double,
       ignoreNa: Boolean = false): DataFrame = {
-    import spark.implicits._
     val decay = 1 - alpha
-    df.select(
-        col(keyCol).cast("long").as("k"),
-        unix_micros(col(orderCol)).as("o"),
-        col(valueCol).cast("double").as("v"))
-      .as[(Option[Long], Option[Long], Option[Double])]
-      // null checks live in the key function / sort key: no extra
-      // Serialize/Deserialize object stage before the groupByKey
-      .groupByKey(_._1.getOrElse(throw new IllegalArgumentException(
-        s"Ewm: null key in '$keyCol' — pandas rejects NaN group keys")))
-      .flatMapGroups { (key, it) =>
-        val rows = it.toArray.sortBy(_._2.getOrElse(
-          throw new IllegalArgumentException(
-            s"Ewm: null/invalid order in '$orderCol'")))
-        var s = 0.0
-        var started = false
-        rows.iterator.map { case (_, ordOpt, vOpt) =>
-          val ord = ordOpt.get
-          vOpt match {
-            case Some(x) =>
-              s = decay * s + x
-              started = true
-            case None if !ignoreNa && started =>
-              s = decay * s
-            case None => ()
-          }
-          (key, ord, vOpt, if (started) Some(s) else None)
+    named(shuffled(spark, df, keyCol, orderCol, col(valueCol).cast("double")) { () =>
+        val st = new Moments(alpha, adjust = true, ignoreNa)
+        (r: In[Option[Double]]) => {
+          st.observe(decay, r._3, r._3)
+          (r._1.get, r._2.get, r._3, st.sum)
         }
-      }
-      .toDF(keyCol, "ord_micros", valueCol, "ewm_sum")
-      .withColumn(orderCol, timestamp_micros(col("ord_micros")))
-      .drop("ord_micros")
-      .select(keyCol, orderCol, valueCol, "ewm_sum")
+      },
+      keyCol, orderCol, valueCol, "ewm_sum")
   }
 
   /** EWM covariance (bias=False) + correlation of (`xCol`, `yCol`) per
@@ -255,64 +291,17 @@ object Ewm {
       alpha: Double,
       adjust: Boolean = true,
       ignoreNa: Boolean = false): DataFrame = {
-    import spark.implicits._
     val decay = 1 - alpha
-    df.select(
-        col(keyCol).cast("long").as("k"),
-        unix_micros(col(orderCol)).as("o"),
-        col(xCol).cast("double").as("x"),
-        col(yCol).cast("double").as("y"))
-      .as[(Option[Long], Option[Long], Option[Double], Option[Double])]
-      .groupByKey(_._1.getOrElse(throw new IllegalArgumentException(
-        s"Ewm: null key in '$keyCol' — pandas rejects NaN group keys")))
-      .flatMapGroups { (key, it) =>
-        val rows = it.toArray.sortBy(_._2.getOrElse(
-          throw new IllegalArgumentException(
-            s"Ewm: null/invalid order in '$orderCol'")))
-        var numx = 0.0; var numy = 0.0; var numxy = 0.0
-        var numx2 = 0.0; var numy2 = 0.0
-        var den = 0.0; var sw2 = 0.0
-        var started = false
-        rows.iterator.map { case (_, ordOpt, xOpt, yOpt) =>
-          val ord = ordOpt.get
-          (xOpt, yOpt) match {
-            case (Some(x), Some(y)) =>
-              // first observation always has weight 1; later ones get
-              // the scheme's new weight (1 for adjust, alpha otherwise)
-              val nw = if (!started || adjust) 1.0 else alpha
-              numx = decay * numx + nw * x
-              numy = decay * numy + nw * y
-              numxy = decay * numxy + nw * (x * y)
-              numx2 = decay * numx2 + nw * (x * x)
-              numy2 = decay * numy2 + nw * (y * y)
-              den = decay * den + nw
-              sw2 = (decay * decay) * sw2 + nw * nw
-              started = true
-            case _ if !ignoreNa && started =>
-              numx = decay * numx; numy = decay * numy; numxy = decay * numxy
-              numx2 = decay * numx2; numy2 = decay * numy2
-              den = decay * den; sw2 = (decay * decay) * sw2
-            case _ => ()
-          }
-          val (cov, corr) =
-            if (den > 0) {
-              val mx = numx / den; val my = numy / den
-              val cxy = numxy / den - mx * my
-              val m2x = numx2 / den - mx * mx
-              val m2y = numy2 / den - my * my
-              (if (den * den - sw2 > 0)
-                 Some(cxy * ((den * den) / (den * den - sw2)))
-               else None,
-               if (m2x > 0 && m2y > 0) Some(cxy / math.sqrt(m2x * m2y))
-               else None)
-            } else (None, None)
-          (key, ord, xOpt, yOpt, cov, corr)
+    val xy = struct(col(xCol).cast("double").as("_1"), col(yCol).cast("double").as("_2"))
+    named(shuffled(spark, df, keyCol, orderCol, xy) { () =>
+        val st = new Moments(alpha, adjust, ignoreNa)
+        (r: In[(Option[Double], Option[Double])]) => {
+          val (x, y) = r._3
+          st.observe(decay, x, y)
+          (r._1.get, r._2.get, x, y, st.cov, st.corr)
         }
-      }
-      .toDF(keyCol, "ord_micros", xCol, yCol, "ewm_cov", "ewm_corr")
-      .withColumn(orderCol, timestamp_micros(col("ord_micros")))
-      .drop("ord_micros")
-      .select(keyCol, orderCol, xCol, yCol, "ewm_cov", "ewm_corr")
+      },
+      keyCol, orderCol, xCol, yCol, "ewm_cov", "ewm_corr")
   }
 
   /** EWM mean over IRREGULARLY-SPACED observations (pandas ewm.py:127
@@ -322,13 +311,13 @@ object Ewm {
     * an observation's weight depends on wall-clock age rather than row
     * position — the financially common time-decay form.
     *
-    * Null values contribute no weight; because time-decay is
-    * multiplicative over Δt, skipping a null row and decaying across
-    * the combined gap at the next observation is exact, so pandas'
-    * ignore_na distinction collapses for this form.
+    * Null values contribute no weight and leave the state untouched;
+    * because time-decay is multiplicative over Δt, skipping a null row
+    * and decaying across the combined gap at the next observation is
+    * exact, so pandas' ignore_na distinction collapses for this form.
     *
-    * Same distribution shape as [[ewmMean]]: one shuffle by key, O(n)
-    * fold per group, state = two doubles + a timestamp.
+    * Same kernel and shuffle driver as [[ewmMean]]; the only extra
+    * per-key state is the time of the last observation.
     */
   def ewmMeanTimes(
       spark: SparkSession,
@@ -336,37 +325,22 @@ object Ewm {
       keyCol: String,
       timeCol: String,
       valueCol: String,
-      halflifeSeconds: Double): DataFrame = {
-    import spark.implicits._
-    df.select(
-        col(keyCol).cast("long").as("k"),
-        unix_micros(col(timeCol)).as("o"),
-        col(valueCol).cast("double").as("v"))
-      .as[(Option[Long], Option[Long], Option[Double])]
-      .groupByKey(_._1.getOrElse(throw new IllegalArgumentException(
-        s"Ewm: null key in '$keyCol' — pandas rejects NaN group keys")))
-      .flatMapGroups { (key, it) =>
-        val rows = it.toArray.sortBy(_._2.getOrElse(
-          throw new IllegalArgumentException(
-            s"Ewm: null/invalid time in '$timeCol'")))
-        var num = 0.0; var den = 0.0
+      halflifeSeconds: Double): DataFrame =
+    named(shuffled(spark, df, keyCol, timeCol, col(valueCol).cast("double")) { () =>
+        // adjust=True only, so alpha (the adjust=False weight) is unused
+        val st = new Moments(alpha = 0.0, adjust = true, ignoreNa = true)
         var lastObs = Long.MinValue
-        rows.iterator.map { case (_, ordOpt, vOpt) =>
-          val t = ordOpt.get
-          vOpt.foreach { x =>
+        (r: In[Option[Double]]) => {
+          val t = r._2.get
+          r._3.foreach { x =>
             val d =
               if (lastObs == Long.MinValue) 1.0
               else math.pow(2.0, -((t - lastObs) / 1e6) / halflifeSeconds)
-            num = d * num + x
-            den = d * den + 1.0
+            st.step(d, x, x)
             lastObs = t
           }
-          (key, t, vOpt, if (den > 0) Some(num / den) else None)
+          (r._1.get, t, r._3, st.mean)
         }
-      }
-      .toDF(keyCol, "ord_micros", valueCol, "ewm_tmean")
-      .withColumn(timeCol, timestamp_micros(col("ord_micros")))
-      .drop("ord_micros")
-      .select(keyCol, timeCol, valueCol, "ewm_tmean")
-  }
+      },
+      keyCol, timeCol, valueCol, "ewm_tmean")
 }

@@ -270,10 +270,17 @@ object AdaptiveDistinct {
     if (extraAggs.isEmpty) return nu
     require(groupKeys.nonEmpty, "nuniques: extraAggs need group keys to join on")
     val base = raw.groupBy(groupKeys.map(col): _*).agg(extraAggs.head, extraAggs.tail: _*)
-    val rr = nu.select(groupKeys.map(k => col(k).as(s"__j_$k")) ++
-      nu.columns.filterNot(groupKeys.contains).map(col): _*)
-    val cond = groupKeys.map(k => col(k) <=> col(s"__j_$k")).reduce(_ && _)
-    base.join(rr, cond).drop(groupKeys.map(k => s"__j_$k"): _*)
+    nullSafeJoin(base, nu, groupKeys)
+  }
+
+  /** Inner join of `l` and `r` on `keys` with `<=>`, so a null-keyed
+    * group survives exactly as Spark's groupBy keeps it; `r`'s key
+    * columns are renamed for the join and dropped after it. */
+  private def nullSafeJoin(l: DataFrame, r: DataFrame, keys: Seq[String]): DataFrame = {
+    val rr = r.select(keys.map(k => col(k).as(s"__j_$k")) ++
+      r.columns.filterNot(keys.contains).map(col): _*)
+    val cond = keys.map(k => col(k) <=> col(s"__j_$k")).reduce(_ && _)
+    l.join(rr, cond).drop(keys.map(k => s"__j_$k"): _*)
   }
 
   /** All counts in ONE aggregate over an anchor-clustered child.
@@ -317,11 +324,6 @@ object AdaptiveDistinct {
         else sup.select(((groupKeys ++ cs).distinct).map(col): _*).distinct()
       deduped.groupBy(groupKeys.map(col): _*).agg(count(lit(1)).as(name))
     }
-    counts.reduce { (l, r) =>
-      val rr = r.select(groupKeys.map(k => col(k).as(s"__j_$k")) ++
-        r.columns.filterNot(groupKeys.contains).map(col): _*)
-      val cond = groupKeys.map(k => col(k) <=> col(s"__j_$k")).reduce(_ && _)
-      l.join(rr, cond).drop(groupKeys.map(k => s"__j_$k"): _*)
-    }
+    counts.reduce(nullSafeJoin(_, _, groupKeys))
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import graft.{QueryModule, Tables}
 import graft.OracleNum._
 import graft.functions.{Ewm, WinTypes}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,14 +11,19 @@ import org.apache.spark.sql.functions._
   *
   * Reference: pandas `window/rolling.py` (frame bounds from indexer
   * objects at `core/indexers/objects.py`) + online sliding kernels in
-  * `_libs/window/aggregations.pyx`. In Spark every variant is a
-  * `Window.partitionBy(key).orderBy(ts)` frame — `rowsBetween` for
-  * count windows, `rangeBetween` over `unix_micros` for time windows —
-  * evaluated distributed per partition with no driver state. EWM (the
-  * one recursive family) lives in graft.functions.Ewm.
+  * `_libs/window/aggregations.pyx`. In Spark every rolling, expanding
+  * and rank variant is a `Window.partitionBy(key).orderBy(...)` frame —
+  * `rowsBetween` for count windows, `rangeBetween` over `unix_micros`
+  * for time windows — evaluated distributed per partition with no
+  * driver state. EWM, the one recursive family, has no window form:
+  * the `win_ewm_*` queries call graft.functions.Ewm, whose one kernel
+  * folds each user's sorted rows after one shuffle by user (or, over
+  * the bucketed layout, in one pass with no shuffle).
   *
-  * All queries window per `user_id`: the partition key is what makes
-  * this 100 TB-safe — no global ordering is ever required.
+  * Every query partitions by a key (`user_id`; `event_type` for the
+  * rank windows, `l_returnflag` for win_rolling_cov): the partition key
+  * is what makes this 100 TB-safe — no global ordering is ever
+  * required.
   */
 object WindowQueries extends QueryModule {
 
@@ -327,14 +333,11 @@ object WindowQueries extends QueryModule {
           when(n >= 9, round((lo + hi) / 2.0, 6)).as("roll_median"))
     },
 
-    // ewm mean, adjust=True and adjust=False (ewm.py:127; recursion in
-    // graft.functions.Ewm via flatMapGroups per user)
+    // ewm mean, adjust=True and adjust=False (ewm.py:127; one shuffle
+    // by user into graft.functions.Ewm's kernel)
     "win_ewm_mean" -> { (s, d) =>
-      val ev = Tables(s, d, "events")
-      Ewm.ewmMean(s, ev, "user_id", "ts", "value", alpha = 0.1)
-        .withColumn("ewm_adj", round(col("ewm_adj"), 6))
-        .withColumn("ewm_noadj", round(col("ewm_noadj"), 6))
-        .withColumn("ewm_var", round(col("ewm_var"), 6))
+      ewmRounded(Ewm.ewmMean(s, Tables(s, d, "events"), "user_id", "ts", "value",
+        alpha = 0.1))
     },
 
     // the sf100-DIFFERENTIAL twin of win_ewm_mean (round-12 verdict
@@ -349,85 +352,50 @@ object WindowQueries extends QueryModule {
     "win_ewm_keyed" -> { (s, d) =>
       val ev = Tables(s, d, "events")
         .filter(pmod(col("user_id"), lit(97)) === 3)
-      Ewm.ewmMean(s, ev, "user_id", "ts", "value", alpha = 0.1)
-        .withColumn("ewm_adj", round(col("ewm_adj"), 6))
-        .withColumn("ewm_noadj", round(col("ewm_noadj"), 6))
-        .withColumn("ewm_var", round(col("ewm_var"), 6))
+      ewmRounded(Ewm.ewmMean(s, ev, "user_id", "ts", "value", alpha = 0.1))
     },
 
     // ewm mean over a series WITH missing values, ignore_na=False
     // (default): a gap decays the accumulated weights one step
     // (absolute-position weighting, aggregations.pyx ewm kernel)
     "win_ewm_nulls" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-        .select($"user_id", $"ts",
-          when(pmod($"event_id", lit(7)) === 0, lit(null))
-            .otherwise($"value").cast("double").as("v"))
-      Ewm.ewmMean(s, ev, "user_id", "ts", "v", alpha = 0.2, ignoreNa = false)
-        .drop("ewm_var")
-        .withColumn("ewm_adj", round(col("ewm_adj"), 6))
-        .withColumn("ewm_noadj", round(col("ewm_noadj"), 6))
+      ewmRounded(Ewm.ewmMean(s, eventsWithGaps(s, d), "user_id", "ts", "v",
+        alpha = 0.2, ignoreNa = false).drop("ewm_var"))
     },
 
     // same series, ignore_na=True: gaps leave state untouched
     // (relative-position weighting)
     "win_ewm_ignore_na" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-        .select($"user_id", $"ts",
-          when(pmod($"event_id", lit(7)) === 0, lit(null))
-            .otherwise($"value").cast("double").as("v"))
-      Ewm.ewmMean(s, ev, "user_id", "ts", "v", alpha = 0.2, ignoreNa = true)
-        .drop("ewm_var")
-        .withColumn("ewm_adj", round(col("ewm_adj"), 6))
-        .withColumn("ewm_noadj", round(col("ewm_noadj"), 6))
+      ewmRounded(Ewm.ewmMean(s, eventsWithGaps(s, d), "user_id", "ts", "v",
+        alpha = 0.2, ignoreNa = true).drop("ewm_var"))
     },
 
     // ewm cov (bias=False) + corr, adjust=True, alpha from span=9
     // (ewmcov aggregations.pyx:2143; span->alpha ewm.py:127)
     "win_ewm_cov" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-        .select($"user_id", $"ts", $"value".as("x"),
-          ($"value" * 0.5 + pmod($"event_id", lit(10)).cast("double")).as("y"))
-      Ewm.ewmCov(s, ev, "user_id", "ts", "x", "y",
-          alpha = Ewm.alphaFromSpan(9), adjust = true)
-        .withColumn("ewm_cov", round(col("ewm_cov"), 6))
-        .withColumn("ewm_corr", round(col("ewm_corr"), 6))
+      ewmRounded(Ewm.ewmCov(s, eventsPair(s, d), "user_id", "ts", "x", "y",
+        alpha = Ewm.alphaFromSpan(9), adjust = true))
     },
 
     // ewm cov + corr with adjust=False: new weight alpha, first
     // observation keeps weight 1
     "win_ewm_cov_noadj" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-        .select($"user_id", $"ts", $"value".as("x"),
-          ($"value" * 0.5 + pmod($"event_id", lit(10)).cast("double")).as("y"))
-      Ewm.ewmCov(s, ev, "user_id", "ts", "x", "y",
-          alpha = Ewm.alphaFromSpan(9), adjust = false)
-        .withColumn("ewm_cov", round(col("ewm_cov"), 6))
-        .withColumn("ewm_corr", round(col("ewm_corr"), 6))
+      ewmRounded(Ewm.ewmCov(s, eventsPair(s, d), "user_id", "ts", "x", "y",
+        alpha = Ewm.alphaFromSpan(9), adjust = false))
     },
 
     // halflife parameterization: alpha = 1 - exp(-ln 2 / halflife)
     "win_ewm_halflife" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      Ewm.ewmMean(s, ev, "user_id", "ts", "value",
-          alpha = Ewm.alphaFromHalflife(2.0))
-        .drop("ewm_var")
-        .withColumn("ewm_adj", round(col("ewm_adj"), 6))
-        .withColumn("ewm_noadj", round(col("ewm_noadj"), 6))
+      ewmRounded(Ewm.ewmMean(s, Tables(s, d, "events"), "user_id", "ts", "value",
+        alpha = Ewm.alphaFromHalflife(2.0)).drop("ewm_var"))
     },
 
-    // ewm sum (pandas 1.4+ ewm().sum(): the unnormalized recursion
-    // s_t = (1-a)*s_{t-1} + x_t; pandas defines it for adjust=True
-    // only). Same per-key flatMapGroups recursion as ewmMean.
+    // ewm sum (pandas 1.4+ ewm().sum(): the kernel's unnormalized
+    // numerator s_t = (1-a)*s_{t-1} + x_t; pandas defines it for
+    // adjust=True only). Same kernel and shuffle driver as ewmMean.
     "win_ewm_sum" -> { (s, d) =>
-      val ev = Tables(s, d, "events")
-      Ewm.ewmSum(s, ev, "user_id", "ts", "value", alpha = 0.2)
-        .withColumn("ewm_sum", round(col("ewm_sum"), 6))
+      ewmRounded(Ewm.ewmSum(s, Tables(s, d, "events"), "user_id", "ts", "value",
+        alpha = 0.2))
     },
 
     // rolling('1h', closed=) full surface (window/rolling.py closed
@@ -469,10 +437,8 @@ object WindowQueries extends QueryModule {
     // decay between observations = 2^(-Δt/halflife) over wall-clock
     // gaps, halflife = 1h
     "win_ewm_times" -> { (s, d) =>
-      val ev = Tables(s, d, "events")
-      Ewm.ewmMeanTimes(s, ev, "user_id", "ts", "value",
-          halflifeSeconds = 3600.0)
-        .withColumn("ewm_tmean", round(col("ewm_tmean"), 5))
+      ewmRounded(Ewm.ewmMeanTimes(s, Tables(s, d, "events"), "user_id", "ts", "value",
+        halflifeSeconds = 3600.0), digits = 5)
     },
 
     // ---- bucketed+sorted layout twins (graft.sources.BucketedLayout):
@@ -500,10 +466,7 @@ object WindowQueries extends QueryModule {
     // layout-order asserted per row (Ewm.ewmMeanSortedRuns)
     "win_bkt_ewm_mean" -> { (s, d) =>
       val ev = graft.sources.BucketedLayout.eventsByUser(s, d)
-      Ewm.ewmMeanSortedRuns(s, ev, "user_id", "ts", "value", alpha = 0.1)
-        .withColumn("ewm_adj", round(col("ewm_adj"), 6))
-        .withColumn("ewm_noadj", round(col("ewm_noadj"), 6))
-        .withColumn("ewm_var", round(col("ewm_var"), 6))
+      ewmRounded(Ewm.ewmMeanSortedRuns(s, ev, "user_id", "ts", "value", alpha = 0.1))
     },
 
     // rank windows partition by event_type and order by value, so they
@@ -577,6 +540,23 @@ object WindowQueries extends QueryModule {
           $"rank_avg", $"rank_pct")
     }
   )
+
+  /** Every `ewm_*` statistic rounded in place (the oracle compares at
+    * `digits` decimals). */
+  private def ewmRounded(df: DataFrame, digits: Int = 6): DataFrame =
+    df.select(df.columns.toSeq.map(c =>
+      if (c.startsWith("ewm_")) round(col(c), digits).as(c) else col(c)): _*)
+
+  /** events with every 7th value missing (win_ewm_nulls/_ignore_na) */
+  private def eventsWithGaps(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "events").select(col("user_id"), col("ts"),
+      when(pmod(col("event_id"), lit(7)) === 0, lit(null))
+        .otherwise(col("value")).cast("double").as("v"))
+
+  /** the (x, y) pair series of win_ewm_cov/_noadj */
+  private def eventsPair(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "events").select(col("user_id"), col("ts"), col("value").as("x"),
+      (col("value") * 0.5 + pmod(col("event_id"), lit(10)).cast("double")).as("y"))
 
   // oracle constants interpolated from the SAME Scala doubles the
   // engine uses, so the recursive CTE replays bit-identical arithmetic

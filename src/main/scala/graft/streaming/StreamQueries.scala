@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{OracleNum, QueryModule, Tables}
+import graft.functions.Ewm
 import OracleNum._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -349,10 +350,11 @@ object StreamQueries extends QueryModule {
     },
 
     // stateful per-user recursion via flatMapGroupsWithState: final
-    // EWM(adjust=false, alpha=0.1) per user — state carries across
-    // micro-batches in the state store
+    // EWM(adjust=false, alpha=0.1) per user through Ewm's adjust=False
+    // step — state carries across micro-batches in the state store
     "stream_stateful_ewm" -> { (s, d) =>
       import s.implicits._
+      val alpha = 0.1
       val src = eventsStream(s, d)
         .select($"user_id", unix_micros($"ts").as("tsm"), $"value")
         .as[(Long, Long, Double)]
@@ -364,7 +366,7 @@ object StreamQueries extends QueryModule {
             val sorted = rows.toArray.sortBy(_._2)
             var (n, y) = state.getOption.getOrElse((0L, Double.NaN))
             sorted.foreach { case (_, _, x) =>
-              y = if (n == 0) x else 0.9 * y + 0.1 * x
+              y = Ewm.noAdjStep(y, 1 - alpha, alpha, x)
               n += 1
             }
             state.update((n, y))

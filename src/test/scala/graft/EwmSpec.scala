@@ -106,6 +106,26 @@ class EwmSpec extends SparkSpec {
     assert(run === shf, "sorted-run and shuffle paths must agree bit-for-bit")
   }
 
+  test("sorted-run ewm matches the shuffle path bit-for-bit on a series with nulls") {
+    import spark.implicits._
+    // contiguous ascending key runs in ONE partition; key 1 opens with
+    // a null and carries one value across three null rows
+    val v = Seq(None, Some(1.0), None, None, None, Some(2.5), Some(-1.0), None, Some(4.0))
+    val rows = v.zipWithIndex.map { case (x, i) => (1L, 1000L * (i + 1), x) } ++
+      Seq((2L, 1500L, Some(5.0)), (2L, 2500L, None), (2L, 3500L, Some(7.0)))
+    val df = rows.toDF("k", "tsm", "x").coalesce(1)
+      .withColumn("ts", timestamp_micros($"tsm")).drop("tsm")
+    def collectOut(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy($"k", $"ts")
+        .select($"k", $"x", $"ewm_adj", $"ewm_noadj", $"ewm_var")
+        .collect().map(_.toSeq).toSeq
+    for (ignoreNa <- Seq(false, true)) {
+      val run = collectOut(Ewm.ewmMeanSortedRuns(spark, df, "k", "ts", "x", 0.3, ignoreNa))
+      val shf = collectOut(Ewm.ewmMean(spark, df, "k", "ts", "x", 0.3, ignoreNa))
+      assert(run === shf, s"sorted-run and shuffle paths must agree bit-for-bit (ignore_na=$ignoreNa)")
+    }
+  }
+
   test("sorted-run ewm fails loudly when the input is not layout-sorted") {
     import spark.implicits._
     // key regression within one partition: 1, 2, then 1 again
