@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{call_function, sqrt}
 import org.apache.spark.sql.types._
 
 /* Codegen'd vector kernels for the similarity family.
@@ -134,12 +136,15 @@ case class RandProject(child: Expression, outDim: Int)
     copy(child = newChild)
 }
 
-/** Fused multiply-accumulate over two float/double array columns,
-  * returning double. Mirrors the HOF contract exactly: null array,
-  * length mismatch (zip_with null-pads), or any null element (poisons
-  * the fold) all yield NULL. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** Strict left fold of one per-element step over two float/double
+  * array columns, returning double: the shared body of [[DotProduct]]
+  * and [[L2Sq]], which differ only in `step`/`genStep`. Mirrors the
+  * HOF contract exactly: null array, length mismatch (zip_with
+  * null-pads), or any null element (poisons the fold) all yield NULL.
+  * Serializable itself (as the case classes are): tasks deserialize
+  * the expression, which needs a no-arg constructor on the first
+  * non-serializable superclass. */
+abstract class PairFold(name: String) extends BinaryExpression with Serializable {
 
   override def dataType: DataType = DoubleType
 
@@ -149,18 +154,22 @@ case class DotProduct(left: Expression, right: Expression)
   // optimizer could prune IsNotNull filters it must not.
   override def nullable: Boolean = true
 
+  /** the accumulator after one widened element pair */
+  protected def step(acc: Double, x: Double, y: Double): Double
+
+  /** `step` as generated Java statements updating `acc` */
+  protected def genStep(ctx: CodegenContext, acc: String, x: String, y: String): String
+
   private def isFloat(e: Expression): Boolean = e.dataType match {
     case ArrayType(FloatType, _) => true
     case ArrayType(DoubleType, _) => false
     case other => throw new IllegalArgumentException(
-      s"graft_dot expects array<float|double>, got $other")
+      s"$name expects array<float|double>, got $other")
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    // HOF contract: zip_with null-pads a length mismatch and a null
-    // element poisons the fold — both yield NULL, so we must too
     if (x.numElements() != y.numElements()) return null
     val lf = isFloat(left); val rf = isFloat(right)
     val n = x.numElements()
@@ -170,7 +179,7 @@ case class DotProduct(left: Expression, right: Expression)
       if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
       val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      acc += xv * yv
+      acc = step(acc, xv, yv)
       i += 1
     }
     acc
@@ -193,12 +202,22 @@ case class DotProduct(left: Expression, right: Expression)
          |  boolean $bad = false;
          |  for (int $i = 0; $i < $n; $i++) {
          |    if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }
-         |    $acc += $gx * $gy;
+         |    ${genStep(ctx, acc, gx, gy)}
          |  }
          |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
          |}
        """.stripMargin
     })
+}
+
+/** Fused multiply-accumulate: acc += x * y. */
+case class DotProduct(left: Expression, right: Expression)
+    extends PairFold("graft_dot") {
+
+  override protected def step(acc: Double, x: Double, y: Double): Double = acc + x * y
+
+  override protected def genStep(ctx: CodegenContext, acc: String, x: String, y: String): String =
+    s"$acc += $x * $y;"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -292,70 +311,48 @@ case class LshBucket(child: Expression, base: Int, bits: Int)
     copy(child = newChild)
 }
 
-/** Squared L2 distance over two float/double array columns — the same
-  * fused loop as [[DotProduct]] with the HOF's exact operation order
-  * per element: widen, subtract (round), square (round), accumulate. */
+/** Squared L2 distance with the HOF's exact operation order per
+  * element: widen, subtract (round), square (round), accumulate. */
 case class L2Sq(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends PairFold("graft_l2sq") {
 
-  override def dataType: DataType = DoubleType
-
-  // NULL reachable from non-null inputs — same rationale as DotProduct.
-  override def nullable: Boolean = true
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"graft_l2sq expects array<float|double>, got $other")
+  override protected def step(acc: Double, x: Double, y: Double): Double = {
+    val dd = x - y
+    acc + dd * dd
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val lf = isFloat(left); val rf = isFloat(right)
-    val n = x.numElements()
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      val dd = xv - yv
-      acc += dd * dd
-      i += 1
-    }
-    acc
+  // the second line's margin is stripped with PairFold's template
+  override protected def genStep(ctx: CodegenContext, acc: String, x: String, y: String): String = {
+    val dd = ctx.freshName("dd")
+    s"""double $dd = $x - $y;
+       |    $acc += $dd * $dd;"""
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val dd = ctx.freshName("dd")
-      val bad = ctx.freshName("bad")
-      val gx = if (isFloat(left)) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      val gy = if (isFloat(right)) s"(double)$b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $acc = 0.0;
-         |  boolean $bad = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { $bad = true; break; }
-         |    double $dd = $gx - $gy;
-         |    $acc += $dd * $dd;
-         |  }
-         |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** Column builders over the kernels above, registered session-wide by
+  * GraftExtensions: the one place `SimilarityQueries` and
+  * `operators/KMeans` reach them from. */
+object VectorCols {
+
+  /** strict left-fold dot product of two float/double array columns —
+    * bit-identical to the HOF `aggregate(zip_with(...))` form (same
+    * widening, product rounding and summation order), but one
+    * generated loop with no intermediate array */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+
+  /** strict left-fold squared L2, with the HOF fold's exact
+    * per-element operation order */
+  def l2sq(a: Column, b: Column): Column = call_function("graft_l2sq", a, b)
+
+  /** sqrt self-norm. Projected below a join it turns the per-pair
+    * cosine into one dot and one divide: `dot(a, b) / (na * nb)` is
+    * the exact expression tree `cosine` builds, so values are
+    * bit-identical. */
+  def norm(e: Column): Column = sqrt(dot(e, e))
+
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 }

@@ -1,16 +1,20 @@
 package graft.operators
 
+import graft.functions.VectorCols
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Distributed k-means (Lloyd's algorithm) over an embedding column —
-  * the trainer for the IVF coarse quantizer in SimilarityQueries.
+  * the trainer for the IVF coarse quantizer and the PQ subspace
+  * codebooks in SimilarityQueries. One body serves both: the `metric`
+  * argument (`Cosine`, the default, or `L2`) is the only option.
   *
   * Every iteration is the same two-shuffle plan, independent of K:
   *   1. assign: centroids travel as ONE broadcast array row; the cell
   *      is a map-side `array_position(cl, array_max(cl))` argmax of
-  *      the per-centroid cosine list — no shuffle;
+  *      the per-centroid cosine list (`array_min` of squared L2
+  *      distances under `L2`) — no shuffle;
   *   2. update: per-cell elementwise means via posexplode —
   *      the shuffle carries (cell, dim, partial-sum) rows, i.e.
   *      K·Dim·partitions tiny tuples, never the vectors themselves.
@@ -26,20 +30,15 @@ import org.apache.spark.sql.types.DecimalType
   */
 object KMeans {
 
-  /** strict left-fold cosine — identical to SimilarityQueries.cosine.
-    * Round-15: routed through the codegen'd DotProduct kernel
-    * (functions/VectorExprs, registered session-wide by
-    * GraftExtensions) instead of the interpreted HOF
-    * `aggregate(zip_with(...))` fold — bit-identical per the kernel's
-    * contract (same widening, product rounding, summation order), but
-    * one generated loop with no per-pair intermediate array. The
-    * trainers call this K times per vector per iteration, so the HOF
-    * lambda dispatch + allocation was the iteration's hot path
-    * (guide §4: prefer codegen expressions in hot paths). */
-  private def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
-  private def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+  /** The one option: how a vector scores against each centroid and
+    * which score wins. `Cosine` (argmax) trains the IVF coarse
+    * quantizer; `L2` (argmin of squared distance) trains PQ subspace
+    * codebooks. Both run on the codegen'd kernels of
+    * functions/VectorExprs, K times per vector per iteration. */
+  sealed abstract class Metric(
+      val score: (Column, Column) => Column, val best: Column => Column)
+  case object Cosine extends Metric(VectorCols.cosine, array_max)
+  case object L2 extends Metric(VectorCols.l2sq, array_min)
 
   /** seed centroids: the K vectors with the smallest ids, as one
     * ordered-array row (a deterministic k-means++ stand-in) */
@@ -49,38 +48,18 @@ object KMeans {
       .select(transform(col("cs"),
         c => transform(c.getField("embedding"), x => x.cast("double"))).as("cs"))
 
-  /** strict left-fold squared L2 — the PQ/IVF-PQ distance; codegen'd
-    * L2Sq kernel, same bit-exactness rationale as [[dot]] above */
-  private def l2sq(a: Column, b: Column): Column =
-    call_function("graft_l2sq", a, b)
-
-  /** (vec_id, embedding, cell): map-side argmax over the broadcast
+  /** (vec_id, embedding, cell): map-side best score over the broadcast
     * centroid array; cells are 1-based */
-  def assign(e: DataFrame, cents: DataFrame): DataFrame =
+  def assign(e: DataFrame, cents: DataFrame, metric: Metric = Cosine): DataFrame =
     e.crossJoin(broadcast(cents))
-      .withColumn("cl", transform(col("cs"), ce => cosine(col("embedding"), ce)))
-      .withColumn("cell", array_position(col("cl"), array_max(col("cl"))))
-      .select(col("vec_id"), col("embedding"), col("cell"))
-
-  /** L2 assignment (argmin of squared distance) — the metric PQ
-    * subspace training needs; same broadcast + map-side shape */
-  def assignL2(e: DataFrame, cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("dl", transform(col("cs"), ce => l2sq(col("embedding"), ce)))
-      .withColumn("cell", array_position(col("dl"), array_min(col("dl"))))
+      .withColumn("cl", transform(col("cs"), ce => metric.score(col("embedding"), ce)))
+      .withColumn("cell", array_position(col("cl"), metric.best(col("cl"))))
       .select(col("vec_id"), col("embedding"), col("cell"))
 
   /** one Lloyd update: new centroid array from the decimal-exact
     * per-cell elementwise means; empty cells keep the old centroid */
-  def step(e: DataFrame, cents: DataFrame): DataFrame =
-    update(assign(e, cents), cents)
-
-  /** Lloyd update under L2 assignment */
-  def stepL2(e: DataFrame, cents: DataFrame): DataFrame =
-    update(assignL2(e, cents), cents)
-
-  private def update(a: DataFrame, cents: DataFrame): DataFrame = {
-    val sums = a.select(col("cell"), posexplode(col("embedding")))
+  def step(e: DataFrame, cents: DataFrame, metric: Metric = Cosine): DataFrame = {
+    val sums = assign(e, cents, metric).select(col("cell"), posexplode(col("embedding")))
       .toDF("cell", "pos", "v")
       .groupBy(col("cell"), col("pos"))
       .agg((sum(col("v").cast("double").cast(DecimalType(27, 10))).cast("double")
@@ -97,22 +76,11 @@ object KMeans {
   }
 
   /** run `iters` Lloyd iterations from the deterministic seed */
-  def fit(e: DataFrame, k: Int, iters: Int): DataFrame = {
+  def fit(e: DataFrame, k: Int, iters: Int, metric: Metric = Cosine): DataFrame = {
     var cents = seed(e, k).localCheckpoint(true)
     var i = 0
     while (i < iters) {
-      cents = step(e, cents).localCheckpoint(true)
-      i += 1
-    }
-    cents
-  }
-
-  /** L2 k-means fit — PQ subspace codebook training */
-  def fitL2(e: DataFrame, k: Int, iters: Int): DataFrame = {
-    var cents = seed(e, k).localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      cents = stepL2(e, cents).localCheckpoint(true)
+      cents = step(e, cents, metric).localCheckpoint(true)
       i += 1
     }
     cents

@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import graft.{Cached, QueryModule, Tables}
-import graft.operators.ContentFamilies
-import org.apache.spark.sql.Column
+import graft.functions.VectorCols.{cosine, dot, l2sq, norm}
+import graft.operators.{ContentFamilies, KMeans}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,37 +20,33 @@ import org.apache.spark.sql.functions._
   * generated loops replay the strict left-to-right HOF fold order —
   * so the DuckDB `list_reduce` oracles stay bit-identical; elements
   * are cast float->double before multiply on both engines.
+  *
+  * Every ANN query is built from a few shared shapes, each with one
+  * body here (and, where the DuckDB text was already identical, one
+  * oracle generator):
+  *  - `candidates` (query side x candidate side on a blocking key,
+  *    norm-hoisted rounded cosine): sim_cosine_topk, sim_lsh_ann and
+  *    the IVF search;
+  *  - `topK` (per-query row_number by cos desc, vc asc, over
+  *    `perQuery`): sim_cosine_topk, sim_lsh_multitable, sim_ivf_ann,
+  *    sim_ivf_trained, sim_lsh_ann, sim_rp_topk, sim_rp_rerank and the
+  *    k-NN graph; `perQuery` also ranks sim_rp_rerank's stage 1 and
+  *    the PQ shortlists;
+  *  - `lshPairs` (multitable LSH blocking, one exploded (tbl, bucket)
+  *    equi-join, pairs deduped by max(cos)): sim_lsh_multitable,
+  *    dedup_semantic_clusters and the k-NN graph;
+  *  - `ivfProbe2` (map-side cell assignment against a broadcast
+  *    centroid row, best + runner-up cell probe, top-1):
+  *    sim_ivf_ann and sim_ivf_trained, which differ only in where the
+  *    centroids come from; `withRunnerUp` also serves sim_ivfpq_ann;
+  *  - `adcPairs` (PQ codes, query tables, ADC distance): sim_pq_ann
+  *    and sim_pq_trained; `l2Rerank` (exact L2 over the ADC top-32):
+  *    sim_pq_trained and sim_ivfpq_ann.
+  * Top-k pruning by score bounds plugs into `topK` and `lshPairs`.
   */
 object SimilarityQueries extends QueryModule {
 
   private val Dim = 64
-
-  /** strict left-fold dot product of two float-array columns — the
-    * codegen'd DotProduct expression (functions/VectorExprs.scala):
-    * bit-identical to the HOF `aggregate(zip_with(...))` form (same
-    * widening, product rounding, and summation order) but a fused
-    * generated-Java loop with no intermediate array. Registered on
-    * the session by Tables(). */
-  private def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
-
-  /** squared-L2 sibling of `dot` — codegen'd L2Sq expression with the
-    * HOF fold's exact per-element operation order */
-  private def l2sq(a: Column, b: Column): Column =
-    call_function("graft_l2sq", a, b)
-
-  private def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
-  /** sqrt self-norm, for hoisting BELOW a join (round-15, guide
-    * §2.3/§4): `cosine(a, b)` recomputes dot(a,a) and dot(b,b) per
-    * JOINED PAIR — 3 kernel passes where 1 suffices. With norms
-    * projected on each side before the join/explode, the per-pair
-    * work is one dot + one divide. `dot(a,b) / (na * nb)` with
-    * na = sqrt(dot(a,a)) is the exact expression tree cosine() builds
-    * (same kernels, same operation order), so values are
-    * bit-identical — the oracle pins it on every consumer. */
-  private def norm(e: Column): Column = sqrt(dot(e, e))
 
   /** DuckDB mirror of dot(a, b) */
   private def dotSql(a: String, b: String): String =
@@ -91,13 +88,150 @@ object SimilarityQueries extends QueryModule {
   private val NumTables = 4
   private val BitsPerTable = 6
 
+  /** Product-quantization layout of sim_pq_ann, sim_pq_trained and
+    * sim_ivfpq_ann: M subspaces of Sub dims, Ks codes per subspace. */
+  private val M = 4
+  private val Sub = 16
+  private val Ks = 16
+
+  /** rounded cosine of a pair from norms hoisted below the join (one
+    * kernel pass per pair instead of three): the exact expression tree
+    * `cosine` builds, so values are bit-identical */
+  private def pairCos(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6)
+
+  /** Scored candidate pairs: query side (vq, eq, nq) x candidate side
+    * (vc, ec, nc) joined on `keys` (a cross join when none), self-pairs
+    * dropped, `cos` the rounded cosine. */
+  private def candidates(q: DataFrame, c: DataFrame, keys: String*): DataFrame =
+    (if (keys.isEmpty) q.crossJoin(c) else q.join(c, keys))
+      .filter(col("vq") =!= col("vc"))
+      .withColumn("cos", pairCos(col("eq"), col("ec"), col("nq"), col("nc")))
+
+  /** The first `k` rows of each `q` group in `order`, numbered from 1
+    * in column `rn`: every per-query ranking in this module (top-1
+    * filters `rn = 1`, the form the final plans have always shown). */
+  private def perQuery(df: DataFrame, q: String, k: Int, rn: String,
+                       order: Column*): DataFrame =
+    df.withColumn(rn, row_number().over(Window.partitionBy(col(q)).orderBy(order: _*)))
+      .filter(if (k == 1) col(rn) === 1 else col(rn) <= k)
+
+  /** Per-query top-k of scored pairs (q, c, cos) by cos desc, ties to
+    * the lower candidate id; `keepRn` keeps the rank column. */
+  private def topK(pairs: DataFrame, k: Int, keepRn: Boolean,
+                   q: String = "vq", c: String = "vc"): DataFrame =
+    perQuery(pairs, q, k, "rn", col("cos").desc, col(c).asc)
+      .select((Seq(q, c, "cos") ++ (if (keepRn) Seq("rn") else Nil)).map(col): _*)
+
+  /** Multitable LSH blocking with OR-amplification: all NumTables
+    * hyperplane keys of a vector are computed map-side in one scan and
+    * exploded to (tbl, bucket) rows, norm hoisted, so candidate
+    * generation is ONE equi-join shuffle whatever the table count — the
+    * same exploded band-key shape as dedup_minhash_pairs. Side `a` (the
+    * rows `aRows` keeps) and side `b` (every row) rename `id` to `a`/`b`
+    * and the embedding and norm to e<x>/n<x>, x the name's last letter.
+    * Pairs satisfying `keep` are scored; a pair found by several tables
+    * is deduped by max(cos) (cos is identical across tables). */
+  private def lshPairs(vecs: DataFrame, id: String, a: String, b: String,
+                       keep: (Column, Column) => Column,
+                       aRows: Option[Column] = None): DataFrame = {
+    val tb = explode(array((0 until NumTables).map(t =>
+      struct(lit(t).as("tbl"),
+        lshBucket(col("embedding"), t * BitsPerTable, BitsPerTable).as("bucket"))): _*))
+    val e = vecs
+      .select(col(id), col("embedding"), norm(col("embedding")).as("nr"), tb.as("tb"))
+      .select(col(id), col("embedding"), col("nr"),
+        col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
+    def side(rows: DataFrame, v: String) =
+      rows.select(col(id).as(v), col("embedding").as(s"e${v.last}"),
+        col("nr").as(s"n${v.last}"), col("tbl"), col("bucket"))
+    side(aRows.fold(e)(e.filter), a).join(side(e, b), Seq("tbl", "bucket"))
+      .filter(keep(col(a), col(b)))
+      .withColumn("cos", pairCos(col(s"e${a.last}"), col(s"e${b.last}"),
+        col(s"n${a.last}"), col(s"n${b.last}")))
+      .groupBy(col(a), col(b)).agg(max(col("cos")).as("cos"))
+  }
+
+  /** the first `n` rows' `field` in id order, as one array row `as` —
+    * the deterministic seed centroids and codebooks */
+  private def firstVectors(df: DataFrame, n: Int, field: String = "embedding",
+                           as: String = "cs"): DataFrame =
+    df.filter(col("vec_id") < n)
+      .agg(sort_array(collect_list(struct(col("vec_id"), col(field)))).as("cs"))
+      .select(transform(col("cs"), c => c.getField(field)).as(as))
+
+  /** adds `cell2`, the runner-up cell: the best of the K per-cell
+    * scores in `scores` (masked copy `<scores>2`) other than `cell` —
+    * the highest cosine or the lowest L2 distance */
+  private def withRunnerUp(df: DataFrame, scores: String, k: Int,
+                           metric: KMeans.Metric): DataFrame = {
+    val masked = scores + "2"
+    val worst = metric match { case KMeans.Cosine => -9e9; case KMeans.L2 => 9e9 }
+    df.withColumn(masked, transform(sequence(lit(1), lit(k)),
+        i => when(i.cast("long") === col("cell"), lit(worst))
+          .otherwise(element_at(col(scores), i))))
+      .withColumn("cell2", array_position(col(masked), metric.best(col(masked))))
+  }
+
+  /** IVF 2-probe cosine search: every vector is assigned map-side to
+    * its best cell against the broadcast centroid row `cents` (column
+    * `cs`, `k` centroids; centroid norms once per broadcast row); the
+    * first 50 vectors probe their best and runner-up cells over one
+    * cell-equi-join shuffle and keep their top-1. */
+  private def ivfProbe2(e: DataFrame, cents: DataFrame, k: Int): DataFrame = {
+    val asg = e.crossJoin(broadcast(cents.withColumn("csn", transform(col("cs"), ce => norm(ce)))))
+      .withColumn("__ne", norm(col("embedding")))
+      .withColumn("cl", transform(col("cs"), (ce, i) =>
+        dot(col("embedding"), ce) / (col("__ne") * element_at(col("csn"), i + 1))))
+      .withColumn("cell", array_position(col("cl"), array_max(col("cl"))))
+    val c = asg.select(col("vec_id").as("vc"), col("embedding").as("ec"),
+      col("__ne").as("nc"), col("cell"))
+    val q = withRunnerUp(asg.filter(col("vec_id") < 50), "cl", k, KMeans.Cosine)
+      .select(col("vec_id").as("vq"), col("embedding").as("eq"), col("__ne").as("nq"),
+        explode(array(col("cell"), col("cell2"))).as("cell"))
+    topK(candidates(q, c, "cell"), 1, keepRn = false)
+  }
+
+  /** rounded ADC distance: per subspace, the query's table entry at
+    * the candidate's code (dl<m>, code<m>), summed */
+  private def adist: Column =
+    round((0 until M).map(m =>
+      element_at(col(s"dl$m"), col(s"code$m").cast("int"))).reduce(_ + _), 6)
+
+  /** ADC pairs (vq, vec_id, adist) over per-vector subspace distance
+    * lists dl0..dl<M-1>: a vector's codes are the argmins, and the
+    * first 50 vectors' lists are the broadcast query tables. */
+  private def adcPairs(withDl: DataFrame): DataFrame = {
+    val codes = withDl.select(col("vec_id") +: (0 until M).map(m =>
+      array_position(col(s"dl$m"), array_min(col(s"dl$m"))).as(s"code$m")): _*)
+    val q = withDl.filter(col("vec_id") < 50)
+      .select(col("vec_id").as("vq") +: (0 until M).map(m => col(s"dl$m")): _*)
+    codes.crossJoin(broadcast(q)).filter(col("vq") =!= col("vec_id"))
+      .withColumn("adist", adist)
+  }
+
+  /** Exact re-rank of the ADC top-32 shortlist of `adc` (vq, vec_id,
+    * adist) by squared L2 over the vectors of `e` — the standard refine
+    * step: recall is then bounded by shortlist membership, not code
+    * reconstruction error. ~32 exact distances per query, a tiny join
+    * back to the vectors by id. */
+  private def l2Rerank(adc: DataFrame, e: DataFrame): DataFrame =
+    perQuery(adc, "vq", 32, "rn", col("adist").asc, col("vec_id").asc)
+      .select(col("vq"), col("vec_id").as("vc"))
+      .join(e.select(col("vec_id").as("vc"), col("embedding").as("ec")), "vc")
+      .join(e.select(col("vec_id").as("vq"), col("embedding").as("eq")), "vq")
+      .withColumn("dist", round(l2sq(col("eq"), col("ec")), 6))
+      .groupBy(col("vq"))
+      .agg(min(struct(col("dist"), col("vc"))).as("m"))
+      .select(col("vq"), col("m.vc").as("vc"), col("m.dist").as("dist"))
+
   def queries: Map[String, Q] = Map(
     // per-vector stats: L2 norm + mean element (scan-only sanity layer)
     "sim_norms" -> { (s, d) =>
       import s.implicits._
       Tables(s, d, "embeddings")
         .select($"vec_id", $"label",
-          round(sqrt(dot($"embedding", $"embedding")), 6).as("l2_norm"),
+          round(norm($"embedding"), 6).as("l2_norm"),
           round(dot($"embedding", $"embedding"), 6).as("sq_norm"))
     },
 
@@ -114,7 +248,7 @@ object SimilarityQueries extends QueryModule {
       val b = e.select($"vec_id".as("vb"), $"embedding".as("eb"),
         norm($"embedding").as("nb"))
       a.crossJoin(b).filter($"va" < $"vb")
-        .withColumn("cos", round(dot($"ea", $"eb") / ($"na" * $"nb"), 6))
+        .withColumn("cos", pairCos($"ea", $"eb", $"na", $"nb"))
         .filter($"cos" >= 0.35)
         .select($"va", $"vb", $"cos")
     },
@@ -127,12 +261,7 @@ object SimilarityQueries extends QueryModule {
         $"embedding".as("eq"), norm($"embedding").as("nq"))
       val c = e.select($"vec_id".as("vc"), $"embedding".as("ec"),
         norm($"embedding").as("nc"))
-      val w = Window.partitionBy($"vq").orderBy($"cos".desc, $"vc".asc)
-      q.crossJoin(c).filter($"vq" =!= $"vc")
-        .withColumn("cos", round(dot($"eq", $"ec") / ($"nq" * $"nc"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"vq", $"vc", $"cos", $"rn")
+      topK(candidates(q, c), 3, keepRn = true)
     },
 
     // LSH bucket assignment (map-side, the scale path)
@@ -144,34 +273,12 @@ object SimilarityQueries extends QueryModule {
 
     // multi-table LSH ANN with OR-amplification (the 100 TB recall
     // path VERDICT r1 flagged): NumTables independent hyperplane
-    // families, a candidate is any pair sharing a bucket in ANY table.
-    // All table keys are computed map-side in one scan and exploded to
-    // (tbl, bucket) rows, so the whole candidate generation is ONE
-    // equi-join shuffle regardless of table count — the same exploded
-    // band-key shape as dedup_minhash_pairs. A pair found by several
-    // tables is deduped by the max(cos) aggregate (cos is identical
-    // across tables), then top-1 per query.
+    // families, a candidate is any pair sharing a bucket in ANY table
+    // (`lshPairs`), then top-1 per query.
     "sim_lsh_multitable" -> { (s, d) =>
       import s.implicits._
-      val tb = explode(array((0 until NumTables).map(t =>
-        struct(lit(t).as("tbl"),
-          lshBucket($"embedding", t * BitsPerTable, BitsPerTable).as("bucket"))): _*))
-      val e = Tables(s, d, "embeddings")
-        .select($"vec_id", $"embedding", norm($"embedding").as("nr"), tb.as("tb"))
-        .select($"vec_id", $"embedding", $"nr",
-          $"tb.tbl".as("tbl"), $"tb.bucket".as("bucket"))
-      val q = e.filter($"vec_id" < 50)
-        .select($"vec_id".as("vq"), $"embedding".as("eq"), $"nr".as("nq"),
-          $"tbl", $"bucket")
-      val c = e.select($"vec_id".as("vc"), $"embedding".as("ec"),
-        $"nr".as("nc"), $"tbl", $"bucket")
-      val w = Window.partitionBy($"vq").orderBy($"cos".desc, $"vc".asc)
-      q.join(c, Seq("tbl", "bucket")).filter($"vq" =!= $"vc")
-        .withColumn("cos", round(dot($"eq", $"ec") / ($"nq" * $"nc"), 6))
-        .groupBy($"vq", $"vc").agg(max($"cos").as("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"vq", $"vc", $"cos")
+      topK(lshPairs(Tables(s, d, "embeddings"), "vec_id", "vq", "vc", _ =!= _,
+        Some($"vec_id" < 50)), 1, keepRn = false)
     },
 
     // IVF-style ANN: coarse-quantize every vector to its nearest
@@ -188,32 +295,7 @@ object SimilarityQueries extends QueryModule {
       import s.implicits._
       val K = 8
       val e = Tables(s, d, "embeddings").select($"vec_id", $"embedding")
-      val cents = e.filter($"vec_id" < K)
-        .agg(sort_array(collect_list(struct($"vec_id", $"embedding"))).as("cs"))
-        .select(transform($"cs", c => c.getField("embedding")).as("cs"))
-        // centroid self-norms once per BROADCAST ROW, not once per
-        // (vector, centroid) — round-15 norm hoist, values identical
-        .withColumn("csn", transform($"cs", ce => norm(ce)))
-      val asg = e.crossJoin(broadcast(cents))
-        .withColumn("__ne", norm($"embedding"))
-        .withColumn("cl", transform($"cs", (ce, i) =>
-          dot($"embedding", ce) / ($"__ne" * element_at($"csn", i + 1))))
-        .withColumn("cell", array_position($"cl", array_max($"cl")))
-      val c = asg.select($"vec_id".as("vc"), $"embedding".as("ec"),
-        $"__ne".as("nc"), $"cell")
-      val q = asg.filter($"vec_id" < 50)
-        .withColumn("cl2", transform(sequence(lit(1), lit(K)),
-          i => when(i.cast("long") === $"cell", lit(-9e9))
-            .otherwise(element_at($"cl", i))))
-        .withColumn("cell2", array_position($"cl2", array_max($"cl2")))
-        .select($"vec_id".as("vq"), $"embedding".as("eq"), $"__ne".as("nq"),
-          explode(array($"cell", $"cell2")).as("cell"))
-      val w = Window.partitionBy($"vq").orderBy($"cos".desc, $"vc".asc)
-      q.join(c, Seq("cell")).filter($"vq" =!= $"vc")
-        .withColumn("cos", round(dot($"eq", $"ec") / ($"nq" * $"nc"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"vq", $"vc", $"cos")
+      ivfProbe2(e, firstVectors(e, K), K)
     },
 
     // one Lloyd (k-means) update of the IVF coarse quantizer, fully
@@ -225,7 +307,6 @@ object SimilarityQueries extends QueryModule {
     // corpus scale the update shuffles K*Dim tiny rows, never vectors.
     "sim_kmeans_step" -> { (s, d) =>
       import s.implicits._
-      import graft.operators.KMeans
       val K = 8
       val e = Tables(s, d, "embeddings").select($"vec_id", $"embedding")
       val c0 = KMeans.seed(e, K)
@@ -242,36 +323,14 @@ object SimilarityQueries extends QueryModule {
     // through the whole training + search chain.
     "sim_ivf_trained" -> { (s, d) =>
       import s.implicits._
-      import graft.operators.KMeans
       val K = 8
       val e = Tables(s, d, "embeddings").select($"vec_id", $"embedding")
-      val cents = KMeans.fit(e, K, iters = 2)
-        .withColumn("csn", transform($"cs", ce => norm(ce)))
-      val asg = e.crossJoin(broadcast(cents))
-        .withColumn("__ne", norm($"embedding"))
-        .withColumn("cl", transform($"cs", (ce, i) =>
-          dot($"embedding", ce) / ($"__ne" * element_at($"csn", i + 1))))
-        .withColumn("cell", array_position($"cl", array_max($"cl")))
-      val c = asg.select($"vec_id".as("vc"), $"embedding".as("ec"),
-        $"__ne".as("nc"), $"cell")
-      val q = asg.filter($"vec_id" < 50)
-        .withColumn("cl2", transform(sequence(lit(1), lit(K)),
-          i => when(i.cast("long") === $"cell", lit(-9e9))
-            .otherwise(element_at($"cl", i))))
-        .withColumn("cell2", array_position($"cl2", array_max($"cl2")))
-        .select($"vec_id".as("vq"), $"embedding".as("eq"), $"__ne".as("nq"),
-          explode(array($"cell", $"cell2")).as("cell"))
-      val w = Window.partitionBy($"vq").orderBy($"cos".desc, $"vc".asc)
-      q.join(c, Seq("cell")).filter($"vq" =!= $"vc")
-        .withColumn("cos", round(dot($"eq", $"ec") / ($"nq" * $"nc"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"vq", $"vc", $"cos")
+      ivfProbe2(e, KMeans.fit(e, K, iters = 2), K)
     },
 
     // Product-quantization ANN (the third standard ANN scale path,
     // beside IVF and LSH): split the 64-dim vector into M=4 subspaces,
-    // quantize each subvector to its nearest of Ks=8 subspace
+    // quantize each subvector to its nearest of Ks=16 subspace
     // centroids, so a vector compresses to M small codes. Search is
     // asymmetric distance computation (ADC): each query precomputes a
     // per-subspace distance table to all Ks centroids (M*Ks doubles),
@@ -289,27 +348,16 @@ object SimilarityQueries extends QueryModule {
     // like sim_ivf_trained does for IVF).
     "sim_pq_ann" -> { (s, d) =>
       import s.implicits._
-      val M = 4; val Sub = 16; val Ks = 16
       val e = Tables(s, d, "embeddings").select($"vec_id", $"embedding")
-      val cb = e.filter($"vec_id" < Ks)
-        .agg(sort_array(collect_list(struct($"vec_id", $"embedding"))).as("cs"))
-        .select(transform($"cs", c => c.getField("embedding")).as("cs"))
       // dl_m = distances of this vector's m-th subvector to all Ks
       // subspace centroids: the SAME expression serves encoding
       // (argmin -> code) and query distance tables (ADC lookups)
-      val withDl = e.crossJoin(broadcast(cb))
+      val withDl = e.crossJoin(broadcast(firstVectors(e, Ks)))
         .select($"vec_id" +: $"embedding" +: (0 until M).map(m =>
           transform($"cs", c => l2sq(
             slice($"embedding", m * Sub + 1, Sub),
             slice(c, m * Sub + 1, Sub))).as(s"dl$m")): _*)
-      val codes = withDl.select($"vec_id" +: (0 until M).map(m =>
-        array_position(col(s"dl$m"), array_min(col(s"dl$m"))).as(s"code$m")): _*)
-      val q = withDl.filter($"vec_id" < 50)
-        .select($"vec_id".as("vq") +: (0 until M).map(m => col(s"dl$m")): _*)
-      val adist = (0 until M).map(m =>
-        element_at(col(s"dl$m"), col(s"code$m").cast("int"))).reduce(_ + _)
-      codes.crossJoin(broadcast(q)).filter($"vq" =!= $"vec_id")
-        .withColumn("adist", round(adist, 6))
+      adcPairs(withDl)
         .groupBy($"vq")
         .agg(min(struct($"adist", $"vec_id".as("vc"))).as("m"))
         .select($"vq", $"m.vc".as("vc"), $"m.adist".as("adist"))
@@ -318,10 +366,12 @@ object SimilarityQueries extends QueryModule {
     // PQ with TRAINED per-subspace codebooks — the open item from
     // sim_pq_ann's docstring: each of the M=4 subspaces gets its own
     // Ks=16 codebook from 2 Lloyd iterations of L2 k-means run on the
-    // SLICED 16-dim subvectors (operators/KMeans.fitL2). Training is M
-    // independent tiny k-means fits (each the two-shuffle-per-iteration
-    // plan); the search plan is bit-identical to sim_pq_ann — codebooks
-    // are still M broadcast rows, encoding map-side, ADC lookups only.
+    // SLICED 16-dim subvectors (operators/KMeans.fit with KMeans.L2).
+    // Training is M independent tiny k-means fits (each the
+    // two-shuffle-per-iteration plan); the search plan is sim_pq_ann's
+    // — codebooks are still M broadcast rows, encoding map-side, ADC
+    // lookups only — plus the exact re-rank of the ADC top-32
+    // (`l2Rerank`; 0.08 recall without it, see AnnRecallSpec).
     // Per-subspace training is what real PQ (Jegou et al., TPAMI'11)
     // does: a shared codebook wastes Ks codes describing whole-vector
     // structure, per-subspace codebooks each specialize on their 16
@@ -329,8 +379,6 @@ object SimilarityQueries extends QueryModule {
     // sim_pq_ann.
     "sim_pq_trained" -> { (s, d) =>
       import s.implicits._
-      import graft.operators.KMeans
-      val M = 4; val Sub = 16; val Ks = 16
       val e = Tables(s, d, "embeddings").select($"vec_id", $"embedding")
       // The M subspace fits are INDEPENDENT (each trains on its own
       // 16-dim slice) but each fit is a chain of small blocking
@@ -350,7 +398,7 @@ object SimilarityQueries extends QueryModule {
           Future {
             val sub = e.select($"vec_id",
               slice($"embedding", m * Sub + 1, Sub).as("embedding"))
-            KMeans.fitL2(sub, Ks, iters = 2).select(col("cs").as(s"cs$m"))
+            KMeans.fit(sub, Ks, iters = 2, KMeans.L2).select(col("cs").as(s"cs$m"))
           }
         }), Duration.Inf)
       }
@@ -358,27 +406,7 @@ object SimilarityQueries extends QueryModule {
       val withDl = withCb.select($"vec_id" +: (0 until M).map(m =>
         transform(col(s"cs$m"), c => l2sq(
           slice($"embedding", m * Sub + 1, Sub), c)).as(s"dl$m")): _*)
-      val codes = withDl.select($"vec_id" +: (0 until M).map(m =>
-        array_position(col(s"dl$m"), array_min(col(s"dl$m"))).as(s"code$m")): _*)
-      val q = withDl.filter($"vec_id" < 50)
-        .select($"vec_id".as("vq") +: (0 until M).map(m => col(s"dl$m")): _*)
-      val adist = (0 until M).map(m =>
-        element_at(col(s"dl$m"), col(s"code$m").cast("int"))).reduce(_ + _)
-      // exact re-rank of the ADC top-32 shortlist (the standard refine
-      // step): recall is then bounded by shortlist membership, not code
-      // reconstruction error — 0.08 without it, see AnnRecallSpec
-      val wAdc = Window.partitionBy($"vq").orderBy($"adist".asc, $"vec_id".asc)
-      val shortlist = codes.crossJoin(broadcast(q)).filter($"vq" =!= $"vec_id")
-        .withColumn("adist", round(adist, 6))
-        .withColumn("rn", row_number().over(wAdc)).filter($"rn" <= 32)
-        .select($"vq", $"vec_id".as("vc"))
-      shortlist
-        .join(e.select($"vec_id".as("vc"), $"embedding".as("ec")), "vc")
-        .join(e.select($"vec_id".as("vq"), $"embedding".as("eq")), "vq")
-        .withColumn("dist", round(l2sq($"eq", $"ec"), 6))
-        .groupBy($"vq")
-        .agg(min(struct($"dist", $"vc")).as("m"))
-        .select($"vq", $"m.vc".as("vc"), $"m.dist".as("dist"))
+      l2Rerank(adcPairs(withDl), e)
     },
 
     // IVF-PQ: the canonical billion-vector layout (IVF coarse cells +
@@ -400,7 +428,7 @@ object SimilarityQueries extends QueryModule {
     // without changing the plan, as sim_ivf_trained shows for IVF.
     "sim_ivfpq_ann" -> { (s, d) =>
       import s.implicits._
-      val K = 4; val M = 4; val Sub = 16; val Ks = 16
+      val K = 4
       val e = Tables(s, d, "embeddings").select($"vec_id", $"embedding")
       // TRAINED coarse quantizer: 2 cosine-Lloyd iterations (the same
       // operators/KMeans.fit as sim_ivf_trained); cells are then
@@ -408,7 +436,7 @@ object SimilarityQueries extends QueryModule {
       // residuals, which is where PQ gets its accuracy back — recall@1
       // 0.04 (untrained seed) -> see AnnRecallSpec with training +
       // exact re-rank.
-      val cents = graft.operators.KMeans.fit(e, K, iters = 2)
+      val cents = KMeans.fit(e, K, iters = 2)
         .select($"cs".as("ccs"))
       // coarse assign + residual, map-side after one centroid broadcast
       val asg = e.crossJoin(broadcast(cents))
@@ -418,9 +446,7 @@ object SimilarityQueries extends QueryModule {
           element_at($"ccs", $"cell".cast("int")),
           (x, c) => x.cast("double") - c.cast("double")))
       // shared PQ codebook = residuals of the first Ks vectors
-      val cb = asg.filter($"vec_id" < Ks)
-        .agg(sort_array(collect_list(struct($"vec_id", $"resid"))).as("cs"))
-        .select(transform($"cs", c => c.getField("resid")).as("cb"))
+      val cb = firstVectors(asg, Ks, "resid", "cb")
       // encode: M argmin codes over the residual subspaces
       val enc = asg.crossJoin(broadcast(cb))
         .select($"vec_id" +: $"cell" +: (0 until M).map { m =>
@@ -430,11 +456,7 @@ object SimilarityQueries extends QueryModule {
         }: _*)
       // queries: best + runner-up coarse cell, per-probe residual ->
       // per-probe ADC tables
-      val q = asg.filter($"vec_id" < 50)
-        .withColumn("cdl2", transform(sequence(lit(1), lit(K)),
-          i => when(i.cast("long") === $"cell", lit(9e9))
-            .otherwise(element_at($"cdl", i))))
-        .withColumn("cell2", array_position($"cdl2", array_min($"cdl2")))
+      val q = withRunnerUp(asg.filter($"vec_id" < 50), "cdl", K, KMeans.L2)
         .select($"vec_id".as("vq"), $"embedding".as("eq"),
           explode(array($"cell", $"cell2")).as("pcell"))
         .crossJoin(broadcast(cents))
@@ -447,38 +469,23 @@ object SimilarityQueries extends QueryModule {
             slice($"rq", m * Sub + 1, Sub), slice(rb, m * Sub + 1, Sub)))
             .as(s"dl$m")
         }: _*)
-      val adist = (0 until M).map(m =>
-        element_at(col(s"dl$m"), col(s"code$m").cast("int"))).reduce(_ + _)
-      // re-rank: exact L2 on the ADC top-10 shortlist — the standard
-      // refine step. Only ~10 exact distances per query (a tiny join
-      // back to the vectors by id), so the cost model is unchanged;
-      // recall rises to the probed-cell ceiling instead of the code
-      // reconstruction error.
-      val wAdc = Window.partitionBy($"vq").orderBy($"adist".asc, col("vec_id").asc)
-      val shortlist = q
-        .join(enc, q("pcell") === enc("cell") && $"vq" =!= enc("vec_id"))
-        .withColumn("adist", round(adist, 6))
-        .withColumn("rn", row_number().over(wAdc)).filter($"rn" <= 32)
-        .select($"vq", col("vec_id").as("vc"))
-      shortlist
-        .join(e.select($"vec_id".as("vc"), $"embedding".as("ec")), "vc")
-        .join(e.select($"vec_id".as("vq"), $"embedding".as("eq")), "vq")
-        .withColumn("dist", round(l2sq($"eq", $"ec"), 6))
-        .groupBy($"vq")
-        .agg(min(struct($"dist", $"vc")).as("m"))
-        .select($"vq", $"m.vc".as("vc"), $"m.dist".as("dist"))
+      // ADC over the probed cells, then the exact re-rank of the
+      // top-32: the recall rises to the probed-cell ceiling instead of
+      // the code reconstruction error
+      l2Rerank(q.join(enc, q("pcell") === enc("cell") && $"vq" =!= enc("vec_id"))
+        .withColumn("adist", adist), e)
     },
 
     // Embedding-cosine near-duplicate CLUSTERS — semantic dedup, the
     // embedding-space sibling of dedup_minhash/dedup_simhash: candidate
-    // pairs from the OR-amplified multitable LSH blocking (one exploded
-    // (tbl,bucket) equi-join — never all-pairs), verified with exact
-    // cosine >= 0.35, then collapsed to components (min-id label
-    // propagation, operators/ConnectedComponents) with a canonical
-    // representative per cluster. This is the "keep one of each
-    // near-identical meaning" curation op; at corpus scale every stage
-    // is the shapes already proven: map-side signatures, one candidate
-    // shuffle, O(V) component state.
+    // pairs from the OR-amplified multitable LSH blocking (`lshPairs`,
+    // one exploded (tbl,bucket) equi-join — never all-pairs), verified
+    // with exact cosine >= 0.35, then collapsed to components (min-id
+    // label propagation, operators/ConnectedComponents) with a
+    // canonical representative per cluster. This is the "keep one of
+    // each near-identical meaning" curation op; at corpus scale every
+    // stage is the shapes already proven: map-side signatures, one
+    // candidate shuffle, O(V) component state.
     //
     // Exact-duplicate collapse (operators/ContentFamilies): bit-
     // identical embeddings land in the same bucket of EVERY table and
@@ -499,20 +506,7 @@ object SimilarityQueries extends QueryModule {
       val reps = fam.reps.select($"rep".as("vec_id"), $"embedding")
       // cached: both reads of the labelled rows below join it
       val mapping = Cached(fam.mapping)
-      val tb = explode(array((0 until NumTables).map(t =>
-        struct(lit(t).as("tbl"),
-          lshBucket($"embedding", t * BitsPerTable, BitsPerTable).as("bucket"))): _*))
-      val e = reps
-        .select($"vec_id", $"embedding", norm($"embedding").as("nr"), tb.as("tb"))
-        .select($"vec_id", $"embedding", $"nr",
-          $"tb.tbl".as("tbl"), $"tb.bucket".as("bucket"))
-      val a = e.select($"vec_id".as("va"), $"embedding".as("ea"),
-        $"nr".as("na"), $"tbl", $"bucket")
-      val b = e.select($"vec_id".as("vb"), $"embedding".as("eb"),
-        $"nr".as("nb"), $"tbl", $"bucket")
-      val edges = a.join(b, Seq("tbl", "bucket")).filter($"va" < $"vb")
-        .withColumn("cos", round(dot($"ea", $"eb") / ($"na" * $"nb"), 6))
-        .groupBy($"va", $"vb").agg(max($"cos").as("cos"))
+      val edges = lshPairs(reps, "vec_id", "va", "vb", _ < _)
         .filter($"cos" >= 0.35)
         .select($"va".as("src"), $"vb".as("dst"))
       val verts = reps.select($"vec_id".as("id"))
@@ -529,8 +523,8 @@ object SimilarityQueries extends QueryModule {
     // (not a fixed query set) over the OR-amplified multitable LSH
     // candidates — the primitive under SemDeDup-style semantic pruning,
     // graph-based dedup, and kNN-graph clustering. Same single exploded
-    // (tbl, bucket) equi-join as sim_lsh_multitable; the per-vector
-    // top-k is a window over candidate pairs only.
+    // (tbl, bucket) equi-join as sim_lsh_multitable (`lshPairs`); the
+    // per-vector top-k is a window over candidate pairs only.
     //
     // Exact-copy collapse (operators/ContentFamilies): bit-identical
     // embeddings share every bucket, so a corpus with R copies per
@@ -566,12 +560,7 @@ object SimilarityQueries extends QueryModule {
       val q = e.filter($"vec_id" < 50)
         .select($"vec_id".as("vq"), $"embedding".as("eq"), $"nr".as("nq"), $"bucket")
       val c = e.select($"vec_id".as("vc"), $"embedding".as("ec"), $"nr".as("nc"), $"bucket")
-      val w = Window.partitionBy($"vq").orderBy($"cos".desc, $"vc".asc)
-      q.join(c, Seq("bucket")).filter($"vq" =!= $"vc")
-        .withColumn("cos", round(dot($"eq", $"ec") / ($"nq" * $"nc"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"vq", $"vc", $"cos")
+      topK(candidates(q, c, "bucket"), 1, keepRn = false)
     },
 
     // Johnson–Lindenstrauss sign projection 64 -> 16 dims, scaled by
@@ -591,8 +580,7 @@ object SimilarityQueries extends QueryModule {
       import s.implicits._
       Tables(s, d, "embeddings")
         .select($"vec_id", $"label",
-          posexplode(transform(
-            call_function("graft_rand_project", $"embedding", lit(RpDim)),
+          posexplode(transform(randProject($"embedding"),
             x => round(x / 4.0, 6) + lit(0.0))))
         .withColumnRenamed("pos", "dim")
         .withColumnRenamed("col", "rp")
@@ -608,17 +596,12 @@ object SimilarityQueries extends QueryModule {
     "sim_rp_topk" -> { (s, d) =>
       import s.implicits._
       val e = Tables(s, d, "embeddings")
-        .select($"vec_id",
-          call_function("graft_rand_project", $"embedding", lit(RpDim)).as("rp"))
+        .select($"vec_id", randProject($"embedding").as("rp"))
       val q = e.filter($"vec_id" < 10).select($"vec_id".as("vq"),
         $"rp".as("rq"), norm($"rp").as("nrq"))
       val c = e.select($"vec_id".as("vc"), $"rp".as("rc"), norm($"rp").as("nrc"))
-      val w = Window.partitionBy($"vq").orderBy($"cos".desc, $"vc".asc)
-      q.crossJoin(c).filter($"vq" =!= $"vc")
-        .withColumn("cos", round(dot($"rq", $"rc") / ($"nrq" * $"nrc"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"vq", $"vc", $"cos", $"rn")
+      topK(q.crossJoin(c).filter($"vq" =!= $"vc")
+        .withColumn("cos", pairCos($"rq", $"rc", $"nrq", $"nrc")), 3, keepRn = true)
     },
 
     // the COMPLETE two-stage retrieval: stage 1 ranks candidates by
@@ -634,29 +617,25 @@ object SimilarityQueries extends QueryModule {
     "sim_rp_rerank" -> { (s, d) =>
       import s.implicits._
       val e = Tables(s, d, "embeddings")
-        .select($"vec_id", $"embedding",
-          call_function("graft_rand_project", $"embedding", lit(RpDim)).as("rp"))
+        .select($"vec_id", $"embedding", randProject($"embedding").as("rp"))
       val q = e.filter($"vec_id" < 10)
         .select($"vec_id".as("vq"), $"embedding".as("eq"), $"rp".as("rq"),
           norm($"rp").as("nrq"))
       val c = e.select($"vec_id".as("vc"), $"embedding".as("ec"), $"rp".as("rc"),
         norm($"rp").as("nrc"))
-      val wCand = Window.partitionBy($"vq").orderBy($"pcos".desc, $"vc".asc)
-      val cand = q.crossJoin(c).filter($"vq" =!= $"vc")
-        .withColumn("pcos", dot($"rq", $"rc") / ($"nrq" * $"nrc"))
-        .withColumn("crn", row_number().over(wCand))
-        .filter($"crn" <= 50)
-      val wRank = Window.partitionBy($"vq").orderBy($"cos".desc, $"vc".asc)
-      cand
-        .withColumn("cos", round(cosine($"eq", $"ec"), 6))
-        .withColumn("rn", row_number().over(wRank))
-        .filter($"rn" <= 3)
-        .select($"vq", $"vc", $"cos", $"rn")
+      val cand = perQuery(q.crossJoin(c).filter($"vq" =!= $"vc")
+        .withColumn("pcos", dot($"rq", $"rc") / ($"nrq" * $"nrc")),
+        "vq", 50, "crn", $"pcos".desc, $"vc".asc)
+      topK(cand.withColumn("cos", round(cosine($"eq", $"ec"), 6)), 3, keepRn = true)
     }
   )
 
   /** projected dimensionality for the JL family */
   private val RpDim = 16
+
+  /** the codegen'd RandProject kernel: RpDim unscaled projections */
+  private def randProject(emb: Column): Column =
+    call_function("graft_rand_project", emb, lit(RpDim))
 
   /** DuckDB mirror of RandProject output element j (unscaled): the
     * sign comes from the same xor-mix integer hash as the kernel —
@@ -686,7 +665,7 @@ object SimilarityQueries extends QueryModule {
     * frame — exposed for KnnGraphSpec's plain-vs-collapsed equality
     * pin; semantics documented at the `sim_knn_graph` query. */
   private[graft] def knnGraphOf(s: org.apache.spark.sql.SparkSession,
-                                emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+                                emb: DataFrame): DataFrame = {
     import s.implicits._
     val K = 5
     // the embeddings are cached as the families' input, and both
@@ -700,20 +679,7 @@ object SimilarityQueries extends QueryModule {
         Window.partitionBy($"rep").orderBy($"vec_id")))
       .filter($"mrn" <= K + 1)
       .select($"rep", $"vec_id")
-    val tb = explode(array((0 until NumTables).map(t =>
-      struct(lit(t).as("tbl"),
-        lshBucket($"embedding", t * BitsPerTable, BitsPerTable).as("bucket"))): _*))
-    val e = fam
-      .select($"rep", $"embedding", norm($"embedding").as("nr"), tb.as("tb"))
-      .select($"rep", $"embedding", $"nr",
-        $"tb.tbl".as("tbl"), $"tb.bucket".as("bucket"))
-    val a = e.select($"rep".as("ra"), $"embedding".as("ea"),
-      $"nr".as("na"), $"tbl", $"bucket")
-    val b = e.select($"rep".as("rb"), $"embedding".as("eb"),
-      $"nr".as("nb"), $"tbl", $"bucket")
-    val repEdges = a.join(b, Seq("tbl", "bucket")).filter($"ra" =!= $"rb")
-      .withColumn("cos", round(dot($"ea", $"eb") / ($"na" * $"nb"), 6))
-      .groupBy($"ra", $"rb").agg(max($"cos").as("cos"))
+    val repEdges = lshPairs(fam, "rep", "ra", "rb", _ =!= _)
     val selfEdges = fam.filter($"fsize" > 1)
       .select($"rep".as("ra"), $"rep".as("rb"), lit(1.0).as("cos"))
     val top = repEdges.unionByName(selfEdges)
@@ -723,13 +689,128 @@ object SimilarityQueries extends QueryModule {
     val cand = top
       .join(members6.select($"rep".as("rb"), $"vec_id".as("vb")), Seq("rb"))
       .select($"ra", $"cos", $"vb")
-    val wv = Window.partitionBy($"va").orderBy($"cos".desc, $"vb".asc)
-    cand.join(mapping.select($"vec_id".as("va"), $"rep".as("ra")), Seq("ra"))
-      .filter($"va" =!= $"vb")
-      .withColumn("rn", row_number().over(wv))
-      .filter($"rn" <= K)
-      .select($"va", $"vb", $"cos", $"rn")
+    topK(cand.join(mapping.select($"vec_id".as("va"), $"rep".as("ra")), Seq("ra"))
+      .filter($"va" =!= $"vb"), K, keepRn = true, "va", "vb")
   }
+
+  /** DuckDB per-centroid cosine list of `emb` against the centroid
+    * list `cs` */
+  private def clOf(emb: String, cs: String): String =
+    s"list_transform($cs, ce -> ${cosineSql(emb, "ce")})"
+
+  /** full-vector L2^2 on raw float columns, both sides cast per
+    * element (mirrors the Spark kernel's widening exactly) */
+  private def l2fullSql(a: String, b: String): String =
+    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
+      s"list_transform(range(1, ${Dim + 1}), i -> " +
+      s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
+      s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), " +
+      s"(x, y) -> x + y)"
+
+  /** DuckDB mirror of `topK` over the pairs CTE `from` (q, c, cos) */
+  private def topKSql(from: String, k: Int, keepRn: Boolean,
+                      q: String = "vq", c: String = "vc"): String =
+    s"""ranked AS (
+           SELECT $q, $c, cos,
+             ROW_NUMBER() OVER (PARTITION BY $q ORDER BY cos DESC, $c ASC) AS rn
+           FROM $from)
+         SELECT $q, $c, cos${if (keepRn) ", rn" else ""} FROM ranked WHERE rn ${if (k == 1) "= 1" else s"<= $k"}"""
+
+  /** DuckDB mirror of `ivfProbe2` after the per-centroid cosine list
+    * `cl` of CTE `asg`: cell, runner-up, probe join, top-1 */
+  private def ivfProbeSql(k: Int): String =
+    s"""asg2 AS (
+           SELECT vec_id, embedding, cl,
+             CAST(list_indexof(cl, list_aggregate(cl, 'max')) AS BIGINT) AS cell
+           FROM asg),
+         q AS (
+           SELECT vec_id AS vq, embedding AS eq, cell,
+             list_transform(range(1, ${k + 1}),
+               i -> CASE WHEN i = cell THEN -9e9 ELSE cl[i] END) AS cl2
+           FROM asg2 WHERE vec_id < 50),
+         q2 AS (
+           SELECT vq, eq, unnest([cell,
+             CAST(list_indexof(cl2, list_aggregate(cl2, 'max')) AS BIGINT)]) AS cell
+           FROM q),
+         cand AS (
+           SELECT q2.vq, a.vec_id AS vc,
+             ROUND(${cosineSql("q2.eq", "a.embedding")}, 6) AS cos
+           FROM q2 JOIN asg2 a ON q2.cell = a.cell AND q2.vq <> a.vec_id),
+         ${topKSql("cand", 1, keepRn = false)}"""
+
+  /** DuckDB mirror of `KMeans.fit(e, k, iters = 2)` (cosine): the two
+    * Lloyd iterations unrolled as CTE blocks cent0 .. cent2 */
+  private def cosineLloydSql(k: Int): String = {
+    val train = new StringBuilder
+    train ++= s"""cent0 AS (
+           SELECT list_transform(list(embedding ORDER BY vec_id),
+             v -> list_transform(v, x -> CAST(x AS DOUBLE))) AS cs
+           FROM embeddings WHERE vec_id < $k)"""
+    for (i <- 0 until 2) {
+      train ++= s""",
+         tr${i}p AS (
+           SELECT e.vec_id, e.embedding, ${clOf("e.embedding", "c.cs")} AS cl
+           FROM embeddings e, cent$i c),
+         tr$i AS (
+           SELECT vec_id, embedding,
+             CAST(list_indexof(cl, list_aggregate(cl, 'max')) AS BIGINT) AS cell
+           FROM tr${i}p),
+         sums$i AS (
+           SELECT cell, i AS pos,
+             CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(27,10))) AS DOUBLE)
+               / COUNT(*) AS m
+           FROM tr$i, range(1, ${Dim + 1}) t(i)
+           GROUP BY cell, i),
+         nc$i AS (SELECT cell, list(m ORDER BY pos) AS cent FROM sums$i GROUP BY cell),
+         seeds$i AS (
+           SELECT i AS cell, c.cs[i] AS seed
+           FROM cent$i c, range(1, ${k + 1}) t(i)),
+         cent${i + 1} AS (
+           SELECT list(COALESCE(nc$i.cent, s.seed) ORDER BY s.cell) AS cs
+           FROM seeds$i s LEFT JOIN nc$i ON s.cell = nc$i.cell)"""
+    }
+    train.toString
+  }
+
+  /** DuckDB PQ encoding: code<m> = argmin of dl<m>, as SELECT items */
+  private def codesSql: String = (0 until M).map(m =>
+    s"CAST(list_indexof(dl$m, list_aggregate(dl$m, 'min')) AS BIGINT) AS code$m")
+    .mkString(",\n             ")
+
+  /** DuckDB ADC distance of query tables `q.dl<m>` at the codes of
+    * relation `codes` */
+  private def adistSql(codes: String): String =
+    (0 until M).map(m => s"q.dl$m[$codes.code$m]").mkString(" + ")
+
+  /** DuckDB mirror of `adcPairs` over the distance lists CTE `wdl`:
+    * CTEs `codes` and `cand` */
+  private def adcPairsSql: String =
+    s"""codes AS (
+           SELECT vec_id,
+             $codesSql
+           FROM wdl),
+         cand AS (
+           SELECT q.vec_id AS vq, c.vec_id AS vc,
+             ROUND(${adistSql("c")}, 6) AS adist
+           FROM wdl q JOIN codes c ON q.vec_id < 50 AND q.vec_id <> c.vec_id),"""
+
+  /** DuckDB mirror of `l2Rerank` over the ADC pairs CTE `cand` */
+  private def l2RerankSql: String =
+    s"""ranked AS (
+           SELECT vq, vc, adist,
+             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY adist ASC, vc ASC) AS rn
+           FROM cand),
+         rr AS (
+           SELECT s.vq, s.vc,
+             ROUND(${l2fullSql("qe.embedding", "ce.embedding")}, 6) AS dist
+           FROM (SELECT vq, vc FROM ranked WHERE rn <= 32) s
+           JOIN embeddings qe ON qe.vec_id = s.vq
+           JOIN embeddings ce ON ce.vec_id = s.vc),
+         rr2 AS (
+           SELECT vq, vc, dist,
+             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY dist ASC, vc ASC) AS rn
+           FROM rr)
+         SELECT vq, vc, dist FROM rr2 WHERE rn = 1"""
 
   def oracle: Map[String, String] = Map(
     "sim_norms" ->
@@ -752,11 +833,7 @@ object SimilarityQueries extends QueryModule {
            SELECT q.vq, c.vec_id AS vc,
              ROUND(${cosineSql("q.eq", "c.embedding")}, 6) AS cos
            FROM q JOIN e c ON q.vq <> c.vec_id),
-         ranked AS (
-           SELECT vq, vc, cos,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY cos DESC, vc ASC) AS rn
-           FROM cand)
-         SELECT vq, vc, cos, rn FROM ranked WHERE rn <= 3""",
+         ${topKSql("cand", 3, keepRn = true)}""",
 
     "sim_lsh_buckets" ->
       s"""SELECT vec_id, ${lshBucketSql("embedding")} AS bucket FROM embeddings""",
@@ -777,11 +854,7 @@ object SimilarityQueries extends QueryModule {
            $branches),
          dedup AS (
            SELECT vq, vc, MAX(cos) AS cos FROM cand GROUP BY vq, vc),
-         ranked AS (
-           SELECT vq, vc, cos,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY cos DESC, vc ASC) AS rn
-           FROM dedup)
-         SELECT vq, vc, cos FROM ranked WHERE rn = 1"""
+         ${topKSql("dedup", 1, keepRn = false)}"""
     },
 
     "sim_knn_graph" -> {
@@ -800,11 +873,7 @@ object SimilarityQueries extends QueryModule {
            $branches),
          dedup AS (
            SELECT va, vb, MAX(cos) AS cos FROM cand GROUP BY va, vb),
-         ranked AS (
-           SELECT va, vb, cos,
-             ROW_NUMBER() OVER (PARTITION BY va ORDER BY cos DESC, vb ASC) AS rn
-           FROM dedup)
-         SELECT va, vb, cos, rn FROM ranked WHERE rn <= 5"""
+         ${topKSql("dedup", 5, keepRn = true, "va", "vb")}"""
     },
 
     "sim_ivf_ann" -> {
@@ -814,36 +883,13 @@ object SimilarityQueries extends QueryModule {
            FROM embeddings WHERE vec_id < $K),
          asg AS (
            SELECT e.vec_id, e.embedding,
-             list_transform(c.cs, ce -> ${cosineSql("e.embedding", "ce")}) AS cl
+             ${clOf("e.embedding", "c.cs")} AS cl
            FROM embeddings e, cent c),
-         asg2 AS (
-           SELECT vec_id, embedding, cl,
-             CAST(list_indexof(cl, list_aggregate(cl, 'max')) AS BIGINT) AS cell
-           FROM asg),
-         q AS (
-           SELECT vec_id AS vq, embedding AS eq, cell,
-             list_transform(range(1, ${K + 1}),
-               i -> CASE WHEN i = cell THEN -9e9 ELSE cl[i] END) AS cl2
-           FROM asg2 WHERE vec_id < 50),
-         q2 AS (
-           SELECT vq, eq, unnest([cell,
-             CAST(list_indexof(cl2, list_aggregate(cl2, 'max')) AS BIGINT)]) AS cell
-           FROM q),
-         cand AS (
-           SELECT q2.vq, a.vec_id AS vc,
-             ROUND(${cosineSql("q2.eq", "a.embedding")}, 6) AS cos
-           FROM q2 JOIN asg2 a ON q2.cell = a.cell AND q2.vq <> a.vec_id),
-         ranked AS (
-           SELECT vq, vc, cos,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY cos DESC, vc ASC) AS rn
-           FROM cand)
-         SELECT vq, vc, cos FROM ranked WHERE rn = 1"""
+         ${ivfProbeSql(K)}"""
     },
 
     "sim_kmeans_step" -> {
       val K = 8
-      def clOf(emb: String, cs: String) =
-        s"list_transform($cs, ce -> ${cosineSql(emb, "ce")})"
       s"""WITH cent AS (
            SELECT list(embedding ORDER BY vec_id) AS cs
            FROM embeddings WHERE vec_id < $K),
@@ -880,66 +926,14 @@ object SimilarityQueries extends QueryModule {
 
     "sim_ivf_trained" -> {
       val K = 8
-      def clOf(emb: String, cs: String) =
-        s"list_transform($cs, ce -> ${cosineSql(emb, "ce")})"
-      val train = new StringBuilder
-      train ++= s"""cent0 AS (
-           SELECT list_transform(list(embedding ORDER BY vec_id),
-             v -> list_transform(v, x -> CAST(x AS DOUBLE))) AS cs
-           FROM embeddings WHERE vec_id < $K)"""
-      for (i <- 0 until 2) {
-        train ++= s""",
-         tr${i}p AS (
-           SELECT e.vec_id, e.embedding, ${clOf("e.embedding", "c.cs")} AS cl
-           FROM embeddings e, cent$i c),
-         tr$i AS (
-           SELECT vec_id, embedding,
-             CAST(list_indexof(cl, list_aggregate(cl, 'max')) AS BIGINT) AS cell
-           FROM tr${i}p),
-         sums$i AS (
-           SELECT cell, i AS pos,
-             CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(27,10))) AS DOUBLE)
-               / COUNT(*) AS m
-           FROM tr$i, range(1, ${Dim + 1}) t(i)
-           GROUP BY cell, i),
-         nc$i AS (SELECT cell, list(m ORDER BY pos) AS cent FROM sums$i GROUP BY cell),
-         seeds$i AS (
-           SELECT i AS cell, c.cs[i] AS seed
-           FROM cent$i c, range(1, ${K + 1}) t(i)),
-         cent${i + 1} AS (
-           SELECT list(COALESCE(nc$i.cent, s.seed) ORDER BY s.cell) AS cs
-           FROM seeds$i s LEFT JOIN nc$i ON s.cell = nc$i.cell)"""
-      }
-      s"""WITH ${train.toString},
+      s"""WITH ${cosineLloydSql(K)},
          asg AS (
            SELECT e.vec_id, e.embedding, ${clOf("e.embedding", "c.cs")} AS cl
            FROM embeddings e, cent2 c),
-         asg2 AS (
-           SELECT vec_id, embedding, cl,
-             CAST(list_indexof(cl, list_aggregate(cl, 'max')) AS BIGINT) AS cell
-           FROM asg),
-         q AS (
-           SELECT vec_id AS vq, embedding AS eq, cell,
-             list_transform(range(1, ${K + 1}),
-               i -> CASE WHEN i = cell THEN -9e9 ELSE cl[i] END) AS cl2
-           FROM asg2 WHERE vec_id < 50),
-         q2 AS (
-           SELECT vq, eq, unnest([cell,
-             CAST(list_indexof(cl2, list_aggregate(cl2, 'max')) AS BIGINT)]) AS cell
-           FROM q),
-         cand AS (
-           SELECT q2.vq, a.vec_id AS vc,
-             ROUND(${cosineSql("q2.eq", "a.embedding")}, 6) AS cos
-           FROM q2 JOIN asg2 a ON q2.cell = a.cell AND q2.vq <> a.vec_id),
-         ranked AS (
-           SELECT vq, vc, cos,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY cos DESC, vc ASC) AS rn
-           FROM cand)
-         SELECT vq, vc, cos FROM ranked WHERE rn = 1"""
+         ${ivfProbeSql(K)}"""
     },
 
     "sim_pq_ann" -> {
-      val M = 4; val Sub = 16; val Ks = 16
       // l2sq of subspace m: same strict fold as the Spark side, indexed
       // at the subspace offset (no list slicing needed)
       def l2sqSql(a: String, b: String, m: Int): String =
@@ -950,9 +944,6 @@ object SimilarityQueries extends QueryModule {
           s"(x, y) -> x + y)"
       val dls = (0 until M).map(m =>
         s"list_transform(c.cs, ce -> ${l2sqSql("e.embedding", "ce", m)}) AS dl$m").mkString(",\n             ")
-      val codeCols = (0 until M).map(m =>
-        s"CAST(list_indexof(dl$m, list_aggregate(dl$m, 'min')) AS BIGINT) AS code$m").mkString(",\n             ")
-      val adistSql = (0 until M).map(m => s"q.dl$m[c.code$m]").mkString(" + ")
       s"""WITH cb AS (
            SELECT list(embedding ORDER BY vec_id) AS cs
            FROM embeddings WHERE vec_id < $Ks),
@@ -960,14 +951,7 @@ object SimilarityQueries extends QueryModule {
            SELECT e.vec_id, e.embedding,
              $dls
            FROM embeddings e, cb c),
-         codes AS (
-           SELECT vec_id,
-             $codeCols
-           FROM wdl),
-         cand AS (
-           SELECT q.vec_id AS vq, c.vec_id AS vc,
-             ROUND($adistSql, 6) AS adist
-           FROM wdl q JOIN codes c ON q.vec_id < 50 AND q.vec_id <> c.vec_id),
+         $adcPairsSql
          ranked AS (
            SELECT vq, vc, adist,
              ROW_NUMBER() OVER (PARTITION BY vq ORDER BY adist ASC, vc ASC) AS rn
@@ -976,19 +960,12 @@ object SimilarityQueries extends QueryModule {
     },
 
     "sim_pq_trained" -> {
-      val M = 4; val Sub = 16; val Ks = 16; val Iters = 2
+      val Iters = 2
       // L2^2 between two double lists of length Sub (same strict fold)
       def l2v(a: String, b: String): String =
         s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
           s"list_transform(range(1, ${Sub + 1}), i -> " +
           s"($a[i] - $b[i]) * ($a[i] - $b[i]))), (x, y) -> x + y)"
-      // full-vector L2^2 on the raw float columns (re-rank step)
-      def l2full(a: String, b: String): String =
-        s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-          s"list_transform(range(1, ${Dim + 1}), i -> " +
-          s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
-          s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), " +
-          s"(x, y) -> x + y)"
       val blocks = new StringBuilder
       for (m <- 0 until M) {
         // subvectors of subspace m, cast float->double per element
@@ -1030,51 +1007,18 @@ object SimilarityQueries extends QueryModule {
         s"list_transform(cb$m.cs, ce -> ${l2v(s"s$m.sv", "ce")}) AS dl$m")
         .mkString(",\n             ")
       val cbFroms = (0 until M).map(m => s"c${m}_$Iters cb$m").mkString(", ")
-      val codeCols = (0 until M).map(m =>
-        s"CAST(list_indexof(dl$m, list_aggregate(dl$m, 'min')) AS BIGINT) AS code$m")
-        .mkString(",\n             ")
-      val adistSql = (0 until M).map(m => s"q.dl$m[c.code$m]").mkString(" + ")
       s"""WITH ${blocks.toString},
          wdl AS (
            SELECT s0.vec_id,
              $dls
            FROM sub0 s0
            $subJoins, $cbFroms),
-         codes AS (
-           SELECT vec_id,
-             $codeCols
-           FROM wdl),
-         cand AS (
-           SELECT q.vec_id AS vq, c.vec_id AS vc,
-             ROUND($adistSql, 6) AS adist
-           FROM wdl q JOIN codes c ON q.vec_id < 50 AND q.vec_id <> c.vec_id),
-         ranked AS (
-           SELECT vq, vc, adist,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY adist ASC, vc ASC) AS rn
-           FROM cand),
-         rr AS (
-           SELECT s.vq, s.vc,
-             ROUND(${l2full("qe.embedding", "ce.embedding")}, 6) AS dist
-           FROM (SELECT vq, vc FROM ranked WHERE rn <= 32) s
-           JOIN embeddings qe ON qe.vec_id = s.vq
-           JOIN embeddings ce ON ce.vec_id = s.vc),
-         rr2 AS (
-           SELECT vq, vc, dist,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY dist ASC, vc ASC) AS rn
-           FROM rr)
-         SELECT vq, vc, dist FROM rr2 WHERE rn = 1"""
+         $adcPairsSql
+         $l2RerankSql"""
     },
 
     "sim_ivfpq_ann" -> {
-      val K = 4; val M = 4; val Sub = 16; val Ks = 16
-      // float inputs: cast both sides per element (mirrors the Spark
-      // zip_with cast order exactly)
-      def l2full(a: String, b: String): String =
-        s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-          s"list_transform(range(1, ${Dim + 1}), i -> " +
-          s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
-          s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), " +
-          s"(x, y) -> x + y)"
+      val K = 4
       // residuals are already double lists: no casts, same fold order
       def l2sub(a: String, b: String, m: Int): String =
         s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
@@ -1085,50 +1029,14 @@ object SimilarityQueries extends QueryModule {
       val encDls = (0 until M).map(m =>
         s"list_transform(c.cb, rb -> ${l2sub("r.resid", "rb", m)}) AS dl$m")
         .mkString(",\n             ")
-      val encCodes = (0 until M).map(m =>
-        s"CAST(list_indexof(dl$m, list_aggregate(dl$m, 'min')) AS BIGINT) AS code$m")
-        .mkString(",\n             ")
       val qDls = (0 until M).map(m =>
         s"list_transform(c.cb, rb -> ${l2sub("r.rq", "rb", m)}) AS dl$m")
         .mkString(",\n             ")
-      val adistSql = (0 until M).map(m => s"q.dl$m[en.code$m]").mkString(" + ")
-      // 2 cosine-Lloyd training iterations, unrolled exactly like
-      // sim_ivf_trained's oracle (same KMeans semantics, K=4 here)
-      def clOf(emb: String, cs: String) =
-        s"list_transform($cs, ce -> ${cosineSql(emb, "ce")})"
-      val train = new StringBuilder
-      train ++= s"""cent0 AS (
-           SELECT list_transform(list(embedding ORDER BY vec_id),
-             v -> list_transform(v, x -> CAST(x AS DOUBLE))) AS cs
-           FROM embeddings WHERE vec_id < $K)"""
-      for (i <- 0 until 2) {
-        train ++= s""",
-         tr${i}p AS (
-           SELECT e.vec_id, e.embedding, ${clOf("e.embedding", "c.cs")} AS cl
-           FROM embeddings e, cent$i c),
-         tr$i AS (
-           SELECT vec_id, embedding,
-             CAST(list_indexof(cl, list_aggregate(cl, 'max')) AS BIGINT) AS cell
-           FROM tr${i}p),
-         sums$i AS (
-           SELECT cell, i AS pos,
-             CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(27,10))) AS DOUBLE)
-               / COUNT(*) AS m
-           FROM tr$i, range(1, ${Dim + 1}) t(i)
-           GROUP BY cell, i),
-         nc$i AS (SELECT cell, list(m ORDER BY pos) AS cent FROM sums$i GROUP BY cell),
-         seeds$i AS (
-           SELECT i AS cell, c.cs[i] AS seed
-           FROM cent$i c, range(1, ${K + 1}) t(i)),
-         cent${i + 1} AS (
-           SELECT list(COALESCE(nc$i.cent, s.seed) ORDER BY s.cell) AS cs
-           FROM seeds$i s LEFT JOIN nc$i ON s.cell = nc$i.cell)"""
-      }
-      s"""WITH ${train.toString},
+      s"""WITH ${cosineLloydSql(K)},
          cent AS (SELECT cs AS ccs FROM cent2),
          asg AS (
            SELECT e.vec_id, e.embedding,
-             list_transform(c.ccs, ce -> ${l2full("e.embedding", "ce")}) AS cdl
+             list_transform(c.ccs, ce -> ${l2fullSql("e.embedding", "ce")}) AS cdl
            FROM embeddings e, cent c),
          asg2 AS (
            SELECT vec_id, embedding, cdl,
@@ -1148,7 +1056,7 @@ object SimilarityQueries extends QueryModule {
            FROM resid r, cb c),
          enc AS (
            SELECT vec_id, cell,
-             $encCodes
+             $codesSql
            FROM encp),
          q0 AS (
            SELECT vec_id AS vq, embedding, cell,
@@ -1170,23 +1078,9 @@ object SimilarityQueries extends QueryModule {
            FROM qr r, cb c),
          cand AS (
            SELECT q.vq, en.vec_id AS vc,
-             ROUND($adistSql, 6) AS adist
+             ROUND(${adistSql("en")}, 6) AS adist
            FROM qt q JOIN enc en ON q.pcell = en.cell AND q.vq <> en.vec_id),
-         ranked AS (
-           SELECT vq, vc, adist,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY adist ASC, vc ASC) AS rn
-           FROM cand),
-         rr AS (
-           SELECT s.vq, s.vc,
-             ROUND(${l2full("qe.embedding", "ce.embedding")}, 6) AS dist
-           FROM (SELECT vq, vc FROM ranked WHERE rn <= 32) s
-           JOIN embeddings qe ON qe.vec_id = s.vq
-           JOIN embeddings ce ON ce.vec_id = s.vc),
-         rr2 AS (
-           SELECT vq, vc, dist,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY dist ASC, vc ASC) AS rn
-           FROM rr)
-         SELECT vq, vc, dist FROM rr2 WHERE rn = 1"""
+         $l2RerankSql"""
     },
 
     "dedup_semantic_clusters" -> {
@@ -1226,11 +1120,7 @@ object SimilarityQueries extends QueryModule {
            SELECT q.vq, c.vec_id AS vc,
              ROUND(${cosineSql("q.eq", "c.embedding")}, 6) AS cos
            FROM q JOIN e c ON q.bucket = c.bucket AND q.vq <> c.vec_id),
-         ranked AS (
-           SELECT vq, vc, cos,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY cos DESC, vc ASC) AS rn
-           FROM cand)
-         SELECT vq, vc, cos FROM ranked WHERE rn = 1""",
+         ${topKSql("cand", 1, keepRn = false)}""",
 
     "sim_random_projection" ->
       (0 until RpDim).map(j =>
@@ -1248,11 +1138,7 @@ object SimilarityQueries extends QueryModule {
              ROUND(${rpDotSql("rq", "c.rp")} /
                (SQRT(${rpDotSql("rq", "rq")}) * SQRT(${rpDotSql("c.rp", "c.rp")})), 6) AS cos
            FROM q CROSS JOIN e c WHERE vq <> c.vec_id),
-         ranked AS (
-           SELECT vq, vc, cos,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY cos DESC, vc ASC) AS rn
-           FROM cand)
-         SELECT vq, vc, cos, rn FROM ranked WHERE rn <= 3""",
+         ${topKSql("cand", 3, keepRn = true)}""",
 
     "sim_rp_rerank" ->
       s"""WITH e AS (
@@ -1270,10 +1156,6 @@ object SimilarityQueries extends QueryModule {
          scored AS (
            SELECT vq, vc, ROUND(${cosineSql("eq", "ec")}, 6) AS cos
            FROM cand WHERE crn <= 50),
-         ranked AS (
-           SELECT vq, vc, cos,
-             ROW_NUMBER() OVER (PARTITION BY vq ORDER BY cos DESC, vc ASC) AS rn
-           FROM scored)
-         SELECT vq, vc, cos, rn FROM ranked WHERE rn <= 3"""
+         ${topKSql("scored", 3, keepRn = true)}"""
   )
 }

@@ -237,6 +237,22 @@ class OracleLintSpec extends AnyFunSuite {
     assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 
+  /** Each similarity kernel has one Column builder: `graft_dot` and
+    * `graft_l2sq` in `functions/VectorCols`, `graft_lsh_bucket` in
+    * `SimilarityQueries`. A second file calling one by name is a copy
+    * of that builder drifting on its own (GraftExtensions registers
+    * them and is not a caller). */
+  test("each vector kernel is called by name from one file") {
+    val files = scalaFiles(mainRoot).filterNot(_.getName == "GraftExtensions.scala")
+    val spread = for {
+      k <- Seq("graft_dot", "graft_l2sq", "graft_lsh_bucket")
+      hits = lint(files)((_, line) =>
+        !isComment(line) && line.contains("call_function(\"" + k + "\""))
+      if hits.map(_.takeWhile(_ != ':')).distinct.size > 1
+    } yield s"$k is called from several files:" + hits.mkString("\n  ", "\n  ", "")
+    assert(spread.isEmpty, spread.mkString("\n", "\n", "\n"))
+  }
+
   /** Builders cache through `graft.Cached`, which skips a frame whose
     * plan is already cached. A direct `.cache()` on a rebuilt query logs
     * "Asked to cache already cached data." once per rebuild. */
