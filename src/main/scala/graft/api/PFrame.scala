@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.functions.GapFill
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,18 +99,16 @@ final case class PFrame(df: DataFrame, index: Seq[String] = Nil) {
       col(colName).asc))
   }
 
-  /** df.ffill()/bfill() within an ordered per-key frame */
-  def ffill(valueCol: String, partition: Seq[String], order: String): PFrame = {
-    val w = Window.partitionBy(partition.map(col): _*).orderBy(col(order))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    copy(df = df.withColumn(valueCol, last(col(valueCol), ignoreNulls = true).over(w)))
-  }
+  /** df.ffill()/bfill() within an ordered per-key frame (GapFill) */
+  def ffill(valueCol: String, partition: Seq[String], order: String): PFrame =
+    copy(df = df.withColumn(valueCol, GapFill.ffill(col(valueCol), ordered(partition, order))))
 
-  def bfill(valueCol: String, partition: Seq[String], order: String): PFrame = {
-    val w = Window.partitionBy(partition.map(col): _*).orderBy(col(order))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    copy(df = df.withColumn(valueCol, first(col(valueCol), ignoreNulls = true).over(w)))
-  }
+  def bfill(valueCol: String, partition: Seq[String], order: String): PFrame =
+    copy(df = df.withColumn(valueCol, GapFill.bfill(col(valueCol), ordered(partition, order))))
+
+  /** the per-key frame in `order`: `partition` empty is one frame */
+  private def ordered(partition: Seq[String], order: String) =
+    Window.partitionBy(partition.map(col): _*).orderBy(col(order))
 
   def rename(mapping: (String, String)*): PFrame =
     copy(df = mapping.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) },
@@ -302,7 +301,7 @@ final case class PFrame(df: DataFrame, index: Seq[String] = Nil) {
   /** df.shift/diff/pct_change per partition over an explicit order */
   def shift(colName: String, periods: Int, order: String,
       partition: Seq[String] = Nil, as: String = "shifted"): PFrame = {
-    val w = Window.partitionBy(partition.map(col): _*).orderBy(col(order))
+    val w = ordered(partition, order)
     val c = if (periods >= 0) lag(col(colName), periods).over(w)
             else lead(col(colName), -periods).over(w)
     copy(df = df.withColumn(as, c))

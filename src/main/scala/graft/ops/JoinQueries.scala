@@ -2,7 +2,9 @@ package graft.ops
 
 import graft.{QueryModule, Tables}
 import graft.OracleNum._
+import graft.functions.GapFill
 import graft.plans.AsofJoinNative
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,18 +22,39 @@ import org.apache.spark.sql.functions._
   */
 object JoinQueries extends QueryModule {
 
-  /** join_asof_backward and join_asof_native: one builder, one oracle. */
-  private val asofBackward: Q = { (s, d) =>
+  /** The as-of fixture: the events' clicks (left) and purchases
+    * (right); `allEvents` makes the right side every event. */
+  private def asofSides(s: SparkSession, d: String, allEvents: Boolean = false) = {
     import s.implicits._
     val ev = Tables(s, d, "events")
-    val clicks = ev.filter($"event_type" === "click")
-      .select($"user_id", $"event_id", $"ts")
-    val purchases = ev.filter($"event_type" === "purchase")
-      .select($"user_id", $"ts", $"value")
-    AsofJoinNative.join(clicks, purchases,
+    (ev.filter($"event_type" === "click"),
+      if (allEvents) ev else ev.filter($"event_type" === "purchase"))
+  }
+
+  /** merge_asof(by='user_id'): each click's purchase value as
+    * `asof_val`. Without exact matches the right side is every event,
+    * so each click has an exact-ts candidate, itself, to skip. */
+  private def asofKeyed(direction: String = "backward", toleranceUs: Option[Long] = None,
+      allowExactMatches: Boolean = true): Q = { (s, d) =>
+    import s.implicits._
+    val (clicks, right) = asofSides(s, d, allEvents = !allowExactMatches)
+    AsofJoinNative.join(clicks.select($"user_id", $"event_id", $"ts"),
+      right.select($"user_id", $"ts", $"value"),
       by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-      valueCols = Seq("value"))
+      valueCols = Seq("value"), direction = direction, toleranceUs = toleranceUs,
+      allowExactMatches = allowExactMatches)
       .withColumnRenamed("value", "asof_val")
+  }
+
+  /** keyless merge_asof: each click's `purch_val`, the max purchase
+    * value at a timestamp, aggregated so each match is well-defined */
+  private def asofGlobal(direction: String): Q = { (s, d) =>
+    import s.implicits._
+    val (clicks, purchases) = asofSides(s, d)
+    AsofJoinNative.global(clicks.select($"event_id", $"ts"),
+      purchases.groupBy($"ts".as("rts")).agg(max($"value").as("purch_val")),
+      leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"),
+      direction = direction)
   }
 
   private val asofBackwardSql =
@@ -362,119 +385,44 @@ object JoinQueries extends QueryModule {
     // merge_asof backward, by=user (merge.py:644 _AsOfMerge;
     // join.pyx:725 asof_join_backward_on_X_by_Y): latest purchase value
     // at/before each click
-    "join_asof_backward" -> asofBackward,
+    "join_asof_backward" -> asofKeyed(),
 
     // merge_asof with tolerance= (merge.py:644): matches older than
     // 1 day are nulled
-    "join_asof_tolerance" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
-      AsofJoinNative.join(clicks, purchases,
-        by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("value"), toleranceUs = Some(86400000000L))
-        .withColumnRenamed("value", "asof_val")
-    },
+    "join_asof_tolerance" -> asofKeyed(toleranceUs = Some(86400000000L)),
 
     // the same query under the name perfbench's frame_analytics
     // workload runs
-    "join_asof_native" -> asofBackward,
+    "join_asof_native" -> asofKeyed(),
 
     // merge_asof direction='forward' (merge.py:644; join.pyx:812)
-    "join_asof_forward" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
-      AsofJoinNative.join(clicks, purchases,
-        by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("value"), direction = "forward")
-        .withColumnRenamed("value", "asof_val")
-    },
+    "join_asof_forward" -> asofKeyed(direction = "forward"),
 
     // merge_asof direction='nearest' (join.pyx:900): closest match in
     // either direction, backward wins ties
-    "join_asof_nearest" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"ts", $"value")
-      AsofJoinNative.join(clicks, purchases,
-        by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("value"), direction = "nearest")
-        .withColumnRenamed("value", "asof_val")
-    },
+    "join_asof_nearest" -> asofKeyed(direction = "nearest"),
 
     // merge_asof allow_exact_matches=False (merge.py:644): strict
     // rts < lts. The right side is ALL events, so every left click has
     // an exact-ts candidate (itself) that strict mode must skip —
     // non-strict would always self-match, making this a real test.
-    "join_asof_strict" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id", $"event_id", $"ts")
-      val all = ev.select($"user_id", $"ts", $"value")
-      AsofJoinNative.join(clicks, all,
-        by = Seq("user_id"), leftTs = "ts", rightTs = "ts",
-        valueCols = Seq("value"), allowExactMatches = false)
-        .withColumnRenamed("value", "asof_val")
-    },
+    "join_asof_strict" -> asofKeyed(allowExactMatches = false),
 
     // merge_asof with NO by key (merge.py:644 left_by=None):
     // AsofJoinNative.global — range-bucketed time as a synthetic `by`
     // key, per-bucket boundary carry rows, the same AsofJoinExec
     // pointer walk as the keyed queries; no single-partition window.
-    // Right side is aggregated to unique timestamps so the
-    // latest-match row is well-defined in both engines.
-    "join_asof_global" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      AsofJoinNative.global(clicks, purchases,
-        leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"))
-    },
+    "join_asof_global" -> asofGlobal("backward"),
 
     // keyless merge_asof direction='forward' (merge.py:644 left_by=None
     // + join.pyx:812): the native global walk with the suffix-scanned
     // forward carry. Earliest purchase at or after each click.
-    "join_asof_global_forward" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      AsofJoinNative.global(clicks, purchases,
-        leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"),
-        direction = "forward")
-    },
+    "join_asof_global_forward" -> asofGlobal("forward"),
 
     // keyless merge_asof direction='nearest' (merge.py:644 with
     // left_by=None + join.pyx:900): the native global walk with BOTH
-    // boundary carries. Right side aggregated to unique timestamps so
-    // the nearest-match row is well-defined in both engines.
-    "join_asof_global_nearest" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables(s, d, "events")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"event_id", $"ts")
-      val purchases = ev.filter($"event_type" === "purchase")
-        .groupBy($"ts".as("rts")).agg(max($"value").as("purch_val"))
-      AsofJoinNative.global(clicks, purchases,
-        leftTs = "ts", rightTs = "rts", valueCols = Seq("purch_val"),
-        direction = "nearest")
-    },
+    // boundary carries.
+    "join_asof_global_nearest" -> asofGlobal("nearest"),
 
     // merge_ordered + group-wise ffill (merge.py:500 _OrderedMerge):
     // full outer on (user, ts), forward-fill each side within user
@@ -487,10 +435,9 @@ object JoinQueries extends QueryModule {
         .select($"user_id", $"ts", $"value".as("purch_val"))
       val merged = clicks.join(purchases, Seq("user_id", "ts"), "full")
       val w = Window.partitionBy($"user_id").orderBy($"ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       merged.select($"user_id", $"ts",
-        last($"click_val", ignoreNulls = true).over(w).as("click_ff"),
-        last($"purch_val", ignoreNulls = true).over(w).as("purch_ff"))
+        GapFill.ffill($"click_val", w).as("click_ff"),
+        GapFill.ffill($"purch_val", w).as("purch_ff"))
     },
 
     // TPC-H Q3 (shipping priority): segment-filtered customer ->

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{QueryModule, Tables}
 import graft.OracleNum._
+import graft.functions.GapFill
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,9 +15,13 @@ import org.apache.spark.sql.functions._
   * The testdata has no NULLs, so each query derives them ('error'
   * events lose their reading) — which also documents the NaN/NA
   * decision from SURVEY §7: missing = SQL NULL, and ordered fills are
-  * windows over the per-user order, distributed by user key.
+  * windows over the per-user order, distributed by user key, all built
+  * by `functions/GapFill`.
   */
 object NaQueries extends QueryModule {
+
+  /** each user's events in time order, the frame every fill runs over */
+  private val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"))
 
   /** events with `value` nulled out on error rows. */
   private def withHoles(s: org.apache.spark.sql.SparkSession, d: String) = {
@@ -57,35 +62,23 @@ object NaQueries extends QueryModule {
     // ffill per user (pad algos.pyx:598): last non-null over preceding
     "na_ffill" -> { (s, d) =>
       import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       withHoles(s, d)
         .select($"event_id", $"user_id",
-          last($"reading", ignoreNulls = true).over(w).as("ffilled"))
+          GapFill.ffill($"reading", byUser).as("ffilled"))
     },
 
     // bfill per user (backfill algos.pyx:845): first non-null following
     "na_bfill" -> { (s, d) =>
       import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
       withHoles(s, d)
         .select($"event_id", $"user_id",
-          first($"reading", ignoreNulls = true).over(w).as("bfilled"))
+          GapFill.bfill($"reading", byUser).as("bfilled"))
     },
 
     // ffill(limit=2): distance-since-last-non-null gate (two windows)
     "na_ffill_limit" -> { (s, d) =>
       import s.implicits._
-      val ord = Window.partitionBy($"user_id").orderBy($"ts")
-      val run = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      withHoles(s, d)
-        .withColumn("rn", row_number().over(ord))
-        .withColumn("last_nn_rn",
-          max(when($"reading".isNotNull, $"rn")).over(run))
-        .withColumn("ffill_lim2",
-          when($"rn" - $"last_nn_rn" <= 2,
-            last($"reading", ignoreNulls = true).over(run)))
+      GapFill.ffillLimit(withHoles(s, d), $"reading", byUser, 2, "ffill_lim2")
         .select($"event_id", $"user_id", $"ffill_lim2")
     },
 
@@ -94,66 +87,30 @@ object NaQueries extends QueryModule {
     // prev/next non-null value+position, linear blend
     "na_interpolate" -> { (s, d) =>
       import s.implicits._
-      val ord = Window.partitionBy($"user_id").orderBy($"ts")
-      val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      withHoles(s, d)
-        .withColumn("rn", row_number().over(ord).cast("double"))
-        .withColumn("pv", last($"reading", ignoreNulls = true).over(back))
-        .withColumn("prn", max(when($"reading".isNotNull, $"rn")).over(back))
-        .withColumn("nv", first($"reading", ignoreNulls = true).over(fwd))
-        .withColumn("nrn", min(when($"reading".isNotNull, $"rn")).over(fwd))
-        .withColumn("interp",
-          when($"reading".isNotNull, $"reading")
-            .when($"pv".isNotNull && $"nv".isNotNull,
-              $"pv" + ($"nv" - $"pv") * ($"rn" - $"prn") / ($"nrn" - $"prn"))
-            .when($"pv".isNotNull, $"pv")) // pandas default: trailing ffill
-        .select($"event_id", $"user_id", $"interp")
+      val b = GapFill.Bracket.rows($"reading", byUser)
+      b.of(withHoles(s, d))
+        .select($"event_id", $"user_id", b.linear.as("interp"))
     },
 
     // interpolate(method='nearest') (missing.py:205 method list; scipy
     // interp1d kind='nearest' takes the LEFT bracket at exact
     // midpoints): fill with whichever non-null bracket is closer by
-    // row position. Same two-window bracket shape as linear.
+    // row position. Same bracket as linear.
     "na_interp_nearest" -> { (s, d) =>
       import s.implicits._
-      val ord = Window.partitionBy($"user_id").orderBy($"ts")
-      val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      withHoles(s, d)
-        .withColumn("rn", row_number().over(ord).cast("double"))
-        .withColumn("pv", last($"reading", ignoreNulls = true).over(back))
-        .withColumn("prn", max(when($"reading".isNotNull, $"rn")).over(back))
-        .withColumn("nv", first($"reading", ignoreNulls = true).over(fwd))
-        .withColumn("nrn", min(when($"reading".isNotNull, $"rn")).over(fwd))
-        .withColumn("interp",
-          when($"reading".isNotNull, $"reading")
-            .when($"pv".isNotNull && $"nv".isNotNull,
-              when($"rn" - $"prn" <= $"nrn" - $"rn", $"pv").otherwise($"nv"))
-            .when($"pv".isNotNull, $"pv"))
-        .select($"event_id", $"user_id", $"interp")
+      val b = GapFill.Bracket.rows($"reading", byUser)
+      b.of(withHoles(s, d))
+        .select($"event_id", $"user_id", b.nearest(GapFill.TieToPrev).as("interp"))
     },
 
     // interpolate(method='time') (missing.py:370): like linear but
     // weighted by actual timestamp distance, not row position
     "na_interpolate_time" -> { (s, d) =>
       import s.implicits._
-      val ord = Window.partitionBy($"user_id").orderBy($"ts")
-      val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val tsu = unix_micros($"ts").cast("double")
-      withHoles(s, d)
-        .withColumn("tsu", tsu)
-        .withColumn("pv", last($"reading", ignoreNulls = true).over(back))
-        .withColumn("pt", max(when($"reading".isNotNull, $"tsu")).over(back))
-        .withColumn("nv", first($"reading", ignoreNulls = true).over(fwd))
-        .withColumn("nt", min(when($"reading".isNotNull, $"tsu")).over(fwd))
-        .withColumn("interp_t",
-          when($"reading".isNotNull, $"reading")
-            .when($"pv".isNotNull && $"nv".isNotNull,
-              $"pv" + ($"nv" - $"pv") * ($"tsu" - $"pt") / ($"nt" - $"pt"))
-            .when($"pv".isNotNull, $"pv"))
-        .select($"event_id", $"user_id", $"interp_t")
+      val b = GapFill.Bracket.time($"reading", byUser, "tsu",
+        unix_micros($"ts").cast("double"))
+      b.of(withHoles(s, d))
+        .select($"event_id", $"user_id", b.linear.as("interp_t"))
     },
 
     // interpolate limit / limit_direction / limit_area
@@ -165,31 +122,12 @@ object NaQueries extends QueryModule {
     // backfills and trailing forward-fills).
     "na_interp_limit" -> { (s, d) =>
       import s.implicits._
-      val ord = Window.partitionBy($"user_id").orderBy($"ts")
-      val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val df = withHoles(s, d)
-        .withColumn("rn", row_number().over(ord).cast("double"))
-        .withColumn("pv", last($"reading", ignoreNulls = true).over(back))
-        .withColumn("prn", max(when($"reading".isNotNull, $"rn")).over(back))
-        .withColumn("nv", first($"reading", ignoreNulls = true).over(fwd))
-        .withColumn("nrn", min(when($"reading".isNotNull, $"rn")).over(fwd))
-      val blend = $"pv" + ($"nv" - $"pv") * ($"rn" - $"prn") / ($"nrn" - $"prn")
-      df.select($"event_id", $"user_id",
-        when($"reading".isNotNull, $"reading")
-          .when($"pv".isNotNull && $"rn" - $"prn" <= 2,
-            when($"nv".isNotNull, blend).otherwise($"pv")).as("interp_fwd_lim2"),
-        when($"reading".isNotNull, $"reading")
-          .when($"pv".isNotNull && $"nv".isNotNull
-              && ($"rn" - $"prn" <= 1 || $"nrn" - $"rn" <= 1), blend)
-          .when($"pv".isNotNull && $"nv".isNull && $"rn" - $"prn" <= 1, $"pv")
-          .when($"nv".isNotNull && $"pv".isNull && $"nrn" - $"rn" <= 1, $"nv")
-          .as("interp_both_lim1"),
-        when($"reading".isNotNull, $"reading")
-          .when($"pv".isNotNull && $"nv".isNotNull, blend).as("interp_inside"),
-        when($"reading".isNotNull, $"reading")
-          .when($"pv".isNull, $"nv")
-          .when($"nv".isNull, $"pv").as("interp_outside"))
+      val b = GapFill.Bracket.rows($"reading", byUser)
+      b.of(withHoles(s, d)).select($"event_id", $"user_id",
+        b.limitForward(2).as("interp_fwd_lim2"),
+        b.limitBoth(1).as("interp_both_lim1"),
+        b.inside.as("interp_inside"),
+        b.outside.as("interp_outside"))
     },
 
     // replace (generic.py:7600): value map on strings + numeric clip of
@@ -226,6 +164,30 @@ object NaQueries extends QueryModule {
       """SELECT event_id, user_id, ts,
          CASE WHEN event_type <> 'error' THEN "value" END AS reading
          FROM events"""
+    /** The bracket CTEs of the interpolate oracles (GapFill.Bracket):
+      * `pos` is `posSql`, `pv`/`prevPos` and `nv`/`nextPos` the
+      * previous and next valid reading and its position; the caller's
+      * SELECT list follows. */
+    def bracket(posSql: String, pos: String, prevPos: String, nextPos: String) =
+      s"""WITH h AS ($holes),
+           t AS (
+             SELECT event_id, user_id, reading,
+               $posSql AS $pos,
+               last_value(reading IGNORE NULLS) OVER wb AS pv,
+               first_value(reading IGNORE NULLS) OVER wf AS nv
+             FROM h
+             WINDOW wb AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+                    wf AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
+           t2 AS (
+             SELECT event_id, user_id, reading, $pos, pv, nv,
+               MAX(CASE WHEN reading IS NOT NULL THEN $pos END)
+                 OVER (PARTITION BY user_id ORDER BY $pos ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS $prevPos,
+               MIN(CASE WHEN reading IS NOT NULL THEN $pos END)
+                 OVER (PARTITION BY user_id ORDER BY $pos ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS $nextPos
+             FROM t)
+           SELECT event_id, user_id,"""
+    val byRow = bracket(
+      "CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS DOUBLE)", "rn", "prn", "nrn")
     Map(
       "na_isna_fillna" ->
         s"""WITH h AS ($holes)
@@ -276,95 +238,35 @@ object NaQueries extends QueryModule {
            FROM t""",
 
       "na_interpolate" ->
-        s"""WITH h AS ($holes),
-           t AS (
-             SELECT event_id, user_id, reading,
-               CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS DOUBLE) AS rn,
-               last_value(reading IGNORE NULLS) OVER wb AS pv,
-               first_value(reading IGNORE NULLS) OVER wf AS nv
-             FROM h
-             WINDOW wb AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                    wf AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-           t2 AS (
-             SELECT event_id, user_id, reading, rn, pv, nv,
-               MAX(CASE WHEN reading IS NOT NULL THEN rn END)
-                 OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prn,
-               MIN(CASE WHEN reading IS NOT NULL THEN rn END)
-                 OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nrn
-             FROM t)
-           SELECT event_id, user_id,
+        (byRow +
+          """
              CASE WHEN reading IS NOT NULL THEN reading
                   WHEN pv IS NOT NULL AND nv IS NOT NULL
                     THEN pv + (nv - pv) * (rn - prn) / (nrn - prn)
                   WHEN pv IS NOT NULL THEN pv END AS interp
-           FROM t2""",
+           FROM t2"""),
 
       "na_interp_nearest" ->
-        s"""WITH h AS ($holes),
-           t AS (
-             SELECT event_id, user_id, reading,
-               CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS DOUBLE) AS rn,
-               last_value(reading IGNORE NULLS) OVER wb AS pv,
-               first_value(reading IGNORE NULLS) OVER wf AS nv
-             FROM h
-             WINDOW wb AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                    wf AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-           t2 AS (
-             SELECT event_id, user_id, reading, rn, pv, nv,
-               MAX(CASE WHEN reading IS NOT NULL THEN rn END)
-                 OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prn,
-               MIN(CASE WHEN reading IS NOT NULL THEN rn END)
-                 OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nrn
-             FROM t)
-           SELECT event_id, user_id,
+        (byRow +
+          """
              CASE WHEN reading IS NOT NULL THEN reading
                   WHEN pv IS NOT NULL AND nv IS NOT NULL
                     THEN CASE WHEN rn - prn <= nrn - rn THEN pv ELSE nv END
                   WHEN pv IS NOT NULL THEN pv END AS interp
-           FROM t2""",
+           FROM t2"""),
 
       "na_interpolate_time" ->
-        s"""WITH h AS ($holes),
-           t AS (
-             SELECT event_id, user_id, reading,
-               CAST(epoch_us(ts) AS DOUBLE) AS tsu,
-               last_value(reading IGNORE NULLS) OVER wb AS pv,
-               first_value(reading IGNORE NULLS) OVER wf AS nv
-             FROM h
-             WINDOW wb AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                    wf AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-           t2 AS (
-             SELECT event_id, user_id, reading, tsu, pv, nv,
-               MAX(CASE WHEN reading IS NOT NULL THEN tsu END)
-                 OVER (PARTITION BY user_id ORDER BY tsu ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
-               MIN(CASE WHEN reading IS NOT NULL THEN tsu END)
-                 OVER (PARTITION BY user_id ORDER BY tsu ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
-             FROM t)
-           SELECT event_id, user_id,
+        (bracket("CAST(epoch_us(ts) AS DOUBLE)", "tsu", "pt", "nt") +
+          """
              CASE WHEN reading IS NOT NULL THEN reading
                   WHEN pv IS NOT NULL AND nv IS NOT NULL
                     THEN pv + (nv - pv) * (tsu - pt) / (nt - pt)
                   WHEN pv IS NOT NULL THEN pv END AS interp_t
-           FROM t2""",
+           FROM t2"""),
 
       "na_interp_limit" ->
-        s"""WITH h AS ($holes),
-           t AS (
-             SELECT event_id, user_id, reading,
-               CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS DOUBLE) AS rn,
-               last_value(reading IGNORE NULLS) OVER wb AS pv,
-               first_value(reading IGNORE NULLS) OVER wf AS nv
-             FROM h
-             WINDOW wb AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                    wf AS (PARTITION BY user_id ORDER BY ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-           t2 AS (
-             SELECT event_id, user_id, reading, rn, pv, nv,
-               MAX(CASE WHEN reading IS NOT NULL THEN rn END)
-                 OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prn,
-               MIN(CASE WHEN reading IS NOT NULL THEN rn END)
-                 OVER (PARTITION BY user_id ORDER BY rn ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nrn
-             FROM t)
-           SELECT event_id, user_id,
+        (byRow +
+          """
              CASE WHEN reading IS NOT NULL THEN reading
                   WHEN pv IS NOT NULL AND rn - prn <= 2 THEN
                     CASE WHEN nv IS NOT NULL
@@ -386,7 +288,7 @@ object NaQueries extends QueryModule {
                   WHEN pv IS NULL THEN nv
                   WHEN nv IS NULL THEN pv
              END AS interp_outside
-           FROM t2""",
+           FROM t2"""),
 
       "na_replace" ->
         """SELECT event_id,

@@ -2,6 +2,8 @@ package graft.ops
 
 import graft.{QueryModule, Tables}
 import graft.OracleNum._
+import graft.functions.GapFill
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,6 +18,27 @@ import org.apache.spark.sql.functions._
   * the spine being trivially small relative to the data.
   */
 object TimeQueries extends QueryModule {
+
+  /** asfreq('h') per event_type: the hourly mean (`hr_mean`) left-joined
+    * onto an hourly spine from the first to the last event's hour, so an
+    * hour with no events is a NULL to fill. */
+  private def upsampled(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val ev = Tables(s, d, "events")
+    val hourly = ev
+      .groupBy(date_trunc("hour", $"ts").as("hr"), $"event_type")
+      .agg(dmean($"value").as("hr_mean"))
+    val bounds = ev.agg(
+      date_trunc("hour", min($"ts")).as("lo"),
+      date_trunc("hour", max($"ts")).as("hi"))
+    val spine = bounds
+      .select(explode(sequence($"lo", $"hi", expr("interval 1 hour"))).as("hr"))
+      .crossJoin(ev.select($"event_type").distinct())
+    spine.join(hourly, Seq("hr", "event_type"), "left")
+  }
+
+  /** each event_type's hours in order, the frame the upsample fills run over */
+  private val byType = Window.partitionBy(col("event_type")).orderBy(col("hr"))
 
   def queries: Map[String, Q] = Map(
     // resample('D').agg(...) (resample.py:119): daily count/sum/mean
@@ -114,62 +137,27 @@ object TimeQueries extends QueryModule {
     // join, window forward-fill
     "ts_upsample_ffill" -> { (s, d) =>
       import s.implicits._
-      val ev = Tables(s, d, "events")
-      val hourly = ev
-        .groupBy(date_trunc("hour", $"ts").as("hr"), $"event_type")
-        .agg(dmean($"value").as("hr_mean"))
-      val bounds = ev.agg(
-        date_trunc("hour", min($"ts")).as("lo"),
-        date_trunc("hour", max($"ts")).as("hi"))
-      val spine = bounds
-        .select(explode(sequence($"lo", $"hi", expr("interval 1 hour"))).as("hr"))
-        .crossJoin(ev.select($"event_type").distinct())
-      val w = Window.partitionBy($"event_type").orderBy($"hr")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      spine.join(hourly, Seq("hr", "event_type"), "left")
+      upsampled(s, d)
         .select($"hr", $"event_type",
-          last($"hr_mean", ignoreNulls = true).over(w).as("ffilled_mean"))
+          GapFill.ffill($"hr_mean", byType).as("ffilled_mean"))
     },
 
     // upsample fill methods beyond ffill (resample.py:749 bfill, :691
     // nearest, :851 interpolate): same sequence() spine + left join,
-    // then the mirrored/bracketed windows. `nearest` breaks exact-
+    // then GapFill's bracket over epoch seconds. `nearest` breaks exact-
     // midpoint ties toward the following observation, matching
     // pandas' monotonic get_indexer(method='nearest') (left wins only
     // on strict <). interpolate keeps pandas' linear default: leading
     // NaNs stay null, trailing NaNs forward-fill.
     "ts_upsample_fill" -> { (s, d) =>
       import s.implicits._
-      val ev = Tables(s, d, "events")
-      val hourly = ev
-        .groupBy(date_trunc("hour", $"ts").as("hr"), $"event_type")
-        .agg(dmean($"value").as("hr_mean"))
-      val bounds = ev.agg(
-        date_trunc("hour", min($"ts")).as("lo"),
-        date_trunc("hour", max($"ts")).as("hi"))
-      val spine = bounds
-        .select(explode(sequence($"lo", $"hi", expr("interval 1 hour"))).as("hr"))
-        .crossJoin(ev.select($"event_type").distinct())
-      val ord = Window.partitionBy($"event_type").orderBy($"hr")
-      val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      spine.join(hourly, Seq("hr", "event_type"), "left")
-        .withColumn("t", unix_seconds($"hr").cast("double"))
-        .withColumn("pv", last($"hr_mean", ignoreNulls = true).over(back))
-        .withColumn("pt", max(when($"hr_mean".isNotNull, $"t")).over(back))
-        .withColumn("nv", first($"hr_mean", ignoreNulls = true).over(fwd))
-        .withColumn("nt", min(when($"hr_mean".isNotNull, $"t")).over(fwd))
+      val b = GapFill.Bracket.time($"hr_mean", byType, "t",
+        unix_seconds($"hr").cast("double"))
+      b.of(upsampled(s, d))
         .select($"hr", $"event_type",
-          $"nv".as("bfilled_mean"),
-          when($"hr_mean".isNotNull, $"hr_mean")
-            .when($"nt".isNull, $"pv")
-            .when($"pt".isNull, $"nv")
-            .when($"t" - $"pt" < $"nt" - $"t", $"pv")
-            .otherwise($"nv").as("nearest_mean"),
-          when($"hr_mean".isNotNull, $"hr_mean")
-            .when($"pv".isNotNull && $"nv".isNotNull,
-              $"pv" + ($"nv" - $"pv") * ($"t" - $"pt") / ($"nt" - $"pt"))
-            .when($"pv".isNotNull, $"pv").as("interp_mean"))
+          b.next.as("bfilled_mean"),
+          b.nearest(GapFill.TieToNext).as("nearest_mean"),
+          b.linear.as("interp_mean"))
     },
 
     // .dt accessor fields (accessors.py:271)
@@ -431,6 +419,17 @@ object TimeQueries extends QueryModule {
     }
   )
 
+  /** `upsampled`'s CTEs: `hourly`, the bounds `b` and `spine` */
+  private val upsampleSpine =
+    """WITH hourly AS (
+           SELECT date_trunc('hour', ts) AS hr, event_type,
+             CAST(SUM(CAST("value" AS DECIMAL(18,4))) AS DOUBLE) / COUNT("value") AS hr_mean
+           FROM events GROUP BY 1, 2),
+         b AS (SELECT date_trunc('hour', MIN(ts)) AS lo, date_trunc('hour', MAX(ts)) AS hi FROM events),
+         spine AS (
+           SELECT unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS hr, t.event_type
+           FROM b CROSS JOIN (SELECT DISTINCT event_type FROM events) t)"""
+
   def oracle: Map[String, String] = Map(
     "ts_funnel" ->
       """WITH c AS (
@@ -493,29 +492,15 @@ object TimeQueries extends QueryModule {
          FROM events GROUP BY 1, 2""",
 
     "ts_upsample_ffill" ->
-      """WITH hourly AS (
-           SELECT date_trunc('hour', ts) AS hr, event_type,
-             CAST(SUM(CAST("value" AS DECIMAL(18,4))) AS DOUBLE) / COUNT("value") AS hr_mean
-           FROM events GROUP BY 1, 2),
-         b AS (SELECT date_trunc('hour', MIN(ts)) AS lo, date_trunc('hour', MAX(ts)) AS hi FROM events),
-         spine AS (
-           SELECT unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS hr, t.event_type
-           FROM b CROSS JOIN (SELECT DISTINCT event_type FROM events) t)
+      (upsampleSpine + """
          SELECT s.hr, s.event_type,
            last_value(h.hr_mean IGNORE NULLS) OVER (
              PARTITION BY s.event_type ORDER BY s.hr
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ffilled_mean
-         FROM spine s LEFT JOIN hourly h ON s.hr = h.hr AND s.event_type = h.event_type""",
+         FROM spine s LEFT JOIN hourly h ON s.hr = h.hr AND s.event_type = h.event_type"""),
 
     "ts_upsample_fill" ->
-      """WITH hourly AS (
-           SELECT date_trunc('hour', ts) AS hr, event_type,
-             CAST(SUM(CAST("value" AS DECIMAL(18,4))) AS DOUBLE) / COUNT("value") AS hr_mean
-           FROM events GROUP BY 1, 2),
-         b AS (SELECT date_trunc('hour', MIN(ts)) AS lo, date_trunc('hour', MAX(ts)) AS hi FROM events),
-         spine AS (
-           SELECT unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS hr, t.event_type
-           FROM b CROSS JOIN (SELECT DISTINCT event_type FROM events) t),
+      (upsampleSpine + """,
          j AS (
            SELECT s.hr, s.event_type, h.hr_mean,
              CAST(epoch_us(s.hr) / 1000000 AS DOUBLE) AS t,
@@ -539,7 +524,7 @@ object TimeQueries extends QueryModule {
                 WHEN pv IS NOT NULL AND nv IS NOT NULL
                   THEN pv + (nv - pv) * (t - pt) / (nt - pt)
                 WHEN pv IS NOT NULL THEN pv END AS interp_mean
-         FROM j""",
+         FROM j"""),
 
     "ts_dt_accessor" ->
       """SELECT event_id,

@@ -26,6 +26,9 @@ object SourceQueries extends QueryModule {
         // serialize explicitly and parse back below
         date_format($"o_orderdate", "yyyy-MM-dd HH:mm:ss").as("o_date_str"))
     val path = Tables.workDir(s, d, fmt)
+    // the interchange reads restore `src`'s column order and types
+    def castBack(raw: DataFrame) =
+      raw.select(src.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
     fmt match {
       case "csv" =>
         src.write.mode("overwrite").option("header", "true").csv(path)
@@ -46,9 +49,7 @@ object SourceQueries extends QueryModule {
         // per task on read, cells stringly-typed like CSV/XML so the
         // cast-back restores the schema
         HtmlTable.write(src, path)
-        val raw = HtmlTable.read(s, path)
-        raw.select(src.schema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
+        castBack(HtmlTable.read(s, path))
       case "xlsx" =>
         // read_excel/to_excel (io/excel/_base.py:93,478) —
         // sources/Xlsx: pure-JDK SpreadsheetML workbooks, one capped
@@ -56,9 +57,7 @@ object SourceQueries extends QueryModule {
         // read; cells stringly-typed like CSV/XML/HTML so the
         // cast-back restores the schema
         Xlsx.write(src, path)
-        val raw = Xlsx.read(s, path)
-        raw.select(src.schema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
+        castBack(Xlsx.read(s, path))
       case "dta" =>
         // read_stata/to_stata (io/stata.py:2100) — sources/StataDta:
         // pure-JDK dta-118 files, one capped file per partition chunk
@@ -66,9 +65,7 @@ object SourceQueries extends QueryModule {
         // read restores real types; the cast below only re-widens the
         // int32 longs (Stata has no int64) back to the source schema
         StataDta.write(src, path)
-        val raw = StataDta.read(s, path)
-        raw.select(src.schema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
+        castBack(StataDta.read(s, path))
       case "sav" =>
         // read_spss (io/spss.py:17) — sources/SpssSav: pure-JDK SPSS
         // system files (+ the writer pandas lacks, enabling the
@@ -76,9 +73,7 @@ object SourceQueries extends QueryModule {
         // cast below narrows the keys back, mirroring what pandas'
         // read_spss float64 columns need
         SpssSav.write(src, path)
-        val raw = SpssSav.read(s, path)
-        raw.select(src.schema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
+        castBack(SpssSav.read(s, path))
       case "xpt" =>
         // read_sas format="xport" (io/sas/sas_xport.py:253) —
         // sources/SasXport: pure-JDK SAS Transport (TS-140) members;
@@ -86,9 +81,7 @@ object SourceQueries extends QueryModule {
         // cast below only narrows the doubles back (xport has one
         // numeric type, like pandas' float64 surfacing)
         SasXport.write(src, path)
-        val raw = SasXport.read(s, path)
-        raw.select(src.schema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
+        castBack(SasXport.read(s, path))
       case "arrows" =>
         // read_feather/to_feather (io/feather_format.py:36/83) —
         // sources/ArrowStream: self-contained Arrow IPC stream files,
@@ -99,9 +92,7 @@ object SourceQueries extends QueryModule {
         // binary-typed like dta; the re-select is only for uniform
         // column order
         src.write.format("arrows").mode("overwrite").save(path)
-        val raw = s.read.format("arrows").load(path)
-        raw.select(src.schema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
+        castBack(s.read.format("arrows").load(path))
       case "xml" =>
         // read_xml (io/xml.py:861) / to_xml (io/formats/xml.py) — the
         // XML source is NATIVE in Spark 4 (the spark-xml package was

@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Static, Spark-free lints: the DuckDB oracles' numeric rules below,
   * the rule that `operators/` picks its plans from its input alone, the
   * rule that fixture tables are read through `Tables`, the rules that
-  * exact copies collapse and frames cache through one helper each, and
-  * the rule that graft's own writes stay under the session's warehouse
-  * (last six tests).
+  * interchange chunks, exact copies, vector kernels, gap fills and
+  * frame caches each have one home, and the rule that graft's own
+  * writes stay under the session's warehouse (last eight tests).
   *
   * Oracle rule 1, no uncast integer SUM. DuckDB widens SUM over any integer type to HUGEINT (int128) while
   * Spark's sum over int/long stays LongType — the driver's typed
@@ -251,6 +251,18 @@ class OracleLintSpec extends AnyFunSuite {
       if hits.map(_.takeWhile(_ != ':')).distinct.size > 1
     } yield s"$k is called from several files:" + hits.mkString("\n  ", "\n  ", "")
     assert(spread.isEmpty, spread.mkString("\n", "\n", "\n"))
+  }
+
+  /** Gaps fill in one place, `functions/GapFill`: its backward and
+    * forward windows are the only `first`/`last` that skip NULLs. A
+    * second file skipping them is a copy of the bracket drifting on its
+    * own. */
+  test("only functions/GapFill skips NULLs in first/last") {
+    val skip = """ignoreNulls\s*=\s*true""".r.unanchored
+    val violations = lint(scalaFiles(mainRoot)) { (f, line) =>
+      f.getName != "GapFill.scala" && !isComment(line) && skip.matches(line)
+    }
+    assert(violations.isEmpty, violations.mkString("\n", "\n", "\n"))
   }
 
   /** Builders cache through `graft.Cached`, which skips a frame whose
